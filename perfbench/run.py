@@ -53,6 +53,9 @@ def machine_env(work: Path) -> dict[str, str]:
         "SPARK_GRAFT_STREAM_SCRATCH": str(work / "stream"),
         "SPARK_GRAFT_BATCH_SCRATCH": str(work / "batch"),
         "TMPDIR": str(work / "tmp"),
+        # the launcher JVM that spark-submit starts first: no hsperfdata
+        # file in /tmp
+        "SPARK_LAUNCHER_OPTS": "-XX:-UsePerfData",
         "PYTHONPATH": os.pathsep.join(p for p in (str(ROOT), env.get("PYTHONPATH")) if p),
     })
     return env
