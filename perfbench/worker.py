@@ -24,17 +24,52 @@ import spans
 from workloads import WORKLOADS, passes_for
 
 SETUP_REPS = 3
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 WAREHOUSE_METHODS = (
     "append", "read", "table_exists", "overwrite_from_plan", "apply_scd2_changeset",
     "upsert", "delete_where", "read_version", "compact", "vacuum",
 )
 
 
+def process_tree() -> list[int]:
+    """This process and all its descendants: the JVM and its Python
+    workers."""
+    children: dict[int, list[int]] = {}
+    for d in Path("/proc").iterdir():
+        if not d.name.isdigit():
+            continue
+        try:
+            fields = (d / "stat").read_text().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        children.setdefault(int(fields[1]), []).append(int(d.name))
+    todo, out = [os.getpid()], []
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(children.get(pid, []))
+    return out
+
+
+def tree_cpu_s(pids: list[int]) -> float:
+    """User plus system CPU seconds the given processes have used. Time
+    the hypervisor takes from a virtual CPU is charged to steal, not to
+    the process."""
+    ticks = 0
+    for pid in pids:
+        try:
+            fields = Path(f"/proc/{pid}/stat").read_text().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        ticks += int(fields[11]) + int(fields[12])
+    return ticks / CLK_TCK
+
+
 class RssSampler:
     """Peak resident memory of this process and all its descendants
     (the JVM and its Python workers), sampled from ``/proc``."""
 
-    def __init__(self, interval: float = 0.2):
+    def __init__(self, interval: float = 1.0):
         self.interval = interval
         self.peak_kb = 0
         self._stop = threading.Event()
@@ -49,19 +84,8 @@ class RssSampler:
         self._thread.join(timeout=5)
 
     def sample(self) -> int:
-        children: dict[int, list[int]] = {}
-        for d in Path("/proc").iterdir():
-            if not d.name.isdigit():
-                continue
-            try:
-                fields = (d / "stat").read_text().rsplit(")", 1)[1].split()
-            except OSError:
-                continue
-            children.setdefault(int(fields[1]), []).append(int(d.name))
-        todo, total = [os.getpid()], 0
-        while todo:
-            pid = todo.pop()
-            todo.extend(children.get(pid, []))
+        total = 0
+        for pid in process_tree():
             try:
                 for line in Path(f"/proc/{pid}/status").read_text().splitlines():
                     if line.startswith("VmRSS:"):
@@ -178,14 +202,23 @@ def run(args) -> dict:
         spark.streams.addListener(spans.stream_listener(tracer))
 
     ops, errors, drifted = [], [], 0
-    files_written = bytes_written = 0
-    before_files = files_under(wh.root) if (trace and wh is not None) else {}
-    target = passes_for(args.seconds, wl.NOMINAL_PASS_S) * len(wl.PASS)
+    files_written = bytes_written = warm_ops = warm_failed = 0
+    before_files = None
+    # untimed warm-up ops first: the JIT keeps speeding the op up for
+    # several calls after set-up
+    warm = wl.WARMUP_PASSES * len(wl.PASS)
+    passes = passes_for(args.seconds, wl.NOMINAL_PASS_S)
+    target = warm + passes * len(wl.PASS)
     done = 0
     while done < target:
+        timed = done >= warm
+        if timed and trace and wh is not None and before_files is None:
+            before_files = files_under(wh.root)
         op = wl.next_op()
         state = hygiene.snapshot(spark)
-        tracer.op = len(ops)
+        tracer.op = len(ops) if timed else None
+        pids = process_tree()
+        c0 = tree_cpu_s(pids)
         t0 = time.time()
         try:
             res = op.call()
@@ -193,6 +226,7 @@ def run(args) -> dict:
         except Exception as exc:  # an op that raises is a failed op
             res, err = None, [f"{op.name} raised {exc!r}"[:500]]
         t1 = time.time()
+        cpu = tree_cpu_s(pids) - c0
         tracer.op = None
         if not err:
             try:
@@ -206,8 +240,12 @@ def run(args) -> dict:
             hygiene.restore(spark, state, after)
             err = err + [f"{op.name} left session state: {leak}"]
         errors.extend(err)
-        ops.append({"kind": op.kind, "name": op.name, "start": t0, "end": t1, "ok": not err, "rows": op.rows})
         done += op.kind != "maint"
+        if not timed:
+            warm_ops += 1
+            warm_failed += bool(err)
+            continue
+        ops.append({"kind": op.kind, "name": op.name, "start": t0, "end": t1, "cpu": cpu, "ok": not err, "rows": op.rows})
         if trace and wh is not None:
             now_files = files_under(wh.root)
             new = {p: s for p, s in now_files.items() if p not in before_files}
@@ -224,7 +262,7 @@ def run(args) -> dict:
         layer = layer_metrics(tracer, wl, ops, gets, warms, setups, drifted, files_written, bytes_written)
     spark.stop()
     if trace:
-        layer.update(spark_layer(work, ops, tracer))
+        layer.update(spark_layer(work, ops, tracer, wl))
         tracer.close()
     return {
         "ops": ops,
@@ -232,9 +270,11 @@ def run(args) -> dict:
         "errors": errors[:20],
         "n_errors": len(errors),
         "final_ok": not fin_errors,
+        "warm_ops": warm_ops,
+        "warm_failed": warm_failed,
         "extras": extras,
         "layer": layer,
-        "passes": target // len(wl.PASS),
+        "passes": passes,
         "phases_s": {k: round(phases[k] - phases["start"], 2) for k in phases},
     }
 
@@ -258,8 +298,6 @@ def layer_metrics(tracer, wl, ops, gets, warms, setups, drifted, files_written, 
         "scd2.scd2_merge_self_s": tot.get("scd2.scd2_merge", {}).get("self_s", 0.0) / n,
         "deltalog.read_delta_s": s("deltalog.read_delta"),
         "deltalog.write_checkpoint_s": s("deltalog.write_checkpoint"),
-        "plans.build_s": s("plans.build"),
-        "plans.exec_s": s("plans.exec"),
     }
     for meth in WAREHOUSE_METHODS:
         t = tot.get(f"warehouse.{meth}", {})
@@ -271,13 +309,22 @@ def layer_metrics(tracer, wl, ops, gets, warms, setups, drifted, files_written, 
     m["warehouse.files_live"] = float(live_files(wh))
     for k, v in deltalog_counts(wh).items():
         m[f"deltalog.{k}"] = v
-    for k in ("batches", "empty_batches", "addBatch_ms", "queryPlanning_ms", "walCommit_ms",
-              "commitOffsets_ms", "triggerExecution_ms"):
-        m[f"stream.{k}"] = tracer.counts.get(f"stream.{k}", 0.0) / n
+    if runs_queries(wl):
+        m["plans.build_s"] = s("plans.build")
+        m["plans.exec_s"] = s("plans.exec")
+        for k in ("batches", "empty_batches", "addBatch_ms", "queryPlanning_ms", "walCommit_ms",
+                  "commitOffsets_ms", "triggerExecution_ms"):
+            m[f"stream.{k}"] = tracer.counts.get(f"stream.{k}", 0.0) / n
     return m
 
 
-def spark_layer(work: Path, ops: list[dict], tracer) -> dict:
+def runs_queries(wl) -> bool:
+    """The plans and stream layers exist only where registered queries
+    run; elsewhere their metrics would be a constant 0."""
+    return wl.name == "query_mix"
+
+
+def spark_layer(work: Path, ops: list[dict], tracer, wl) -> dict:
     """Job, stage and task numbers per op from the final session's
     event log, and jobs charged to spans."""
     log = eventlog.load(work / "eventlog" / f"rep{SETUP_REPS - 1}")
@@ -305,12 +352,10 @@ def spark_layer(work: Path, ops: list[dict], tracer) -> dict:
         "spark.driver_only_s": sum(max(0.0, (e - s) - p.job_union_s) for (s, e), p in zip(intervals, profs)) / n,
         "spark.core_busy_frac": (tt.run_ms / 1e3) / (wall * cores) if wall else 0.0,
     }
-    for span_name, metric in (
-        ("readers.read_csv", "readers.read_csv_jobs"),
-        ("scd2.scd2_merge", "scd2.scd2_merge_jobs"),
-        ("plans.build", "plans.build_jobs"),
-        ("plans.exec", "plans.exec_jobs"),
-    ):
+    spans_jobs = [("readers.read_csv", "readers.read_csv_jobs"), ("scd2.scd2_merge", "scd2.scd2_merge_jobs")]
+    if runs_queries(wl):
+        spans_jobs += [("plans.build", "plans.build_jobs"), ("plans.exec", "plans.exec_jobs")]
+    for span_name, metric in spans_jobs:
         m[metric] = eventlog.jobs_within(log, tracer.intervals(span_name)) / n
     return m
 

@@ -14,8 +14,10 @@ A workload object is driven by ``worker.py``:
    NOMINAL_PASS_S)`` whole passes over the workload's ``PASS`` (seeded
    order), so ``--seconds`` fixes the amount of work and two commits
    are compared on the same ops. ``NOMINAL_PASS_S`` is set per workload
-   so that the three workloads fit one time budget: at ``--seconds
-   10`` they make 12, 20 and 8 ops; maintenance ops come on top;
+   so that the runs fit one time budget: at ``--seconds 30`` they make
+   14, 30 and 16 timed ops; maintenance ops come on top. Before them,
+   ``WARMUP_PASSES`` untimed passes let the JIT settle; they are
+   checked like timed ops;
 5. ``finish(spark)`` runs the end-of-run checks and returns the
    workload's own numbers (rows merged, storage amplification).
 """
@@ -75,7 +77,8 @@ class Scd2Pipeline:
     name = "scd2_pipeline"
     N_KEYS = 4_000
     PASS = ("run_pipeline",)
-    NOMINAL_PASS_S = 0.85
+    NOMINAL_PASS_S = 2.1
+    WARMUP_PASSES = 2
 
     def __init__(self, seed: int, work: Path, tracer=None):
         self.seed = seed
@@ -210,7 +213,8 @@ class DeltaLogDml:
     N_ROWS = 40_000
     N_CUST = 2_000
     PASS = ("read",) * 5 + ("read_version",) * 2 + ("append", "upsert", "delete_where")
-    NOMINAL_PASS_S = 5.0
+    NOMINAL_PASS_S = 10.0
+    WARMUP_PASSES = 1
 
     def __init__(self, seed: int, work: Path, tracer=None):
         self.seed = seed
@@ -427,7 +431,9 @@ class QueryMix:
 
     name = "query_mix"
     PASS = QUERY_SET
-    NOMINAL_PASS_S = 7.0
+    NOMINAL_PASS_S = 15.0
+    # the oracle pass in verify() is the warm pass
+    WARMUP_PASSES = 0
 
     def __init__(self, seed: int, work: Path, tracer=None):
         self.seed = seed
