@@ -10,21 +10,26 @@ notebooks drop effect (b) — treated as a bug, not a spec (reference
 "Mini-ETL-Pipeline in Databricks.py":56-66 vs pipeline_core.py:185-252).
 
 Differences from the reference, by design:
-- ONE action computes the change-set stats (the reference runs 5+
-  ``count()`` jobs re-executing lineage — pipeline_core.py:203,245,
-  256-258); we cache the flagged join once.
+- ONE pass computes the new dimension AND its stats (the reference
+  runs 5+ ``count()`` jobs re-executing lineage — pipeline_core.py:
+  203,245,256-258). The batch is full-outer joined once against the
+  open rows; each joined row expands (``inline``) into its output
+  versions, history rows pass through, and the three counts ride the
+  write as an ``Observation`` on the joined frame — no cache, no
+  separate stats action, no re-join of the open rows.
 - Change detection is null-safe ``<=>`` (operators/changes.py).
 - ``run_ts`` is a parameter, not ``current_timestamp()`` — reruns are
   reproducible and validity chains line up exactly.
 - Composite business keys everywhere (the reference hardcodes a single
   key in the DataFrame path, pipeline_core.py:97-101,163-179).
 
-Scale notes: the dim-side join is on the business key; Spark/AQE
-broadcasts the smaller side. The final apply is format-specific: on
-parquet emulation we rewrite the dimension (staged swap); on
-Delta/Iceberg the same change-set feeds a MERGE that rewrites only
-matched files. The change-set computation — the expensive part — is
-identical either way.
+Scale notes: a full outer join cannot broadcast, so the batch and the
+open rows each shuffle once on the business key, and the dimension is
+scanned once for the open rows and once for the history. The final
+apply is format-specific: on parquet emulation we rewrite the
+dimension (staged swap); on Delta/Iceberg flag filters of the same
+observed join feed a MERGE that rewrites only matched files, then an
+append of the new versions.
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -56,15 +61,14 @@ class MergeStats:
         }
 
 
-def _stamp(df: DataFrame, cfg: PipelineConfig, run_ts: datetime | str) -> DataFrame:
+def _opening(cfg: PipelineConfig, run_ts: datetime | str) -> dict[str, Column]:
+    """Technical columns of a version opened at ``run_ts``."""
     t = cfg.technical
-    return df.withColumns(
-        {
-            t.valid_from: F.lit(run_ts).cast("timestamp"),
-            t.valid_to: F.lit(None).cast("timestamp"),
-            t.is_current: F.lit(True),
-        }
-    )
+    return {
+        t.valid_from: F.lit(run_ts).cast("timestamp"),
+        t.valid_to: F.lit(None).cast("timestamp"),
+        t.is_current: F.lit(True),
+    }
 
 
 def scd2_merge(
@@ -76,6 +80,8 @@ def scd2_merge(
 ) -> MergeStats:
     """Merge a deduplicated batch (one row per business key, business
     columns only) into the SCD2 dimension table ``cfg.dim_table``.
+    A batch that repeats a non-NULL key breaks that contract: each copy
+    joins the key's open row, which is then written once per copy.
 
     ``evolve=True`` enables WRITE-side schema evolution (the Delta
     ``schema.autoMerge`` mechanic, public Delta docs): when the batch
@@ -91,11 +97,14 @@ def scd2_merge(
     t = cfg.technical
     keys = list(cfg.business_key)
     latest = latest.select(*cfg.wanted_columns)
+    obs = Observation()
 
     if not wh.table_exists(cfg.dim_table):
-        init = _stamp(latest, cfg, run_ts)
+        init = latest.withColumns(_opening(cfg, run_ts)).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
         wh.overwrite(init, cfg.dim_table)
-        return MergeStats(unchanged=0, new_keys=init.count(), updated_keys=0)
+        return MergeStats(unchanged=0, new_keys=obs.get["n"], updated_keys=0)
 
     dim = wh.read(cfg.dim_table)
     missing = [c for c in cfg.wanted_columns if c not in dim.columns]
@@ -110,59 +119,68 @@ def scd2_merge(
         dim = dim.withColumns(
             {c: F.lit(None).cast(src_types[c]) for c in missing}
         )
+    cols = dim.columns
     current = dim.filter(F.col(t.is_current))
-
-    src = latest.alias("src")
-    tgt = current.alias("tgt")
-    on = [F.col(f"src.{k}") == F.col(f"tgt.{k}") for k in keys]
-    cond = on[0]
-    for c in on[1:]:
-        cond = cond & c
-
-    flagged = (
-        src.join(tgt, cond, "left")
-        .select(
-            *[F.col(f"src.{c}").alias(c) for c in cfg.wanted_columns],
-            F.col(f"tgt.{t.is_current}").isNull().alias("__is_new"),
-            (
-                F.col(f"tgt.{t.is_current}").isNotNull()
-                & any_change("src", "tgt", cfg.compare_columns)
-            ).alias("__is_changed"),
-        )
-        .cache()
-    )
-    # ONE action for all three stats (vs the reference's 5+ count jobs).
-    counts = flagged.agg(
-        F.sum(F.when(F.col("__is_new"), 1).otherwise(0)).alias("new"),
-        F.sum(F.when(F.col("__is_changed"), 1).otherwise(0)).alias("chg"),
-        F.sum(
-            F.when(~F.col("__is_new") & ~F.col("__is_changed"), 1).otherwise(0)
-        ).alias("same"),
-    ).collect()[0]
-
-    changed_keys = flagged.filter(F.col("__is_changed")).select(*keys)
-    inserts = _stamp(
-        flagged.filter(F.col("__is_new") | F.col("__is_changed")).select(
-            *cfg.wanted_columns
-        ),
-        cfg,
-        run_ts,
-    )
-    closed = (
-        current.join(changed_keys, keys, "left_semi")
-        .withColumns(
-            {
-                t.is_current: F.lit(False),
-                t.valid_to: F.lit(run_ts).cast("timestamp"),
-            }
-        )
-    )
-    kept_current = current.join(changed_keys, keys, "left_anti")
     history = dim.filter(~F.col(t.is_current))
 
-    new_dim = history.unionByName(kept_current).unionByName(closed).unionByName(inserts)
+    src = latest.withColumn("__src", F.lit(True)).alias("src")
+    tgt = current.alias("tgt")
+    cond = F.col(f"src.{keys[0]}") == F.col(f"tgt.{keys[0]}")
+    for k in keys[1:]:
+        cond = cond & (F.col(f"src.{k}") == F.col(f"tgt.{k}"))
+
+    # Full-outer join: a NULL key never matches, so a NULL-keyed batch
+    # row is new and a NULL-keyed open row is kept.
+    in_src = F.col("src.__src").isNotNull()
+    in_tgt = F.col(f"tgt.{t.is_current}").isNotNull()
+    is_new = in_src & ~in_tgt
+    is_changed = in_src & in_tgt & any_change("src", "tgt", cfg.compare_columns)
+
+    def version(side: str, stamp: dict[str, Column]) -> Column:
+        return F.struct(
+            *[stamp.get(c, F.col(f"{side}.{c}")).alias(c) for c in cols]
+        )
+
+    opened = version("src", _opening(cfg, run_ts))
+    closed = version(
+        "tgt",
+        {t.valid_to: F.lit(run_ts).cast("timestamp"), t.is_current: F.lit(False)},
+    )
+    # Each joined row yields its output versions: a new key opens one,
+    # a changed key closes its open row and opens the new one, every
+    # other open row is kept as it is.
+    flagged = (
+        src.join(tgt, cond, "full_outer")
+        .select(
+            *[F.col(f"src.{c}").alias(c) for c in cfg.wanted_columns],
+            F.when(is_new, F.array(opened))
+            .when(is_changed, F.array(closed, opened))
+            .otherwise(F.array(version("tgt", {})))
+            .alias("__versions"),
+            is_new.alias("__is_new"),
+            is_changed.alias("__is_changed"),
+            (in_src & in_tgt & ~is_changed).alias("__is_same"),
+        )
+        .observe(
+            obs,
+            F.count_if("__is_new").alias("new"),
+            F.count_if("__is_changed").alias("chg"),
+            F.count_if("__is_same").alias("same"),
+        )
+    )
+    changed_keys = flagged.filter(F.col("__is_changed")).select(*keys)
+    inserts = (
+        flagged.filter(F.col("__is_new") | F.col("__is_changed"))
+        .select(*cfg.wanted_columns)
+        .withColumns(_opening(cfg, run_ts))
+    )
+    # The observed side goes first: the union then runs in the batch's
+    # session, the one the Observation is registered in (a foreachBatch
+    # frame lives in the stream's cloned session, history in wh.spark).
+    new_dim = flagged.select(F.inline("__versions")).unionByName(history)
     # format-specific apply: parquet rewrites via staged swap; Delta
-    # MERGEs the closes in place and appends the inserts
+    # MERGEs the closes in place and appends the inserts. Either way
+    # the write is the action that fills the Observation.
     wh.apply_scd2_changeset(
         cfg.dim_table,
         keys,
@@ -173,11 +191,11 @@ def scd2_merge(
         run_ts,
         new_dim,
     )
-    flagged.unpersist()
+    counts = obs.get
     return MergeStats(
-        unchanged=int(counts["same"] or 0),
-        new_keys=int(counts["new"] or 0),
-        updated_keys=int(counts["chg"] or 0),
+        unchanged=counts["same"],
+        new_keys=counts["new"],
+        updated_keys=counts["chg"],
     )
 
 

@@ -6,8 +6,8 @@ O2 multi-table fan-out loop + O3 conditional merge — "Mini-ETL-Pipeline
 in Databricks.py":113-131), with the reference's self-inflicted
 pessimizations fixed by construction (SURVEY.md §4): the raw batch is
 read once (the reference re-reads the source CSV through the returned
-plan), stats come from one cached change-set, and ingest is fully
-distributed (no driver-side bytes).
+plan), the SCD2 merge is one observed join whose write also yields
+its stats, and ingest is fully distributed (no driver-side bytes).
 """
 
 from __future__ import annotations
@@ -50,13 +50,15 @@ def load_raw(
 def transform_dim(df_raw: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Raw batch → one clean row per business key (reference
     transform_dim, pipeline_core.py:77-108): project wanted columns,
-    trim strings, keep the latest row per key, distinct.
+    trim strings, keep the latest row per key. ``row_number() == 1``
+    already leaves one row per key, so no ``distinct`` follows (it
+    would only add a shuffle on every column).
 
     Tie semantics: rows landed in the SAME run share an ingest
-    timestamp; identical-content ties collapse via distinct, but a key
-    appearing twice in one batch with different content has no defined
-    winner (the reference has the same hazard — its row_number orders
-    only by IngestTimestamp). Feed each run only that run's new files
+    timestamp, so a key appearing twice in one batch keeps one of its
+    rows, and with different content there is no defined winner (the
+    reference has the same hazard — its row_number orders only by
+    IngestTimestamp). Feed each run only that run's new files
     (pipeline O3 conditional load) so "latest" is well-defined."""
     projected = trim_columns(
         df_raw.select(*cfg.wanted_columns, INGEST_TS), cols=None
@@ -64,7 +66,7 @@ def transform_dim(df_raw: DataFrame, cfg: PipelineConfig) -> DataFrame:
     latest = dedup_latest(
         projected, keys=list(cfg.business_key), order_by=[INGEST_TS]
     )
-    return latest.select(*cfg.wanted_columns).distinct()
+    return latest.select(*cfg.wanted_columns)
 
 
 def run_pipeline(

@@ -651,6 +651,11 @@ def _sentinel_staged_events(spark: SparkSession, sf_dir: str, key: str, rows):
     writes + copy every invocation; r11 optimization round, DISCLOSED
     per query in OPTIMIZATION_r11.md). ``rows`` maps flush_ts -> the
     sentinel rows in the RAW fixture schema. Returns (src dir, schema).
+
+    The cache token folds in the events file's mtime AND a hash of the
+    sentinel rows (rendered with a placeholder flush_ts), so two
+    callers that share ``key`` but stage different rows never read
+    each other's fixture.
     """
     import os as _os
 
@@ -684,7 +689,7 @@ def _sentinel_staged_events(spark: SparkSession, sf_dir: str, key: str, rows):
     src = cached_fixture(
         f"{key}_{Path(sf_dir).name}",
         _build,
-        token=os.stat(path).st_mtime,
+        token=(os.stat(path).st_mtime, repr(rows("<flush_ts>"))),
     )
     return src, schema
 

@@ -960,7 +960,8 @@ class Warehouse:
         ``batch`` must be key-unique (Delta's multiple-source-match
         error is the alternative). Returns
         ``{"deleted": n, "updated": n, "inserted": n}`` computed in
-        ONE action (scd2_merge's single-agg discipline).
+        ONE aggregate action before the write (scd2_merge goes one step
+        further: its counts are an Observation on the write itself).
 
         parquet: matched rows (both clauses) leave via one anti-join,
         then updates+inserts append in the same staged-swap rewrite —

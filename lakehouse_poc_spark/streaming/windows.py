@@ -28,6 +28,7 @@ import os
 import shutil
 import tempfile
 import time
+import warnings
 from collections.abc import Sequence
 from pathlib import Path
 
@@ -124,7 +125,10 @@ def stream_state_partitions(spark: SparkSession, *paths) -> int:
 
     ``paths`` are files or directories (globs resolve via rglob); the
     result is intended for the ``shuffle_partitions`` argument of the
-    streaming runners, scoped to one bounded run.
+    streaming runners, scoped to one bounded run. A path that does not
+    exist counts as 0 bytes and emits a ``RuntimeWarning`` naming it —
+    a mistyped path would otherwise silently size the stream at one
+    partition.
     """
     import math
 
@@ -140,6 +144,13 @@ def stream_state_partitions(spark: SparkSession, *paths) -> int:
             )
         elif pp.is_file():
             total += pp.stat().st_size
+        else:
+            warnings.warn(
+                f"stream_state_partitions: {p} does not exist; "
+                "it counts as 0 bytes",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     try:
         cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     except (TypeError, ValueError):

@@ -5,13 +5,15 @@ intra-batch dedup, trim."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_poc_spark.config import PipelineConfig, TechnicalColumns
 from lakehouse_poc_spark.pipeline import run_pipeline
-from lakehouse_poc_spark.operators.scd2 import scd2_merge
+from lakehouse_poc_spark.operators.scd2 import MergeStats, scd2_merge
 
 T1 = "2030-01-01 00:00:00"
 T2 = "2030-01-02 00:00:00"
@@ -135,12 +137,18 @@ def test_composite_business_key(spark, wh):
 def test_intra_batch_dedup_and_trim(spark, wh):
     """Duplicate keys within a batch: latest ingest wins; values trimmed
     (FIXTURES.md §A.4 batch-2 scenario). Same-run duplicates share one
-    IngestTimestamp, so distinct() collapses exact dupes and differing
-    dupes are resolved by dedup-latest order stability."""
-    b1 = batch(spark, [("K1", "  Verwaltung  ", " Zentral")])
-    run_pipeline(spark, wh, CFG, T1, batch=b1)
+    IngestTimestamp; dedup-latest keeps one row per key, so exact dupes
+    collapse and differing dupes are resolved by its order stability."""
+    b1 = batch(spark, [("K1", "  Verwaltung  ", " Zentral")] * 3)
+    stats = run_pipeline(spark, wh, CFG, T1, batch=b1)
+    assert stats.as_dict() == {"unchanged": 0, "new_keys": 1, "updated_keys": 0}
     dim = wh.read(CFG.dim_table).collect()
+    assert len(dim) == 1
     assert dim[0].Bezeichnung == "Verwaltung" and dim[0].Bereich == "Zentral"
+    b2 = batch(spark, [("K1", "Verwaltung", "Neu")] * 2)
+    stats = run_pipeline(spark, wh, CFG, T2, batch=b2)
+    assert stats.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    assert wh.read(CFG.dim_table).count() == 2
 
 
 def test_merge_without_pipeline(spark, wh):
@@ -512,3 +520,150 @@ def test_scd6_history_with_type1_overlay(spark, wh):
     out2 = wh.read(t).toPandas()
     assert len(out2) == len(out)
     assert (out2["k"] == "K1").sum() == 3
+
+
+# ---------------------------------------------------------------------------
+# One-pass merge shape and the observed stats.
+
+# Jobs one scd2_merge runs on a tiny batch, measured on local[4] with 4
+# shuffle partitions (slack 0, the test_shuffle_budget discipline): the
+# bootstrap is one observed overwrite; the existing-table path is a
+# footer read for the dimension's schema, one shuffle-map job per join
+# side and the write that fills the Observation.
+BOOTSTRAP_JOB_BUDGET = 1
+MERGE_JOB_BUDGET = 4
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _dim_rows(wh):
+    return sorted(tuple(map(str, r)) for r in wh.read(CFG.dim_table).collect())
+
+
+def test_one_pass_merge_job_budget_and_no_cache(spark, wh):
+    sc = spark.sparkContext
+    persisted_before = set(sc._jsc.getPersistentRDDs().keySet())
+    b1 = batch(spark, BATCH1)
+    boot, boot_jobs = _jobs_in_group(
+        spark, "scd2-bootstrap", lambda: scd2_merge(wh, CFG, b1, T1)
+    )
+    assert boot.as_dict() == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
+    b2 = batch(
+        spark,
+        [
+            ("K1", "Verwaltung", "Zentral"),
+            ("K2", "Fertigung", "Werk 2"),
+            ("K4", "Einkauf", "Sued"),
+        ],
+    )
+    stats, merge_jobs = _jobs_in_group(
+        spark, "scd2-merge", lambda: scd2_merge(wh, CFG, b2, T2)
+    )
+    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted_before
+    assert boot_jobs <= BOOTSTRAP_JOB_BUDGET, (
+        f"bootstrap ran {boot_jobs} jobs (budget {BOOTSTRAP_JOB_BUDGET})"
+    )
+    assert merge_jobs <= MERGE_JOB_BUDGET, (
+        f"merge ran {merge_jobs} jobs (budget {MERGE_JOB_BUDGET}) — "
+        "a second pass over the join crept in"
+    )
+    assert wh.read(CFG.dim_table).count() == 5
+
+
+def test_observed_stats_batch_from_another_session(spark, wh):
+    """The Observation is registered in the batch's session. A batch
+    from a different session than the warehouse (the foreachBatch case)
+    must still fill it instead of blocking Observation.get forever."""
+    import threading
+
+    scd2_merge(wh, CFG, batch(spark, BATCH1), T1)
+    other = spark.newSession()
+    b2 = other.createDataFrame(
+        [("K2", "Fertigung", "Werk 2"), ("K4", "Einkauf", "Sued")],
+        "Kostenstelle string, Bezeichnung string, Bereich string",
+    )
+    result = {}
+
+    def run():
+        try:
+            result["stats"] = scd2_merge(wh, CFG, b2, T2)
+        except Exception as e:  # surfaced by the assert below
+            result["error"] = e
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(timeout=180)
+    assert not th.is_alive(), "scd2_merge hung waiting for its Observation"
+    assert "error" not in result, result.get("error")
+    assert result["stats"].as_dict() == {
+        "unchanged": 0, "new_keys": 1, "updated_keys": 1,
+    }
+    assert wh.read(CFG.dim_table).count() == 5
+
+
+def test_empty_batch_is_a_no_op(spark, wh):
+    """An empty batch counts zero on both paths: the bootstrap writes an
+    empty dimension, a merge leaves the existing one as it was."""
+    assert scd2_merge(wh, CFG, batch(spark, []), T1) == MergeStats(0, 0, 0)
+    assert wh.read(CFG.dim_table).count() == 0
+    scd2_merge(wh, CFG, batch(spark, BATCH1), T1)
+    scd2_merge(wh, CFG, batch(spark, [("K2", "Fertigung", "Werk 2")]), T2)
+    before = _dim_rows(wh)
+    stats = scd2_merge(wh, CFG, batch(spark, []), T3)
+    assert stats == MergeStats(0, 0, 0)
+    assert _dim_rows(wh) == before
+
+
+def test_null_business_key_inserts_and_keeps_target(spark, wh):
+    """Key equality is null-unsafe: a NULL-keyed batch row never matches,
+    so it is inserted as new and the NULL-keyed open row is kept."""
+    b1 = batch(spark, [(None, "Alt", "X"), ("K1", "A", "B")])
+    scd2_merge(wh, CFG, b1, T1)
+    stats = scd2_merge(
+        wh, CFG, batch(spark, [(None, "Neu", "Y"), ("K1", "A", "B")]), T2
+    )
+    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 0}
+    dim = wh.read(CFG.dim_table)
+    nulls = sorted(
+        (r.Bezeichnung, str(r.GueltigVon), r.GueltigBis, r.IsCurrent)
+        for r in dim.filter(F.col("Kostenstelle").isNull()).collect()
+    )
+    assert nulls == [("Alt", T1, None, True), ("Neu", T2, None, True)]
+    assert dim.count() == 3
+
+
+def test_rerun_with_same_run_ts(spark, wh):
+    """A replayed batch at the same run_ts changes nothing; a changed
+    batch at the bootstrap's run_ts closes the row with an empty
+    validity interval (valid_from == valid_to) and opens the new one."""
+    scd2_merge(wh, CFG, batch(spark, BATCH1), T1)
+    b2 = batch(spark, [("K2", "Fertigung", "Werk 2"), ("K4", "Einkauf", "Sued")])
+    scd2_merge(wh, CFG, b2, T2)
+    before = _dim_rows(wh)
+    replay = scd2_merge(wh, CFG, b2, T2)
+    assert replay.as_dict() == {"unchanged": 2, "new_keys": 0, "updated_keys": 0}
+    assert _dim_rows(wh) == before
+
+    cfg2 = dataclasses.replace(CFG, dim_table="layer0150.dim_kostenstelle2")
+    scd2_merge(wh, cfg2, batch(spark, BATCH1), T1)
+    same_ts = scd2_merge(
+        wh, cfg2, batch(spark, [("K1", "Verwaltung", "Neu")]), T1
+    )
+    assert same_ts.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    k1 = sorted(
+        (str(r.GueltigVon), str(r.GueltigBis), r.IsCurrent, r.Bereich)
+        for r in wh.read(cfg2.dim_table)
+        .filter(F.col("Kostenstelle") == "K1")
+        .collect()
+    )
+    assert k1 == [(T1, T1, False, "Zentral"), (T1, "None", True, "Neu")]

@@ -805,3 +805,64 @@ def test_transform_with_state_user_stats(spark):
             e["min_value"],
             e["max_value"],
         )
+
+
+def test_stream_state_partitions_warns_on_missing_path(spark, tmp_path):
+    import pytest
+
+    from lakehouse_poc_spark.streaming.windows import stream_state_partitions
+
+    real = tmp_path / "events.parquet"
+    real.write_bytes(b"x" * 10)
+    typo = tmp_path / "evnets.parquet"
+    with pytest.warns(RuntimeWarning, match="evnets.parquet"):
+        n = stream_state_partitions(spark, str(real), str(typo))
+    assert n == 1
+
+
+def test_sentinel_fixture_token_covers_rows(spark, tmp_path, monkeypatch):
+    """Two sentinel row sets staged under the same key must not share
+    one cached fixture dir."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakehouse_poc_spark.plans import streamops
+    from lakehouse_poc_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "_SCRATCH", tmp_path / "scratch")
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(
+                [dt.datetime(2020, 1, 1), dt.datetime(2020, 1, 2)],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["click", "purchase"],
+            "value": [0.0, 1.5],
+            "props": pa.array([None, None], pa.string()),
+        }
+    )
+    pq.write_table(events, sf / "events.parquet")
+    sf = str(sf)
+
+    def one(flush_ts):
+        return [(-1, flush_ts, -1, "click", 0.0, None)]
+
+    def two(flush_ts):
+        return [
+            (-1, flush_ts, -1, "click", 0.0, None),
+            (-2, flush_ts, -1, "purchase", 0.0, None),
+        ]
+
+    src1, _ = streamops._sentinel_staged_events(spark, sf, "flush_key", one)
+    src2, _ = streamops._sentinel_staged_events(spark, sf, "flush_key", two)
+    assert src1 != src2
+    assert pq.read_table(src1 / "01_flush.parquet").num_rows == 1
+    assert pq.read_table(src2 / "01_flush.parquet").num_rows == 2
+    again, _ = streamops._sentinel_staged_events(spark, sf, "flush_key", one)
+    assert again == src1
