@@ -1388,10 +1388,14 @@ def stream_minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ids.join(
             dropped, ids.doc_id == dropped.vid, "left"
         ).select("doc_id", F.col("vid").isNull().alias("kept"))
-        # the two appends are independent (disjoint paths; the band
-        # store is only read by the NEXT batch) — overlap them so the
-        # verdict write back-fills the band write's task tail
-        # (guide §2.6; the gdpr/slo pattern from r10)
+        # the two appends run concurrently although `out` READS the
+        # band store that `bands.write` appends to: that is safe only
+        # because `s` above was built before the pool starts, and
+        # building it pinned the store's file listing — the append
+        # adds new part files and never rewrites a listed one, so
+        # `out` sees exactly the previous batches' bands. Overlapping
+        # them lets the verdict write back-fill the band write's task
+        # tail (guide §2.6; the gdpr/slo pattern from r10)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:

@@ -26,6 +26,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``SPARK_DRIVER_MEM`` if set, else a quarter of RAM
+    within [2 GB, 8 GB]. A heap sized past the host's RAM lets G1 grow
+    instead of collecting, and the kernel's OOM killer then ends the
+    JVM mid-run."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{max(2048, min(8192, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "lakehouse_poc_spark",
     cpus: str | int | None = None,
@@ -48,7 +59,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         # ContextCleaner frees shuffle files / broadcasts only when a
         # DRIVER GC collects their references; the default periodic-GC
         # interval (30min) is longer than a whole multi-hundred-query

@@ -2908,7 +2908,12 @@ class DeltaLogWarehouse(Warehouse):
         be erased by the wholesale remove set (the lost-update race
         the inherited overwrite-based compact had). This is Delta's
         actual optimistic-concurrency story: the version number IS
-        the conflict check."""
+        the conflict check.
+
+        The rewrite reads through the same log-planned path as
+        ``read_delta`` (committed schema, no footer job): deletion-
+        vector masks apply, so rows a DV delete removed stay removed,
+        and a column-mapped table keeps its physical names."""
         self._no_partitions(partition_by)
         if zorder_by is not None:
             raise NotImplementedError(
@@ -2922,6 +2927,8 @@ class DeltaLogWarehouse(Warehouse):
             )
         from ..sources.deltalog import (
             DeltaLogError,
+            _data_read_schema,
+            _read_adds_mor,
             _replay,
             current_version,
         )
@@ -2932,11 +2939,12 @@ class DeltaLogWarehouse(Warehouse):
         state = _replay(tp, v0)
         files = state["files"]
         n_before = len(files)
-        paths = [tp / f for f in files]
         if target_file_bytes is not None:
-            total = sum(p.stat().st_size for p in paths)
+            total = sum((tp / f).stat().st_size for f in files)
             target_files = max(1, -(-total // int(target_file_bytes)))
-        df = self.spark.read.parquet(*[str(p) for p in paths])
+        df = _read_adds_mor(
+            self.spark, tp, state["adds"], _data_read_schema(state)
+        )
         if cluster_by:
             # range-clustered rewrite: each output file covers a narrow
             # value range, so the add actions' footer stats make

@@ -32,6 +32,14 @@ optimization, in its on-disk shape. DML (merge/delete) and schema
 evolution ride the Warehouse/ManifestWarehouse engines; this is the
 interop layer.
 
+Reads are planned from the log alone: the committed ``schemaString``
+gives the data files' read schema (``_data_read_schema``), so opening
+a table runs no footer-inference job, and every scan of table data
+files — ``read_delta``, the ADD CONSTRAINT / SET GENERATED checks of
+existing rows, OPTIMIZE and the warehouse compaction — goes through
+the one deletion-vector-masking read (``_read_adds_mor``). No path
+sees a row a DV delete removed.
+
 Atomicity: the commit point is the atomic tmp→rename of the JSON file
 — identical discipline to ManifestWarehouse._commit, and exactly what
 Delta requires of its log store ("mutual exclusion on the commit
@@ -635,6 +643,50 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
     }
 
 
+def _data_read_schema(state: dict):
+    """The data files' read schema, planned from the replayed
+    ``schemaString`` alone — no footer job. Fields are named the way
+    the files store them (the physical name under name-mode column
+    mapping, else the logical name), partition columns are left out
+    (the files do not hold them), field metadata is dropped (no
+    generation expression or mapping key leaks into a caller's frame)
+    and every field is nullable: exactly what footer inference gives
+    for the files this writer stages."""
+    from pyspark.sql.types import StructField, StructType
+
+    pcols = set((state["metaData"] or {}).get("partitionColumns") or [])
+    mapped = state.get("mapping_mode") == "name"
+    return StructType(
+        [
+            StructField(
+                f.metadata.get("delta.columnMapping.physicalName", f.name)
+                if mapped
+                else f.name,
+                f.dataType,
+                True,
+            )
+            for f in StructType.fromJson(json.loads(state["schema"])).fields
+            if f.name not in pcols
+        ]
+    )
+
+
+def _partition_groups(adds: list[dict], pcols: list[str]) -> list:
+    """Add actions grouped by partition value tuple, in nulls-first
+    order: a NULL partition value is legal per spec (absent/None in
+    partitionValues), so the sort key must not compare str against
+    None (caught by the r9 conformance fixtures)."""
+    groups: dict[tuple, list[dict]] = {}
+    for a in adds:
+        pv = a.get("partitionValues") or {}
+        key = tuple((c, pv.get(c)) for c in pcols)
+        groups.setdefault(key, []).append(a)
+    return sorted(
+        groups.items(),
+        key=lambda kv: tuple((c, v is not None, v or "") for c, v in kv[0]),
+    )
+
+
 def read_delta(
     spark: SparkSession,
     table_path: str | Path,
@@ -642,7 +694,12 @@ def read_delta(
     partition_filters: dict[str, list[str]] | None = None,
 ) -> DataFrame:
     """Read a Delta table by replaying its transaction log (VERSION AS
-    OF when ``version`` is given). An empty live set returns an empty
+    OF when ``version`` is given). The read is planned from the log
+    alone: the data files are scanned with the schema the committed
+    ``schemaString`` declares (:func:`_data_read_schema`), so building
+    the frame runs no Spark job, and every file's deletion-vector mask
+    applies (:func:`_read_adds_mor`). A column the schema lists but an
+    older file lacks reads as NULL. An empty live set returns an empty
     DataFrame with the committed schema (the spec's metaData
     schemaString is authoritative, not the vanished files).
 
@@ -674,67 +731,38 @@ def read_delta(
         return spark.createDataFrame(
             [], StructType.fromJson(json.loads(state["schema"]))
         )
-    dv_adds = [a for a in state["adds"] if a.get("deletionVector")]
-    if dv_adds and mapped:
-        raise DeltaLogError(
-            "deletionVectors on column-mapped tables is out of this "
-            "reader's declared scope"
-        )
-    if dv_adds and not pcols:
-        return _read_adds_mor(spark, base, state["adds"])
+    schema = StructType.fromJson(json.loads(state["schema"]))
+    data_schema = _data_read_schema(state)
     if not pcols:
-        raw = spark.read.parquet(
-            *[str(base / _decode_path(f)) for f in state["files"]]
-        )
+        out = _read_adds_mor(spark, base, state["adds"], data_schema)
         if not mapped:
-            return raw
-        # name-mode column mapping: data files carry PHYSICAL names
-        # (field metadata delta.columnMapping.physicalName); project
-        # them back to the logical schema in field order
-        fields = json.loads(state["schema"])["fields"]
-        return raw.select(
+            return out
+        # name-mode column mapping: data files carry PHYSICAL names;
+        # project them back to the logical schema in field order
+        return out.select(
             *[
-                F.col(
-                    f.get("metadata", {}).get(
-                        "delta.columnMapping.physicalName", f["name"]
-                    )
-                ).alias(f["name"])
-                for f in fields
+                F.col(phys).alias(f.name)
+                for phys, f in zip(data_schema.names, schema.fields)
             ]
         )
-    schema = StructType.fromJson(json.loads(state["schema"]))
-    groups: dict[tuple, list[dict]] = {}
-    for a in state["adds"]:
-        pv = a.get("partitionValues") or {}
-        key = tuple((c, pv.get(c)) for c in pcols)
-        groups.setdefault(key, []).append(a)
+    groups = _partition_groups(state["adds"], pcols)
     if partition_filters:
-        groups = {
-            k: v
-            for k, v in groups.items()
+        groups = [
+            (k, v)
+            for k, v in groups
             if all(
                 val in allowed
                 for c, val in k
                 for fc, allowed in partition_filters.items()
                 if c == fc
             )
-        }
-    data_fields = [f for f in schema.fields if f.name not in pcols]
-    data_schema = StructType(data_fields)
+        ]
     out = None
-    # nulls-first group order: a NULL partition value is legal per
-    # spec (absent/None in partitionValues), so the sort key must not
-    # compare str against None (caught by the r9 conformance fixtures)
-    for key, adds in sorted(
-        groups.items(),
-        key=lambda kv: tuple(
-            (c, v is not None, v or "") for c, v in kv[0]
-        ),
-    ):
+    for key, adds in groups:
         # r10: DV masks apply inside each partition group (data files
         # exclude partition columns, so the mask must run BEFORE the
         # literals are attached)
-        part = _read_adds_mor(spark, base, adds, read_schema=data_schema)
+        part = _read_adds_mor(spark, base, adds, data_schema)
         for c, val in key:
             part = part.withColumn(
                 c, F.lit(val).cast(schema[c].dataType)
@@ -747,28 +775,26 @@ def read_delta(
 
 
 def _read_adds_mor(
-    spark: SparkSession, base: Path, adds: list[dict], read_schema=None
+    spark: SparkSession, base: Path, adds: list[dict], read_schema
 ) -> DataFrame:
-    """Read a list of add actions applying MERGE-ON-READ deletion-
+    """Read a list of add actions with ``read_schema`` (the log-planned
+    :func:`_data_read_schema`), applying MERGE-ON-READ deletion-
     vector masks: clean files bulk-read in one scan; each DV'd file
     reads with its parquet row index and the deleted positions
-    anti-joined away. A reader materializes each DV bitmap in memory
+    anti-joined away. The one read path over table data files —
+    ``read_delta`` and every writer-side rewrite (OPTIMIZE, the
+    warehouse compaction) go through it, so no path resurrects
+    deleted rows. A reader materializes each DV bitmap in memory
     by design (that's what a DV IS); position relations are
     broadcast, never shuffled."""
     from pyspark.sql import functions as F
 
-    def rdr():
-        return (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-
+    rdr = spark.read.schema(read_schema)
     clean = [a for a in adds if not a.get("deletionVector")]
     parts = []
     if clean:
         parts.append(
-            rdr().parquet(
+            rdr.parquet(
                 *[str(base / _decode_path(a["path"])) for a in clean]
             )
         )
@@ -776,7 +802,7 @@ def _read_adds_mor(
         if not a.get("deletionVector"):
             continue
         positions = _dv_positions(a["deletionVector"], base)
-        d = rdr().parquet(
+        d = rdr.parquet(
             str(base / _decode_path(a["path"]))
         ).withColumn("__dv_ri", F.col("_metadata.row_index"))
         if positions:
@@ -1123,12 +1149,10 @@ class DeltaLogWriter:
         state = _replay(self.path, None)
         md = dict(state["metaData"] or {})
         if state["files"]:
-            existing = self.spark.read.parquet(
-                *[str(self.path / _decode_path(f)) for f in state["files"]]
-            )
             from pyspark.sql import functions as F
 
-            bad = existing.filter(
+            # the rows a reader sees: logical names, DV masks applied
+            bad = read_delta(self.spark, self.path).filter(
                 ~F.coalesce(F.expr(expr), F.lit(True))
             ).count()
             if bad:
@@ -1182,10 +1206,7 @@ class DeltaLogWriter:
         if state["files"]:
             from pyspark.sql import functions as F
 
-            existing = self.spark.read.parquet(
-                *[str(self.path / _decode_path(f)) for f in state["files"]]
-            )
-            bad = existing.filter(
+            bad = read_delta(self.spark, self.path).filter(
                 ~F.col(col).eqNullSafe(F.expr(expr))
             ).count()
             if bad:
@@ -1626,49 +1647,27 @@ class DeltaLogWriter:
         pcols = list(
             (state["metaData"] or {}).get("partitionColumns") or []
         )
-        if pcols:
-            # partitioned MOR view (r10, VERDICT task 4): data files
-            # exclude partition columns, so reconstitute them per
-            # add-group BEFORE the predicate runs (predicates on
-            # partition columns are the common DV-delete shape —
-            # "purge this tenant/day") while keeping the physical
-            # file/row coordinates for the bitmaps
-            schema = StructType.fromJson(json.loads(state["schema"]))
-            data_schema = StructType(
-                [f for f in schema.fields if f.name not in pcols]
-            )
-            groups: dict[tuple, list[dict]] = {}
-            for a in state["adds"]:
-                pv = a.get("partitionValues") or {}
-                key = tuple((c, pv.get(c)) for c in pcols)
-                groups.setdefault(key, []).append(a)
-            df = None
-            for key, adds in sorted(
-                groups.items(),
-                key=lambda kv: tuple(
-                    (c, v is not None, v or "") for c, v in kv[0]
-                ),
-            ):
-                part = self.spark.read.schema(data_schema).parquet(
-                    *[str(base / _decode_path(a["path"])) for a in adds]
-                ).select(
-                    "*",
-                    F.col("_metadata.file_path").alias("__dv_fp"),
-                    F.col("_metadata.row_index").alias("__dv_ri"),
-                )
-                for c, val in key:
-                    part = part.withColumn(
-                        c, F.lit(val).cast(schema[c].dataType)
-                    )
-                df = part if df is None else df.unionByName(part)
-        else:
-            df = self.spark.read.parquet(
-                *[str(base / _decode_path(a["path"])) for a in state["adds"]]
+        # the unmasked scan keeps each row's physical file/row
+        # coordinates for the bitmaps; partitioned tables (r10)
+        # reconstitute their partition columns per add-group BEFORE
+        # the predicate runs (predicates on partition columns are the
+        # common DV-delete shape — "purge this tenant/day")
+        schema = StructType.fromJson(json.loads(state["schema"]))
+        data_schema = _data_read_schema(state)
+        df = None
+        for key, adds in _partition_groups(state["adds"], pcols):
+            part = self.spark.read.schema(data_schema).parquet(
+                *[str(base / _decode_path(a["path"])) for a in adds]
             ).select(
                 "*",
                 F.col("_metadata.file_path").alias("__dv_fp"),
                 F.col("_metadata.row_index").alias("__dv_ri"),
             )
+            for c, val in key:
+                part = part.withColumn(
+                    c, F.lit(val).cast(schema[c].dataType)
+                )
+            df = part if df is None else df.unionByName(part)
         existing: dict[str, list[int]] = {}
         old_pairs: list[tuple[str, int]] = []
         for uri, a in by_uri.items():
@@ -1883,7 +1882,11 @@ class DeltaLogWriter:
         re-process the rewrite — so readers see identical rows before
         and after while the file count drops. History is preserved:
         compaction is a normal commit, the pre-OPTIMIZE version stays
-        time-travelable until VACUUM retires its files.
+        time-travelable until VACUUM retires its files. Each bin is
+        read through the log-planned ``_read_adds_mor`` (committed
+        schema, physical names under column mapping), so deletion-
+        vector masks apply and the rewritten file drops the deleted
+        rows instead of resurrecting them.
 
         Returns {'version', 'files_before', 'files_after',
         'bins_rewritten'}; version is -1 when nothing qualifies (the
@@ -1932,8 +1935,8 @@ class DeltaLogWriter:
             for b in bins:
                 if len(b) < 2:
                     continue
-                df = self.spark.read.parquet(
-                    *[str(self.path / _decode_path(a["path"])) for a in b]
+                df = _read_adds_mor(
+                    self.spark, self.path, b, _data_read_schema(state)
                 )
                 staged = self._stage(df.coalesce(1))
                 for add in staged:

@@ -1143,3 +1143,173 @@ def test_rejected_batch_unstages_its_files(spark, tmp_path):
     # and the writer still works after the rejection
     w.append(_df(spark, [(7, "g")]))
     assert read_delta(spark, p).count() == 3
+
+
+# ---------------------------------------------------------------------------
+# Reads planned from the log: committed schema, no footer job.
+
+
+def test_building_a_read_runs_no_spark_job(spark, tmp_path, jobs_in_group):
+    """Slack 0: the read schema comes from the log, so building the
+    frame never runs a footer-inference job — for the latest version,
+    VERSION AS OF, a column-mapped table and a table with deletion
+    vectors."""
+    plain = tmp_path / "plain"
+    w = DeltaLogWriter(spark, plain)
+    w.create(_df(spark, [(1, "a"), (2, "b")]))
+    w.append(_df(spark, [(3, "c")]))
+    mapped = tmp_path / "mapped"
+    wm = DeltaLogWriter(spark, mapped)
+    wm.create(_df(spark, [(1, "a"), (2, "b")]))
+    wm.rename_column("v", "value")
+    dv = tmp_path / "dv"
+    wd = DeltaLogWriter(spark, dv)
+    wd.create(_df(spark, [(1, "a"), (2, "b")]))
+    wd.append(_df(spark, [(3, "c")]))
+    wd.delete_where_dv("id = 2")
+    cases = {
+        "latest": (lambda: read_delta(spark, plain), [1, 2, 3]),
+        "version": (lambda: read_delta(spark, plain, version=0), [1, 2]),
+        "mapped": (lambda: read_delta(spark, mapped), [1, 2]),
+        "dv": (lambda: read_delta(spark, dv), [1, 3]),
+    }
+    for name, (build, want) in cases.items():
+        df, jobs = jobs_in_group(f"read_delta_{name}", build)
+        assert jobs == 0, f"{name}: building the read ran {jobs} job(s)"
+        assert sorted(r.id for r in df.collect()) == want, name
+
+
+def test_read_schema_equals_footer_inference(spark, tmp_path):
+    """The log-planned schema is the one footer inference gave: same
+    names, types and nullability, and no field metadata — neither the
+    generation expression nor the column-mapping keys leak out."""
+    import pyarrow.parquet as pq
+
+    from lakehouse_poc_spark.sources.deltalog import _replay
+
+    p = tmp_path / "t"
+    w = DeltaLogWriter(spark, p)
+    w.create(
+        spark.createDataFrame(
+            [(1, 10, 2), (2, 20, 4)], "id long not null, v long, twice long"
+        )
+    )
+    w.set_generated_column("twice", "id * 2")
+    w.rename_column("v", "value")
+    w.append(spark.createDataFrame([(3, 30)], "id long, value long"))
+    files = [str(p / f) for f in _replay(p, None)["files"]]
+    assert all("v" in pq.read_schema(f).names for f in files)
+    footer = spark.read.parquet(*files).withColumnRenamed("v", "value")
+    got = read_delta(spark, p).schema
+    assert got == footer.schema
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in got] == [
+        ("id", "bigint", True),
+        ("value", "bigint", True),
+        ("twice", "bigint", True),
+    ]
+    assert all(f.metadata == {} for f in got.fields)
+
+
+def test_column_missing_from_an_older_file_reads_as_null(spark, tmp_path):
+    """A foreign log whose schemaString lists a column that an older
+    data file lacks (schema evolution by a foreign writer): the
+    committed schema rules, and the old file's rows read it as NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = tmp_path / "t"
+    t.mkdir()
+    pq.write_table(
+        pa.table({"id": pa.array([1, 2], pa.int64())}), str(t / "old.parquet")
+    )
+    pq.write_table(
+        pa.table({"id": pa.array([3], pa.int64()), "v": pa.array(["c"])}),
+        str(t / "new.parquet"),
+    )
+    schema = {
+        "type": "struct",
+        "fields": [
+            {"name": n, "type": ty, "nullable": True, "metadata": {}}
+            for n, ty in (("id", "long"), ("v", "string"))
+        ],
+    }
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {
+            "metaData": {
+                "id": "foreign",
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": json.dumps(schema),
+                "partitionColumns": [],
+                "configuration": {},
+            }
+        },
+    ] + [
+        {
+            "add": {
+                "path": name,
+                "partitionValues": {},
+                "size": (t / name).stat().st_size,
+                "modificationTime": 1700000000000,
+                "dataChange": True,
+            }
+        }
+        for name in ("old.parquet", "new.parquet")
+    ]
+    (t / "_delta_log").mkdir()
+    (t / "_delta_log" / f"{0:020d}.json").write_text(
+        "\n".join(json.dumps(a) for a in actions) + "\n"
+    )
+    got = read_delta(spark, t)
+    assert got.columns == ["id", "v"]
+    assert sorted((r.id, r.v) for r in got.collect()) == [
+        (1, None), (2, None), (3, "c"),
+    ]
+
+
+# ---------------------------------------------------------------------------
+# ADD CONSTRAINT / SET GENERATED validate the rows a reader sees.
+
+
+def _amt_table(spark, p, rows=((1, 10, 20), (2, -5, -10))):
+    w = DeltaLogWriter(spark, p)
+    w.create(spark.createDataFrame(list(rows), "id long, amt long, dbl long"))
+    return w
+
+
+def test_add_constraint_checks_logical_names_after_rename(spark, tmp_path):
+    w = _amt_table(spark, tmp_path / "t")
+    w.rename_column("amt", "amount")
+    w.set_check_constraint("c", "amount > -100")
+    with pytest.raises(DeltaLogError, match="1 existing rows violate"):
+        w.set_check_constraint("c2", "amount >= 0")
+
+
+def test_add_constraint_ignores_dv_deleted_rows(spark, tmp_path):
+    from lakehouse_poc_spark.sources.deltalog import _replay
+
+    p = tmp_path / "t"
+    w = _amt_table(spark, p)
+    w.delete_where_dv("amt < 0")
+    w.set_check_constraint("c", "amt >= 0")
+    cfg = _replay(p, None)["metaData"]["configuration"]
+    assert cfg["delta.constraints.c"] == "amt >= 0"
+
+
+def test_set_generated_checks_logical_names_after_rename(spark, tmp_path):
+    w = _amt_table(spark, tmp_path / "t")
+    w.rename_column("amt", "amount")
+    w.set_generated_column("dbl", "amount * 2")
+    with pytest.raises(DeltaLogError, match="existing rows differ"):
+        w.set_generated_column("dbl", "amount * 3")
+
+
+def test_set_generated_ignores_dv_deleted_rows(spark, tmp_path):
+    p = tmp_path / "t"
+    # row 2 breaks dbl = amt * 2, but a DV delete removes it
+    w = _amt_table(spark, p, rows=((1, 10, 20), (2, -5, 0)))
+    w.delete_where_dv("amt < 0")
+    w.set_generated_column("dbl", "amt * 2")
+    assert sorted(
+        (r.id, r.dbl) for r in read_delta(spark, p).collect()
+    ) == [(1, 20)]

@@ -350,3 +350,64 @@ def test_restore_resolves_relative_dv_sidecars(spark, tmp_path):
     v = w.restore(1)  # must NOT raise the vacuumed-DV guard
     assert v == 3
     assert read_delta(spark, p).count() == 9
+
+
+@pytest.mark.parametrize("entry", ["optimize", "warehouse_compact"])
+def test_compaction_keeps_dv_deleted_rows_deleted(spark, tmp_path, entry):
+    """Both compaction entry points read through the DV-masking path:
+    a rewrite must not bring back rows a DV delete removed."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    schema = "id long, amt long"
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh.overwrite(spark.createDataFrame([(1, 10), (2, -5)], schema), "t")
+    wh.append(spark.createDataFrame([(3, 7)], schema), "t")
+    wh._writer("t").delete_where_dv("amt < 0")
+    want = [(1, 10), (3, 7)]
+    assert sorted(map(tuple, wh.read("t").collect())) == want
+    if entry == "optimize":
+        res = wh._writer("t").optimize()
+        assert res["bins_rewritten"] == 1
+    else:
+        wh.compact("t", target_files=1)
+    assert len(_replay(wh.path("t"), None)["files"]) == 1
+    assert sorted(map(tuple, wh.read("t").collect())) == want
+
+
+def test_dv_masks_apply_on_a_column_mapped_table(spark, tmp_path):
+    """A foreign table may carry both reader features: a DV'd file
+    under name-mode column mapping reads through the same masking
+    path, projected to the logical names."""
+    p = tmp_path / "t"
+    w = _mk(spark, p, n=6)
+    w.delete_where_dv("id % 2 = 0")
+    st = _replay(p, None)
+    md = dict(st["metaData"])
+    md["configuration"] = {"delta.columnMapping.mode": "name"}
+    sch = json.loads(md["schemaString"])
+    for i, f in enumerate(sch["fields"], start=1):
+        f["metadata"] = {
+            "delta.columnMapping.id": i,
+            "delta.columnMapping.physicalName": f["name"],
+        }
+    sch["fields"][1]["name"] = "value"
+    md["schemaString"] = json.dumps(sch)
+    w._commit(
+        [
+            {
+                "protocol": {
+                    "minReaderVersion": 3,
+                    "minWriterVersion": 7,
+                    "readerFeatures": ["columnMapping", "deletionVectors"],
+                    "writerFeatures": ["columnMapping", "deletionVectors"],
+                }
+            },
+            {"metaData": md},
+        ],
+        "FOREIGN RENAME",
+    )
+    got = read_delta(spark, p)
+    assert got.columns == ["id", "value"]
+    assert sorted(map(tuple, got.collect())) == [
+        (1, "v1"), (3, "v3"), (5, "v5"),
+    ]

@@ -534,27 +534,16 @@ BOOTSTRAP_JOB_BUDGET = 1
 MERGE_JOB_BUDGET = 4
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _dim_rows(wh):
     return sorted(tuple(map(str, r)) for r in wh.read(CFG.dim_table).collect())
 
 
-def test_one_pass_merge_job_budget_and_no_cache(spark, wh):
+def test_one_pass_merge_job_budget_and_no_cache(spark, wh, jobs_in_group):
     sc = spark.sparkContext
     persisted_before = set(sc._jsc.getPersistentRDDs().keySet())
     b1 = batch(spark, BATCH1)
-    boot, boot_jobs = _jobs_in_group(
-        spark, "scd2-bootstrap", lambda: scd2_merge(wh, CFG, b1, T1)
+    boot, boot_jobs = jobs_in_group(
+        "scd2-bootstrap", lambda: scd2_merge(wh, CFG, b1, T1)
     )
     assert boot.as_dict() == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
     b2 = batch(
@@ -565,8 +554,8 @@ def test_one_pass_merge_job_budget_and_no_cache(spark, wh):
             ("K4", "Einkauf", "Sued"),
         ],
     )
-    stats, merge_jobs = _jobs_in_group(
-        spark, "scd2-merge", lambda: scd2_merge(wh, CFG, b2, T2)
+    stats, merge_jobs = jobs_in_group(
+        "scd2-merge", lambda: scd2_merge(wh, CFG, b2, T2)
     )
     assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted_before
