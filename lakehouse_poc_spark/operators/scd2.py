@@ -25,11 +25,10 @@ Differences from the reference, by design:
 
 Scale notes: a full outer join cannot broadcast, so the batch and the
 open rows each shuffle once on the business key, and the dimension is
-scanned once for the open rows and once for the history. The final
-apply is format-specific: on parquet emulation we rewrite the
-dimension (staged swap); on Delta/Iceberg flag filters of the same
-observed join feed a MERGE that rewrites only matched files, then an
-append of the new versions.
+scanned once for the open rows and once for the history. The new
+dimension is one plan, committed through the warehouse's
+``overwrite_from_plan``: a staged-swap rewrite on the parquet layout, a
+new log version on the Delta-log and Iceberg backends.
 """
 
 from __future__ import annotations
@@ -152,7 +151,6 @@ def scd2_merge(
     flagged = (
         src.join(tgt, cond, "full_outer")
         .select(
-            *[F.col(f"src.{c}").alias(c) for c in cfg.wanted_columns],
             F.when(is_new, F.array(opened))
             .when(is_changed, F.array(closed, opened))
             .otherwise(F.array(version("tgt", {})))
@@ -168,29 +166,12 @@ def scd2_merge(
             F.count_if("__is_same").alias("same"),
         )
     )
-    changed_keys = flagged.filter(F.col("__is_changed")).select(*keys)
-    inserts = (
-        flagged.filter(F.col("__is_new") | F.col("__is_changed"))
-        .select(*cfg.wanted_columns)
-        .withColumns(_opening(cfg, run_ts))
-    )
     # The observed side goes first: the union then runs in the batch's
     # session, the one the Observation is registered in (a foreachBatch
     # frame lives in the stream's cloned session, history in wh.spark).
     new_dim = flagged.select(F.inline("__versions")).unionByName(history)
-    # format-specific apply: parquet rewrites via staged swap; Delta
-    # MERGEs the closes in place and appends the inserts. Either way
-    # the write is the action that fills the Observation.
-    wh.apply_scd2_changeset(
-        cfg.dim_table,
-        keys,
-        changed_keys,
-        inserts,
-        t.is_current,
-        t.valid_to,
-        run_ts,
-        new_dim,
-    )
+    # the write is the action that fills the Observation
+    wh.apply_scd2_changeset(cfg.dim_table, new_dim)
     counts = obs.get
     return MergeStats(
         unchanged=counts["same"],

@@ -36,6 +36,7 @@ from ..sources.readers import (
     read_parquet_table,
 )
 from ..streaming.runner import (
+    _scoped_shuffle_partitions,
     run_append_to_parquet,
     run_foreach_batch,
     run_to_memory,
@@ -3033,18 +3034,20 @@ def stream_slo_burn_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches back-fill executors freed by the fast window's
     # tail (guide §2.6 overlap — r10 optimization round: sequential
     # availableNow runs paid two full micro-batch floors end to end).
+    # The state-partition scope is entered ONCE around the pool: two
+    # threads each saving/restoring the shared session conf interleave
+    # and can leave the inner value behind.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        nparts = stream_state_partitions(spark, f"{sf_dir}/events.parquet")
+    nparts = stream_state_partitions(spark, f"{sf_dir}/events.parquet")
+    with _scoped_shuffle_partitions(spark, nparts), ThreadPoolExecutor(
+        max_workers=2
+    ) as pool:
         fast_f = pool.submit(
-            run_to_memory, counts(F.window("ts", "1 hour")), "complete", nparts
+            run_to_memory, counts(F.window("ts", "1 hour")), "complete"
         )
         slow_f = pool.submit(
-            run_to_memory,
-            counts(F.window("ts", "6 hours", "1 hour")),
-            "complete",
-            nparts,
+            run_to_memory, counts(F.window("ts", "6 hours", "1 hour")), "complete"
         )
         fast, slow = fast_f.result(), slow_f.result()
     f = fast.select(

@@ -6,15 +6,16 @@ overwrite init — :147-153, K3 append versions — :245-252) plus the
 catalog existence check (M3, :138 — done there via the JVM-internal
 ``spark._jsparkSession``; we use only the filesystem/public API).
 
-This container has no delta-spark, so managed tables are emulated as
-parquet directories under a warehouse root. The interface is the
-Delta-shaped one (append / overwrite / merge-by-rewrite), so swapping
-in real Delta or Iceberg is a one-class change:
-
-    At 100 TB you would NOT rewrite a dimension on every merge — you'd
-    run a Delta/Iceberg MERGE that rewrites only matched files. The
-    SCD2 engine (operators/scd2.py) therefore computes an explicit
-    change-set first; `apply` is the only format-specific step.
+``Warehouse`` emulates managed tables as parquet directories under a
+warehouse root, behind the Delta-shaped interface (append / overwrite /
+merge-by-rewrite). The spec'd table formats are subclasses over the
+same interface: ``DeltaLogWarehouse`` writes real Delta tables (JSON
+commit log, ``sources/deltalog.py``) and ``IcebergMetaWarehouse`` real
+Iceberg tables (``sources/iceberg_meta.py``), both readable by any
+Delta or Iceberg runtime; ``ManifestWarehouse`` adds a versioned file
+manifest to the parquet layout. The SCD2 engine (operators/scd2.py)
+builds the complete new dimension as one plan, and each backend
+commits it through ``overwrite_from_plan``.
 
 Scale notes: raw tables should be partitioned by ingest date
 (``partition_by=["ingest_date"]``) so time-bounded reprocessing prunes;
@@ -141,65 +142,6 @@ def hilbert_sql(
     return q
 
 
-def delta_available() -> bool:
-    """True when the delta-spark bindings are importable. This container
-    ships without them; on a real cluster ``pip install delta-spark`` +
-    the Delta catalog/extension confs light up the ``format="delta"``
-    backend with no code change."""
-    try:  # pragma: no cover - absent in the test container by design
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the iceberg-spark-runtime JAR is on the session's
-    classpath. Iceberg ships as a JVM-side JAR (no Python package), so
-    availability is probed behaviorally: register a throwaway hadoop
-    catalog and ask Spark to resolve it — resolution instantiates
-    ``org.apache.iceberg.spark.SparkCatalog``, which throws when the
-    JAR is absent. Public API only (conf + SQL), Connect-safe."""
-    confs = {
-        "spark.sql.catalog._iceberg_probe": (
-            "org.apache.iceberg.spark.SparkCatalog"
-        ),
-        "spark.sql.catalog._iceberg_probe.type": "hadoop",
-        "spark.sql.catalog._iceberg_probe.warehouse": "/tmp/_iceberg_probe_wh",
-    }
-    try:  # pragma: no cover - JAR absent in the test container by design
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        spark.sql("SHOW NAMESPACES IN _iceberg_probe").collect()
-        return True
-    except Exception:
-        return False
-    finally:
-        # don't leave the throwaway catalog registered — a later SHOW
-        # CATALOGS / catalog listing would trip over it when the JAR
-        # is absent
-        for k in confs:
-            try:  # pragma: no cover - unset unsupported on some builds
-                spark.conf.unset(k)
-            except Exception:
-                pass
-
-
-def _append_writer_options(fmt: str) -> dict[str, str]:
-    """Per-format writer options for Warehouse.append. Delta appends
-    carry ``mergeSchema=true`` so an evolved batch (scd2_merge
-    ``evolve=True`` — a wider inserts schema) widens the table's log
-    schema instead of failing; Delta ignores the option when schemas
-    already match, and parquet-dir appends reconcile at read time via
-    ``read(merge_schema=True)`` instead (writer-side mergeSchema is a
-    Delta/Iceberg concept). Kept as a pure helper so the delta mock
-    suite can assert the option without a DataFrameWriter intercept."""
-    if fmt == "delta":
-        return {"mergeSchema": "true"}
-    return {}
-
-
 class ConcurrentWriteError(RuntimeError):
     """Optimistic-concurrency conflict: the table advanced past the
     writer's snapshot version with commits the writer's operation
@@ -208,72 +150,28 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class Warehouse:
-    """``format="parquet"`` (default) emulates managed tables as parquet
-    dirs with staged-swap rewrites. ``format="delta"`` (reference M1/M2:
-    Delta ``saveAsTable`` + ``MERGE`` — pipeline_core.py:62-68,219-227)
-    uses path-based Delta tables: ACID overwrites replace the staged
-    swap and the SCD2 change-set feeds ``DeltaTable.merge``, rewriting
-    only matched files instead of the whole dimension.
-
-    ``format="iceberg"`` uses a per-warehouse Iceberg HADOOP catalog
-    (``spark.sql.catalog.<name> = org.apache.iceberg.spark.
-    SparkCatalog`` with ``warehouse=<root>``): tables are catalog
-    identifiers (``<cat>.dim.kunden``), writes go through the
-    DataFrameWriterV2 (``writeTo().append()/createOrReplace()``) and
-    row-level maintenance through SQL ``MERGE INTO`` / ``DELETE FROM``
-    — Iceberg's native transaction surface, so merges rewrite only the
-    files holding matched keys and partition-aligned deletes are
-    metadata-only. Same north-star as Delta (BASELINE "Delta/Iceberg");
-    the two branches are deliberately parallel."""
-
-    FORMATS = ("parquet", "delta", "iceberg")
+    """Managed tables as parquet directories with staged-swap
+    rewrites (the reference's Delta ``saveAsTable`` + ``MERGE`` sink,
+    pipeline_core.py:62-68,219-227, on plain parquet). Rewrites swap a
+    staged directory in; with ``track_versions=True`` the superseded
+    state is archived for time travel. The subclasses below keep this
+    interface and replace the storage layer: a versioned manifest, the
+    Delta log, or Iceberg metadata."""
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
-        format: str = "parquet",
         track_versions: bool = False,
     ):
-        if format not in self.FORMATS:
-            raise ValueError(f"format must be one of {self.FORMATS}, got {format!r}")
-        if format == "delta" and not delta_available():
-            raise ImportError(
-                "format='delta' requires the delta-spark package (pip install "
-                "delta-spark) and the Delta SQL extension/catalog session confs"
-            )
-        if format == "iceberg" and not iceberg_available(spark):
-            raise ImportError(
-                "format='iceberg' requires the iceberg-spark-runtime JAR on "
-                "the session classpath (spark.jars.packages "
-                "org.apache.iceberg:iceberg-spark-runtime-3.5_2.13:<ver>)"
-            )
         self.spark = spark
         self.root = Path(root)
-        self.format = format
-        if format == "iceberg":
-            # One hadoop catalog per warehouse root; the name is derived
-            # from the root so two Warehouse instances over different
-            # roots never collide in the session's catalog namespace.
-            import hashlib
-
-            digest = hashlib.md5(str(self.root).encode()).hexdigest()[:8]
-            self.catalog = f"lh_ice_{digest}"
-            spark.conf.set(
-                f"spark.sql.catalog.{self.catalog}",
-                "org.apache.iceberg.spark.SparkCatalog",
-            )
-            spark.conf.set(f"spark.sql.catalog.{self.catalog}.type", "hadoop")
-            spark.conf.set(
-                f"spark.sql.catalog.{self.catalog}.warehouse", str(self.root)
-            )
         # Time travel: when True, every table REWRITE (overwrite /
         # overwrite_from_plan / SCD2 apply) archives the superseded
         # state under <table>__versions/v{n} instead of deleting it.
-        # Delta tracks versions natively, so the flag is parquet-only.
         # Appends are not versioned: raw landing tables are
         # append-only logs whose history IS the table.
-        self.track_versions = track_versions and format == "parquet"
+        self.track_versions = track_versions
         self.root.mkdir(parents=True, exist_ok=True)
         # per-thread reentrancy state for _writer_lock (a DML op that
         # holds the lock may call append/overwrite internally)
@@ -291,13 +189,6 @@ class Warehouse:
         # "layer0100.kosten_raw" → <root>/layer0100/kosten_raw
         return self.root.joinpath(*table.split("."))
 
-    def _ice_id(self, table: str) -> str:
-        """Catalog identifier for the iceberg backend:
-        ``dim.kunden`` → ``<catalog>.`dim`.`kunden``` (parts quoted so
-        reference-style table names survive SQL)."""
-        parts = ".".join(f"`{p}`" for p in table.split("."))
-        return f"{self.catalog}.{parts}"
-
     def _versions_dir(self, table: str) -> Path:
         p = self.path(table)
         return p.with_name(p.name + "__versions")
@@ -306,15 +197,7 @@ class Warehouse:
         """Current version number: 0 for a freshly created table,
         +1 per archived rewrite (Delta-style monotone counter).
         Derived from the highest archived index — NOT the archive
-        count — so vacuumed history never causes index reuse.
-        Iceberg: the current snapshot id (its native version handle —
-        what ``read_version``/``restore`` accept)."""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            rows = self.spark.sql(
-                f"SELECT snapshot_id FROM {self._ice_id(table)}.history "
-                "ORDER BY made_current_at DESC LIMIT 1"
-            ).collect()
-            return int(rows[0][0]) if rows else 0
+        count — so vacuumed history never causes index reuse."""
         vd = self._versions_dir(table)
         snaps = sorted(vd.glob("v*")) if vd.exists() else []
         return int(snaps[-1].name[1:]) + 1 if snaps else 0
@@ -357,19 +240,6 @@ class Warehouse:
         """Time travel: read the table as of ``version``. The current
         version reads the live dir; earlier ones read the archive.
         (Delta: ``option("versionAsOf", n)``.)"""
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            return (
-                self.spark.read.format("delta")
-                .option("versionAsOf", version)
-                .load(str(self.path(table)))
-            )
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            # Spark's time-travel option; for Iceberg the version is a
-            # snapshot id (surface history() to enumerate them).
-            return (
-                self.spark.read.option("versionAsOf", version)
-                .table(self._ice_id(table))
-            )
         current = self.version(table)
         if version == current:
             return self.read(table)
@@ -394,17 +264,9 @@ class Warehouse:
         Plan shape: two anti-joins + one inner join, all on ``keys`` —
         a single shuffle key, so AQE plans them as one exchange reused
         three times. Nothing is driver-side; at 100 TB the cost is one
-        co-partitioning of the two snapshots. (Delta: the change feed
-        is read from the log instead — ``readChangeFeed`` — but the
-        emitted schema here matches, so callers are portable.)"""
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            return (
-                self.spark.read.format("delta")
-                .option("readChangeFeed", "true")
-                .option("startingVersion", v_from)
-                .option("endingVersion", v_to)
-                .load(str(self.path(table)))
-            )
+        co-partitioning of the two snapshots. (Delta reads the change
+        feed from the log instead — ``readChangeFeed`` — with the same
+        emitted schema, so callers are portable.)"""
         old = self.read_version(table, v_from)
         new = self.read_version(table, v_to)
         data_cols = [c for c in new.columns if c not in keys]
@@ -433,10 +295,6 @@ class Warehouse:
 
     def table_exists(self, table: str) -> bool:
         p = self.path(table)
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            return (p / "_delta_log").exists()
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            return self.spark.catalog.tableExists(self._ice_id(table))
         if not p.exists():
             return False
         # recursive: partitioned tables nest their files under
@@ -447,56 +305,29 @@ class Warehouse:
         """``merge_schema=True`` unions column sets across files —
         schema evolution on an append-only raw table (a batch landed
         with new columns reads back as the superset, old rows null).
-        Delta resolves schema from its log, so the option is a no-op
-        there."""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            # merge_schema is a no-op: Iceberg resolves schema from
-            # table metadata (same as Delta's log)
-            return self.spark.table(self._ice_id(table))
-        reader = self.spark.read.format(self.format)
-        if merge_schema and self.format == "parquet":
+        The log-backed subclasses resolve the schema from their log, so
+        the option is a no-op there."""
+        reader = self.spark.read
+        if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.load(str(self.path(table)))
+        return reader.parquet(str(self.path(table)))
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            ice = self._ice_id(table)
-            if not self.table_exists(table):
-                wt = df.writeTo(ice)
-                if partition_by:
-                    wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
-                wt.create()
-            else:
-                df.writeTo(ice).append()
-            return
-        w = df.write.format(self.format).mode("append")
-        for k, v in _append_writer_options(self.format).items():
-            w = w.option(k, v)
+        w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.save(str(self.path(table)))
+        w.parquet(str(self.path(table)))
 
     def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            # REPLACE TABLE AS SELECT: one transaction, schema/layout
-            # changes included (no archive step — snapshots are native)
-            wt = df.writeTo(self._ice_id(table))
-            if partition_by:
-                wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
-            wt.createOrReplace()
-            return
         self._archive_current(table)
-        if self.format == "parquet" and self._dv_active(table):
+        if self._dv_active(table):
             # a full replace discards the old contents; stale
             # tombstones referencing vanished basenames must go too
             self.drop(self._dv_table(table))
-        w = df.write.format(self.format).mode("overwrite")
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            # allow repartitioning/layout changes across overwrites
-            w = w.option("overwriteSchema", "true")
-        w.save(str(self.path(table)))
+        w.parquet(str(self.path(table)))
 
     def overwrite_from_plan(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
@@ -504,15 +335,9 @@ class Warehouse:
         """Overwrite a table with a plan that READS the same table.
 
         A plain overwrite would clobber its own input mid-read; stage to
-        a sibling dir then atomically swap (rename). Delta/Iceberg make
-        this a transaction; this is the parquet-dir equivalent.
+        a sibling dir then atomically swap (rename). The log-backed
+        subclasses commit new files instead, so they need no staging.
         """
-        if self.format in ("delta", "iceberg"):  # pragma: no cover - needs jar
-            # Delta/Iceberg overwrites are snapshot-isolated
-            # transactions: the plan reads the pre-overwrite snapshot,
-            # no staging needed.
-            self.overwrite(df, table, partition_by=partition_by)
-            return
         target = self.path(table)
         staged = target.with_name(target.name + "__staging")
         if staged.exists():
@@ -541,25 +366,13 @@ class Warehouse:
         present in ``df``, leaving all others untouched. The physical
         primitive behind incremental rollup maintenance — at 100 TB an
         hourly upsert rewrites a handful of day partitions, not the
-        table. (Delta's ``replaceWhere``; parquet/delta use the
-        datasource ``partitionOverwriteMode=dynamic`` form; Iceberg
-        uses its native V2 ``overwritePartitions()`` — the V1 path
-        save would bypass the catalog and corrupt table metadata.)"""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            ident = self._ice_id(table)
-            if not self.table_exists(table):
-                df.writeTo(ident).partitionedBy(
-                    *[F.col(c) for c in partition_by]
-                ).create()
-                return
-            df.writeTo(ident).overwritePartitions()
-            return
+        table. (Delta's ``replaceWhere``; here the datasource
+        ``partitionOverwriteMode=dynamic`` form.)"""
         (
-            df.write.format(self.format)
-            .mode("overwrite")
+            df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
-            .save(str(self.path(table)))
+            .parquet(str(self.path(table)))
         )
 
     def drop_partitions(
@@ -576,25 +389,6 @@ class Warehouse:
         dropped."""
         if (before is None) == (values is None):
             raise ValueError("exactly one of before/values is required")
-        if self.format in ("delta", "iceberg"):  # pragma: no cover - needs jar
-            if values is not None:
-                quoted = ", ".join(f"'{v}'" for v in values)
-                pred = f"{partition_col} IN ({quoted})"
-            else:
-                pred = f"{partition_col} < '{before}'"
-            n = len(values) if values is not None else -1
-            if self.format == "iceberg":
-                # partition-aligned DELETE FROM is metadata-only in
-                # Iceberg (drops whole data files, no rewrite)
-                self.spark.sql(
-                    f"DELETE FROM {self._ice_id(table)} WHERE {pred}"
-                )
-                return n
-            from delta.tables import DeltaTable
-
-            dt = DeltaTable.forPath(self.spark, str(self.path(table)))
-            dt.delete(pred)
-            return n
         dropped = 0
         prefix = f"{partition_col}="
         for d in sorted(self.path(table).glob(f"{prefix}*")):
@@ -608,69 +402,14 @@ class Warehouse:
                 dropped += 1
         return dropped
 
-    def apply_scd2_changeset(
-        self,
-        table: str,
-        keys: list[str],
-        changed_keys: DataFrame,
-        inserts: DataFrame,
-        is_current_col: str,
-        valid_to_col: str,
-        run_ts,
-        full_rewrite: DataFrame,
-    ) -> None:
-        """Format-specific final step of an SCD2 merge (the change-set
-        itself is computed format-agnostically in operators/scd2.py).
-
-        parquet: staged-swap rewrite of the whole dimension
-        (``full_rewrite`` is the complete new table plan).
-
-        delta: ``DeltaTable.merge`` closes the changed keys' open rows
-        in place (rewriting only the files that hold them — the 100 TB
-        path: a dimension merge touches MB, not the full table), then
-        appends the new versions. Mirrors the reference's
-        ``MERGE INTO``/Delta sink (pipeline_core.py:219-227,147-153)."""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            # Same two-effect shape as the Delta branch, via Iceberg's
-            # native MERGE INTO: close the open rows of changed keys
-            # (files holding them are the only rewrites), then append
-            # the new versions.
-            cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-            cond += f" AND t.`{is_current_col}` = true"
-            view = f"_scd2_changed_{abs(hash(table)) % 10**8}"
-            changed_keys.createOrReplaceTempView(view)
-            try:
-                self.spark.sql(
-                    f"MERGE INTO {self._ice_id(table)} t USING {view} s "
-                    f"ON {cond} "
-                    f"WHEN MATCHED THEN UPDATE SET "
-                    f"t.`{is_current_col}` = false, "
-                    f"t.`{valid_to_col}` = timestamp'{run_ts}'"
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-            self.append(inserts, table)
-            return
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            from delta.tables import DeltaTable
-
-            dt = DeltaTable.forPath(self.spark, str(self.path(table)))
-            cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-            cond += f" AND t.{is_current_col} = true"
-            (
-                dt.alias("t")
-                .merge(changed_keys.alias("s"), cond)
-                .whenMatchedUpdate(
-                    set={
-                        is_current_col: F.lit(False),
-                        valid_to_col: F.lit(run_ts).cast("timestamp"),
-                    }
-                )
-                .execute()
-            )
-            self.append(inserts, table)
-            return
-        self.overwrite_from_plan(full_rewrite, table)
+    def apply_scd2_changeset(self, table: str, new_dim: DataFrame) -> None:
+        """Final step of an SCD2 merge: commit ``new_dim``, the complete
+        new dimension plan computed in operators/scd2.py, which reads
+        the table it replaces. Every backend commits it through its own
+        ``overwrite_from_plan`` (staged swap here, a new log version on
+        the log-backed subclasses). The write is the action that fills
+        the merge's Observation."""
+        self.overwrite_from_plan(new_dim, table)
 
     def write_audit_publish(
         self,
@@ -690,18 +429,9 @@ class Warehouse:
         what is validated is byte-for-byte what gets published.
         Returns {published, n_rows, n_invalid}.
 
-        Parquet-dir mechanic only: staging plain parquet and
-        rename-swapping over a Delta/Iceberg table directory would
-        corrupt its transaction log/catalog metadata, so those formats
-        fail fast — use Iceberg's native WAP (snapshot branch +
-        ``cherrypick_snapshot``) or a Delta staging table there."""
-        if self.format != "parquet":
-            raise NotImplementedError(
-                "write_audit_publish stages parquet files and "
-                "rename-swaps directories — on "
-                f"format={self.format!r} that bypasses the transaction "
-                "log; use the native WAP mechanism instead"
-            )
+        Parquet-dir mechanic: staging plain parquet and rename-swapping
+        over a Delta or Iceberg table directory would discard its log,
+        so the log-backed subclasses refuse it."""
         from ..operators.quality import VIOLATIONS_COL, check
 
         target = self.path(table)
@@ -754,17 +484,10 @@ class Warehouse:
 
         Returns {published, tables: {name: {n_rows, n_invalid}}}.
 
-        Parquet-dir mechanic only (same reason as
-        :meth:`write_audit_publish`): Delta/Iceberg fail fast rather
-        than have their table metadata rename-swapped away.
+        Parquet-dir mechanic (same reason as
+        :meth:`write_audit_publish`): the log-backed subclasses refuse
+        it rather than have their log rename-swapped away.
         """
-        if self.format != "parquet":
-            raise NotImplementedError(
-                "publish_tables stages parquet files and rename-swaps "
-                f"directories — on format={self.format!r} that "
-                "bypasses the transaction log; use native per-table "
-                "transactions plus a catalog-pointer commit instead"
-            )
         from ..operators.quality import VIOLATIONS_COL, check
 
         expectations = expectations or {}
@@ -857,34 +580,18 @@ class Warehouse:
 
     def delete_where(self, table: str, predicate) -> None:
         """DML DELETE: remove rows matching ``predicate`` (a Column or
-        SQL string). Parquet emulation rewrites the table keeping the
-        complement (staged swap, versioned when tracking); Delta issues
-        a native DELETE that rewrites only files containing matches —
-        the 100 TB path, where a keyed delete touches MB not the table.
-        Completes the DML triad: append (INSERT), SCD2/merge (UPDATE),
-        delete_where (DELETE).
+        SQL string) by rewriting the table to the complement (staged
+        swap, versioned when tracking). The file-pruned and
+        deletion-vector forms below rewrite only the files holding
+        matches, or none. Completes the DML triad: append (INSERT),
+        SCD2/merge (UPDATE), delete_where (DELETE).
 
         SQL DELETE semantics: a row is deleted iff the predicate is
-        TRUE; FALSE *and NULL* rows survive (Delta/Iceberg DELETE
-        behave this way natively). The parquet rewrite therefore keeps
-        the null-safe complement ``NOT coalesce(pred, false)`` — a
-        plain ``~pred`` would silently drop NULL-predicate rows."""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            if not isinstance(predicate, str):
-                raise ValueError(
-                    "iceberg delete_where takes a SQL-string predicate "
-                    "(DELETE FROM is issued as SQL)"
-                )
-            self.spark.sql(
-                f"DELETE FROM {self._ice_id(table)} WHERE {predicate}"
-            )
-            return
+        TRUE; FALSE *and NULL* rows survive (as in Delta/Iceberg
+        DELETE). The rewrite therefore keeps the null-safe complement
+        ``NOT coalesce(pred, false)`` — a plain ``~pred`` would
+        silently drop NULL-predicate rows."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            from delta.tables import DeltaTable
-
-            DeltaTable.forPath(self.spark, str(self.path(table))).delete(pred)
-            return
         self._dv_cow_guard(table)
         self.overwrite_from_plan(
             self.read(table).filter(~F.coalesce(pred, F.lit(False))), table
@@ -897,46 +604,17 @@ class Warehouse:
         when it isn't — same contract as Delta's MERGE, which throws on
         multiple source matches).
 
-        parquet: anti-join keeps the untouched current rows, then one
-        staged-swap rewrite — the fallback cost is a key-partitioned
-        co-shuffle of (current, batch), batch side broadcast when
-        small. Delta: a native ``whenMatchedUpdateAll /
-        whenNotMatchedInsertAll`` MERGE, rewriting only files holding
-        matched keys — the 100 TB path (an hourly dim upsert touches
-        MB, not the dimension). Mirrors the reference's MERGE INTO
-        sink shape (pipeline_core.py:219-227) minus history tracking.
+        An anti-join keeps the untouched current rows, then one
+        staged-swap rewrite: the cost is a key-partitioned co-shuffle
+        of (current, batch), batch side broadcast when small.
+        :meth:`upsert_file_pruned` rewrites only the files holding
+        matched keys. Mirrors the reference's MERGE INTO sink shape
+        (pipeline_core.py:219-227) minus history tracking.
         """
         if not self.table_exists(table):
             self.overwrite(batch, table)
             return
         self._dv_cow_guard(table)
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-            view = f"_upsert_src_{abs(hash(table)) % 10**8}"
-            batch.createOrReplaceTempView(view)
-            try:
-                self.spark.sql(
-                    f"MERGE INTO {self._ice_id(table)} t USING {view} s "
-                    f"ON {cond} "
-                    "WHEN MATCHED THEN UPDATE SET * "
-                    "WHEN NOT MATCHED THEN INSERT *"
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-            return
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            from delta.tables import DeltaTable
-
-            dt = DeltaTable.forPath(self.spark, str(self.path(table)))
-            cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-            (
-                dt.alias("t")
-                .merge(batch.alias("s"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
         current = self.read(table)
         kept = current.join(batch.select(*keys), keys, "left_anti")
         self.overwrite_from_plan(kept.unionByName(batch), table)
@@ -963,10 +641,9 @@ class Warehouse:
         ONE aggregate action before the write (scd2_merge goes one step
         further: its counts are an Observation on the write itself).
 
-        parquet: matched rows (both clauses) leave via one anti-join,
-        then updates+inserts append in the same staged-swap rewrite —
-        the fallback cost is one key co-shuffle. Delta/Iceberg: the
-        native conditional MERGE rewrites only matched files."""
+        Matched rows (both clauses) leave via one anti-join, then
+        updates+inserts append in the same staged-swap rewrite — the
+        cost is one key co-shuffle."""
         data_cols = [c for c in batch.columns if c != op_col]
         if not self.table_exists(table):
             init = batch.filter(F.col(op_col) != "D").select(*data_cols)
@@ -989,44 +666,6 @@ class Warehouse:
             "updated": int(c["upd"] or 0),
             "inserted": int(c["ins"] or 0),
         }
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-            set_sql = ", ".join(f"t.`{c}` = s.`{c}`" for c in data_cols)
-            ins_cols = ", ".join(f"`{c}`" for c in data_cols)
-            ins_vals = ", ".join(f"s.`{c}`" for c in data_cols)
-            view = f"_merge_ops_{abs(hash(table)) % 10**8}"
-            batch.createOrReplaceTempView(view)
-            try:
-                self.spark.sql(
-                    f"MERGE INTO {self._ice_id(table)} t USING {view} s "
-                    f"ON {cond} "
-                    f"WHEN MATCHED AND s.`{op_col}` = 'D' THEN DELETE "
-                    f"WHEN MATCHED THEN UPDATE SET {set_sql} "
-                    f"WHEN NOT MATCHED AND s.`{op_col}` <> 'D' "
-                    f"THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-            return stats
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            from delta.tables import DeltaTable
-
-            dt = DeltaTable.forPath(self.spark, str(self.path(table)))
-            cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-            (
-                dt.alias("t")
-                .merge(batch.alias("s"), cond)
-                .whenMatchedDelete(condition=f"s.{op_col} = 'D'")
-                .whenMatchedUpdate(
-                    set={c: f"s.{c}" for c in data_cols}
-                )
-                .whenNotMatchedInsert(
-                    condition=f"s.{op_col} <> 'D'",
-                    values={c: f"s.{c}" for c in data_cols},
-                )
-                .execute()
-            )
-            return stats
         self._dv_cow_guard(table)
         current = self.read(table)
         kept = current.join(batch.select(*keys), keys, "left_anti")
@@ -1059,8 +698,7 @@ class Warehouse:
         a slow-but-alive holder whose lock was ttl-broken cannot
         delete the NEW holder's lock on its way out. This is the
         filesystem analogue of what a Delta/Iceberg transactional
-        manifest provides natively — on those formats ``upsert()`` is
-        already safe and this lock is not used. Driver-side only:
+        log provides natively. Driver-side only:
         lock acquisition is a metadata op, never per-row."""
         import uuid
 
@@ -1178,20 +816,15 @@ class Warehouse:
         unlink the touched files. The (3)→(4) window shows duplicate
         key versions to concurrent readers; crash inside it leaves
         them until the next upsert or ``vacuum`` (the leftover
-        ``__upsert__staging`` marks it — vacuum() sweeps it). Delta/Iceberg close exactly
-        this window with a transactional manifest — on those formats
-        use :meth:`upsert`, which is already native. Concurrent
+        ``__upsert__staging`` marks it — vacuum() sweeps it).
+        ``ManifestWarehouse`` closes exactly this window with a
+        versioned file manifest. Concurrent
         *writers* serialize on the per-table advisory lock
         (:meth:`_writer_lock`); the duplicate window applies to
         concurrent readers only.
 
         Returns {files_total, files_rewritten, rows_inserted_or_updated}.
         """
-        if self.format != "parquet":
-            raise ValueError(
-                "upsert_file_pruned is the parquet-dir mechanic; "
-                "delta/iceberg upsert() is already file-pruned natively"
-            )
         self._dv_cow_guard(table)
         with self._writer_lock(table):
             return self._upsert_file_pruned(batch, table, keys)
@@ -1254,11 +887,6 @@ class Warehouse:
         :meth:`upsert_file_pruned`; on a layout clustered by the
         predicate columns a keyed delete touches k files, not N.
         Returns {files_total, files_rewritten, rows_deleted}."""
-        if self.format != "parquet":
-            raise ValueError(
-                "delete_where_file_pruned is the parquet-dir mechanic; "
-                "delta/iceberg delete_where() is already file-pruned"
-            )
         self._dv_cow_guard(table)
         with self._writer_lock(table):
             return self._delete_where_file_pruned(table, predicate)
@@ -1283,8 +911,8 @@ class Warehouse:
         if touched:
             # Null-safe complement: only pred==TRUE rows are deleted;
             # NULL-predicate rows in touched files must survive the
-            # rewrite (matching SQL DELETE and the Delta/Iceberg
-            # branches — a plain ~pred drops them uncounted).
+            # rewrite (matching SQL DELETE and delete_where — a plain
+            # ~pred drops them uncounted).
             survivors = (
                 cur.filter(F.col("_f").isin(touched))
                 .filter(~F.coalesce(pred, F.lit(False)))
@@ -1343,11 +971,6 @@ class Warehouse:
         view (already-deleted rows can't match again), NULL-predicate
         rows survive (SQL DELETE semantics), and only pred==TRUE rows
         count in ``rows_deleted``. Returns {rows_deleted, dv_rows}."""
-        if self.format != "parquet":
-            raise ValueError(
-                "delete_where_dv is the parquet-dir mechanic; "
-                "delta/iceberg deletes are natively file-pruned"
-            )
         self._dv_layout_guard(table)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         with self._writer_lock(table):
@@ -1364,11 +987,6 @@ class Warehouse:
         form of :meth:`delete_where_dv`, expressed as a distributed
         semi-join so the key batch never visits the driver (no IN
         list). Same guards, same stats."""
-        if self.format != "parquet":
-            raise ValueError(
-                "delete_keys_dv is the parquet-dir mechanic; "
-                "delta/iceberg deletes are natively file-pruned"
-            )
         self._dv_layout_guard(table)
         with self._writer_lock(table):
             matches = self._mor_base(table).join(
@@ -1410,11 +1028,6 @@ class Warehouse:
             )
 
     def _dv_active(self, table: str) -> bool:
-        # deletion vectors are a parquet-dir mechanic only; the
-        # delta/iceberg branches delete natively and must not probe
-        # the catalog for a _dv side table
-        if self.format != "parquet":
-            return False
         return self.table_exists(self._dv_table(table))
 
     def _dv_cow_guard(self, table: str) -> None:
@@ -1563,11 +1176,6 @@ class Warehouse:
         positions, one file-keyed agg; no driver-side footer loop.
         Flat (unpartitioned) layouts only, matching the file-pruned
         DML contract. Returns the number of files indexed."""
-        if self.format != "parquet":
-            raise ValueError(
-                "the persisted bloom index is the parquet-dir "
-                "mechanic; Delta has a native bloom filter index"
-            )
         files = [str(p) for p in self._data_files(table)]
         if not files:
             raise ValueError(f"table {table!r} has no data files to index")
@@ -1755,13 +1363,8 @@ class Warehouse:
         return removed
 
     def drop(self, table: str) -> None:
-        """DROP TABLE. Iceberg goes through the catalog (``DROP TABLE
-        ... PURGE`` — an rmtree of the table dir would strand the
-        catalog's metadata pointer); parquet and path-based Delta are
-        directory-rooted, so removing the directory IS the drop."""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._ice_id(table)} PURGE")
-            return
+        """DROP TABLE: the table is directory-rooted, so removing the
+        directory (and its version archive) IS the drop."""
         p = self.path(table)
         if p.exists():
             shutil.rmtree(p)
@@ -1776,14 +1379,6 @@ class Warehouse:
         restore is an undoable, history-preserving operation, not a
         rewind). File-copy only — no Spark job, no data decode.
         Returns the new current version number."""
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            # native, history-preserving rollback (version = snapshot id)
-            ns_tbl = ".".join(self._ice_id(table).split(".")[1:])
-            self.spark.sql(
-                f"CALL {self.catalog}.system.rollback_to_snapshot"
-                f"('{ns_tbl}', {int(version)})"
-            )
-            return self.version(table)
         if not self.track_versions:
             raise ValueError("restore requires track_versions=True")
         src = self._versions_dir(table) / f"v{version:06d}"
@@ -1833,39 +1428,9 @@ class Warehouse:
         bytes, so the rewrite lands near the target regardless of row
         width; exactly one of the two knobs must be given.
 
-        Iceberg routes to the native ``rewrite_data_files`` procedure
-        (file counts and sizing from the ``.files`` metadata table —
-        a directory glob would count every snapshot's files); Delta
-        would use ``OPTIMIZE``, unimplemented here."""
+        ``DeltaLogWarehouse`` overrides this with a protocol-native
+        OPTIMIZE commit; ``ManifestWarehouse`` with a manifest commit."""
         self._dv_cow_guard(table)
-        if self.format == "iceberg":  # pragma: no cover - needs iceberg jar
-            if cluster_by or zorder_by or partition_by:
-                raise NotImplementedError(
-                    "iceberg compact supports plain bin-packing only; "
-                    "use rewrite_data_files(strategy => 'sort') for "
-                    "clustered layouts"
-                )
-            before_ice = self.spark.sql(
-                f"SELECT count(*) AS n FROM {self._ice_id(table)}.files"
-            ).collect()[0]["n"]
-            ns_tbl = ".".join(self._ice_id(table).split(".")[1:])
-            opts = ""
-            if target_file_bytes is not None:
-                opts = (
-                    ", options => map('target-file-size-bytes', "
-                    f"'{int(target_file_bytes)}')"
-                )
-            self.spark.sql(
-                f"CALL {self.catalog}.system.rewrite_data_files"
-                f"(table => '{ns_tbl}'{opts})"
-            )
-            return int(before_ice)
-        if self.format == "delta":  # pragma: no cover - needs delta-spark
-            raise NotImplementedError(
-                "delta compact is native OPTIMIZE "
-                "(DeltaTable.optimize().executeCompaction()); the "
-                "parquet-dir glob/rewrite mechanic does not apply"
-            )
         data_files = self._data_files(table)
         before = len(data_files)
         if (target_files is None) == (target_file_bytes is None):
@@ -1985,7 +1550,7 @@ class ManifestWarehouse(Warehouse):
     """
 
     def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root, format="parquet", track_versions=False)
+        super().__init__(spark, root)
 
     # -- manifest mechanics ---------------------------------------------
 
@@ -2766,7 +2331,7 @@ class DeltaLogWarehouse(Warehouse):
     ``_last_checkpoint`` make long-history opens O(live files)."""
 
     def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root, format="parquet", track_versions=False)
+        super().__init__(spark, root)
 
     def _writer(self, table: str):
         from ..sources.deltalog import DeltaLogWriter
@@ -2861,6 +2426,13 @@ class DeltaLogWarehouse(Warehouse):
             "v1 — use delete_where (rewrite) instead"
         )
 
+    def delete_keys_dv(self, table: str, keys_df, keys) -> dict:
+        raise NotImplementedError(
+            "the parquet deletion-vector side table is invisible to the "
+            "Delta log — use DeltaLogWriter.delete_keys_dv (spec "
+            "deletion vectors)"
+        )
+
     def upsert_file_pruned(self, batch, table, keys, **kw):
         raise NotImplementedError(
             "file-pruned DML moves files under the log's feet — use "
@@ -2871,6 +2443,24 @@ class DeltaLogWarehouse(Warehouse):
         raise NotImplementedError(
             "file-pruned DML moves files under the log's feet — use "
             "delete_where (rewrite via the log)"
+        )
+
+    def write_audit_publish(self, df, table, expectations, **kw) -> dict:
+        raise NotImplementedError(
+            "write_audit_publish rename-swaps the table directory and "
+            "would delete the Delta log"
+        )
+
+    def publish_tables(self, frames, expectations=None, **kw) -> dict:
+        raise NotImplementedError(
+            "publish_tables rename-swaps table directories and would "
+            "delete their Delta logs"
+        )
+
+    def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
+        raise NotImplementedError(
+            "the bloom index reads data files by directory listing, "
+            "which includes files the Delta log has removed"
         )
 
     def restore(self, table: str, version: int) -> int:
@@ -3027,7 +2617,7 @@ class IcebergMetaWarehouse(Warehouse):
     the replaced files as DELETED manifest entries per spec."""
 
     def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root, format="parquet", track_versions=False)
+        super().__init__(spark, root)
 
     def _tbl(self, table: str):
         from ..sources.iceberg_meta import IcebergTable
@@ -3122,6 +2712,36 @@ class IcebergMetaWarehouse(Warehouse):
         raise NotImplementedError(
             "file-pruned DML moves files under the metadata's feet — "
             "use delete_where (rewrite via snapshots)"
+        )
+
+    def delete_where_dv(self, table: str, predicate) -> dict:
+        raise NotImplementedError(
+            "the parquet deletion-vector side table is invisible to "
+            "Iceberg readers — use delete_where (rewrite via snapshots)"
+        )
+
+    def delete_keys_dv(self, table: str, keys_df, keys) -> dict:
+        raise NotImplementedError(
+            "the parquet deletion-vector side table is invisible to "
+            "Iceberg readers — use IcebergTable.equality_delete"
+        )
+
+    def write_audit_publish(self, df, table, expectations, **kw) -> dict:
+        raise NotImplementedError(
+            "write_audit_publish rename-swaps the table directory and "
+            "would delete the Iceberg metadata"
+        )
+
+    def publish_tables(self, frames, expectations=None, **kw) -> dict:
+        raise NotImplementedError(
+            "publish_tables rename-swaps table directories and would "
+            "delete their Iceberg metadata"
+        )
+
+    def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
+        raise NotImplementedError(
+            "the bloom index reads data files by directory listing, "
+            "which includes files no live snapshot references"
         )
 
     def drop(self, table: str) -> None:

@@ -117,6 +117,9 @@ _REQUIRED_RUNTIME_CONFS = {
     "spark.sql.legacy.javaCharsets": "true",
     # Arrow transfer for the Pandas-UDF operators (similarity, multimodal).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Python data sources that implement pushFilters refuse to plan
+    # without it; register_tsvcorpus sets it for the whole session.
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

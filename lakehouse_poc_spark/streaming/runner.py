@@ -37,8 +37,12 @@ def _scoped_shuffle_partitions(spark: SparkSession, n: int | None):
     partitioning (AQE cannot: it is disabled in stateful workloads).
     Callers pass a value derived from the SOURCE size
     (:func:`..streaming.windows.stream_state_partitions`) — never a
-    constant. Restored on exit; each query here starts a fresh
-    checkpoint, so the scoping cannot leak into another stream."""
+    constant. Restored on exit, and each query here starts a fresh
+    checkpoint. The save/set/restore is on the SHARED session conf, so
+    it is safe only when one thread enters it at a time: two threads
+    interleaving their entries can restore each other's inner value
+    and leave it set. Concurrent streams enter it once around the
+    pool and pass ``None`` to each run."""
     if n is None:
         yield
         return

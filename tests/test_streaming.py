@@ -745,7 +745,7 @@ def test_stream_holt_winters_equals_batch(spark):
     assert batch == stream and len(batch) > 0
 
 
-def test_stream_slo_burn_alerts_contract(spark):
+def _assert_slo_burn_contract(spark):
     from lakehouse_poc_spark import plans
 
     rows = plans.QUERIES["stream_slo_burn_alerts"](
@@ -756,6 +756,17 @@ def test_stream_slo_burn_alerts_contract(spark):
         assert r["burn_fast"] >= 1.3 and r["burn_slow"] >= 1.05
         assert r["window_end"].endswith(":00:00")  # hour-aligned ends
         assert r["err"] <= r["tot"]
+
+
+def test_stream_slo_burn_alerts_contract(spark):
+    """Runs the query three times: each run must satisfy the alert
+    contract and leave ``spark.sql.shuffle.partitions`` as it found it
+    (its two concurrent streams share one state-partition scope)."""
+    key = "spark.sql.shuffle.partitions"
+    for _ in range(3):
+        before = spark.conf.get(key)
+        _assert_slo_burn_contract(spark)
+        assert spark.conf.get(key) == before
 
 
 def test_transform_with_state_user_stats(spark):

@@ -83,42 +83,69 @@ def test_partitioned_compaction_spreads_target_files(spark, tmp_path):
     assert back.agg(F.countDistinct("id")).collect()[0][0] == 600
 
 
-def test_delta_backend_guarded(spark, tmp_path):
-    import pytest
-
-    from lakehouse_poc_spark.sinks.warehouse import delta_available
-
-    with pytest.raises(ValueError):
-        Warehouse(spark, str(tmp_path / "wh"), format="orc")
-    if not delta_available():
-        with pytest.raises(ImportError, match="delta-spark"):
-            Warehouse(spark, str(tmp_path / "wh"), format="delta")
+def test_upsert_parquet_last_write_wins(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path))
+    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string")
+    b2 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, val string")
+    wh.upsert(b1, "dim.t", keys=["id"])
+    wh.upsert(b2, "dim.t", keys=["id"])
+    got = {(r.id, r.val) for r in wh.read("dim.t").collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
-def test_delta_backend_scd2_roundtrip(spark, tmp_path):
-    """Full SCD2 merge on the Delta backend — exercises DeltaTable.merge
-    + append instead of the staged-swap rewrite. Skips in containers
-    without delta-spark (this one, by design)."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from lakehouse_poc_spark.config import PipelineConfig
-    from lakehouse_poc_spark.operators.scd2 import scd2_merge
-
-    wh = Warehouse(spark, str(tmp_path / "wh"), format="delta")
-    cfg = PipelineConfig(
-        raw_table="raw.t", dim_table="dim.t",
-        business_key=("k",), compare_columns=("v",),
+def test_apply_scd2_changeset_rewrites_from_full_plan(spark, tmp_path):
+    """The SCD2 apply commits the complete new-dimension plan, which
+    reads the very table it replaces (staged swap, not a clobber)."""
+    wh = Warehouse(spark, str(tmp_path))
+    dim = spark.createDataFrame(
+        [(1, "a", True)], "id long, val string, is_current boolean"
     )
-    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    s1 = scd2_merge(wh, cfg, b1, "2024-01-01 00:00:00")
-    assert s1.new_keys == 2
-    b2 = spark.createDataFrame([(1, "a2"), (3, "c")], "k long, v string")
-    s2 = scd2_merge(wh, cfg, b2, "2024-02-01 00:00:00")
-    assert (s2.new_keys, s2.updated_keys) == (1, 1)
-    dim = wh.read("dim.t")
-    assert dim.count() == 4  # 2 open originals -> 1 closed + 3 open
-    assert dim.filter(F.col(cfg.technical.is_current)).count() == 3
+    wh.overwrite(dim, "dim.t")
+    wh.apply_scd2_changeset(
+        "dim.t", wh.read("dim.t").withColumn("val", F.lit("b"))
+    )
+    assert [r.val for r in wh.read("dim.t").collect()] == ["b"]
+
+
+_LOG_REFUSALS = {
+    "write_audit_publish": lambda wh, t, df: wh.write_audit_publish(df, t, []),
+    "publish_tables": lambda wh, t, df: wh.publish_tables({t: df}),
+    "delete_keys_dv": lambda wh, t, df: wh.delete_keys_dv(t, df, ["id"]),
+    "build_bloom_index": lambda wh, t, df: wh.build_bloom_index(t, "id"),
+    "delete_where_dv": lambda wh, t, df: wh.delete_where_dv(t, "amt < 0"),
+}
+
+
+@pytest.mark.parametrize(
+    "backend, method",
+    [
+        (b, m)
+        for b in ("DeltaLogWarehouse", "IcebergMetaWarehouse")
+        for m in _LOG_REFUSALS
+        # the Delta-log backend has always refused delete_where_dv
+        if (b, m) != ("DeltaLogWarehouse", "delete_where_dv")
+    ],
+)
+def test_log_backed_warehouses_refuse_directory_mechanics(
+    spark, tmp_path, backend, method
+):
+    """Parquet-directory mechanics (rename-swapped staging dirs, the
+    deletion-vector side table, a bloom index over a directory glob)
+    bypass the Delta log / Iceberg metadata: they would delete the
+    log, report deletes readers never see, or find removed rows. The
+    log-backed warehouses refuse them and the table is unchanged."""
+    from lakehouse_poc_spark.sinks import warehouse
+
+    wh = getattr(warehouse, backend)(spark, str(tmp_path / "wh"))
+    t = "fact.t"
+    wh.overwrite(spark.createDataFrame([(1, 10), (2, -5)], "id long, amt long"), t)
+    wh.append(spark.createDataFrame([(3, 7)], "id long, amt long"), t)
+    arg = spark.createDataFrame([(2, 0)], "id long, amt long")
+    with pytest.raises(NotImplementedError):
+        _LOG_REFUSALS[method](wh, t, arg)
+    assert wh.table_exists(t)
+    got = sorted((r.id, r.amt) for r in wh.read(t).collect())
+    assert got == [(1, 10), (2, -5), (3, 7)]
 
 
 def test_drop_partitions_retention(spark, tmp_path):

@@ -5,6 +5,10 @@ Runs every ``queries()`` entry from ``__spark_entry__`` on Spark and its
 row count, sorted column names, and values (exact and near). Use this
 before committing a new query.
 
+Every query must also leave the session's SQL confs as it found them:
+a changed conf prints ``CONF DRIFT <key>: <old> -> <new>``, counts the
+query as a failure, and is restored before the next query runs.
+
 Usage: python tools/oracle_check.py [sf_dir] [query_name ...]
 """
 
@@ -77,12 +81,27 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> str:
     return "MISMATCH"
 
 
+def conf_drift(spark, name: str, before: dict[str, str]) -> bool:
+    """Print every SQL conf ``name`` changed, then put ``before`` back
+    so the leak cannot change the queries after it."""
+    after = dict(spark.conf.getAll)
+    drifted = sorted(k for k in before.keys() | after.keys() if before.get(k) != after.get(k))
+    for k in drifted:
+        print(f"{name:35s} CONF DRIFT {k}: {before.get(k)} -> {after.get(k)}")
+        if k in before:
+            spark.conf.set(k, before[k])
+        else:
+            spark.conf.unset(k)
+    return bool(drifted)
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
     from lakehouse_poc_spark.session import get_spark
+    from lakehouse_poc_spark.sources.readers import ensure_session_confs
 
     spark = get_spark("oracle_check", cpus=8)
     # One oversized generated class (similarity_topk_ivf_trained's
@@ -104,16 +123,24 @@ def main() -> None:
     con = duck_con(sf_dir)
     qs = e.queries()
     oracles = e.oracle_sql()
+    # the confs every reader pins, set up front so they never read as
+    # drift of whichever query happens to run first
+    ensure_session_confs(spark)
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        confs = dict(spark.conf.getAll)
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
+            sdf = None
             failures.append(name)
             print(f"{name:35s} SPARK ERROR: {ex}")
+        if conf_drift(spark, name, confs) and name not in failures:
+            failures.append(name)
+        if sdf is None:
             continue
         if name not in oracles:
             print(f"{name:35s} rows-only: {len(sdf)} rows  ({time.time()-t0:.1f}s)")
