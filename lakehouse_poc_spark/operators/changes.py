@@ -17,15 +17,25 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def any_change_sql(
+    left_alias: str, right_alias: str, compare_columns: Sequence[str]
+) -> str:
+    """OR-fold of null-safe inequality over the compare columns, as one
+    SQL expression string (one JVM call to parse, however many
+    columns)."""
+    la, ra = quote(left_alias), quote(right_alias)
+    return " OR ".join(
+        f"NOT ({la}.{quote(c)} <=> {ra}.{quote(c)})" for c in compare_columns
+    )
+
+
 def any_change(
     left_alias: str, right_alias: str, compare_columns: Sequence[str]
 ) -> Column:
-    """OR-fold of null-safe inequality over the compare columns."""
-    conds = [
-        ~F.col(f"{left_alias}.{c}").eqNullSafe(F.col(f"{right_alias}.{c}"))
-        for c in compare_columns
-    ]
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
-    return out
+    """:func:`any_change_sql` as a Column."""
+    return F.expr(any_change_sql(left_alias, right_alias, compare_columns))

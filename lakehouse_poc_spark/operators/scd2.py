@@ -25,7 +25,10 @@ Differences from the reference, by design:
 
 Scale notes: a full outer join cannot broadcast, so the batch and the
 open rows each shuffle once on the business key, and the dimension is
-scanned once for the open rows and once for the history. The new
+scanned once for the open rows and once for the history. Building the
+plan costs the driver a few JVM calls, whatever the width: the
+versions, the flags and the change predicate are SQL-expression
+strings, and reading the parquet dimension runs no schema job. The new
 dimension is one plan, committed through the warehouse's
 ``overwrite_from_plan``: a staged-swap rewrite on the parquet layout, a
 new log version on the Delta-log and Iceberg backends.
@@ -41,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..sinks.warehouse import Warehouse
-from .changes import any_change
+from .changes import any_change_sql, quote
 
 
 @dataclass(frozen=True)
@@ -58,6 +61,11 @@ class MergeStats:
             "new_keys": self.new_keys,
             "updated_keys": self.updated_keys,
         }
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a single-quoted SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _opening(cfg: PipelineConfig, run_ts: datetime | str) -> dict[str, Column]:
@@ -119,45 +127,57 @@ def scd2_merge(
             {c: F.lit(None).cast(src_types[c]) for c in missing}
         )
     cols = dim.columns
-    current = dim.filter(F.col(t.is_current))
-    history = dim.filter(~F.col(t.is_current))
+    is_cur = quote(t.is_current)
+    current = dim.filter(is_cur)
+    history = dim.filter(f"NOT {is_cur}")
 
-    src = latest.withColumn("__src", F.lit(True)).alias("src")
+    # The merge's expressions are SQL strings, each parsed in one JVM
+    # call however many columns there are. run_ts enters once, as a
+    # typed column on the source side: every version that stamps it
+    # comes from a joined batch row.
+    src = latest.select(
+        "*",
+        F.lit(True).alias("__src"),
+        F.lit(run_ts).cast("timestamp").alias("__run_ts"),
+    ).alias("src")
     tgt = current.alias("tgt")
-    cond = F.col(f"src.{keys[0]}") == F.col(f"tgt.{keys[0]}")
-    for k in keys[1:]:
-        cond = cond & (F.col(f"src.{k}") == F.col(f"tgt.{k}"))
+    cond = F.expr(" AND ".join(f"src.{quote(k)} = tgt.{quote(k)}" for k in keys))
 
     # Full-outer join: a NULL key never matches, so a NULL-keyed batch
     # row is new and a NULL-keyed open row is kept.
-    in_src = F.col("src.__src").isNotNull()
-    in_tgt = F.col(f"tgt.{t.is_current}").isNotNull()
-    is_new = in_src & ~in_tgt
-    is_changed = in_src & in_tgt & any_change("src", "tgt", cfg.compare_columns)
+    both = f"src.__src IS NOT NULL AND tgt.{is_cur} IS NOT NULL"
+    change = any_change_sql("src", "tgt", cfg.compare_columns)
+    is_new = f"src.__src IS NOT NULL AND tgt.{is_cur} IS NULL"
+    is_changed = f"{both} AND ({change})"
+    is_same = f"{both} AND NOT ({change})"
 
-    def version(side: str, stamp: dict[str, Column]) -> Column:
-        return F.struct(
-            *[stamp.get(c, F.col(f"{side}.{c}")).alias(c) for c in cols]
+    def version(side: str, stamp: dict[str, str]) -> str:
+        fields = ", ".join(
+            f"{_sql_string(c)}, {stamp.get(c, f'{side}.{quote(c)}')}" for c in cols
         )
+        return f"named_struct({fields})"
 
-    opened = version("src", _opening(cfg, run_ts))
-    closed = version(
-        "tgt",
-        {t.valid_to: F.lit(run_ts).cast("timestamp"), t.is_current: F.lit(False)},
+    opened = version(
+        "src",
+        {
+            t.valid_from: "src.__run_ts",
+            t.valid_to: "CAST(NULL AS TIMESTAMP)",
+            t.is_current: "true",
+        },
     )
+    closed = version("tgt", {t.valid_to: "src.__run_ts", t.is_current: "false"})
     # Each joined row yields its output versions: a new key opens one,
     # a changed key closes its open row and opens the new one, every
     # other open row is kept as it is.
     flagged = (
         src.join(tgt, cond, "full_outer")
-        .select(
-            F.when(is_new, F.array(opened))
-            .when(is_changed, F.array(closed, opened))
-            .otherwise(F.array(version("tgt", {})))
-            .alias("__versions"),
-            is_new.alias("__is_new"),
-            is_changed.alias("__is_changed"),
-            (in_src & in_tgt & ~is_changed).alias("__is_same"),
+        .selectExpr(
+            f"CASE WHEN {is_new} THEN array({opened}) "
+            f"WHEN {is_changed} THEN array({closed}, {opened}) "
+            f"ELSE array({version('tgt', {})}) END AS __versions",
+            f"{is_new} AS __is_new",
+            f"{is_changed} AS __is_changed",
+            f"{is_same} AS __is_same",
         )
         .observe(
             obs,

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..pipeline import run_pipeline
+from ..session import overlap
 from ..sinks.warehouse import Warehouse
 from ..sources.readers import CsvDialect, read_csv, read_parquet_table
 from . import query
@@ -2579,49 +2580,40 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, and DV-delete them concurrently (guide §2.6 overlap;
     # r10 optimization round: the audit ran ~10 dependent-free actions
     # strictly sequentially)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fc = pool.submit(lambda: wh.append(cust.repartition(4), tc))
-        fo = pool.submit(lambda: wh.append(orders.repartition(4), to))
-        fc.result(), fo.result()
-        bc = pool.submit(lambda: wh.read(tc).count())
-        bo = pool.submit(lambda: wh.read(to).count())
-        before_c, before_o = bc.result(), bo.result()
-        dc = pool.submit(
-            lambda: wh.delete_where_dv(tc, F.col("c_custkey") % 97 == 0)
+    overlap(
+        lambda: wh.append(cust.repartition(4), tc),
+        lambda: wh.append(orders.repartition(4), to),
+    )
+    before_c, before_o = overlap(
+        lambda: wh.read(tc).count(), lambda: wh.read(to).count()
+    )
+    deleted_c, _ = overlap(
+        lambda: wh.delete_where_dv(tc, F.col("c_custkey") % 97 == 0),
+        lambda: wh.delete_where_dv(to, F.col("o_custkey") % 97 == 0),
+    )
+    n_subjects_c = deleted_c["rows_deleted"]
+    # merge-on-read: the DV applies at read time (read_mor);
+    # compact_purge_dv is the later physical-erasure step
+    after_c = wh.read_mor(tc)
+    after_o = wh.read_mor(to)
+    subjects_o, orphans, after_c_n, after_o_n = overlap(
+        lambda: orders.filter(F.col("o_custkey") % 97 == 0)
+        .select("o_custkey")
+        .distinct()
+        .count(),
+        lambda: after_o.join(
+            after_c.select(F.col("c_custkey").alias("o_custkey")),
+            "o_custkey",
+            "left_anti",
         )
-        do = pool.submit(
-            lambda: wh.delete_where_dv(to, F.col("o_custkey") % 97 == 0)
-        )
-        n_subjects_c = dc.result()["rows_deleted"]
-        do.result()
-        # merge-on-read: the DV applies at read time (read_mor);
-        # compact_purge_dv is the later physical-erasure step
-        after_c = wh.read_mor(tc)
-        after_o = wh.read_mor(to)
-        fsub = pool.submit(
-            lambda: orders.filter(F.col("o_custkey") % 97 == 0)
-            .select("o_custkey")
-            .distinct()
-            .count()
-        )
-        forph = pool.submit(
-            lambda: after_o.join(
-                after_c.select(F.col("c_custkey").alias("o_custkey")),
-                "o_custkey",
-                "left_anti",
-            )
-            # orders legitimately reference customers above the
-            # fixture's customer-key range; orphans here =
-            # erased-but-still-referenced
-            .filter(F.col("o_custkey") % 97 == 0)
-            .count()
-        )
-        fac = pool.submit(after_c.count)
-        fao = pool.submit(after_o.count)
-        subjects_o, orphans = fsub.result(), forph.result()
-        after_c_n, after_o_n = fac.result(), fao.result()
+        # orders legitimately reference customers above the
+        # fixture's customer-key range; orphans here =
+        # erased-but-still-referenced
+        .filter(F.col("o_custkey") % 97 == 0)
+        .count(),
+        after_c.count,
+        after_o.count,
+    )
     rows = [
         ("customer", before_c, after_c_n, int(n_subjects_c), 0),
         ("orders", before_o, after_o_n, subjects_o, orphans),

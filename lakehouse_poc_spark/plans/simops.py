@@ -23,6 +23,7 @@ from ..operators.dedup import (
     simhash_near_pairs,
 )
 from ..operators.similarity import brute_force_topk, hyperplanes, ivf_topk, lsh_topk
+from ..session import overlap
 from ..sources.readers import read_parquet_table
 from . import query
 
@@ -2901,13 +2902,7 @@ def ann_recall_after_adds(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.count()
         return out
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fm = pool.submit(_maintained)
-        ff = pool.submit(_fresh)
-        fb = pool.submit(_brute)
-        maintained, fresh, brute = fm.result(), ff.result(), fb.result()
+    maintained, fresh, brute = overlap(_maintained, _fresh, _brute)
     hm = (
         brute.join(maintained, ["query_id", "neighbor_id"])
         .groupBy("query_id")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..session import overlap
 from ..sinks.warehouse import Warehouse
 from ..sources.readers import (
     ensure_session_confs,
@@ -1397,17 +1398,10 @@ def stream_minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # `out` sees exactly the previous batches' bands. Overlapping
         # them lets the verdict write back-fill the band write's task
         # tail (guide §2.6; the gdpr/slo pattern from r10)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f1 = pool.submit(
-                lambda: out.write.mode("append").parquet(out_store)
-            )
-            f2 = pool.submit(
-                lambda: bands.write.mode("append").parquet(band_store)
-            )
-            f1.result()
-            f2.result()
+        overlap(
+            lambda: out.write.mode("append").parquet(out_store),
+            lambda: bands.write.mode("append").parquet(band_store),
+        )
         bands.unpersist()
 
     run_foreach_batch(stream, dedup_batch, str(work / "ckpt"))
@@ -1857,16 +1851,11 @@ def stream_frequent_pairs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         # concurrently so the items/meta slivers back-fill executors
         # idled by the pair merge's tail (guide §2.6; the tables are
         # disjoint paths, so the staged-swap writes cannot collide)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_merge, pairs_t, pair_part, ["item_a", "item_b"]),
-                pool.submit(_merge, items_t, item_part, ["item"]),
-                pool.submit(_merge, meta_t, meta_part, ["k"]),
-            ]
-            for f in futs:
-                f.result()
+        overlap(
+            lambda: _merge(pairs_t, pair_part, ["item_a", "item_b"]),
+            lambda: _merge(items_t, item_part, ["item"]),
+            lambda: _merge(meta_t, meta_part, ["k"]),
+        )
 
     run_foreach_batch(stream, apply, str(work / "ckpt"))
 
@@ -3034,22 +3023,17 @@ def stream_slo_burn_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches back-fill executors freed by the fast window's
     # tail (guide §2.6 overlap — r10 optimization round: sequential
     # availableNow runs paid two full micro-batch floors end to end).
-    # The state-partition scope is entered ONCE around the pool: two
+    # The state-partition scope is entered ONCE around the overlap: two
     # threads each saving/restoring the shared session conf interleave
     # and can leave the inner value behind.
-    from concurrent.futures import ThreadPoolExecutor
-
     nparts = stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    with _scoped_shuffle_partitions(spark, nparts), ThreadPoolExecutor(
-        max_workers=2
-    ) as pool:
-        fast_f = pool.submit(
-            run_to_memory, counts(F.window("ts", "1 hour")), "complete"
+    with _scoped_shuffle_partitions(spark, nparts):
+        fast, slow = overlap(
+            lambda: run_to_memory(counts(F.window("ts", "1 hour")), "complete"),
+            lambda: run_to_memory(
+                counts(F.window("ts", "6 hours", "1 hour")), "complete"
+            ),
         )
-        slow_f = pool.submit(
-            run_to_memory, counts(F.window("ts", "6 hours", "1 hour")), "complete"
-        )
-        fast, slow = fast_f.result(), slow_f.result()
     f = fast.select(
         F.col("w.end").alias("we"),
         F.col("err"),

@@ -20,6 +20,8 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -105,3 +107,44 @@ def get_spark(
     except Exception:  # Spark Connect: no driver-side SparkContext
         pass
     return spark
+
+
+def overlap(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent Spark actions concurrently; return their results
+    in order.
+
+    The first thunk runs in the calling thread, the others in
+    ``pyspark.InheritableThread``s, which copy the caller's JVM local
+    properties: a branch's jobs carry the caller's job group, pool and
+    description, so per-group job counts still see them. Every branch
+    is waited for before the first error (in thunk order) is re-raised,
+    so no job is left running when this returns. Nothing here touches
+    a SQL conf: a conf the branches need is set once, around the call
+    (two threads that each save and restore the shared session conf
+    interleave and can leave the inner value behind). Classic sessions
+    only: on Spark Connect an ``InheritableThread`` needs its session
+    passed in."""
+    from pyspark import InheritableThread
+
+    results: list[Any] = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # re-raised below, after the join
+            errors[i] = e
+
+    branches = [
+        InheritableThread(target=run, args=(i,), daemon=True)
+        for i in range(1, len(thunks))
+    ]
+    for b in branches:
+        b.start()
+    run(0)
+    for b in branches:
+        b.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results

@@ -26,6 +26,7 @@ bucketed by business key when they grow.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import time
@@ -33,6 +34,32 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# The footer key under which Spark's parquet writer stores the written
+# schema as JSON; Spark's own schema inference prefers it over the
+# parquet schema.
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(path: Path) -> StructType | None:
+    """The Spark schema stored in the footer of a parquet directory's
+    first data file (sorted order; ``_``/``.``-prefixed paths skipped,
+    as Spark's listing skips them), read with pyarrow on the driver —
+    no Spark job. ``None`` when there is no data file or the first one
+    was not written by Spark."""
+    import pyarrow.parquet as pq
+
+    for f in sorted(path.glob("**/*.parquet")):
+        parts = f.relative_to(path).parts
+        if any(
+            n.startswith(".") or (n.startswith("_") and "=" not in n)
+            for n in parts
+        ):
+            continue
+        key = (pq.read_metadata(f).metadata or {}).get(SPARK_ROW_METADATA)
+        return StructType.fromJson(json.loads(key)) if key else None
+    return None
 
 
 def zorder_value(x: "F.Column", y: "F.Column", bits: int = 16) -> "F.Column":
@@ -250,7 +277,7 @@ class Warehouse:
                 f"(current={current}; was the warehouse created with "
                 f"track_versions=True, or did vacuum prune it?)"
             )
-        return self.spark.read.parquet(str(archived))
+        return self._read_dir(archived)
 
     def table_changes(
         self, table: str, v_from: int, v_to: int, keys: list[str]
@@ -293,7 +320,30 @@ class Warehouse:
         ).withColumn("_change_type", F.lit("update_postimage"))
         return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
 
+    def _recover_swap(self, table: str) -> None:
+        """Roll back a staged swap that died between its two renames
+        (``target → __old`` done, ``__staging → target`` not): the
+        table is missing, so ``__old`` goes back in place and the stale
+        staging dir is dropped. Without this the next SCD2 run would
+        find no dimension and bootstrap a fresh one, losing history. A
+        writer still inside that window loses the race and fails its
+        second rename; the table is then the old state, never none."""
+        target = self.path(table)
+        old = target.with_name(target.name + "__old")
+        if target.exists() or not old.exists():
+            return
+        try:
+            old.rename(target)
+        except OSError:
+            if not target.exists():
+                raise
+            return  # the swap completed meanwhile
+        staged = target.with_name(target.name + "__staging")
+        if staged.exists():
+            shutil.rmtree(staged)
+
     def table_exists(self, table: str) -> bool:
+        self._recover_swap(table)
         p = self.path(table)
         if not p.exists():
             return False
@@ -301,16 +351,33 @@ class Warehouse:
         # <part>=<value>/ dirs with no root-level marker
         return (p / "_SUCCESS").exists() or any(p.glob("**/*.parquet"))
 
-    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions column sets across files —
-        schema evolution on an append-only raw table (a batch landed
-        with new columns reads back as the superset, old rows null).
-        The log-backed subclasses resolve the schema from their log, so
-        the option is a no-op there."""
+    def _read_dir(self, path: Path, merge_schema: bool = False) -> DataFrame:
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(str(self.path(table)))
+        else:
+            schema = footer_schema(path)
+            if schema is not None:
+                reader = reader.schema(schema)
+        return reader.parquet(str(path))
+
+    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
+        """Plan a scan of the table. Without ``merge_schema`` the schema
+        comes from Spark's own footer key in the first data file (see
+        :func:`footer_schema`), read on the driver, so planning runs no
+        Spark job. Where the files share one schema it is the schema
+        Spark's inference picks, with nullability forced the same way
+        (where they differ, Spark too reads one file's footer only, the
+        first in its listing). A table whose files lack the
+        key (empty, or written by another engine) is inferred by Spark
+        as before. ``merge_schema=True`` unions column sets across
+        files — schema evolution on an append-only raw table (a batch
+        landed with new columns reads back as the superset, old rows
+        null) — and always runs Spark's footer job. The log-backed
+        subclasses resolve the schema from their log, so the option is
+        a no-op there."""
+        self._recover_swap(table)
+        return self._read_dir(self.path(table), merge_schema)
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         w = df.write.mode("append")
@@ -335,9 +402,13 @@ class Warehouse:
         """Overwrite a table with a plan that READS the same table.
 
         A plain overwrite would clobber its own input mid-read; stage to
-        a sibling dir then atomically swap (rename). The log-backed
-        subclasses commit new files instead, so they need no staging.
+        a sibling dir then swap it in with two renames (``target →
+        __old``, ``__staging → target``). A crash between them is
+        rolled back by :meth:`_recover_swap` on the next open. The
+        log-backed subclasses commit new files instead, so they need no
+        staging.
         """
+        self._recover_swap(table)
         target = self.path(table)
         staged = target.with_name(target.name + "__staging")
         if staged.exists():
@@ -2422,8 +2493,9 @@ class DeltaLogWarehouse(Warehouse):
 
     def delete_where_dv(self, table: str, predicate) -> dict:
         raise NotImplementedError(
-            "deletion vectors are protocol v3; this backend implements "
-            "v1 — use delete_where (rewrite) instead"
+            "the parquet deletion-vector side table is invisible to the "
+            "Delta log — use DeltaLogWriter.delete_where_dv (spec v3 "
+            "deletion vectors) or delete_where (rewrite)"
         )
 
     def delete_keys_dv(self, table: str, keys_df, keys) -> dict:
@@ -2623,6 +2695,14 @@ class IcebergMetaWarehouse(Warehouse):
         from ..sources.iceberg_meta import IcebergTable
 
         return IcebergTable(self.spark, self.path(table))
+
+    def _data_files(self, table: str) -> list[Path]:
+        # the current snapshot's live files: the directory also holds
+        # files of replaced snapshots
+        from ..sources.iceberg_meta import _resolve, live_entries
+
+        p = self.path(table)
+        return [_resolve(e["data_file"]["file_path"], p) for e in live_entries(p)]
 
     def table_exists(self, table: str) -> bool:
         from ..sources.iceberg_meta import current_metadata_version

@@ -1221,3 +1221,114 @@ def test_merge_ops_bootstraps_missing_table_without_deletes(spark, wh):
     stats = wh.merge_ops(batch, "dim.mo2", keys=["k"])
     assert stats == {"deleted": 0, "updated": 0, "inserted": 1}
     assert [r.k for r in wh.read("dim.mo2").collect()] == ["K1"]
+
+
+# ---------------------------------------------------------------------------
+# Reads planned from Spark's footer key, without a Spark job.
+
+
+def _varied(spark):
+    return spark.sql(
+        """SELECT 1 AS a, 'x' AS s, TIMESTAMP'2020-01-01 00:00:00' AS ts,
+           TIMESTAMP_NTZ'2020-01-01 00:00:00' AS tsn,
+           CAST(1.5 AS DECIMAL(12,3)) AS d, array(1, 2) AS arr,
+           map('k', 1) AS m, named_struct('x', 1, 'y', 'z') AS st,
+           CAST('ab' AS BINARY) AS b, DATE'2020-01-02' AS dt, 'p1' AS part"""
+    )
+
+
+@pytest.mark.parametrize(
+    "partition_by", [None, ["part"], ["dt", "part"]], ids=["plain", "part", "part2"]
+)
+def test_read_runs_no_job_and_matches_inferred_schema(
+    spark, tmp_path, jobs_in_group, partition_by
+):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.append(_varied(spark), "l.t", partition_by=partition_by)
+    wh.append(_varied(spark), "l.t", partition_by=partition_by)
+    df, jobs = jobs_in_group("wh-read", lambda: wh.read("l.t"))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(str(wh.path("l.t"))).schema
+    assert df.count() == 2
+
+
+def test_read_without_spark_footer_key_infers(spark, tmp_path):
+    """A table whose files another engine wrote carries no Spark footer
+    key; its schema is inferred by Spark as before."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    p = wh.path("l.foreign")
+    p.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1, 2], "v": ["a", "b"]}), p / "part-0.parquet")
+    df = wh.read("l.foreign")
+    assert df.schema == spark.read.parquet(str(p)).schema
+    assert sorted(r.id for r in df.collect()) == [1, 2]
+
+
+def test_staged_swap_crash_between_renames_rolls_back(spark, tmp_path, monkeypatch):
+    """A process dying after ``target → __old`` and before
+    ``__staging → target`` leaves no table. A fresh Warehouse on the
+    same root must put the old state back, so the next SCD2 merge
+    merges into it instead of bootstrapping a new dimension."""
+    from lakehouse_poc_spark.config import PipelineConfig
+    from lakehouse_poc_spark.operators.scd2 import scd2_merge
+
+    CFG = PipelineConfig(
+        name="k", raw_table="l0.raw", dim_table="l1.dim",
+        business_key=("k",), compare_columns=("v",),
+    )
+    T1, T2, T3 = (f"2030-01-0{d} 00:00:00" for d in (1, 2, 3))
+
+    def batch(spark, rows):
+        return spark.createDataFrame(rows, "k string, v string")
+
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
+    scd2_merge(wh, CFG, batch(spark, [("K1", "a"), ("K2", "b"), ("K3", "c")]), T1)
+    before = sorted(map(tuple, wh.read(CFG.dim_table).collect()))
+
+    real_rename = Path.rename
+
+    def crash_on_install(self, target):
+        if self.name.endswith("__staging"):
+            raise OSError("simulated crash between the two renames")
+        return real_rename(self, target)
+
+    monkeypatch.setattr(Path, "rename", crash_on_install)
+    with pytest.raises(OSError, match="simulated crash"):
+        scd2_merge(wh, CFG, batch(spark, [("K2", "x")]), T2)
+    monkeypatch.setattr(Path, "rename", real_rename)
+    assert not wh.path(CFG.dim_table).exists()
+
+    reopened = Warehouse(spark, root)
+    assert reopened.table_exists(CFG.dim_table)
+    assert sorted(map(tuple, reopened.read(CFG.dim_table).collect())) == before
+    p = reopened.path(CFG.dim_table)
+    assert not p.with_name(p.name + "__staging").exists()
+    stats = scd2_merge(reopened, CFG, batch(spark, [("K2", "x")]), T3)
+    assert stats.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    assert reopened.read(CFG.dim_table).count() == 4
+
+
+def test_iceberg_compact_counts_live_files_only(spark, tmp_path):
+    """Files of replaced snapshots stay on disk; compaction counts (and
+    sizes by) the current snapshot's live files only."""
+    from lakehouse_poc_spark.sinks.warehouse import IcebergMetaWarehouse
+    from lakehouse_poc_spark.sources.iceberg_meta import live_entries
+
+    wh = IcebergMetaWarehouse(spark, str(tmp_path / "wh"))
+    t = "ice.t"
+    for i in range(3):
+        wh.overwrite(
+            spark.range(i * 10, i * 10 + 10).repartition(2).toDF("id"), t
+        )
+    wh.append(spark.range(100, 105).coalesce(1).toDF("id"), t)
+    live = len(live_entries(wh.path(t)))
+    on_disk = len(list(wh.path(t).glob("**/*.parquet")))
+    assert live < on_disk
+    rows = sorted(r.id for r in wh.read(t).collect())
+    assert wh.compact(t, target_files=1) == live
+    assert sorted(r.id for r in wh.read(t).collect()) == rows
+    assert len(live_entries(wh.path(t))) == 1
