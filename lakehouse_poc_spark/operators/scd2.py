@@ -174,7 +174,7 @@ def scd2_merge(
         .selectExpr(
             f"CASE WHEN {is_new} THEN array({opened}) "
             f"WHEN {is_changed} THEN array({closed}, {opened}) "
-            f"ELSE array({version('tgt', {})}) END AS __versions",
+            f"ELSE array({version('tgt', {})}) END AS __rows",
             f"{is_new} AS __is_new",
             f"{is_changed} AS __is_changed",
             f"{is_same} AS __is_same",
@@ -189,7 +189,7 @@ def scd2_merge(
     # The observed side goes first: the union then runs in the batch's
     # session, the one the Observation is registered in (a foreachBatch
     # frame lives in the stream's cloned session, history in wh.spark).
-    new_dim = flagged.select(F.inline("__versions")).unionByName(history)
+    new_dim = flagged.select(F.inline("__rows")).unionByName(history)
     # the write is the action that fills the Observation
     wh.apply_scd2_changeset(cfg.dim_table, new_dim)
     counts = obs.get

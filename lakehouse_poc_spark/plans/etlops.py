@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..pipeline import run_pipeline
 from ..session import overlap
-from ..sinks.warehouse import Warehouse
+from ..sinks.warehouse import DeltaLogWarehouse, Warehouse
 from ..sources.readers import CsvDialect, read_csv, read_parquet_table
 from . import query
 from .tpch import sql_dsum
@@ -305,10 +305,12 @@ def scd2_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Time travel + CDC over the versioned warehouse: the same two-merge
-# SCD2 scenario with track_versions=True. Merge 1 bootstraps the
-# dimension (version 0); merge 2 archives it and installs version 1.
-def _run_versioned_scenario(spark: SparkSession, sf_dir: str) -> Warehouse:
+# Time travel + CDC read from the Delta log: the same two-merge SCD2
+# scenario on a DeltaLogWarehouse. Merge 1 bootstraps the dimension
+# (commit 0); merge 2 commits the rewritten dimension as version 1.
+def _run_versioned_scenario(
+    spark: SparkSession, sf_dir: str
+) -> DeltaLogWarehouse:
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -322,14 +324,14 @@ def _run_versioned_scenario(spark: SparkSession, sf_dir: str) -> Warehouse:
     root = SCRATCH / f"scd2v_{Path(sf_dir).name}"
     if root.exists():
         shutil.rmtree(root)
-    wh = Warehouse(spark, str(root), track_versions=True)
+    wh = DeltaLogWarehouse(spark, str(root))
     run_pipeline(spark, wh, CUST_CFG, T1, batch=batch1)
     run_pipeline(spark, wh, CUST_CFG, T2, batch=batch2)
     return wh
 
 
-# Read version 0 (the pre-rewrite snapshot) through the live table dir
-# of version 1 — proves the archive holds the exact bootstrap state.
+# Read version 0 (the pre-rewrite snapshot) while version 1 is live —
+# replaying the log to version 0 gives the exact bootstrap state.
 @query(
     "warehouse_time_travel",
     oracle=f"""
@@ -355,7 +357,7 @@ def warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key")
 
 
-# CDC between version 0 and version 1, Delta-CDF-shaped: the second
+# CDC between log versions 0 and 1, Delta-CDF-shaped: the second
 # merge's effects reappear as insert / update_preimage /
 # update_postimage rows (no deletes — SCD2 never deletes).
 @query(
@@ -1494,8 +1496,9 @@ def incremental_join_view_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ---------------------------------------------------------------------------
 # CDC replication apply (operators/diff.py::apply_changes — the
-# consumer half of table_changes): the version-0 snapshot plus the
-# (0→1) change feed must reproduce the version-1 dimension exactly.
+# consumer half of table_changes): the Delta-log version-0 snapshot
+# plus the (0→1) change feed must reproduce the version-1 dimension
+# exactly.
 # The oracle states the expected v1 state directly from the customer
 # table (same derivation as scd2_customer_history).
 @query(

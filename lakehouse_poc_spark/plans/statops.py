@@ -2367,7 +2367,11 @@ def kmv_intersection_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         if any(kept.get(t, 0) < K for t in counts):
             cand = du  # under-collected: rank everything
-    w = Window.partitionBy("event_type").orderBy("h", "user_id")
+    # NULLS LAST, as the oracle's ORDER BY: a NULL user_id (NULL hash)
+    # then ranks after every real hash instead of taking a sketch slot
+    w = Window.partitionBy("event_type").orderBy(
+        F.asc_nulls_last("h"), F.asc_nulls_last("user_id")
+    )
     sk = (
         cand.withColumn("r", F.row_number().over(w))
         .filter(F.col("r") <= K)

@@ -13,9 +13,10 @@ same interface: ``DeltaLogWarehouse`` writes real Delta tables (JSON
 commit log, ``sources/deltalog.py``) and ``IcebergMetaWarehouse`` real
 Iceberg tables (``sources/iceberg_meta.py``), both readable by any
 Delta or Iceberg runtime; ``ManifestWarehouse`` adds a versioned file
-manifest to the parquet layout. The SCD2 engine (operators/scd2.py)
-builds the complete new dimension as one plan, and each backend
-commits it through ``overwrite_from_plan``.
+manifest to the parquet layout. A plain directory table has exactly
+one version: time travel and change feeds are read from a log. The
+SCD2 engine (operators/scd2.py) builds the complete new dimension as
+one plan, and each backend commits it through ``overwrite_from_plan``.
 
 Scale notes: raw tables should be partitioned by ingest date
 (``partition_by=["ingest_date"]``) so time-bounded reprocessing prunes;
@@ -180,25 +181,15 @@ class Warehouse:
     """Managed tables as parquet directories with staged-swap
     rewrites (the reference's Delta ``saveAsTable`` + ``MERGE`` sink,
     pipeline_core.py:62-68,219-227, on plain parquet). Rewrites swap a
-    staged directory in; with ``track_versions=True`` the superseded
-    state is archived for time travel. The subclasses below keep this
-    interface and replace the storage layer: a versioned manifest, the
-    Delta log, or Iceberg metadata."""
+    staged directory in, so a table has one version, the live one. The
+    subclasses below keep this interface and replace the storage layer:
+    a versioned manifest, the Delta log, or Iceberg metadata; those
+    keep history, time travel and (via :meth:`table_changes`) a change
+    feed."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        track_versions: bool = False,
-    ):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
-        # Time travel: when True, every table REWRITE (overwrite /
-        # overwrite_from_plan / SCD2 apply) archives the superseded
-        # state under <table>__versions/v{n} instead of deleting it.
-        # Appends are not versioned: raw landing tables are
-        # append-only logs whose history IS the table.
-        self.track_versions = track_versions
         self.root.mkdir(parents=True, exist_ok=True)
         # per-thread reentrancy state for _writer_lock (a DML op that
         # holds the lock may call append/overwrite internally)
@@ -216,68 +207,22 @@ class Warehouse:
         # "layer0100.kosten_raw" → <root>/layer0100/kosten_raw
         return self.root.joinpath(*table.split("."))
 
-    def _versions_dir(self, table: str) -> Path:
-        p = self.path(table)
-        return p.with_name(p.name + "__versions")
-
     def version(self, table: str) -> int:
-        """Current version number: 0 for a freshly created table,
-        +1 per archived rewrite (Delta-style monotone counter).
-        Derived from the highest archived index — NOT the archive
-        count — so vacuumed history never causes index reuse."""
-        vd = self._versions_dir(table)
-        snaps = sorted(vd.glob("v*")) if vd.exists() else []
-        return int(snaps[-1].name[1:]) + 1 if snaps else 0
-
-    def history(self, table: str) -> list[dict]:
-        """Version log, oldest first: archived snapshots plus the
-        current state. Metadata only — nothing is read."""
-        entries = []
-        vd = self._versions_dir(table)
-        if vd.exists():
-            for d in sorted(vd.glob("v*")):
-                entries.append(
-                    {
-                        "version": int(d.name[1:]),
-                        "n_files": len(list(d.glob("**/*.parquet"))),
-                        "current": False,
-                    }
-                )
-        entries.append(
-            {
-                "version": self.version(table),
-                "n_files": len(list(self.path(table).glob("**/*.parquet"))),
-                "current": True,
-            }
-        )
-        return entries
-
-    def _archive_current(self, table: str) -> None:
-        """Move the live table dir into the version archive (called by
-        rewrite ops before installing the new state). Rename-only —
-        no data is copied, so archiving is O(1) at any table size."""
-        target = self.path(table)
-        if not self.track_versions or not target.exists():
-            return
-        vd = self._versions_dir(table)
-        vd.mkdir(parents=True, exist_ok=True)
-        target.rename(vd / f"v{self.version(table):06d}")
+        """Current version number. A directory table keeps no history,
+        so it is always 0; the log-backed subclasses count commits."""
+        return 0
 
     def read_version(self, table: str, version: int) -> DataFrame:
-        """Time travel: read the table as of ``version``. The current
-        version reads the live dir; earlier ones read the archive.
-        (Delta: ``option("versionAsOf", n)``.)"""
-        current = self.version(table)
-        if version == current:
-            return self.read(table)
-        archived = self._versions_dir(table) / f"v{version:06d}"
-        if not archived.exists():
+        """Time travel: read the table as of ``version`` (Delta:
+        ``option("versionAsOf", n)``). A directory table has only
+        version 0, the live state."""
+        if version != 0:
             raise ValueError(
-                f"version {version} of {table!r} not found "
-                f"(current={current}; was the warehouse created with "
-                f"track_versions=True, or did vacuum prune it?)"
+                f"version {version} of {table!r} not found: a directory "
+                "table has only version 0 (time travel needs a log-backed "
+                "warehouse)"
             )
-        return self._read_dir(archived)
+        return self.read(table)
 
     def table_changes(
         self, table: str, v_from: int, v_to: int, keys: list[str]
@@ -293,7 +238,9 @@ class Warehouse:
         three times. Nothing is driver-side; at 100 TB the cost is one
         co-partitioning of the two snapshots. (Delta reads the change
         feed from the log instead — ``readChangeFeed`` — with the same
-        emitted schema, so callers are portable.)"""
+        emitted schema, so callers are portable.) It diffs two versions,
+        so it needs a backend that keeps them: ``DeltaLogWarehouse`` and
+        ``ManifestWarehouse`` inherit it."""
         old = self.read_version(table, v_from)
         new = self.read_version(table, v_to)
         data_cols = [c for c in new.columns if c not in keys]
@@ -351,16 +298,6 @@ class Warehouse:
         # <part>=<value>/ dirs with no root-level marker
         return (p / "_SUCCESS").exists() or any(p.glob("**/*.parquet"))
 
-    def _read_dir(self, path: Path, merge_schema: bool = False) -> DataFrame:
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        else:
-            schema = footer_schema(path)
-            if schema is not None:
-                reader = reader.schema(schema)
-        return reader.parquet(str(path))
-
     def read(self, table: str, merge_schema: bool = False) -> DataFrame:
         """Plan a scan of the table. Without ``merge_schema`` the schema
         comes from Spark's own footer key in the first data file (see
@@ -377,7 +314,15 @@ class Warehouse:
         subclasses resolve the schema from their log, so the option is
         a no-op there."""
         self._recover_swap(table)
-        return self._read_dir(self.path(table), merge_schema)
+        path = self.path(table)
+        reader = self.spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            schema = footer_schema(path)
+            if schema is not None:
+                reader = reader.schema(schema)
+        return reader.parquet(str(path))
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         w = df.write.mode("append")
@@ -386,7 +331,6 @@ class Warehouse:
         w.parquet(str(self.path(table)))
 
     def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        self._archive_current(table)
         if self._dv_active(table):
             # a full replace discards the old contents; stale
             # tombstones referencing vanished basenames must go too
@@ -417,10 +361,6 @@ class Warehouse:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(str(staged))
-        if self.track_versions:
-            self._archive_current(table)
-            staged.rename(target)
-            return
         old = target.with_name(target.name + "__old")
         if old.exists():
             shutil.rmtree(old)
@@ -446,33 +386,6 @@ class Warehouse:
             .parquet(str(self.path(table)))
         )
 
-    def drop_partitions(
-        self, table: str, partition_col: str, before: str | None = None,
-        values: list[str] | None = None,
-    ) -> int:
-        """Retention/TTL primitive: delete whole partition dirs whose
-        value is in ``values`` or lexicographically < ``before``
-        (ISO dates sort correctly as strings). Metadata-only at any
-        scale — no data files are read or rewritten, which is how
-        retention must work at 100 TB (a DELETE that scans the table to
-        drop old days is the anti-pattern). Delta's equivalent is a
-        partition-predicate DELETE. Returns the number of partitions
-        dropped."""
-        if (before is None) == (values is None):
-            raise ValueError("exactly one of before/values is required")
-        dropped = 0
-        prefix = f"{partition_col}="
-        for d in sorted(self.path(table).glob(f"{prefix}*")):
-            if not d.is_dir():
-                continue
-            val = d.name[len(prefix):]
-            if (values is not None and val in values) or (
-                before is not None and val < before
-            ):
-                shutil.rmtree(d)
-                dropped += 1
-        return dropped
-
     def apply_scd2_changeset(self, table: str, new_dim: DataFrame) -> None:
         """Final step of an SCD2 merge: commit ``new_dim``, the complete
         new dimension plan computed in operators/scd2.py, which reads
@@ -482,180 +395,12 @@ class Warehouse:
         the merge's Observation."""
         self.overwrite_from_plan(new_dim, table)
 
-    def write_audit_publish(
-        self,
-        df: DataFrame,
-        table: str,
-        expectations: list,
-        partition_by: list[str] | None = None,
-        max_invalid: int = 0,
-    ) -> dict:
-        """Write-Audit-Publish: stage ``df`` to an unpublished branch
-        dir, audit it with the expectations engine, and atomically
-        publish (rename) only if at most ``max_invalid`` rows violate.
-        On failure the staged branch is dropped and the live table is
-        untouched — the Iceberg WAP / Delta staging pattern.
-
-        The audit runs on the STAGED files (not the input plan), so
-        what is validated is byte-for-byte what gets published.
-        Returns {published, n_rows, n_invalid}.
-
-        Parquet-dir mechanic: staging plain parquet and rename-swapping
-        over a Delta or Iceberg table directory would discard its log,
-        so the log-backed subclasses refuse it."""
-        from ..operators.quality import VIOLATIONS_COL, check
-
-        target = self.path(table)
-        branch = target.with_name(target.name + "__staging")
-        if branch.exists():
-            shutil.rmtree(branch)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(branch))
-        staged = self.spark.read.parquet(str(branch))
-        checked = check(staged, expectations)
-        counts = checked.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col(VIOLATIONS_COL) != "", 1).otherwise(0)).alias(
-                "bad"
-            ),
-        ).collect()[0]
-        n_rows, n_invalid = int(counts["n"]), int(counts["bad"] or 0)
-        if n_invalid > max_invalid:
-            shutil.rmtree(branch)
-            return {"published": False, "n_rows": n_rows, "n_invalid": n_invalid}
-        self._archive_current(table)
-        if target.exists():
-            shutil.rmtree(target)
-        branch.rename(target)
-        return {"published": True, "n_rows": n_rows, "n_invalid": n_invalid}
-
-    def publish_tables(
-        self,
-        frames: dict[str, DataFrame],
-        expectations: dict[str, list] | None = None,
-        max_invalid: int = 0,
-    ) -> dict:
-        """Multi-table Write-Audit-Publish: stage EVERY table, audit
-        EVERY staged copy, and only when all pass swap them in —
-        all-or-nothing across tables, so cross-table invariants (facts
-        and their dimensions, a rollup and its source) never expose a
-        half-published state to readers.
-
-        Protocol: (1) stage all plans to ``__staging`` dirs; (2) audit
-        each staged copy (byte-for-byte what publishes); any failure
-        drops ALL staging and leaves every live table untouched;
-        (3) swap each table (archive → rename); a mid-swap error rolls
-        the already-swapped tables back from their version archive
-        before re-raising, so readers see either the old set or the
-        new set. (A cloud deployment would replace step 3 with a
-        catalog-pointer commit — Delta/Iceberg transactions per table
-        plus this same stage-all/check-all discipline across them.)
-
-        Returns {published, tables: {name: {n_rows, n_invalid}}}.
-
-        Parquet-dir mechanic (same reason as
-        :meth:`write_audit_publish`): the log-backed subclasses refuse
-        it rather than have their log rename-swapped away.
-        """
-        from ..operators.quality import VIOLATIONS_COL, check
-
-        expectations = expectations or {}
-        staged: dict[str, Path] = {}
-        report: dict[str, dict] = {}
-        ok = False  # flipped only when every table stages AND audits
-        try:
-            for table, df in frames.items():
-                target = self.path(table)
-                branch = target.with_name(target.name + "__staging")
-                if branch.exists():
-                    shutil.rmtree(branch)
-                df.write.mode("overwrite").parquet(str(branch))
-                staged[table] = branch
-            ok = True
-            for table, branch in staged.items():
-                back = self.spark.read.parquet(str(branch))
-                exps = expectations.get(table, [])
-                if exps:
-                    checked = check(back, exps)
-                    counts = checked.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            F.when(F.col(VIOLATIONS_COL) != "", 1).otherwise(0)
-                        ).alias("bad"),
-                    ).collect()[0]
-                    n_rows, n_invalid = int(counts["n"]), int(counts["bad"] or 0)
-                else:
-                    n_rows, n_invalid = back.count(), 0
-                report[table] = {"n_rows": n_rows, "n_invalid": n_invalid}
-                if n_invalid > max_invalid:
-                    ok = False
-            if not ok:
-                return {"published": False, "tables": report}
-        except BaseException:
-            ok = False  # mid-staging/audit error: drop all staging too
-            raise
-        finally:
-            if not ok:
-                for branch in staged.values():
-                    if branch.exists():
-                        shutil.rmtree(branch)
-        swapped: list[str] = []
-        in_flight: str | None = None
-        archived_to: Path | None = None
-        try:
-            for table, branch in staged.items():
-                target = self.path(table)
-                # Track the in-flight table and where its live dir was
-                # archived: once _archive_current renames the live dir
-                # away, a failure before branch.rename would otherwise
-                # leave this table ABSENT (neither old nor new set) —
-                # the mid-swap rollback must restore it too, not only
-                # the tables already in `swapped`.
-                in_flight = table
-                pre_version = self.version(table)
-                self._archive_current(table)
-                archived_to = (
-                    self._versions_dir(table) / f"v{pre_version:06d}"
-                    if self.track_versions
-                    else None
-                )
-                if target.exists():
-                    shutil.rmtree(target)
-                branch.rename(target)
-                swapped.append(table)
-                in_flight, archived_to = None, None
-        except BaseException:
-            # Roll the in-flight table back from its just-archived
-            # snapshot (rename back — it was never replaced), then roll
-            # already-swapped tables back to their archived version, so
-            # the set stays consistent. Surface the original error.
-            if in_flight is not None and archived_to is not None:
-                target = self.path(in_flight)
-                if archived_to.exists() and not target.exists():
-                    archived_to.rename(target)
-            for table in swapped:
-                versions = self._versions_dir(table)
-                prior = self.version(table) - 1
-                # rollback needs track_versions (archives to copy back
-                # from); without it this is best-effort only
-                src = versions / f"v{prior:06d}"
-                if src.exists():
-                    target = self.path(table)
-                    if target.exists():
-                        shutil.rmtree(target)
-                    shutil.copytree(src, target)
-            raise
-        return {"published": True, "tables": report}
-
     def delete_where(self, table: str, predicate) -> None:
         """DML DELETE: remove rows matching ``predicate`` (a Column or
         SQL string) by rewriting the table to the complement (staged
-        swap, versioned when tracking). The file-pruned and
-        deletion-vector forms below rewrite only the files holding
-        matches, or none. Completes the DML triad: append (INSERT),
-        SCD2/merge (UPDATE), delete_where (DELETE).
+        swap). The deletion-vector form below rewrites no data file.
+        Completes the DML triad: append (INSERT), SCD2/merge (UPDATE),
+        delete_where (DELETE).
 
         SQL DELETE semantics: a row is deleted iff the predicate is
         TRUE; FALSE *and NULL* rows survive (as in Delta/Iceberg
@@ -749,8 +494,8 @@ class Warehouse:
         """Advisory per-table writer lock for the parquet-dir DML
         mechanics: an atomic ``mkdir`` next to the table dir (POSIX
         mkdir is create-exclusive, so exactly one contender wins).
-        Closes the multi-writer window of ``upsert_file_pruned`` /
-        ``delete_where_file_pruned``: two concurrent upserts could both
+        Closes the multi-writer window of ``upsert_file_pruned`` and
+        the deletion-vector DML: two concurrent upserts could both
         list the same touched file, both rewrite it from their own
         snapshot, and the second move would silently drop the first
         writer's rows. With the lock, writers serialize; readers are
@@ -950,53 +695,6 @@ class Warehouse:
             "rows_inserted_or_updated": n_batch,
         }
 
-    def delete_where_file_pruned(self, table: str, predicate) -> dict:
-        """DML DELETE that rewrites only the parquet files containing
-        matching rows — the file-pruned twin of :meth:`delete_where`
-        (which rewrites the whole table on parquet). Same layout
-        contract, staging protocol, and crash window as
-        :meth:`upsert_file_pruned`; on a layout clustered by the
-        predicate columns a keyed delete touches k files, not N.
-        Returns {files_total, files_rewritten, rows_deleted}."""
-        self._dv_cow_guard(table)
-        with self._writer_lock(table):
-            return self._delete_where_file_pruned(table, predicate)
-
-    def _delete_where_file_pruned(self, table: str, predicate) -> dict:
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        target = self.path(table)
-        if any("=" in d.name for d in target.iterdir() if d.is_dir()):
-            raise ValueError(
-                "delete_where_file_pruned does not support "
-                "hive-partitioned layouts — use drop_partitions for "
-                "partition-aligned retention"
-            )
-        files_total = len(self._data_files(table))
-        cur = self.read(table).withColumn("_f", F.col("_metadata.file_path"))
-        matches = cur.filter(pred)
-        touched_rows = (
-            matches.groupBy("_f").agg(F.count(F.lit(1)).alias("_n")).collect()
-        )
-        touched = [r["_f"] for r in touched_rows]
-        n_deleted = int(sum(r["_n"] for r in touched_rows))
-        if touched:
-            # Null-safe complement: only pred==TRUE rows are deleted;
-            # NULL-predicate rows in touched files must survive the
-            # rewrite (matching SQL DELETE and delete_where — a plain
-            # ~pred drops them uncounted).
-            survivors = (
-                cur.filter(F.col("_f").isin(touched))
-                .filter(~F.coalesce(pred, F.lit(False)))
-                .drop("_f")
-            )
-            self._replace_files(table, touched, survivors)
-            self.refresh_bloom_index(table)
-        return {
-            "files_total": files_total,
-            "files_rewritten": len(touched),
-            "rows_deleted": n_deleted,
-        }
-
     def _replace_files(
         self, table: str, touched: list[str], replacement: DataFrame
     ) -> None:
@@ -1029,8 +727,8 @@ class Warehouse:
     # the vector (AQE broadcasts it while small — see _mor_base for why
     # the hint is deliberately NOT forced); compaction purges. The write cost of
     # a delete becomes O(matches), independent of file sizes — the
-    # merge-on-read half of the CoW/MOR tradeoff
-    # (delete_where_file_pruned is the copy-on-write half).
+    # merge-on-read half of the CoW/MOR tradeoff (delete_where, the
+    # full rewrite, is the copy-on-write half).
 
     def _dv_table(self, table: str) -> str:
         return f"_dv.{table}"
@@ -1095,7 +793,7 @@ class Warehouse:
             raise ValueError(
                 "deletion vectors do not support hive-partitioned "
                 "layouts (file basenames repeat across partition "
-                "dirs) — use delete_where / drop_partitions"
+                "dirs) — use delete_where"
             )
 
     def _dv_active(self, table: str) -> bool:
@@ -1312,26 +1010,38 @@ class Warehouse:
         seen yet (a stale index costs reads, never results). Result
         is identical to the full-scan filter."""
         bt = self._bloom_table(table)
-        # ONE collect of the whole index (r11): it is metadata-sized
-        # (one row per data file; set-bit positions, not data), and the
-        # old shape paid three separate Spark jobs per lookup — cfg
-        # limit(1), the admitted filter, the indexed-file list — on a
-        # table this small the per-job scheduling floor dominated the
-        # lookup. The membership test (all k probe positions present)
-        # moves to driver-side set ops on the same rows; the probe
-        # positions still come from the one-row engine-hash job
-        # (xxhash64 must match build-time bit positions exactly).
-        rows = self.read(bt).collect()
-        if not rows or rows[0]["key_col"] != key_col:
+        # ONE job: the executors test each file's bits against the k
+        # probe positions and only (file, admitted) reaches the driver,
+        # never the bit arrays. The probes are the build's expression
+        # (xxhash64 of the string rendering and the probe index, mod
+        # m_bits), so they match the build-time bits exactly. A row
+        # indexed on another column gets a NULL flag.
+        v = F.lit(value).cast("string")
+        probes = F.transform(
+            F.array_repeat(F.lit(0), F.col("k")),
+            lambda _, i: F.pmod(F.xxhash64(v, i), F.col("m_bits")).cast("int"),
+        )
+        rows = (
+            self.read(bt)
+            .select(
+                "file",
+                F.when(
+                    F.col("key_col") == key_col,
+                    F.size(F.array_except(probes, F.col("bits"))) == 0,
+                ).alias("admitted"),
+            )
+            .collect()
+        )
+        if not rows or any(r["admitted"] is None for r in rows):
+            indexed = sorted(
+                r["key_col"]
+                for r in self.read(bt).select("key_col").distinct().collect()
+            )
             raise ValueError(
                 f"bloom index of {table!r} is not built on {key_col!r} "
-                f"(indexed: {rows[0]['key_col'] if rows else None!r})"
+                f"(indexed: {indexed})"
             )
-        m_bits, k = int(rows[0]["m_bits"]), int(rows[0]["k"])
-        from ..operators.filestats import bloom_probe_positions
-
-        probes = set(bloom_probe_positions(self.spark, value, m_bits, k))
-        admitted = {r["file"] for r in rows if probes <= set(r["bits"])}
+        admitted = {r["file"] for r in rows if r["admitted"]}
         indexed = {r["file"] for r in rows}
         live = {p.name: p for p in self._data_files(table)}
         to_read = [
@@ -1385,17 +1095,12 @@ class Warehouse:
         )
         self.append(row, self._txn_table(app_id))
 
-    def vacuum(self, retain_versions: int | None = None) -> int:
+    def vacuum(self) -> int:
         """Remove leftover ``__staging``/``__old`` dirs that a crash
         between the write and the swap in ``overwrite_from_plan`` can
         strand (the parquet-emulation analogue of ``VACUUM``; Delta's
         own vacuum handles its tombstoned files). Safe at any time: live
-        tables never have these suffixes.
-
-        ``retain_versions=n`` additionally prunes archived time-travel
-        snapshots, keeping only the newest ``n`` (metadata-only dir
-        removals — the retention knob every versioned table needs
-        before the archive outgrows the table). Returns dirs removed."""
+        tables never have these suffixes. Returns dirs removed."""
         removed = 0
         for d in self.root.glob("**/*__staging"):
             if d.is_dir():
@@ -1425,44 +1130,14 @@ class Warehouse:
             if d.is_dir():
                 shutil.rmtree(d)
                 removed += 1
-        if retain_versions is not None:
-            for vd in self.root.glob("**/*__versions"):
-                snaps = sorted(vd.glob("v*"))
-                for d in snaps[: max(0, len(snaps) - retain_versions)]:
-                    shutil.rmtree(d)
-                    removed += 1
         return removed
 
     def drop(self, table: str) -> None:
         """DROP TABLE: the table is directory-rooted, so removing the
-        directory (and its version archive) IS the drop."""
+        directory IS the drop."""
         p = self.path(table)
         if p.exists():
             shutil.rmtree(p)
-        vd = self._versions_dir(table)
-        if vd.exists():
-            shutil.rmtree(vd)
-
-    def restore(self, table: str, version: int) -> int:
-        """RESTORE TABLE ... TO VERSION AS OF — roll the live table
-        back to an archived snapshot. The restore itself is a NEW
-        version (the current state archives first, Delta semantics:
-        restore is an undoable, history-preserving operation, not a
-        rewind). File-copy only — no Spark job, no data decode.
-        Returns the new current version number."""
-        if not self.track_versions:
-            raise ValueError("restore requires track_versions=True")
-        src = self._versions_dir(table) / f"v{version:06d}"
-        if not src.exists():
-            raise ValueError(
-                f"version {version} of {table} not in archive (vacuumed?)"
-            )
-        target = self.path(table)
-        self._archive_current(table)
-        if target.exists():
-            shutil.rmtree(target)
-        shutil.copytree(src, target)
-        return self.version(table)
 
     def compact(
         self,
@@ -1603,21 +1278,19 @@ class ManifestWarehouse(Warehouse):
       ``vacuum(retain_versions=k)`` sweeps files unreferenced by the
       kept manifests — exactly Delta's tombstone-retention model;
     - old manifests ARE time travel: ``read_version(t, n)`` reads
-      manifest n's file list (no copytree archive), ``restore``
-      re-commits an old list as a NEW version (history-preserving),
-      and ``write_audit_publish`` stages + audits uncommitted files
-      and publishes by committing — the Iceberg WAP mechanic for free.
+      manifest n's file list, and ``restore`` re-commits an old list
+      as a NEW version (history-preserving).
 
-    Consequences for concurrency: ``upsert_file_pruned`` /
-    ``delete_where_file_pruned`` lose their move→unlink duplicate
-    window entirely (a concurrent reader sees either the old or the
-    new manifest, each internally consistent); writers still
-    serialize on the per-table advisory lock.
+    Consequences for concurrency: ``upsert_file_pruned`` loses its
+    move→unlink duplicate window entirely (a concurrent reader sees
+    either the old or the new manifest, each internally consistent);
+    writers still serialize on the per-table advisory lock.
 
     Scope: unpartitioned tables (hive-style dir partitioning trades
     against file-list reads; Delta/Iceberg put partition values in
-    the log — at that point, use them). Partitioned writes,
-    ``overwrite_partitions`` and ``drop_partitions`` raise.
+    the log — at that point, use them). Partitioned writes and
+    ``overwrite_partitions`` raise; :meth:`append_partitioned`
+    records partition values in the manifest instead.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -1668,7 +1341,7 @@ class ManifestWarehouse(Warehouse):
         and values it was written under (see
         :meth:`append_partitioned`). Carried-over files inherit their
         entry from the previous manifest automatically, so every
-        existing commit path (replace_files, WAP, compaction)
+        existing commit path (replace_files, compaction)
         preserves pruning metadata without knowing it exists; files
         with no entry are simply never pruned (unknown-safe).
         ``new_parts`` supplies entries for freshly staged names (and
@@ -1747,9 +1420,9 @@ class ManifestWarehouse(Warehouse):
         into the table dir under job-unique names, return the names.
         The files are INVISIBLE until a manifest commit references
         them. Staging dirs are never shared, so concurrent stagings
-        (publish_tables stages before taking per-table locks) cannot
-        rmtree or interleave with each other — only the manifest
-        COMMIT needs the writer lock."""
+        (OPTIMIZE and ``append_partitioned`` stage before taking the
+        table lock) cannot rmtree or interleave with each other — only
+        the manifest COMMIT needs the writer lock."""
         import uuid
 
         job = uuid.uuid4().hex[:12]
@@ -1802,25 +1475,6 @@ class ManifestWarehouse(Warehouse):
             )
         return self.spark.read.parquet(
             *[str(self.path(table) / n) for n in names]
-        )
-
-    def read_asof_timestamp(self, table: str, ts: float) -> DataFrame:
-        """Time travel by wall clock (Delta's TIMESTAMP AS OF): read
-        the newest version committed at or before ``ts`` (epoch
-        seconds). Commit times come from the manifest body; manifests
-        written before the ``ts`` field fall back to file mtime."""
-        import json
-
-        # commit ts is monotone per table (stamped under the writer
-        # lock), so walk newest-first and stop at the first commit
-        # old enough — O(1) expected manifest reads on a long history
-        for mf in reversed(self._manifests(table)):
-            body = json.loads(mf.read_text())
-            cts = body.get("ts", mf.stat().st_mtime)
-            if cts <= ts:
-                return self.read_version(table, body["version"])
-        raise ValueError(
-            f"no version of {table!r} existed at or before {ts}"
         )
 
     def clone(self, src: str, dst: str) -> int:
@@ -2057,21 +1711,14 @@ class ManifestWarehouse(Warehouse):
     def delete_where_dv(self, table: str, predicate) -> dict:
         raise NotImplementedError(
             "manifest-mode tables version their file lists; DELETE "
-            "through delete_where_file_pruned — the manifest commit "
-            "already gives readers the atomicity deletion vectors "
-            "exist to emulate"
+            "through delete_where — the manifest commit already gives "
+            "readers the atomicity deletion vectors exist to emulate"
         )
 
     def compact_purge_dv(self, table: str) -> dict:
         raise NotImplementedError(
             "manifest-mode tables do not carry deletion vectors "
             "(see delete_where_dv)"
-        )
-
-    def drop_partitions(self, table, partition_col, before=None, values=None):
-        raise NotImplementedError(
-            "manifest-mode tables are unpartitioned; use "
-            "delete_where_file_pruned for retention"
         )
 
     def compact(
@@ -2131,7 +1778,7 @@ class ManifestWarehouse(Warehouse):
                     table, new_names, "optimize", expected_base=base_version
                 )
         except ConcurrentWriteError:
-            for n in new_names:  # failed rewrite: reclaim, like WAP
+            for n in new_names:  # failed rewrite: reclaim staged files
                 (self.path(table) / n).unlink(missing_ok=True)
             raise
         return n_before
@@ -2154,7 +1801,7 @@ class ManifestWarehouse(Warehouse):
         self._commit(table, live + names, "replace_files")
 
     def restore(self, table: str, version: int) -> int:
-        """RESTORE: re-commit an archived manifest's file list as a
+        """RESTORE: re-commit an old manifest's file list as a
         NEW version (history-preserving, Delta semantics). Metadata
         only — no data files move."""
         import json
@@ -2183,130 +1830,6 @@ class ManifestWarehouse(Warehouse):
                 new_parts=old.get("parts"),
             )
 
-    def write_audit_publish(
-        self,
-        df: DataFrame,
-        table: str,
-        expectations: list,
-        partition_by: list[str] | None = None,
-        max_invalid: int = 0,
-    ) -> dict:
-        """WAP, the Iceberg way: stage files into the table dir
-        (uncommitted = invisible to every reader), audit the staged
-        bytes, publish by COMMITTING a manifest — or unlink the staged
-        files on failure. The live table is never in a half state."""
-        self._no_partitions(partition_by)
-        from ..operators.quality import VIOLATIONS_COL, check
-
-        with self._writer_lock(table):
-            names = self._stage_in(df, table)
-            staged = self.spark.read.parquet(
-                *[str(self.path(table) / n) for n in names]
-            )
-            checked = check(staged, expectations)
-            counts = checked.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(F.col(VIOLATIONS_COL) != "", 1).otherwise(0)
-                ).alias("bad"),
-            ).collect()[0]
-            n_rows, n_invalid = int(counts["n"]), int(counts["bad"] or 0)
-            if n_invalid > max_invalid:
-                for n in names:
-                    (self.path(table) / n).unlink(missing_ok=True)
-                return {
-                    "published": False,
-                    "n_rows": n_rows,
-                    "n_invalid": n_invalid,
-                }
-            self._commit(table, names, "write_audit_publish")
-            return {
-                "published": True,
-                "n_rows": n_rows,
-                "n_invalid": n_invalid,
-            }
-
-    def publish_tables(
-        self,
-        frames: dict[str, DataFrame],
-        expectations: dict[str, list] | None = None,
-        max_invalid: int = 0,
-    ) -> dict:
-        """Multi-table WAP via manifests: stage every table's files
-        (uncommitted), audit every staged copy, then commit each
-        table's manifest. Any audit failure unlinks ALL staged files
-        and commits nothing. A mid-commit crash rolls already-
-        committed tables back by re-committing their prior file lists
-        (restore is metadata-only here). Per-table commits are atomic;
-        the cross-table sequence is a few metadata renames."""
-        from ..operators.quality import VIOLATIONS_COL, check
-
-        expectations = expectations or {}
-        staged: dict[str, list[str]] = {}
-        report: dict[str, dict] = {}
-        ok = True
-        try:
-            for table, df in frames.items():
-                staged[table] = self._stage_in(df, table)
-            for table, names in staged.items():
-                back = self.spark.read.parquet(
-                    *[str(self.path(table) / n) for n in names]
-                )
-                exps = expectations.get(table, [])
-                if exps:
-                    checked = check(back, exps)
-                    counts = checked.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            F.when(
-                                F.col(VIOLATIONS_COL) != "", 1
-                            ).otherwise(0)
-                        ).alias("bad"),
-                    ).collect()[0]
-                    n_rows = int(counts["n"])
-                    n_invalid = int(counts["bad"] or 0)
-                else:
-                    n_rows, n_invalid = back.count(), 0
-                report[table] = {"n_rows": n_rows, "n_invalid": n_invalid}
-                if n_invalid > max_invalid:
-                    ok = False
-        except BaseException:
-            ok = False
-            raise
-        finally:
-            if not ok:
-                for table, names in staged.items():
-                    for n in names:
-                        (self.path(table) / n).unlink(missing_ok=True)
-        if not ok:
-            return {"published": False, "tables": report}
-        committed: list[tuple[str, int]] = []
-        try:
-            for table, names in staged.items():
-                with self._writer_lock(table):
-                    pre = (
-                        self.version(table)
-                        if self.table_exists(table)
-                        else None
-                    )
-                    self._commit(table, names, "publish_tables")
-                    committed.append((table, pre))
-        except BaseException:
-            for table, pre in reversed(committed):
-                with self._writer_lock(table):
-                    if pre is not None:
-                        self.restore(table, pre)
-                    else:
-                        # the table did not exist before this publish:
-                        # rolling back means un-creating it — remove
-                        # its manifests so readers see "no table", and
-                        # leave the data files to vacuum's age sweep
-                        md = self._manifest_dir(table)
-                        if md.exists():
-                            shutil.rmtree(md)
-            raise
-        return {"published": True, "tables": report}
-
     # -- maintenance ----------------------------------------------------
 
     def vacuum(
@@ -2320,14 +1843,14 @@ class ManifestWarehouse(Warehouse):
 
         Unreferenced data files younger than ``min_age`` seconds are
         SPARED: a file staged into the table dir by an in-flight
-        write (WAP audit running, commit not yet issued) is
-        unreferenced by design until its commit, and deleting it
-        would let the commit publish a manifest pointing at nothing —
+        write (commit not yet issued) is unreferenced by design until
+        its commit, and deleting it would let the commit publish a
+        manifest pointing at nothing —
         the same age discipline the lock sweeps use. Tests pass
         ``min_age=0`` to force a full sweep."""
         import json
 
-        removed = super().vacuum(retain_versions=None)
+        removed = super().vacuum()
         if retain_versions is not None:
             now = time.time()
             for md in self.root.glob("**/*__manifest"):
@@ -2399,7 +1922,12 @@ class DeltaLogWarehouse(Warehouse):
     store per-file ``partitionValues`` in add actions with the spec's
     data-files-exclude-partition-columns layout (read_delta
     reconstitutes and prunes), and parquet CHECKPOINTS +
-    ``_last_checkpoint`` make long-history opens O(live files)."""
+    ``_last_checkpoint`` make long-history opens O(live files).
+
+    Every commit is a version: ``read_version`` replays the log to
+    it, and the inherited :meth:`Warehouse.table_changes` diffs two of
+    them into the keyed change feed (the versioned SCD2 scenario in
+    ``plans/etlops.py`` reads both)."""
 
     def __init__(self, spark: SparkSession, root: str):
         super().__init__(spark, root)
@@ -2511,24 +2039,6 @@ class DeltaLogWarehouse(Warehouse):
             "upsert (rewrite via the log) or ManifestWarehouse"
         )
 
-    def delete_where_file_pruned(self, table, predicate):
-        raise NotImplementedError(
-            "file-pruned DML moves files under the log's feet — use "
-            "delete_where (rewrite via the log)"
-        )
-
-    def write_audit_publish(self, df, table, expectations, **kw) -> dict:
-        raise NotImplementedError(
-            "write_audit_publish rename-swaps the table directory and "
-            "would delete the Delta log"
-        )
-
-    def publish_tables(self, frames, expectations=None, **kw) -> dict:
-        raise NotImplementedError(
-            "publish_tables rename-swaps table directories and would "
-            "delete their Delta logs"
-        )
-
     def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
         raise NotImplementedError(
             "the bloom index reads data files by directory listing, "
@@ -2547,11 +2057,6 @@ class DeltaLogWarehouse(Warehouse):
         into ``dst_table`` (Delta CLONE: absolute-path add actions —
         see DeltaLogWriter.clone_shallow for the vacuum contract)."""
         return self._writer(dst_table).clone_shallow(self.path(src_table))
-
-    def drop(self, table: str) -> None:
-        p = self.path(table)
-        if p.exists():
-            shutil.rmtree(p)
 
     def compact(
         self,
@@ -2636,7 +2141,7 @@ class DeltaLogWarehouse(Warehouse):
             raise
         return n_before
 
-    def vacuum(self, retain_versions: int | None = None, min_age: float = 900.0) -> int:
+    def vacuum(self, min_age: float = 900.0) -> int:
         """Delta VACUUM semantics on the protocol store: unlink data
         files that are (a) NOT referenced by the LATEST version and
         (b) older than ``min_age`` seconds since last touch — the
@@ -2788,12 +2293,6 @@ class IcebergMetaWarehouse(Warehouse):
             "use upsert (rewrite via snapshots)"
         )
 
-    def delete_where_file_pruned(self, table, predicate):
-        raise NotImplementedError(
-            "file-pruned DML moves files under the metadata's feet — "
-            "use delete_where (rewrite via snapshots)"
-        )
-
     def delete_where_dv(self, table: str, predicate) -> dict:
         raise NotImplementedError(
             "the parquet deletion-vector side table is invisible to "
@@ -2806,25 +2305,8 @@ class IcebergMetaWarehouse(Warehouse):
             "Iceberg readers — use IcebergTable.equality_delete"
         )
 
-    def write_audit_publish(self, df, table, expectations, **kw) -> dict:
-        raise NotImplementedError(
-            "write_audit_publish rename-swaps the table directory and "
-            "would delete the Iceberg metadata"
-        )
-
-    def publish_tables(self, frames, expectations=None, **kw) -> dict:
-        raise NotImplementedError(
-            "publish_tables rename-swaps table directories and would "
-            "delete their Iceberg metadata"
-        )
-
     def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
         raise NotImplementedError(
             "the bloom index reads data files by directory listing, "
             "which includes files no live snapshot references"
         )
-
-    def drop(self, table: str) -> None:
-        p = self.path(table)
-        if p.exists():
-            shutil.rmtree(p)

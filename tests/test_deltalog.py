@@ -178,12 +178,13 @@ def test_deltalog_warehouse_path_mechanics_fail_fast(spark, tmp_path):
     wh.overwrite(_df(spark, [(1, "a")]), "dim.t")
     with pytest.raises(NotImplementedError, match="file-pruned"):
         wh.upsert_file_pruned(_df(spark, [(1, "x")]), "dim.t", keys=["id"])
-    with pytest.raises(NotImplementedError, match="file-pruned"):
-        wh.delete_where_file_pruned("dim.t", "id = 1")
     with pytest.raises(NotImplementedError, match="v3"):
         wh.delete_where_dv("dim.t", F.col("id") == 1)
     with pytest.raises(NotImplementedError, match="unpartitioned"):
         wh.append(_df(spark, [(1, "a")]), "dim.t", partition_by=["id"])
+    # the rewrite the refusals point to commits through the log
+    wh.delete_where("dim.t", "id = 1")
+    assert wh.version("dim.t") == 1 and wh.read("dim.t").count() == 0
 
 
 def test_deltalog_warehouse_compact_is_one_commit_same_data(spark, tmp_path):

@@ -657,3 +657,51 @@ def test_rerun_with_same_run_ts(spark, wh):
         .collect()
     )
     assert k1 == [(T1, T1, False, "Zentral"), (T1, "None", True, "Neu")]
+
+
+def test_scd2_on_delta_log_versions_and_change_feed(spark, wh, tmp_path):
+    """The paper's sink is Delta. Two pipeline merges on a
+    DeltaLogWarehouse commit the dimension as log versions 0 and 1:
+    version 0 reads back the bootstrap, the change feed between them
+    holds the merge's inserts and update pre/post images, and the
+    stats and final dimension equal those of the parquet Warehouse."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    dl = DeltaLogWarehouse(spark, str(tmp_path / "dl"))
+    b2 = [("K1", "Verwaltung", "Zentral"), ("K2", "Fertigung", "Werk 2"),
+          ("K4", "Einkauf", "Sued")]
+    stats = {
+        name: [
+            run_pipeline(spark, w, CFG, ts, batch=batch(spark, rows))
+            for ts, rows in ((T1, BATCH1), (T2, b2))
+        ]
+        for name, w in (("delta", dl), ("parquet", wh))
+    }
+    assert stats["delta"] == stats["parquet"]
+    assert stats["delta"][1].as_dict() == {
+        "unchanged": 1, "new_keys": 1, "updated_keys": 1,
+    }
+
+    t = CFG.dim_table
+    cols = ["Kostenstelle", "Bereich", "GueltigVon", "GueltigBis", "IsCurrent"]
+
+    def rows(df):
+        return sorted(tuple(map(str, r)) for r in df.select(*cols).collect())
+
+    assert dl.version(t) == 1
+    assert rows(dl.read_version(t, 0)) == [
+        (k, bereich, T1, "None", "True") for k, _, bereich in BATCH1
+    ]
+    assert rows(dl.read(t)) == rows(wh.read(t))
+
+    changes = dl.table_changes(t, 0, 1, keys=["Kostenstelle", "GueltigVon"])
+    got = sorted(
+        tuple(map(str, r))
+        for r in changes.select(*cols, "_change_type").collect()
+    )
+    assert got == [
+        ("K2", "Werk 1", T1, T2, "False", "update_postimage"),
+        ("K2", "Werk 1", T1, "None", "True", "update_preimage"),
+        ("K2", "Werk 2", T2, "None", "True", "insert"),
+        ("K4", "Sued", T2, "None", "True", "insert"),
+    ]

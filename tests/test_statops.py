@@ -983,6 +983,39 @@ def test_kmv_sketch_matches_pandas_brute(spark):
     assert row["est_intersection"] == pytest.approx(row["true_both"])
 
 
+@pytest.mark.parametrize("n_users", [20, 400], ids=["exact", "sketch"])
+def test_kmv_null_user_id_truth_and_oracle(spark, tmp_path, n_users):
+    """NULL user ids: the truth columns rebuilt from the per-user
+    aggregate keep countDistinct's semantics (NULL is not a distinct
+    user), true_both keeps the NULL group as the GROUP BY form does,
+    and every column equals the DuckDB oracle below and above k."""
+    import duckdb
+
+    rows = [(u, "click") for u in range(0, n_users, 2)]
+    rows += [(u, "purchase") for u in range(0, n_users, 3)]
+    rows += [(None, "click"), (None, "purchase"), (None, "view")]
+    ev = pd.DataFrame(rows, columns=["user_id", "event_type"])
+    ev["user_id"] = ev["user_id"].astype("Int64")
+    ev.to_parquet(tmp_path / "events.parquet", index=False)
+
+    out = plans.QUERIES["kmv_intersection_users"](spark, str(tmp_path)).toPandas()
+    row = out.iloc[0]
+    clicks = set(range(0, n_users, 2))
+    purchases = set(range(0, n_users, 3))
+    assert row["true_clicks"] == len(clicks)
+    assert row["true_purchases"] == len(purchases)
+    assert row["true_both"] == len(clicks & purchases) + 1  # the NULL group
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    want = con.execute(plans.ORACLES["kmv_intersection_users"]).df().iloc[0]
+    for c in out.columns:
+        assert row[c] == want[c], c
+
+
 def test_dp_noise_is_inverse_cdf_laplace(spark):
     out = plans.QUERIES["dp_noisy_counts_events"](spark, SF).toPandas()
     out = out.sort_values("event_type").reset_index(drop=True)

@@ -108,8 +108,6 @@ def test_apply_scd2_changeset_rewrites_from_full_plan(spark, tmp_path):
 
 
 _LOG_REFUSALS = {
-    "write_audit_publish": lambda wh, t, df: wh.write_audit_publish(df, t, []),
-    "publish_tables": lambda wh, t, df: wh.publish_tables({t: df}),
     "delete_keys_dv": lambda wh, t, df: wh.delete_keys_dv(t, df, ["id"]),
     "build_bloom_index": lambda wh, t, df: wh.build_bloom_index(t, "id"),
     "delete_where_dv": lambda wh, t, df: wh.delete_where_dv(t, "amt < 0"),
@@ -129,11 +127,11 @@ _LOG_REFUSALS = {
 def test_log_backed_warehouses_refuse_directory_mechanics(
     spark, tmp_path, backend, method
 ):
-    """Parquet-directory mechanics (rename-swapped staging dirs, the
-    deletion-vector side table, a bloom index over a directory glob)
-    bypass the Delta log / Iceberg metadata: they would delete the
-    log, report deletes readers never see, or find removed rows. The
-    log-backed warehouses refuse them and the table is unchanged."""
+    """Parquet-directory mechanics (the deletion-vector side table, a
+    bloom index over a directory glob) bypass the Delta log / Iceberg
+    metadata: they would report deletes readers never see, or find
+    removed rows. The log-backed warehouses refuse them and the table
+    is unchanged."""
     from lakehouse_poc_spark.sinks import warehouse
 
     wh = getattr(warehouse, backend)(spark, str(tmp_path / "wh"))
@@ -146,28 +144,6 @@ def test_log_backed_warehouses_refuse_directory_mechanics(
     assert wh.table_exists(t)
     got = sorted((r.id, r.amt) for r in wh.read(t).collect())
     assert got == [(1, 10), (2, -5), (3, 7)]
-
-
-def test_drop_partitions_retention(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame(
-        [(i, f"2024-01-{(i % 4) + 1:02d}") for i in range(40)],
-        "id long, day string",
-    )
-    wh.append(df, "raw.ev", partition_by=["day"])
-    import pytest
-
-    with pytest.raises(ValueError):
-        wh.drop_partitions("raw.ev", "day")
-    assert wh.drop_partitions("raw.ev", "day", before="2024-01-03") == 2
-    left = wh.read("raw.ev")
-    assert left.count() == 20
-    assert sorted(str(r.day) for r in left.select("day").distinct().collect()) == [
-        "2024-01-03",
-        "2024-01-04",
-    ]
-    assert wh.drop_partitions("raw.ev", "day", values=["2024-01-04"]) == 1
-    assert wh.read("raw.ev").count() == 10
 
 
 def test_compaction_cluster_by_gives_disjoint_file_ranges(spark, tmp_path):
@@ -242,43 +218,24 @@ def test_vacuum_removes_stranded_swap_dirs(spark, tmp_path):
     assert wh.read("raw.t").count() == 10
 
 
-def test_time_travel_versions_and_history(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
+def test_directory_table_has_one_version(spark, tmp_path):
+    """A plain directory table keeps no history: a rewrite leaves it at
+    version 0, version 0 reads the live state, and any other version
+    is an error (time travel reads a log)."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.v"
     wh.overwrite(spark.range(3).selectExpr("id", "id AS v"), t)
-    assert wh.version(t) == 0
     wh.overwrite_from_plan(wh.read(t).withColumn("v", F.col("v") + 10), t)
-    wh.overwrite_from_plan(wh.read(t).withColumn("v", F.col("v") + 100), t)
-    assert wh.version(t) == 2
-    assert [r["id"] for r in wh.read_version(t, 0).orderBy("id").collect()] == [0, 1, 2]
-    assert wh.read_version(t, 0).orderBy("id").collect()[1]["v"] == 1
-    assert wh.read_version(t, 1).orderBy("id").collect()[1]["v"] == 11
-    assert wh.read_version(t, 2).orderBy("id").collect()[1]["v"] == 111
-    hist = wh.history(t)
-    assert [h["version"] for h in hist] == [0, 1, 2]
-    assert hist[-1]["current"] and not hist[0]["current"]
-
-
-def test_vacuum_retention_never_reuses_version_numbers(spark, tmp_path):
-    import pytest
-
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
-    t = "dim.v"
-    wh.overwrite(spark.range(2).selectExpr("id", "0 AS gen"), t)
-    for gen in (1, 2, 3):
-        wh.overwrite(spark.range(2).selectExpr("id", f"{gen} AS gen"), t)
-    assert wh.version(t) == 3
-    assert wh.vacuum(retain_versions=1) == 2  # v0, v1 pruned
-    with pytest.raises(ValueError):
-        wh.read_version(t, 0)
-    # the next rewrite must mint v3's archive slot, not recycle v0's
-    wh.overwrite(spark.range(2).selectExpr("id", "4 AS gen"), t)
-    assert wh.version(t) == 4
-    assert wh.read_version(t, 3).first()["gen"] == 3
+    assert wh.version(t) == 0
+    assert sorted(r.v for r in wh.read_version(t, 0).collect()) == [10, 11, 12]
+    with pytest.raises(ValueError, match="only version 0"):
+        wh.read_version(t, 1)
 
 
 def test_table_changes_emits_all_four_change_types(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     t = "dim.cdc"
     wh.overwrite(
         spark.createDataFrame(
@@ -311,50 +268,25 @@ def test_table_changes_emits_all_four_change_types(spark, tmp_path):
     assert [(r["k"], r["v"]) for r in back] == [(4, "d")]
 
 
-def test_drop_removes_version_archive(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
-    t = "dim.v"
-    wh.overwrite(spark.range(2), t)
-    wh.overwrite_from_plan(wh.read(t), t)
-    assert wh._versions_dir(t).exists()
-    wh.drop(t)
-    assert not wh._versions_dir(t).exists()
-    assert not wh.table_exists(t)
-
-
 def test_delete_where_rewrites_complement_and_versions(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "fact.t"
-    wh.append(spark.range(10).selectExpr("id", "id % 3 AS g"), t)
+    # id 10 has a NULL g: its predicate is NULL, so it survives
+    wh.append(
+        spark.range(11).selectExpr(
+            "id", "CASE WHEN id < 10 THEN id % 3 END AS g"
+        ),
+        t,
+    )
     wh.delete_where(t, F.col("g") == 1)
     kept = sorted(r["id"] for r in wh.read(t).collect())
-    assert kept == [0, 2, 3, 5, 6, 8, 9]
-    # the pre-delete state is time-travelable
-    assert wh.read_version(t, 0).count() == 10
+    assert kept == [0, 2, 3, 5, 6, 8, 9, 10]
+    # the rewrite replaces the one version a directory table has
+    assert wh.version(t) == 0
+    assert wh.read_version(t, 0).count() == 8
     # string predicates work too
     wh.delete_where(t, "id >= 8")
     assert sorted(r["id"] for r in wh.read(t).collect()) == [0, 2, 3, 5, 6]
-
-
-def test_write_audit_publish_gates_bad_batches(spark, tmp_path):
-    from lakehouse_poc_spark.operators import quality as Q
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "pub.t"
-    good = spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-    rules = [Q.in_range("v_range", "v", 0, 100)]
-    r1 = wh.write_audit_publish(good, t, rules)
-    assert r1 == {"published": True, "n_rows": 10, "n_invalid": 0}
-    assert wh.read(t).count() == 10
-    # a bad batch must NOT replace the live table
-    bad = spark.range(5).selectExpr("id", "CAST(id * 1000 AS DOUBLE) AS v")
-    r2 = wh.write_audit_publish(bad, t, rules)
-    assert not r2["published"] and r2["n_invalid"] == 4
-    assert wh.read(t).count() == 10  # live table untouched
-    assert not (wh.path(t).parent / "t__staging").exists()  # branch dropped
-    # tolerance: allow up to 4 invalid rows → publishes
-    r3 = wh.write_audit_publish(bad, t, rules, max_invalid=4)
-    assert r3["published"] and wh.read(t).count() == 5
 
 
 def test_bucket_drift_metrics_and_rebucket(spark, tmp_path):
@@ -405,111 +337,6 @@ def test_bucket_drift_metrics_and_rebucket(spark, tmp_path):
     reloaded = BucketSpec.load(tmp_path, "blc_test_grown")
     assert reloaded.n_buckets == 64 and reloaded.key == "k"
     spark.sql("DROP TABLE IF EXISTS blc_test_grown")
-
-
-def test_publish_tables_all_or_nothing(spark, tmp_path):
-    """Multi-table WAP: both tables flip together; one bad table
-    blocks the WHOLE set and leaves every live table untouched."""
-    from lakehouse_poc_spark.operators import quality as Q
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    facts = spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-    dims = spark.range(3).selectExpr("id AS k", "'x' AS name")
-    rules = {"pub.facts": [Q.in_range("v_range", "v", 0, 100)]}
-    r1 = wh.publish_tables({"pub.facts": facts, "pub.dims": dims}, rules)
-    assert r1["published"]
-    assert r1["tables"]["pub.facts"] == {"n_rows": 10, "n_invalid": 0}
-    assert wh.read("pub.facts").count() == 10
-    assert wh.read("pub.dims").count() == 3
-
-    # second round: facts batch violates → NEITHER table changes
-    bad_facts = spark.range(4).selectExpr("id", "CAST(id * 1000 AS DOUBLE) AS v")
-    new_dims = spark.range(7).selectExpr("id AS k", "'y' AS name")
-    r2 = wh.publish_tables({"pub.facts": bad_facts, "pub.dims": new_dims}, rules)
-    assert not r2["published"]
-    assert r2["tables"]["pub.facts"]["n_invalid"] == 3
-    assert wh.read("pub.facts").count() == 10  # old facts
-    assert wh.read("pub.dims").count() == 3    # old dims, though new ones were valid
-    # no staging litter
-    assert not list((tmp_path / "wh" / "pub").glob("*__staging"))
-
-    # third round: both valid → both flip
-    r3 = wh.publish_tables(
-        {"pub.facts": facts.limit(6), "pub.dims": new_dims}, rules
-    )
-    assert r3["published"]
-    assert wh.read("pub.facts").count() == 6
-    assert wh.read("pub.dims").count() == 7
-
-
-def test_publish_tables_mid_swap_restores_in_flight_table(
-    spark, tmp_path, monkeypatch
-):
-    """A failure between archiving a table's live dir and renaming its
-    staged replacement must restore THAT table too — not just the
-    already-swapped ones — so readers never see it absent."""
-    import shutil as _shutil
-
-    import pytest
-
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
-    facts = spark.range(10).selectExpr("id")
-    dims = spark.range(3).selectExpr("id AS k")
-    assert wh.publish_tables({"ms.facts": facts, "ms.dims": dims})["published"]
-
-    # Fail the swap AFTER _archive_current has moved ms.dims's live dir
-    # away: patch rmtree used on the target (which for the second table
-    # doesn't exist post-archive) — instead fail branch.rename via a
-    # poisoned Path.rename on the second staged branch. Simplest hook:
-    # make shutil.rmtree raise when called on the dims target path.
-    real_rename = Path.rename
-    calls = {"n": 0}
-
-    def flaky_rename(self, *a, **kw):
-        if self.name.endswith("__staging") or "__staging" in str(self):
-            calls["n"] += 1
-            if calls["n"] == 2:  # second table's install step
-                raise OSError("disk full mid-swap")
-        return real_rename(self, *a, **kw)
-
-    monkeypatch.setattr(Path, "rename", flaky_rename)
-    with pytest.raises(OSError, match="disk full"):
-        wh.publish_tables(
-            {
-                "ms.facts": spark.range(20).selectExpr("id"),
-                "ms.dims": spark.range(5).selectExpr("id AS k"),
-            }
-        )
-    monkeypatch.setattr(Path, "rename", real_rename)
-    # BOTH tables readable with their pre-publish contents: facts rolled
-    # back from archive, in-flight dims restored from its just-archived
-    # snapshot (previously it was left absent).
-    assert wh.read("ms.facts").count() == 10
-    assert wh.read("ms.dims").count() == 3
-    _shutil.rmtree(str(tmp_path / "wh"), ignore_errors=True)
-
-
-def test_restore_to_archived_version_is_new_version(spark, tmp_path):
-    """RESTORE rolls content back AND preserves history (the restore
-    is itself a new version, so it can be undone)."""
-    import pytest
-
-    wh = Warehouse(spark, str(tmp_path / "wh"), track_versions=True)
-    t = "fact.r"
-    wh.overwrite(spark.range(10).selectExpr("id"), t)            # v0
-    wh.overwrite(spark.range(100, 103).selectExpr("id"), t)      # v1 (v0 archived)
-    assert wh.read(t).count() == 3
-    new_v = wh.restore(t, 0)                                     # v2 = v0 content
-    assert new_v == 2
-    assert sorted(r.id for r in wh.read(t).collect()) == list(range(10))
-    # the pre-restore state survives as v1 — restore is undoable
-    assert wh.read_version(t, 1).count() == 3
-    with pytest.raises(ValueError):
-        wh.restore(t, 99)
-    wh_nt = Warehouse(spark, str(tmp_path / "wh2"))
-    wh_nt.append(spark.range(1), "x.t")
-    with pytest.raises(ValueError):
-        wh_nt.restore("x.t", 0)
 
 
 def test_surrogate_keys_stable_and_inferred_members(spark):
@@ -602,27 +429,6 @@ def test_upsert_file_pruned_rewrites_only_matched_files(spark, tmp_path):
         wh.upsert_file_pruned(
             spark.range(1).selectExpr("id", "'0' AS day"), "fact.p", ["id"]
         )
-
-
-def test_delete_where_file_pruned_touches_only_matching_files(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "fact.d"
-    spark.range(1000).selectExpr("id AS k", "id % 7 AS v").repartitionByRange(
-        10, "k"
-    ).write.parquet(str(wh.path(t)))
-    before = {p.name: p.stat().st_mtime_ns for p in wh.path(t).glob("*.parquet")}
-    stats = wh.delete_where_file_pruned(t, "k >= 100 AND k < 150")
-    assert stats == {"files_total": 10, "files_rewritten": 1, "rows_deleted": 50}
-    assert wh.read(t).count() == 950
-    assert wh.read(t).filter("k >= 100 AND k < 150").count() == 0
-    after = {p.name: p.stat().st_mtime_ns for p in wh.path(t).glob("*.parquet")}
-    untouched = set(before) & set(after)
-    assert len(untouched) == 9
-    assert all(before[n] == after[n] for n in untouched)
-    # no-match delete touches nothing
-    stats2 = wh.delete_where_file_pruned(t, "k > 10000000")
-    assert stats2["files_rewritten"] == 0 and stats2["rows_deleted"] == 0
-    assert wh.read(t).count() == 950
 
 
 def test_compaction_by_target_bytes(spark, tmp_path):
@@ -803,22 +609,6 @@ def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
     assert sorted(r["id"] for r in wh.read(t).collect()) == [2, 3, 4]
 
 
-def test_delete_where_file_pruned_null_predicate_rows_survive(spark, tmp_path):
-    """File-pruned DELETE twin of the null-safety contract: NULL rows
-    in touched files must be rewritten as survivors, and rows_deleted
-    counts pred==TRUE rows only."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "fact.nullsfp"
-    df = spark.createDataFrame(
-        [(1, -5.0), (2, None), (3, 7.0), (4, None), (5, -1.0)],
-        "id long, value double",
-    )
-    df.coalesce(1).write.parquet(str(wh.path(t)))
-    stats = wh.delete_where_file_pruned(t, "value < 0")
-    assert stats["rows_deleted"] == 2  # TRUE matches only
-    assert sorted(r["id"] for r in wh.read(t).collect()) == [2, 3, 4]
-
-
 def test_writer_lock_release_verifies_ownership(spark, tmp_path):
     """A past-ttl-but-alive holder whose lock was broken by a
     contender must NOT delete the new holder's lock on its way out
@@ -893,8 +683,9 @@ def test_stale_lock_break_has_single_winner(spark, tmp_path):
 def test_persisted_bloom_index_maintained_through_dml(spark, tmp_path):
     """SCALE.md 6.3: the bloom index lives as a _bloom.<table> side
     table, refreshes INCREMENTALLY inside file-pruned DML (only
-    rewritten files rebuild), and bloom_lookup through it equals the
-    full-scan filter before and after every mutation."""
+    rewritten files rebuild), stays exact while stale after a full
+    rewrite, and bloom_lookup through it equals the full-scan filter
+    before and after every mutation."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "raw.k"
     spark.range(2000).selectExpr(
@@ -926,10 +717,16 @@ def test_persisted_bloom_index_maintained_through_dml(spark, tmp_path):
     live = len(wh._data_files(t))
     assert wh.read("_bloom.raw.k").count() == live
 
-    # delete: survivors rewritten, lookup of the deleted key is empty
-    wh.delete_where_file_pruned(t, "k = 43")
+    # delete: a full rewrite the index has not seen — every live file
+    # is unindexed, so it is read and the deleted key's lookup is empty
+    wh.delete_where(t, "k = 43")
     assert wh.bloom_lookup(t, "k", 43).count() == 0
+    assert [r.v for r in wh.bloom_lookup(t, "k", 42).collect()] == ["NEW"]
+    st = wh.refresh_bloom_index(t)
+    assert st["files_removed"] == live
+    assert st["files_added"] == st["files_total"] == len(wh._data_files(t))
     assert wh.read("_bloom.raw.k").count() == len(wh._data_files(t))
+    assert wh.bloom_lookup(t, "k", 43).count() == 0
 
     # refresh stats on a clean index: no work
     assert wh.refresh_bloom_index(t)["files_added"] == 0
@@ -1051,7 +848,6 @@ def test_dv_guards_partitioned_layout_and_cow_mixing(spark, tmp_path):
         lambda: wh.upsert_file_pruned(
             spark.range(3).selectExpr("id", "id AS v"), flat, keys=["id"]
         ),
-        lambda: wh.delete_where_file_pruned(flat, "id = 9"),
         lambda: wh.delete_where(flat, "id = 9"),
         lambda: wh.upsert(
             spark.range(3).selectExpr("id", "id AS v"), flat, keys=["id"]
@@ -1062,7 +858,7 @@ def test_dv_guards_partitioned_layout_and_cow_mixing(spark, tmp_path):
             op()
     # purge clears the way for CoW again
     wh.compact_purge_dv(flat)
-    wh.delete_where_file_pruned(flat, "id = 9")
+    wh.delete_where(flat, "id = 9")
     got = sorted(r.id for r in wh.read(flat).collect())
     assert got == [i for i in range(5, 20) if i != 9]
 
@@ -1332,3 +1128,69 @@ def test_iceberg_compact_counts_live_files_only(spark, tmp_path):
     assert wh.compact(t, target_files=1) == live
     assert sorted(r.id for r in wh.read(t).collect()) == rows
     assert len(live_entries(wh.path(t))) == 1
+
+
+# ---------------------------------------------------------------------------
+# No Warehouse method that only tests reach. A public method counts as
+# reached when its name is used (attribute access, or a string such as
+# perfbench's by-name instrumentation list) anywhere in the code below;
+# a name shared with another class (``restore`` on DeltaLogWriter)
+# therefore counts, so the check can miss but never flag falsely.
+
+_REPO = Path(__file__).resolve().parents[1]
+_CALLER_ROOTS = ("lakehouse_poc_spark", "tools", "perfbench", "bench.py", "__spark_entry__.py")
+_WAREHOUSES = ("Warehouse", "ManifestWarehouse", "DeltaLogWarehouse", "IcebergMetaWarehouse")
+# Left on purpose, each with the ROADMAP direction that decides it:
+# 3 retires or re-points the table emulations, 6 surfaces operation
+# metrics through history().
+_TEST_ONLY_ALLOWED = {
+    "clone": 3,
+    "partition_specs": 3,
+    "compact_purge_dv": 3,
+    "history": 6,
+}
+
+
+def _public_warehouse_methods() -> dict[str, list[str]]:
+    import ast
+
+    tree = ast.parse((_REPO / "lakehouse_poc_spark/sinks/warehouse.py").read_text())
+    out: dict[str, list[str]] = {}
+    for cls in tree.body:
+        if isinstance(cls, ast.ClassDef) and cls.name in _WAREHOUSES:
+            for node in cls.body:
+                if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                    out.setdefault(node.name, []).append(cls.name)
+    return out
+
+
+def _names_used_outside_tests() -> set[str]:
+    import ast
+
+    files = []
+    for root in _CALLER_ROOTS:
+        p = _REPO / root
+        files += [p] if p.is_file() else sorted(p.rglob("*.py"))
+    used: set[str] = set()
+    for f in files:
+        if "tests" in f.relative_to(_REPO).parts:
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                used.add(node.value)
+    return used
+
+
+def test_every_warehouse_method_has_a_caller_outside_tests():
+    methods = _public_warehouse_methods()
+    assert set(_WAREHOUSES) == {c for cs in methods.values() for c in cs}
+    used = _names_used_outside_tests()
+    test_only = {m: cs for m, cs in methods.items() if m not in used}
+    unexpected = {m: cs for m, cs in test_only.items() if m not in _TEST_ONLY_ALLOWED}
+    assert not unexpected, (
+        f"only tests call {unexpected}: delete them or give them a caller"
+    )
+    stale = sorted(set(_TEST_ONLY_ALLOWED) - set(test_only))
+    assert not stale, f"allow-listed methods now reached or gone: {stale}"

@@ -89,67 +89,12 @@ def test_manifest_restore_is_new_version(spark, tmp_path):
     assert wh.read_version(t, 1).count() == 9  # undo-able
 
 
-def test_manifest_delete_where_file_pruned_null_safe(spark, tmp_path):
-    wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
-    t = "fact.n"
-    wh.overwrite(
-        spark.createDataFrame(
-            [(1, -5.0), (2, None), (3, 7.0)], "id long, value double"
-        ),
-        t,
-    )
-    stats = wh.delete_where_file_pruned(t, "value < 0")
-    assert stats["rows_deleted"] == 1
-    assert sorted(r.id for r in wh.read(t).collect()) == [2, 3]
-
-
-def test_manifest_wap_stages_invisibly(spark, tmp_path):
-    from lakehouse_poc_spark.operators import quality as Q
-
-    wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
-    t = "pub.t"
-    rules = [Q.in_range("v_range", "v", 0, 100)]
-    good = spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-    r1 = wh.write_audit_publish(good, t, rules)
-    assert r1 == {"published": True, "n_rows": 10, "n_invalid": 0}
-    # bad batch: audited files are unlinked, live manifest untouched
-    bad = spark.range(5).selectExpr("id", "CAST(id * 1000 AS DOUBLE) AS v")
-    r2 = wh.write_audit_publish(bad, t, rules)
-    assert not r2["published"] and r2["n_invalid"] == 4
-    assert wh.read(t).count() == 10
-    assert wh.version(t) == 0  # no commit happened
-    # on-disk: only the committed files remain (staged ones unlinked)
-    assert len(list(wh.path(t).glob("*.parquet"))) == len(wh._data_files(t))
-
-
-def test_manifest_publish_tables_all_or_nothing(spark, tmp_path):
-    from lakehouse_poc_spark.operators import quality as Q
-
-    wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(3).selectExpr("id AS k"), "s.a")
-    wh.overwrite(spark.range(3).selectExpr("id AS k"), "s.b")
-    frames = {
-        "s.a": spark.range(5).selectExpr("id AS k"),
-        "s.b": spark.range(9).selectExpr("id AS k", "id * 100 AS v"),
-    }
-    bad = wh.publish_tables(
-        frames, expectations={"s.b": [Q.in_range("r", "v", 0, 10)]}
-    )
-    assert not bad["published"]
-    assert wh.read("s.a").count() == 3 and wh.read("s.b").count() == 3
-    ok = wh.publish_tables(frames)
-    assert ok["published"]
-    assert wh.read("s.a").count() == 5 and wh.read("s.b").count() == 9
-
-
 def test_manifest_rejects_partitioned_writes(spark, tmp_path):
     wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
     with pytest.raises(NotImplementedError, match="unpartitioned"):
         wh.append(spark.range(3), "raw.t", partition_by=["id"])
     with pytest.raises(NotImplementedError, match="unpartitioned"):
         wh.overwrite_partitions(spark.range(3), "raw.t", ["id"])
-    with pytest.raises(NotImplementedError, match="unpartitioned"):
-        wh.drop_partitions("raw.t", "id", before="5")
 
 
 def test_manifest_concurrent_reader_never_sees_duplicates(spark, tmp_path):
@@ -265,7 +210,7 @@ def test_manifest_inherits_cdc_and_bloom(spark, tmp_path):
 
 
 def test_manifest_vacuum_spares_young_uncommitted_files(spark, tmp_path):
-    """A staged-but-uncommitted file (in-flight WAP) is unreferenced
+    """A staged-but-uncommitted file (in-flight write) is unreferenced
     by every manifest — default-retention vacuum must SPARE it (age
     guard) so the pending commit cannot publish a dangling manifest."""
     wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
@@ -276,15 +221,16 @@ def test_manifest_vacuum_spares_young_uncommitted_files(spark, tmp_path):
     for n in staged:
         assert (wh.path(t) / n).exists()
     # the pending commit still works
-    wh._commit(t, staged, "late_wap")
+    wh._commit(t, staged, "late_commit")
     assert wh.read(t).count() == 2
 
 
 def test_manifest_concurrent_staging_dirs_do_not_collide(spark, tmp_path):
-    """publish_tables stages BEFORE taking per-table locks; unique
-    staging dirs mean a concurrent locked append can never rmtree an
-    in-flight stage (code-review r7 finding). Two interleaved stages
-    for one table must both survive and commit their own files."""
+    """OPTIMIZE (``compact``) and ``append_partitioned`` stage BEFORE
+    taking the table lock; unique staging dirs mean a concurrent locked
+    append can never rmtree an in-flight stage (code-review r7
+    finding). Two interleaved stages for one table must both survive
+    and commit their own files."""
     wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
     t = "dim.s2"
     a = wh._stage_in(spark.range(3).selectExpr("id"), t)
@@ -342,18 +288,14 @@ def test_optimistic_concurrency_conflicts(spark, tmp_path):
     assert sorted(r.id for r in wh.read(t).collect()) == [0, 1, 2, 3, 4]
 
 
-def test_shallow_clone_and_timestamp_travel(spark, tmp_path):
+def test_shallow_clone_shares_bytes_and_diverges(spark, tmp_path):
     """Zero-copy clone: no data bytes copied (hardlinks), divergence
-    is independent, and TIMESTAMP AS OF resolves the version live at
-    a given wall clock."""
+    is independent, and the clone outlives the source's vacuum."""
     import os
-    import time as _time
 
     wh = ManifestWarehouse(spark, str(tmp_path / "wh"))
     src, dst = "dim.src", "dim.dst"
     wh.overwrite(spark.range(5).selectExpr("id"), src)
-    t_v0 = _time.time()
-    _time.sleep(0.05)
 
     wh.clone(src, dst)
     # hardlinked, not copied: same inode
@@ -368,13 +310,6 @@ def test_shallow_clone_and_timestamp_travel(spark, tmp_path):
     wh.overwrite(spark.range(100, 101).selectExpr("id"), src)
     assert sorted(r.id for r in wh.read(dst).collect()) == [0, 1, 2, 3, 4, 10, 11]
     assert [r.id for r in wh.read(src).collect()] == [100]
-
-    # timestamp travel on src: before the overwrite -> v0 contents
-    assert sorted(
-        r.id for r in wh.read_asof_timestamp(src, t_v0).collect()
-    ) == [0, 1, 2, 3, 4]
-    with pytest.raises(ValueError, match="no version"):
-        wh.read_asof_timestamp(src, 0.0)
 
     # clone keeps reading the shared bytes even after src vacuums them
     wh.vacuum(retain_versions=1, min_age=0)
@@ -535,10 +470,12 @@ def test_partition_metadata_survives_restore_clone_and_dml(spark, tmp_path):
     # file-pruned DML: untouched files keep their entries (replace
     # writes unknown files; correctness preserved, pruning degrades
     # only on the rewritten slice)
-    wh.delete_where_file_pruned(t, F.col("id") == 2)
+    wh.upsert_file_pruned(
+        _pdf(spark, [(2, "1996", "1996-01", 21)]), t, keys=["id"]
+    )
     sel3, _ = wh.prune_plan(t, {"y": ["1995"]})
     assert any(n in sel3 for n in sel0)  # 1995 file entry survived
-    assert wh.read(t).count() == 1
+    assert sorted((r.id, r.v) for r in wh.read(t).collect()) == [(1, 10), (2, 21)]
 
 
 def test_manifest_optimize_commit_based(spark, tmp_path):
