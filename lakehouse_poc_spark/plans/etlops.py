@@ -223,15 +223,16 @@ def scd1_file_pruned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# The MANIFEST-COMMIT SCD1 twin (r7): identical scenario and oracle,
-# executed on a ManifestWarehouse — the versioned file-manifest
-# backend where DML commits are a single atomic manifest rename and
-# readers resolve the committed file list instead of globbing (the
-# move→unlink duplicate window of the plain backend does not exist;
-# proven by tests/test_warehouse_manifest.py's concurrent-reader
-# test). Oracle-hash identity across all three SCD1 twins is the
-# result-contract proof that the storage mechanics never leak into
-# query semantics.
+# The COPY-ON-WRITE MERGE SCD1 twin: identical scenario and oracle,
+# executed as upsert_file_pruned on a DeltaLogWarehouse — Delta's
+# MERGE with file pruning: only the files holding matched keys are
+# rewritten, and their `remove` actions land in the same log commit
+# as the rewrite's `add`s, so a concurrent reader sees the old or the
+# new version and never duplicate keys (the move→unlink window of the
+# directory backend does not exist; tests/test_deltalog.py races a
+# reader against it). Oracle-hash identity across the SCD1 twins is
+# the result-contract proof that the storage mechanics never leak
+# into query semantics.
 @query(
     "scd1_manifest_customers",
     oracle="""
@@ -245,8 +246,6 @@ def scd1_file_pruned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scd1_manifest_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sinks.warehouse import ManifestWarehouse
-
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -262,7 +261,7 @@ def scd1_manifest_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = SCRATCH / f"scd1mf_{Path(sf_dir).name}"
     if root.exists():
         shutil.rmtree(root)
-    wh = ManifestWarehouse(spark, str(root))
+    wh = DeltaLogWarehouse(spark, str(root))
     t = "layer0150.dim_customer_mf"
     wh.overwrite(batch1.repartitionByRange(8, "c_custkey"), t)
     wh.upsert_file_pruned(batch2, t, keys=["c_custkey"])
@@ -3243,12 +3242,13 @@ def iceberg_schema_evolution_orders(
 
 
 # ---------------------------------------------------------------------------
-# The FIFTH SCD1 twin (r10): identical scenario and oracle to the
-# parquet / file-pruned / manifest / Delta-log variants, executed on
+# The Iceberg SCD1 twin (r10): identical scenario and oracle to the
+# parquet, file-pruned and Delta-log variants (the Delta log runs
+# both the rewrite upsert and the copy-on-write MERGE), executed on
 # IcebergMetaWarehouse — storage = REAL Iceberg v2 snapshots
-# (sources/iceberg_meta.py). The shared oracle hash across all five
-# backends is the storage-never-leaks-into-semantics proof, now
-# extended to the second interoperable lakehouse format.
+# (sources/iceberg_meta.py). The shared oracle hash across the
+# backends is the storage-never-leaks-into-semantics proof, extended
+# to the second interoperable lakehouse format.
 @query(
     "scd1_iceberg_customers",
     oracle="""
@@ -3295,12 +3295,12 @@ def scd1_iceberg_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# The FOURTH SCD1 twin (r8): identical scenario and oracle to
-# scd1_customer_current / _file_pruned / _manifest, executed on
-# DeltaLogWarehouse — storage = REAL Delta-protocol commits
-# (sources/deltalog.py). The shared oracle hash across all four
-# backends is the storage-never-leaks-into-semantics proof, now
-# extended to the interoperable Delta on-disk format.
+# The Delta-log SCD1 twin (r8): identical scenario and oracle to
+# scd1_customer_current / _file_pruned / _manifest, executed as two
+# rewrite upserts on DeltaLogWarehouse — storage = REAL
+# Delta-protocol commits (sources/deltalog.py). The shared oracle
+# hash across the backends is the storage-never-leaks-into-semantics
+# proof, extended to the interoperable Delta on-disk format.
 @query(
     "scd1_deltalog_customers",
     oracle="""
@@ -3411,16 +3411,18 @@ def scd4_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Partition spec evolution (r8): partition values live IN THE
-# MANIFEST, not in directory names (Iceberg's hidden partitioning;
-# `ManifestWarehouse.append_partitioned`). The orders table lands in
-# two generations — the pre-1996 segment partitioned by YEAR, then
-# the spec EVOLVES and the 1996+ segment lands partitioned by
-# YEAR-MONTH — and a month-grain query over the evolved table prunes
-# to the matching month files plus the (unknown-at-month-grain)
-# year-files, while remaining row-exact: pruning is metadata-only
-# and the row predicate still applies. The pytest twin asserts the
-# file-level pruning; this oracle gates the data path.
+# An evolved layout pruned by metadata: the orders table lands on an
+# IcebergMetaWarehouse in two generations — the pre-1996 segment
+# range-clustered on the order date into about one file per YEAR,
+# then the 1996+ segment into about one file per MONTH — and a
+# month-grain query over the table plans from the manifests' per-file
+# date bounds: it reads the year file holding 1995-06 and the month
+# files up to 1996-03, skipping the rest, while remaining row-exact
+# (pruning is metadata-only and the row predicate still applies).
+# The grain changes without a partition spec: Iceberg partition-spec
+# evolution is not built, since bounds give this query its pruning.
+# tests/test_iceberg_meta.py asserts the skipped files; this oracle
+# gates the data path.
 @query(
     "partition_evolution_orders",
     oracle="""
@@ -3434,29 +3436,37 @@ def scd4_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def partition_evolution_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sinks.warehouse import ManifestWarehouse
+    import datetime
+
+    from ..sinks.warehouse import IcebergMetaWarehouse
+    from ..sources.iceberg_meta import read_iceberg
 
     o = read_parquet_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        "o_orderdate",
+        F.col("o_orderdate").cast("date").alias("o_orderdate"),
         "o_totalprice",
-        F.date_format("o_orderdate", "yyyy").alias("o_year"),
         F.date_format("o_orderdate", "yyyy-MM").alias("o_ym"),
     )
     root = SCRATCH / f"pevo_{Path(sf_dir).name}"
     if root.exists():
         shutil.rmtree(root)
-    wh = ManifestWarehouse(spark, str(root))
+    wh = IcebergMetaWarehouse(spark, str(root))
     t = "layer0100.orders_evolved"
-    wh.append_partitioned(
-        o.filter(F.col("o_year") < "1996"), t, spec=["o_year"]
-    )
-    # spec evolution: same table, finer grain for the new segment
-    wh.append_partitioned(
-        o.filter(F.col("o_year") >= "1996"), t, spec=["o_ym"]
-    )
+    # TPC-H order dates span 1992-01-01 .. 1998-08-02 at every scale:
+    # 4 years before 1996, 32 months from 1996 on
+    cut = F.col("o_orderdate") < F.lit(datetime.date(1996, 1, 1))
+    wh.append(o.filter(cut).repartitionByRange(4, "o_orderdate"), t)
+    wh.append(o.filter(~cut).repartitionByRange(32, "o_orderdate"), t)
     months = ["1995-06", "1996-03"]
-    pruned = wh.read_pruned(t, {"o_ym": months})
+    # string bounds are not recorded, so prune on the date column
+    pruned = read_iceberg(
+        spark,
+        wh.path(t),
+        predicates=[
+            ("o_orderdate", ">=", datetime.date(1995, 6, 1)),
+            ("o_orderdate", "<=", datetime.date(1996, 3, 31)),
+        ],
+    )
     return (
         pruned.filter(F.col("o_ym").isin(months))
         .groupBy(F.col("o_ym").alias("ym"))
@@ -3577,7 +3587,7 @@ def delta_partitioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root)
     w = DeltaLogWriter(spark, root / "orders_part")
     # two generations under ONE pinned spec (Delta partition columns
-    # are immutable — evolution is the ManifestWarehouse feature)
+    # are immutable)
     w.create_partitioned(o.filter(F.col("y") < "1996"), ["y"])
     w.append_partitioned(o.filter(F.col("y") >= "1996"), ["y"])
     years = ["1994", "1995"]

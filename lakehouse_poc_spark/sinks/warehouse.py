@@ -12,9 +12,8 @@ merge-by-rewrite). The spec'd table formats are subclasses over the
 same interface: ``DeltaLogWarehouse`` writes real Delta tables (JSON
 commit log, ``sources/deltalog.py``) and ``IcebergMetaWarehouse`` real
 Iceberg tables (``sources/iceberg_meta.py``), both readable by any
-Delta or Iceberg runtime; ``ManifestWarehouse`` adds a versioned file
-manifest to the parquet layout. A plain directory table has exactly
-one version: time travel and change feeds are read from a log. The
+Delta or Iceberg runtime. A plain directory table has exactly one
+version: time travel and change feeds are read from a log. The
 SCD2 engine (operators/scd2.py) builds the complete new dimension as
 one plan, and each backend commits it through ``overwrite_from_plan``.
 
@@ -170,37 +169,24 @@ def hilbert_sql(
     return q
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Optimistic-concurrency conflict: the table advanced past the
-    writer's snapshot version with commits the writer's operation
-    cannot serialize after (Delta/Iceberg conflict-matrix semantics on
-    the manifest backend)."""
-
-
 class Warehouse:
     """Managed tables as parquet directories with staged-swap
     rewrites (the reference's Delta ``saveAsTable`` + ``MERGE`` sink,
     pipeline_core.py:62-68,219-227, on plain parquet). Rewrites swap a
     staged directory in, so a table has one version, the live one. The
     subclasses below keep this interface and replace the storage layer:
-    a versioned manifest, the Delta log, or Iceberg metadata; those
-    keep history, time travel and (via :meth:`table_changes`) a change
-    feed."""
+    the Delta log or Iceberg metadata; those keep history, time travel
+    and (via :meth:`table_changes`) a change feed."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
-        # per-thread reentrancy state for _writer_lock (a DML op that
-        # holds the lock may call append/overwrite internally)
-        import threading
-
-        self._lock_depth = threading.local()
 
     def _data_files(self, table: str) -> list[Path]:
-        """The table's LIVE data files. Directory-rooted backends glob;
-        the manifest backend overrides this to resolve the committed
-        manifest instead (superseded files may still be on disk)."""
+        """The table's LIVE data files. A directory table globs; the
+        log-backed subclasses resolve their log instead (superseded
+        files stay on disk until vacuum)."""
         return list(self.path(table).glob("**/*.parquet"))
 
     def path(self, table: str) -> Path:
@@ -240,7 +226,7 @@ class Warehouse:
         feed from the log instead — ``readChangeFeed`` — with the same
         emitted schema, so callers are portable.) It diffs two versions,
         so it needs a backend that keeps them: ``DeltaLogWarehouse`` and
-        ``ManifestWarehouse`` inherit it."""
+        ``IcebergMetaWarehouse`` inherit it."""
         old = self.read_version(table, v_from)
         new = self.read_version(table, v_to)
         data_cols = [c for c in new.columns if c not in keys]
@@ -350,7 +336,10 @@ class Warehouse:
         __old``, ``__staging → target``). A crash between them is
         rolled back by :meth:`_recover_swap` on the next open. The
         log-backed subclasses commit new files instead, so they need no
-        staging.
+        staging. Every full-rewrite DML (delete_where, upsert,
+        merge_ops, the SCD2 commit, compact) ends here, so this is
+        where the persisted bloom index catches up with the new file
+        set.
         """
         self._recover_swap(table)
         target = self.path(table)
@@ -369,6 +358,7 @@ class Warehouse:
         staged.rename(target)
         if old.exists():
             shutil.rmtree(old)
+        self.refresh_bloom_index(table)
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_by: list[str]
@@ -514,24 +504,10 @@ class Warehouse:
         a slow-but-alive holder whose lock was ttl-broken cannot
         delete the NEW holder's lock on its way out. This is the
         filesystem analogue of what a Delta/Iceberg transactional
-        log provides natively. Driver-side only:
-        lock acquisition is a metadata op, never per-row."""
+        log provides natively. Not reentrant: no op takes it while
+        holding it. Driver-side only: lock acquisition is a metadata
+        op, never per-row."""
         import uuid
-
-        # Reentrant per (instance, thread, table): a DML op holding the
-        # lock may call append/overwrite internally (the manifest
-        # backend locks those too) — re-entry is a no-op, not a
-        # self-deadlock. Cross-instance/-process exclusion still goes
-        # through the mkdir below.
-        held: dict[str, int] = getattr(self._lock_depth, "held", None) or {}
-        self._lock_depth.held = held
-        if held.get(table, 0) > 0:
-            held[table] += 1
-            try:
-                yield
-            finally:
-                held[table] -= 1
-            return
 
         lock = self.path(table).with_name(self.path(table).name + "__lock")
         lock.parent.mkdir(parents=True, exist_ok=True)
@@ -599,11 +575,9 @@ class Warehouse:
                         f"(< ttl {ttl:.0f}s); gave up after {timeout:.0f}s"
                     )
                 time.sleep(0.05)
-        held[table] = 1
         try:
             yield
         finally:
-            held[table] = 0
             # release only what we still own (owner token unchanged)
             try:
                 if (lock / "owner").read_text() == token:
@@ -633,11 +607,11 @@ class Warehouse:
         key versions to concurrent readers; crash inside it leaves
         them until the next upsert or ``vacuum`` (the leftover
         ``__upsert__staging`` marks it — vacuum() sweeps it).
-        ``ManifestWarehouse`` closes exactly this window with a
-        versioned file manifest. Concurrent
-        *writers* serialize on the per-table advisory lock
-        (:meth:`_writer_lock`); the duplicate window applies to
-        concurrent readers only.
+        ``DeltaLogWarehouse`` has no such window: its swap is one log
+        commit (Delta's copy-on-write MERGE), so a reader sees the old
+        version or the new one. Concurrent *writers* serialize on the
+        per-table advisory lock (:meth:`_writer_lock`); the duplicate
+        window applies to concurrent readers only.
 
         Returns {files_total, files_rewritten, rows_inserted_or_updated}.
         """
@@ -656,6 +630,9 @@ class Warehouse:
                 "files_rewritten": 0,
                 "rows_inserted_or_updated": n,
             }
+        # the version the touched files are listed from (taken before
+        # the read, so a commit landing in between fails the swap)
+        snapshot = self.version(table)
         target = self.path(table)
         if any("=" in d.name for d in target.iterdir() if d.is_dir()):
             raise ValueError(
@@ -687,7 +664,9 @@ class Warehouse:
             .drop("_f")
             .join(batch.select(*keys), keys, "left_anti")
         )
-        self._replace_files(table, touched, survivors.unionByName(batch))
+        self._replace_files(
+            table, touched, survivors.unionByName(batch), snapshot
+        )
         self.refresh_bloom_index(table)  # only changed files rebuild
         return {
             "files_total": files_total,
@@ -696,13 +675,19 @@ class Warehouse:
         }
 
     def _replace_files(
-        self, table: str, touched: list[str], replacement: DataFrame
+        self,
+        table: str,
+        touched: list[str],
+        replacement: DataFrame,
+        snapshot: int,
     ) -> None:
         """Swap a file subset: stage ``replacement``, move its parts in
-        under job-unique names, unlink the ``touched`` originals. The
-        move→unlink window shows duplicates to concurrent readers
-        (documented in upsert_file_pruned); callers hold the per-table
-        writer lock, so writer/writer races cannot lose rows."""
+        under job-unique names, unlink the ``touched`` originals (as
+        listed from version ``snapshot`` — a directory table has only
+        one). The move→unlink window shows duplicates to concurrent
+        readers (documented in upsert_file_pruned); callers hold the
+        per-table writer lock, so writer/writer races cannot lose
+        rows."""
         import uuid
 
         target = self.path(table)
@@ -882,7 +867,9 @@ class Warehouse:
                     f"not in the table dir ({missing[:3]}…) — layout "
                     "changed underneath the vector; cannot purge safely"
                 )
-            self._replace_files(table, touched, survivors)
+            self._replace_files(
+                table, touched, survivors, self.version(table)
+            )
             self.drop(self._dv_table(table))
             self.refresh_bloom_index(table)
             return {"files_rewritten": len(touched), "rows_purged": int(n_purge)}
@@ -893,8 +880,8 @@ class Warehouse:
     # Safety invariant: bloom_lookup treats live-but-unindexed files
     # as "maybe contains" and always reads them, so a stale index can
     # only cost extra file reads, NEVER a false negative. The
-    # file-pruned DML ops and compact() refresh the index
-    # incrementally (only changed files rebuild).
+    # file-pruned DML ops and every full rewrite (overwrite_from_plan)
+    # refresh the index incrementally (only changed files rebuild).
 
     def _bloom_table(self, table: str) -> str:
         return f"_bloom.{table}"
@@ -1098,21 +1085,24 @@ class Warehouse:
     def vacuum(self) -> int:
         """Remove leftover ``__staging``/``__old`` dirs that a crash
         between the write and the swap in ``overwrite_from_plan`` can
-        strand (the parquet-emulation analogue of ``VACUUM``; Delta's
-        own vacuum handles its tombstoned files). Safe at any time: live
-        tables never have these suffixes. Returns dirs removed."""
+        strand, the staging dirs a crashed Delta-log or Iceberg writer
+        left, and stale writer locks (the parquet-emulation analogue of
+        ``VACUUM``; the log-backed subclasses add their unreferenced
+        data files). Safe at any time: live tables never have these
+        suffixes. Returns dirs removed."""
         removed = 0
         for d in self.root.glob("**/*__staging"):
             if d.is_dir():
                 shutil.rmtree(d)
                 removed += 1
-        # job-unique manifest staging dirs (crashed mid-stage): only
-        # sweep ones past the writer-lock ttl — a young one may be an
-        # in-flight stage about to move its parts in
-        for d in self.root.glob("**/*__staging.*"):
-            if d.is_dir() and time.time() - d.stat().st_mtime > 900.0:
-                shutil.rmtree(d)
-                removed += 1
+        # job-unique Delta-log / Iceberg staging dirs a crashed writer
+        # left: only sweep ones past the writer-lock ttl — a young one
+        # may be an in-flight stage about to move its parts in
+        for pat in ("**/*__dl_stage.*", "**/*__cdc_stage.*", "**/*__ice_stage.*"):
+            for d in self.root.glob(pat):
+                if d.is_dir() and time.time() - d.stat().st_mtime > 900.0:
+                    shutil.rmtree(d)
+                    removed += 1
         for d in self.root.glob("**/*__old"):
             if d.is_dir():
                 shutil.rmtree(d)
@@ -1175,7 +1165,7 @@ class Warehouse:
         width; exactly one of the two knobs must be given.
 
         ``DeltaLogWarehouse`` overrides this with a protocol-native
-        OPTIMIZE commit; ``ManifestWarehouse`` with a manifest commit."""
+        OPTIMIZE commit."""
         self._dv_cow_guard(table)
         data_files = self._data_files(table)
         before = len(data_files)
@@ -1211,7 +1201,6 @@ class Warehouse:
                 .drop("__z")
             )
             self.overwrite_from_plan(df, table, partition_by=None)
-            self.refresh_bloom_index(table)
             return before
         if cluster_by:
             if partition_by:
@@ -1223,7 +1212,6 @@ class Warehouse:
                 target_files, *[F.col(c) for c in cluster_by]
             ).sortWithinPartitions(*cluster_by)
             self.overwrite_from_plan(df, table, partition_by=None)
-            self.refresh_bloom_index(table)
             return before
         if partition_by:
             if target_files <= 1:
@@ -1253,649 +1241,7 @@ class Warehouse:
         else:
             df = df.coalesce(target_files)
         self.overwrite_from_plan(df, table, partition_by=partition_by)
-        self.refresh_bloom_index(table)
         return before
-
-
-class ManifestWarehouse(Warehouse):
-    """Parquet warehouse with a VERSIONED FILE MANIFEST commit — the
-    minimal transaction-log mechanic (VERDICT r6 task 2) that makes
-    every table state change atomic to concurrent readers, closing
-    the one semantic gap the plain parquet backend had vs the
-    reference's real Delta MERGE (pipeline_core.py:219-227).
-
-    Protocol (Delta/Iceberg's core idea on plain parquet):
-
-    - the live state of a table is the FILE LIST in the newest
-      manifest (``<table>__manifest/m{N}.json``), not the directory
-      listing;
-    - writers stage new parquet files INTO the table directory under
-      job-unique names (invisible — readers resolve the manifest, not
-      the glob), then commit by writing manifest N+1 via
-      write-tmp + atomic single-file rename;
-    - superseded files are never unlinked at commit time; a reader
-      that resolved manifest N keeps a consistent snapshot until
-      ``vacuum(retain_versions=k)`` sweeps files unreferenced by the
-      kept manifests — exactly Delta's tombstone-retention model;
-    - old manifests ARE time travel: ``read_version(t, n)`` reads
-      manifest n's file list, and ``restore`` re-commits an old list
-      as a NEW version (history-preserving).
-
-    Consequences for concurrency: ``upsert_file_pruned`` loses its
-    move→unlink duplicate window entirely (a concurrent reader sees
-    either the old or the new manifest, each internally consistent);
-    writers still serialize on the per-table advisory lock.
-
-    Scope: unpartitioned tables (hive-style dir partitioning trades
-    against file-list reads; Delta/Iceberg put partition values in
-    the log — at that point, use them). Partitioned writes and
-    ``overwrite_partitions`` raise; :meth:`append_partitioned`
-    records partition values in the manifest instead.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root)
-
-    # -- manifest mechanics ---------------------------------------------
-
-    def _manifest_dir(self, table: str) -> Path:
-        p = self.path(table)
-        return p.with_name(p.name + "__manifest")
-
-    def _manifests(self, table: str) -> list[Path]:
-        md = self._manifest_dir(table)
-        return sorted(md.glob("m*.json")) if md.exists() else []
-
-    def _latest(self, table: str) -> dict | None:
-        import json
-
-        ms = self._manifests(table)
-        if not ms:
-            return None
-        return json.loads(ms[-1].read_text())
-
-    def _live_names(self, table: str) -> list[str]:
-        m = self._latest(table)
-        if m is None:
-            raise ValueError(
-                f"table {table!r} has no committed manifest "
-                "(never written, or not a manifest-mode table)"
-            )
-        return list(m["files"])
-
-    def _commit(
-        self,
-        table: str,
-        names: list[str],
-        op: str,
-        expected_base: int | None = None,
-        new_parts: dict[str, dict] | None = None,
-    ) -> int:
-        """Write manifest version N+1 (atomic tmp→rename). Callers
-        hold the per-table writer lock; the rename is the commit
-        point — a reader listing the manifest dir sees either N or
-        N+1, never a partial file.
-
-        Partition values live IN THE LOG (Iceberg/Delta style): the
-        body's ``parts`` map records, per file, the partition spec
-        and values it was written under (see
-        :meth:`append_partitioned`). Carried-over files inherit their
-        entry from the previous manifest automatically, so every
-        existing commit path (replace_files, compaction)
-        preserves pruning metadata without knowing it exists; files
-        with no entry are simply never pruned (unknown-safe).
-        ``new_parts`` supplies entries for freshly staged names (and
-        lets restore/clone carry metadata across manifests/tables).
-
-        ``expected_base`` enables optimistic concurrency (the Delta
-        conflict check): the writer names the version its work was
-        based on; if the table has advanced since, the commit FAILS
-        with :class:`ConcurrentWriteError` — except that an append
-        may serialize after intervening appends (append∥append is
-        the one always-compatible cell of the conflict matrix, and
-        the append path re-reads the live list under the lock, so
-        the rebase is literal, not assumed)."""
-        import json
-        import uuid
-
-        md = self._manifest_dir(table)
-        md.mkdir(parents=True, exist_ok=True)
-        prev = self._latest(table)
-        version = (prev["version"] + 1) if prev is not None else 0
-        if expected_base is not None:
-            latest_v = version - 1
-            if latest_v != expected_base:
-                intervening = [
-                    json.loads(m.read_text())["op"]
-                    for m in self._manifests(table)
-                    if int(m.stem[1:]) > expected_base
-                ]
-                if not (op == "append" and set(intervening) <= {"append"}):
-                    raise ConcurrentWriteError(
-                        f"{table}: snapshot v{expected_base} is stale — "
-                        f"table is at v{latest_v} with intervening ops "
-                        f"{intervening}; {op!r} cannot serialize after "
-                        "them (re-read and retry)"
-                    )
-        parts: dict[str, dict] = {}
-        if prev is not None:
-            parts.update(prev.get("parts") or {})
-        if new_parts:
-            parts.update(new_parts)
-        parts = {n: parts[n] for n in names if n in parts}
-        body = {
-            "version": version,
-            "op": op,
-            "files": sorted(names),
-            "ts": time.time(),
-        }
-        if parts:
-            body["parts"] = parts
-        tmp = md / f".m{version:06d}.{uuid.uuid4().hex[:8]}.tmp"
-        tmp.write_text(json.dumps(body))
-        # Tombstone clock (r8): files leaving the live set get their
-        # mtime FRESHENED at the commit that drops them, so "file age"
-        # under vacuum's min_age guard means time-since-UNREFERENCED
-        # (Delta's deletionTimestamp retention), not time-since-
-        # creation. Without this, an old file carried live across many
-        # manifests and then dropped would be vacuum-eligible the
-        # moment it left the live set, dangling any reader that
-        # resolved a pre-drop manifest moments earlier. Freshening
-        # happens BEFORE the rename commit point: a crash in between
-        # leaves still-referenced files merely looking young — vacuum
-        # is delayed, never early.
-        if prev is not None:
-            now = time.time()
-            dropped = set(prev["files"]) - set(names)
-            tdir = self.path(table)
-            for n in dropped:
-                f = tdir / n
-                if f.exists():
-                    os.utime(f, (now, now))
-        tmp.rename(md / f"m{version:06d}.json")
-        return version
-
-    def _stage_in(self, df: DataFrame, table: str) -> list[str]:
-        """Write ``df`` to a JOB-UNIQUE staging dir, move the parts
-        into the table dir under job-unique names, return the names.
-        The files are INVISIBLE until a manifest commit references
-        them. Staging dirs are never shared, so concurrent stagings
-        (OPTIMIZE and ``append_partitioned`` stage before taking the
-        table lock) cannot rmtree or interleave with each other — only
-        the manifest COMMIT needs the writer lock."""
-        import uuid
-
-        job = uuid.uuid4().hex[:12]
-        target = self.path(table)
-        target.mkdir(parents=True, exist_ok=True)
-        staging = target.with_name(f"{target.name}__staging.{job}")
-        df.write.parquet(str(staging))
-        names: list[str] = []
-        for i, part in enumerate(sorted(staging.glob("*.parquet"))):
-            name = f"part-{i:05d}-{job}.parquet"
-            part.rename(target / name)
-            names.append(name)
-        shutil.rmtree(staging, ignore_errors=True)
-        return names
-
-    # -- reads ----------------------------------------------------------
-
-    def _data_files(self, table: str) -> list[Path]:
-        return [self.path(table) / n for n in self._live_names(table)]
-
-    def table_exists(self, table: str) -> bool:
-        return bool(self._manifests(table))
-
-    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
-        files = [str(p) for p in self._data_files(table)]
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*files)
-
-    def version(self, table: str) -> int:
-        m = self._latest(table)
-        return m["version"] if m is not None else 0
-
-    def read_version(self, table: str, version: int) -> DataFrame:
-        import json
-
-        mf = self._manifest_dir(table) / f"m{version:06d}.json"
-        if not mf.exists():
-            raise ValueError(
-                f"version {version} of {table!r} not found "
-                f"(current={self.version(table)}; vacuumed?)"
-            )
-        names = json.loads(mf.read_text())["files"]
-        missing = [n for n in names if not (self.path(table) / n).exists()]
-        if missing:
-            raise ValueError(
-                f"version {version} of {table!r} references vacuumed "
-                f"files: {missing[:3]}..."
-            )
-        return self.spark.read.parquet(
-            *[str(self.path(table) / n) for n in names]
-        )
-
-    def clone(self, src: str, dst: str) -> int:
-        """SHALLOW CLONE (Delta's zero-copy clone): the new table's
-        manifest references the SOURCE's live data bytes via
-        hardlinks — no data copied, created in milliseconds at any
-        size. Divergence is free because committed files are
-        immutable (every writer stages under job-unique names) and
-        vacuum on either table only unlinks its own directory entry;
-        the shared bytes live until BOTH tables stop referencing
-        them."""
-        with self._writer_lock(dst):
-            names = self._live_names(src)
-            dst_dir = self.path(dst)
-            dst_dir.mkdir(parents=True, exist_ok=True)
-            now = time.time()
-            for n in names:
-                target = dst_dir / n
-                if not target.exists():
-                    os.link(self.path(src) / n, target)
-                    # hardlinks inherit the source inode's OLD mtime,
-                    # which would defeat vacuum's min_age guard for
-                    # the linked-but-not-yet-committed window (a
-                    # concurrent retention vacuum would see old
-                    # unreferenced files in dst and unlink them
-                    # before our commit) — freshen the shared inode
-                    # so the links age like any staged write
-                    os.utime(target, (now, now))
-            src_parts = (self._latest(src) or {}).get("parts")
-            return self._commit(
-                dst, names, f"clone:{src}", new_parts=src_parts
-            )
-
-    def history(self, table: str) -> list[dict]:
-        import json
-
-        current = self.version(table)
-        out = []
-        for mf in self._manifests(table):
-            d = json.loads(mf.read_text())
-            out.append(
-                {
-                    "version": d["version"],
-                    "n_files": len(d["files"]),
-                    "op": d.get("op"),
-                    "current": d["version"] == current,
-                }
-            )
-        return out
-
-    # -- writes ---------------------------------------------------------
-
-    def _no_partitions(self, partition_by) -> None:
-        if partition_by:
-            raise NotImplementedError(
-                "manifest-mode tables are unpartitioned (the manifest "
-                "IS the pruning index; hive dir layouts conflict with "
-                "file-list reads)"
-            )
-
-    def current_version(self, table: str) -> int:
-        """Latest committed manifest version (-1 if never written) —
-        the snapshot id an optimistic writer passes back as
-        ``expected_version``."""
-        m = self._latest(table)
-        return -1 if m is None else int(m["version"])
-
-    def append(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
-        expected_version: int | None = None,
-    ) -> None:
-        self._no_partitions(partition_by)
-        with self._writer_lock(table):
-            live = self._live_names(table) if self.table_exists(table) else []
-            names = self._stage_in(df, table)
-            self._commit(
-                table, live + names, "append", expected_base=expected_version
-            )
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
-        expected_version: int | None = None,
-    ) -> None:
-        self._no_partitions(partition_by)
-        with self._writer_lock(table):
-            names = self._stage_in(df, table)
-            self._commit(
-                table, names, "overwrite", expected_base=expected_version
-            )
-
-    def overwrite_from_plan(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        # The input plan pinned its file list when it was built (reads
-        # resolve the manifest, and committed files are never moved),
-        # so a self-referencing overwrite can never clobber its own
-        # input — no sibling-dir swap needed, just a normal commit.
-        self.overwrite(df, table, partition_by)
-
-    def overwrite_partitions(self, df, table, partition_by):
-        raise NotImplementedError(
-            "manifest-mode tables are unpartitioned; use "
-            "upsert_file_pruned / overwrite for scoped rewrites"
-        )
-
-    # -- partition values in the log (Iceberg-style, r8) ----------------
-
-    def append_partitioned(
-        self,
-        df: DataFrame,
-        table: str,
-        spec: list[str],
-        expected_version: int | None = None,
-    ) -> None:
-        """Append with PARTITION VALUES RECORDED IN THE MANIFEST —
-        the Iceberg/Delta answer to hive dir layouts (the class
-        docstring's "at that point, use them"). Files stay flat in
-        the table dir; each staged file is value-pure in the ``spec``
-        columns and its manifest entry records
-        ``{"spec": [...], "values": {col: str}}``. Readers prune by
-        metadata (:meth:`prune_plan`), never by directory shape.
-
-        PARTITION SPEC EVOLUTION is free: a later append may use a
-        DIFFERENT spec — old files keep their old entries, and a
-        prune on a column a file never recorded keeps that file
-        (unknown-safe), so evolved tables are always correct, just
-        less pruned on the old segment. That is exactly Iceberg's
-        evolution contract: specs are per-file, queries don't change.
-
-        Mechanics: the staging write partitions by SHADOW copies of
-        the spec columns (``__p_<col>``), so Spark's hive layout
-        carries the values while the data columns remain in the
-        files; the hive dirs are parsed and discarded during the
-        move-in. One extra shuffle vs a plain append (the hive write
-        clusters rows by value) — the cost that buys file-level
-        pruning."""
-        import urllib.parse
-        import uuid
-
-        missing = [c for c in spec if c not in df.columns]
-        if missing:
-            raise ValueError(f"spec columns not in batch: {missing}")
-        job = uuid.uuid4().hex[:12]
-        target = self.path(table)
-        target.mkdir(parents=True, exist_ok=True)
-        staging = target.with_name(f"{target.name}__staging.{job}")
-        shadow = [f"__p_{c}" for c in spec]
-        out = df
-        for c, s in zip(spec, shadow):
-            out = out.withColumn(s, F.col(c).cast("string"))
-        # cluster rows by value so each partition value lands in ONE
-        # task → one file per value (the "extra shuffle" in the
-        # docstring). A pathologically hot value = one big task — the
-        # usual hive-write skew; pick the spec accordingly.
-        out = out.repartition(*[F.col(s) for s in shadow])
-        out.write.partitionBy(*shadow).parquet(str(staging))
-        names: list[str] = []
-        new_parts: dict[str, dict] = {}
-        for i, part in enumerate(sorted(staging.rglob("*.parquet"))):
-            values: dict[str, str] = {}
-            for comp in part.relative_to(staging).parts[:-1]:
-                k, _, v = comp.partition("=")
-                values[k.removeprefix("__p_")] = urllib.parse.unquote(v)
-            name = f"part-{i:05d}-{job}.parquet"
-            part.rename(target / name)
-            names.append(name)
-            new_parts[name] = {"spec": list(spec), "values": values}
-        shutil.rmtree(staging, ignore_errors=True)
-        with self._writer_lock(table):
-            live = self._live_names(table) if self.table_exists(table) else []
-            self._commit(
-                table,
-                live + names,
-                f"append_partitioned({','.join(spec)})",
-                expected_base=expected_version,
-                new_parts=new_parts,
-            )
-
-    def partition_specs(self, table: str) -> list[list[str]]:
-        """Distinct partition specs across live files (evolution
-        history as seen by the current snapshot). Files appended
-        unpartitioned report spec ``[]``."""
-        m = self._latest(table) or {}
-        parts = m.get("parts") or {}
-        seen: list[list[str]] = []
-        for n in m.get("files", []):
-            s = list(parts.get(n, {}).get("spec", []))
-            if s not in seen:
-                seen.append(s)
-        return seen
-
-    def prune_plan(
-        self, table: str, filters: dict[str, list[str]]
-    ) -> tuple[list[str], int]:
-        """Metadata-only pruning: live file names whose recorded
-        partition values can match ``filters`` (col → allowed string
-        values), plus the live total. A file with NO recorded value
-        for a filtered column is KEPT — that is what makes spec
-        evolution and plain appends safe; pruning is an optimization,
-        never a filter, so callers still apply the row predicate."""
-        m = self._latest(table)
-        if m is None:
-            raise ValueError(f"table {table!r} has no committed manifest")
-        parts = m.get("parts") or {}
-        selected = []
-        for n in m["files"]:
-            vals = parts.get(n, {}).get("values", {})
-            if all(
-                c not in vals or vals[c] in allowed
-                for c, allowed in filters.items()
-            ):
-                selected.append(n)
-        return selected, len(m["files"])
-
-    def read_pruned(
-        self, table: str, filters: dict[str, list[str]]
-    ) -> DataFrame:
-        """Read only the files :meth:`prune_plan` selects. The caller
-        must still apply the actual row predicate (unknown-spec files
-        are included whole)."""
-        names, _total = self.prune_plan(table, filters)
-        if not names:
-            return self.read(table).limit(0)
-        return self.spark.read.parquet(
-            *[str(self.path(table) / n) for n in names]
-        )
-
-    def delete_where_dv(self, table: str, predicate) -> dict:
-        raise NotImplementedError(
-            "manifest-mode tables version their file lists; DELETE "
-            "through delete_where — the manifest commit already gives "
-            "readers the atomicity deletion vectors exist to emulate"
-        )
-
-    def compact_purge_dv(self, table: str) -> dict:
-        raise NotImplementedError(
-            "manifest-mode tables do not carry deletion vectors "
-            "(see delete_where_dv)"
-        )
-
-    def compact(
-        self,
-        table: str,
-        target_files: int | None = None,
-        partition_by: list[str] | None = None,
-        cluster_by: list[str] | None = None,
-        zorder_by: tuple[str, str] | None = None,
-        target_file_bytes: int | None = None,
-    ) -> int:
-        """Manifest-native OPTIMIZE (r8). The inherited compact was
-        already reader-safe here (it funnels through the overridden
-        ``overwrite_from_plan`` → one manifest commit), but it had NO
-        conflict check: a concurrent append landing between the
-        rewrite's read and its overwrite commit would be silently
-        erased by the wholesale file-list replacement (lost update).
-        This override stages the coalesced rewrite, then commits with
-        ``expected_base`` — the version the rewrite was based on — and
-        FAILS if any writer (even an append) landed in between:
-        re-read and retry, Delta's OPTIMIZE conflict rule. Old files
-        age out through vacuum's tombstone clock; readers see pre- or
-        post-OPTIMIZE state, never half."""
-        if partition_by:
-            self._no_partitions(partition_by)
-        if zorder_by is not None:
-            raise NotImplementedError(
-                "manifest-mode OPTIMIZE supports cluster_by (range "
-                "clustering); use the file_skipping helpers for "
-                "z-order layouts"
-            )
-        if (target_files is None) == (target_file_bytes is None):
-            raise ValueError(
-                "pass exactly one of target_files / target_file_bytes"
-            )
-        base_version = self.version(table)
-        names = self._live_names(table)
-        n_before = len(names)
-        paths = [self.path(table) / n for n in names]
-        if target_file_bytes is not None:
-            total = sum(p.stat().st_size for p in paths)
-            target_files = max(1, -(-total // target_file_bytes))
-        df = self.spark.read.parquet(*[str(p) for p in paths])
-        if cluster_by:
-            df = df.repartitionByRange(
-                target_files, *cluster_by
-            ).sortWithinPartitions(*cluster_by)
-        else:
-            df = df.coalesce(target_files)
-        # stage OUTSIDE the lock (job-unique staging never conflicts;
-        # a long rewrite must not hold writers out) — only the commit
-        # itself serializes, and expected_base catches interleavers
-        new_names = self._stage_in(df, table)
-        try:
-            with self._writer_lock(table):
-                self._commit(
-                    table, new_names, "optimize", expected_base=base_version
-                )
-        except ConcurrentWriteError:
-            for n in new_names:  # failed rewrite: reclaim staged files
-                (self.path(table) / n).unlink(missing_ok=True)
-            raise
-        return n_before
-
-    def _replace_files(
-        self, table: str, touched: list[str], replacement: DataFrame
-    ) -> None:
-        """Manifest twin of the base file swap: stage the replacement,
-        move it in, commit a manifest that EXCLUDES the touched files.
-        Nothing is unlinked — a concurrent reader resolves either the
-        old or the new manifest and sees one consistent file set; the
-        move→unlink duplicate window of the base backend does not
-        exist here. Superseded files wait for vacuum()."""
-        touched_names = {
-            Path(f.removeprefix("file://").removeprefix("file:")).name
-            for f in touched
-        }
-        live = [n for n in self._live_names(table) if n not in touched_names]
-        names = self._stage_in(replacement, table)
-        self._commit(table, live + names, "replace_files")
-
-    def restore(self, table: str, version: int) -> int:
-        """RESTORE: re-commit an old manifest's file list as a
-        NEW version (history-preserving, Delta semantics). Metadata
-        only — no data files move."""
-        import json
-
-        with self._writer_lock(table):
-            mf = self._manifest_dir(table) / f"m{version:06d}.json"
-            if not mf.exists():
-                raise ValueError(
-                    f"version {version} of {table!r} not in manifest "
-                    "history (vacuumed?)"
-                )
-            old = json.loads(mf.read_text())
-            names = old["files"]
-            missing = [
-                n for n in names if not (self.path(table) / n).exists()
-            ]
-            if missing:
-                raise ValueError(
-                    f"cannot restore {table!r} to v{version}: files "
-                    f"vacuumed: {missing[:3]}..."
-                )
-            return self._commit(
-                table,
-                names,
-                f"restore({version})",
-                new_parts=old.get("parts"),
-            )
-
-    # -- maintenance ----------------------------------------------------
-
-    def vacuum(
-        self, retain_versions: int | None = None, min_age: float = 900.0
-    ) -> int:
-        """Sweep staging leftovers and stale locks (base behavior);
-        with ``retain_versions=k``, additionally drop all but the
-        newest k manifests per table and unlink data files no kept
-        manifest references — Delta's VACUUM retention. Readers of a
-        vacuumed version fail fast with a clear error.
-
-        Unreferenced data files younger than ``min_age`` seconds are
-        SPARED: a file staged into the table dir by an in-flight
-        write (commit not yet issued) is unreferenced by design until
-        its commit, and deleting it would let the commit publish a
-        manifest pointing at nothing —
-        the same age discipline the lock sweeps use. Tests pass
-        ``min_age=0`` to force a full sweep."""
-        import json
-
-        removed = super().vacuum()
-        if retain_versions is not None:
-            now = time.time()
-            for md in self.root.glob("**/*__manifest"):
-                manifests = sorted(md.glob("m*.json"))
-                cut = max(0, len(manifests) - retain_versions)
-                # RETENTION FLOOR (r8): a manifest younger than
-                # min_age is NEVER retired, regardless of the count
-                # knob — an active reader may have resolved it moments
-                # ago (rapid-fire commits can push a seconds-old
-                # version past any retain count). Spared manifests
-                # keep their files referenced, so the reader's
-                # deferred scan cannot dangle. Combined with the
-                # tombstone-mtime clock in _commit, the contract is
-                # Delta's: any read started within min_age of its
-                # version's supersession completes; older time travel
-                # fails FAST at resolve (missing manifest / missing
-                # file check in read_version), never mid-scan.
-                drop = [
-                    mf
-                    for mf in manifests[:cut]
-                    if now - mf.stat().st_mtime >= min_age
-                ]
-                keep = [mf for mf in manifests if mf not in drop]
-                referenced: set[str] = set()
-                for mf in keep:
-                    referenced.update(json.loads(mf.read_text())["files"])
-                table_dir = md.with_name(md.name[: -len("__manifest")])
-                for mf in drop:
-                    mf.unlink()
-                    removed += 1
-                if table_dir.exists():
-                    for f in table_dir.glob("*.parquet"):
-                        if (
-                            f.name not in referenced
-                            and now - f.stat().st_mtime >= min_age
-                        ):
-                            f.unlink()
-                            removed += 1
-        return removed
-
-    def drop(self, table: str) -> None:
-        super().drop(table)
-        md = self._manifest_dir(table)
-        if md.exists():
-            shutil.rmtree(md)
 
 
 class DeltaLogWarehouse(Warehouse):
@@ -1906,18 +1252,20 @@ class DeltaLogWarehouse(Warehouse):
     commits — readable by any Delta runtime, written and replayed here
     with no delta-spark dependency.
 
-    Where ``ManifestWarehouse`` proves the commit MECHANIC on a
-    homegrown manifest format, this backend proves the INTEROP: the
-    same Warehouse API (append / overwrite / upsert / SCD1-2 via the
-    inherited engines) materializes state changes as spec-shaped Delta
-    commits. The three-way SCD1 oracle-hash identity
-    (`scd1_customer_current` == file-pruned == manifest ==
-    `scd1_deltalog_customers`) pins that storage format never leaks
-    into query semantics.
+    The same Warehouse API (append / overwrite / upsert / SCD1-2 via
+    the inherited engines) materializes state changes as spec-shaped
+    Delta commits. The SCD1 twins share one oracle
+    (`scd1_customer_current`, the file-pruned, Delta-log and Iceberg
+    variants), which pins that storage format never leaks into query
+    semantics. ``upsert_file_pruned`` is Delta's copy-on-write MERGE:
+    the touched files' ``remove`` actions and the rewrite's ``add``
+    actions land in one commit, so a concurrent reader sees the old
+    version or the new one, never duplicate keys.
 
-    Scope mirrors ManifestWarehouse for the Warehouse-API surface
-    (unpartitioned tables; rewrite-based DML through the inherited
-    parquet engines). The protocol layer itself goes further (r8):
+    Scope of the Warehouse-API surface: unpartitioned tables;
+    rewrite-based DML through the inherited engines. An overwrite may
+    add columns (the commit widens the schema); an append may not. The
+    protocol layer itself goes further (r8):
     ``DeltaLogWriter.create_partitioned`` / ``append_partitioned``
     store per-file ``partitionValues`` in add actions with the spec's
     data-files-exclude-partition-columns layout (read_delta
@@ -1928,9 +1276,6 @@ class DeltaLogWarehouse(Warehouse):
     it, and the inherited :meth:`Warehouse.table_changes` diffs two of
     them into the keyed change feed (the versioned SCD2 scenario in
     ``plans/etlops.py`` reads both)."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root)
 
     def _writer(self, table: str):
         from ..sources.deltalog import DeltaLogWriter
@@ -1947,7 +1292,12 @@ class DeltaLogWarehouse(Warehouse):
 
         return max(current_version(self.path(table)), 0)
 
-    current_version = version
+    def _data_files(self, table: str) -> list[Path]:
+        # the log's live set: the directory also holds removed files
+        from ..sources.deltalog import _decode_path, _replay
+
+        tp = self.path(table)
+        return [tp / _decode_path(f) for f in _replay(tp, None)["files"]]
 
     def read(self, table: str, merge_schema: bool = False) -> DataFrame:
         from ..sources.deltalog import read_delta
@@ -2005,14 +1355,13 @@ class DeltaLogWarehouse(Warehouse):
     ) -> None:
         # committed data files never move and the plan pinned its
         # input files at build time, so a self-referencing overwrite
-        # needs no staged-swap dance (the ManifestWarehouse property,
-        # inherited by the protocol)
+        # needs no staged-swap dance
         self._no_partitions(partition_by)
         self._writer(table).overwrite(df)
 
     # parquet path-mechanics that bypass the log would corrupt the
     # table state for real Delta readers — fail fast, route to the
-    # rewrite engines instead (same guard set as ManifestWarehouse)
+    # rewrite engines instead
     def overwrite_partitions(self, df, table, partition_by):
         raise NotImplementedError(
             "overwrite_partitions bypasses the Delta log; "
@@ -2033,16 +1382,52 @@ class DeltaLogWarehouse(Warehouse):
             "deletion vectors)"
         )
 
-    def upsert_file_pruned(self, batch, table, keys, **kw):
-        raise NotImplementedError(
-            "file-pruned DML moves files under the log's feet — use "
-            "upsert (rewrite via the log) or ManifestWarehouse"
-        )
+    def upsert_file_pruned(self, batch, table, keys):
+        from ..sources.deltalog import _replay
+
+        # the touched-file listing reads _metadata.file_path, which a
+        # deletion-vector masked scan (a union of file reads) lacks
+        if self.table_exists(table) and any(
+            a.get("deletionVector")
+            for a in _replay(self.path(table), None)["adds"]
+        ):
+            raise NotImplementedError(
+                "upsert_file_pruned on a table with deletion vectors: "
+                "compact it first (OPTIMIZE folds the vectors in)"
+            )
+        return super().upsert_file_pruned(batch, table, keys)
+
+    def _replace_files(self, table, touched, replacement, snapshot):
+        """The file-pruned swap as one log commit: ``remove`` the
+        touched files and ``add`` the replacement, claimed at exactly
+        ``snapshot + 1``. A commit landing since the touched files
+        were listed fails the claim (``DeltaLogError``) and reclaims
+        the staged files. Staging applies generated columns and CHECK
+        constraints like every other write; superseded files stay
+        readable through ``read_version`` until ``vacuum``."""
+        from urllib.parse import unquote, urlparse
+
+        from ..sources.deltalog import DeltaLogError, _decode_path, _replay
+
+        tp = self.path(table)
+        w = self._writer(table)
+        state = _replay(tp, snapshot)
+        live = {(tp / _decode_path(f)).resolve(): f for f in state["files"]}
+        # touched entries are the scan's _metadata.file_path URIs
+        paths = [Path(unquote(urlparse(f).path)).resolve() for f in touched]
+        gone = [str(p) for p in paths if p not in live]
+        if gone:
+            raise DeltaLogError(
+                f"{table}: a commit landed since version {snapshot}; "
+                f"touched files not live there: {gone[:3]}"
+            )
+        adds = w._stage_checked(w._apply_generated(replacement, state), state)
+        w._commit_replace(state, [live[p] for p in paths], adds, op="MERGE")
 
     def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
         raise NotImplementedError(
-            "the bloom index reads data files by directory listing, "
-            "which includes files the Delta log has removed"
+            "bloom_lookup reads data files directly, past the log's "
+            "deletion-vector masks and column mapping"
         )
 
     def restore(self, table: str, version: int) -> int:
@@ -2092,18 +1477,11 @@ class DeltaLogWarehouse(Warehouse):
             raise ValueError(
                 "pass exactly one of target_files / target_file_bytes"
             )
-        from ..sources.deltalog import (
-            DeltaLogError,
-            _data_read_schema,
-            _read_adds_mor,
-            _replay,
-            current_version,
-        )
+        from ..sources.deltalog import _data_read_schema, _read_adds_mor, _replay
 
         tp = self.path(table)
         w = self._writer(table)
-        v0 = current_version(tp)
-        state = _replay(tp, v0)
+        state = _replay(tp, None)
         files = state["files"]
         n_before = len(files)
         if target_file_bytes is not None:
@@ -2121,24 +1499,9 @@ class DeltaLogWarehouse(Warehouse):
             ).sortWithinPartitions(*cluster_by)
         else:
             df = df.coalesce(target_files)
-        adds = w._stage(df)
-        now = int(time.time() * 1000)
-        removes = [
-            {
-                "remove": {
-                    "path": f,
-                    "deletionTimestamp": now,
-                    "dataChange": False,
-                }
-            }
-            for f in files
-        ]
-        try:
-            w._commit(removes + adds, "OPTIMIZE", version=v0 + 1)
-        except DeltaLogError:
-            for a in adds:  # failed rewrite: reclaim staged files
-                (tp / a["add"]["path"]).unlink(missing_ok=True)
-            raise
+        w._commit_replace(
+            state, files, w._stage(df), op="OPTIMIZE", data_change=False
+        )
         return n_before
 
     def vacuum(self, min_age: float = 900.0) -> int:
@@ -2148,15 +1511,15 @@ class DeltaLogWarehouse(Warehouse):
         retention window protecting in-flight readers and time travel
         (Delta's default is 7 days; tests pass 0). The log itself is
         never vacuumed (Delta keeps it; checkpointing, not deletion,
-        bounds replay cost). Returns files removed. NOTE: vacuumed
-        versions remain listed in history but fail fast at read (the
-        referenced files are gone — same contract as real Delta)."""
-        import time as _time
-
+        bounds replay cost). The base sweep runs first, so staging dirs
+        a crashed writer left go too. Returns files and dirs removed.
+        NOTE: vacuumed versions remain listed in history but fail fast
+        at read (the referenced files are gone — same contract as real
+        Delta)."""
         from ..sources.deltalog import _commits, _replay
 
-        removed = 0
-        now = _time.time()
+        removed = super().vacuum()
+        now = time.time()
         for log_dir in self.root.glob("**/_delta_log"):
             tdir = log_dir.parent
             if not _commits(tdir):
@@ -2182,19 +1545,17 @@ class IcebergMetaWarehouse(Warehouse):
     location (HadoopTables layout), written and planned here with no
     Iceberg JAR.
 
-    The FIFTH SCD1 twin: the same Warehouse API materializes state
-    changes as spec-shaped Iceberg snapshots, and the shared oracle
-    hash across parquet / file-pruned / manifest / Delta-log /
-    Iceberg backends pins that the storage format never leaks into
-    query semantics.
+    An SCD1 twin: the same Warehouse API materializes state changes
+    as spec-shaped Iceberg snapshots, and the oracle hash it shares
+    with the parquet, file-pruned and Delta-log variants pins that the
+    storage format never leaks into query semantics.
 
-    Scope mirrors DeltaLogWarehouse: unpartitioned tables,
-    rewrite-based DML through the inherited parquet engines; appends
-    are Iceberg FAST APPENDS (new manifest only), overwrites record
-    the replaced files as DELETED manifest entries per spec."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root)
+    Scope: unpartitioned tables, rewrite-based DML through the
+    inherited engines; appends are Iceberg FAST APPENDS (new manifest
+    only), overwrites record the replaced files as DELETED manifest
+    entries per spec. Neither adds columns (a batch with a column the
+    table lacks is refused): schema evolution is explicit, through
+    ``IcebergTable.update_schema``."""
 
     def _tbl(self, table: str):
         from ..sources.iceberg_meta import IcebergTable
@@ -2218,8 +1579,6 @@ class IcebergMetaWarehouse(Warehouse):
         from ..sources.iceberg_meta import current_metadata_version
 
         return current_metadata_version(self.path(table))
-
-    current_version = version
 
     def read(self, table: str, merge_schema: bool = False) -> DataFrame:
         from ..sources.iceberg_meta import read_iceberg
@@ -2307,6 +1666,6 @@ class IcebergMetaWarehouse(Warehouse):
 
     def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
         raise NotImplementedError(
-            "the bloom index reads data files by directory listing, "
-            "which includes files no live snapshot references"
+            "bloom_lookup reads data files directly, past the "
+            "snapshot's position and equality deletes"
         )

@@ -27,9 +27,10 @@ JSON commits plus PARQUET CHECKPOINTS (r8): every
 ``%020d.checkpoint.parquet`` + ``_last_checkpoint`` pointer, and the
 reader opens long histories from the newest covering checkpoint in
 O(live files) instead of O(commits) — the spec's log-compaction
-optimization, in its on-disk shape. DML (merge/delete) and schema
-evolution ride the Warehouse/ManifestWarehouse engines; this is the
-interop layer.
+optimization, in its on-disk shape. Row-level DML (merge, delete,
+upsert) rides the inherited Warehouse engines on ``DeltaLogWarehouse``,
+each committing through this writer; an overwrite may widen the schema
+with the batch's new columns. This is the interop layer.
 
 Reads are planned from the log alone: the committed ``schemaString``
 gives the data files' read schema (``_data_read_schema``), so opening
@@ -39,16 +40,16 @@ existing rows, OPTIMIZE and the warehouse compaction — goes through
 the one deletion-vector-masking read (``_read_adds_mor``). No path
 sees a row a DV delete removed.
 
-Atomicity: the commit point is the atomic tmp→rename of the JSON file
-— identical discipline to ManifestWarehouse._commit, and exactly what
-Delta requires of its log store ("mutual exclusion on the commit
-file"). Data files are staged under job-unique names first, so they
-are invisible until the commit references them.
+Atomicity: the commit point is a create-exclusive link of the JSON
+file — exactly what Delta requires of its log store ("mutual exclusion
+on the commit file"). Data files are staged under job-unique names
+first, so they are invisible until the commit references them.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 import time
 import uuid
 from pathlib import Path
@@ -58,6 +59,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 class DeltaLogError(RuntimeError):
     pass
+
+
+def _write_staged(writer, staging: Path) -> None:
+    """Write a staging directory; a failed write removes what it left,
+    so a batch whose plan raises strands no ``__*_stage.<job>`` dir
+    beside the table (a crash still can: vacuum sweeps those)."""
+    try:
+        writer.parquet(str(staging))
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
 
 
 def _log_dir(table_path: str | Path) -> Path:
@@ -530,7 +542,7 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
     replay only the JSON commits after it. Full JSON replay when no
     checkpoint applies; fail fast if the log was cleaned past the
     requested version (commit 0 gone and no covering checkpoint).
-    Returns {'files', 'schema', 'adds', 'metaData'}."""
+    Returns {'version', 'files', 'schema', 'adds', 'metaData', …}."""
     cs = _commits(table_path)
     ck_meta = _last_checkpoint_meta(table_path)
     if not cs and ck_meta is None:
@@ -629,6 +641,7 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
             "column mapping, deletionVectors table feature)"
         )
     return {
+        "version": v,
         "files": sorted(live),
         "schema": schema,
         "adds": [live[k] for k in sorted(live)],
@@ -989,7 +1002,7 @@ class DeltaLogWriter:
         dataChange, stats)."""
         job = uuid.uuid4().hex[:12]
         staging = self.path.with_name(self.path.name + f"__dl_stage.{job}")
-        df.write.parquet(str(staging))
+        _write_staged(df.write, staging)
         self.path.mkdir(parents=True, exist_ok=True)
         adds: list[dict] = []
         for i, part in enumerate(sorted(staging.glob("*.parquet"))):
@@ -1008,8 +1021,6 @@ class DeltaLogWriter:
                     }
                 }
             )
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
         return adds
 
@@ -1114,7 +1125,7 @@ class DeltaLogWriter:
         snapshot state)."""
         job = uuid.uuid4().hex[:12]
         staging = self.path.with_name(self.path.name + f"__cdc_stage.{job}")
-        df.write.parquet(str(staging))
+        _write_staged(df.write, staging)
         cdir = self.path / "_change_data"
         cdir.mkdir(parents=True, exist_ok=True)
         actions: list[dict] = []
@@ -1131,8 +1142,6 @@ class DeltaLogWriter:
                     }
                 }
             )
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
         return actions
 
@@ -1223,8 +1232,8 @@ class DeltaLogWriter:
             f"SET GENERATED {col}",
         )
 
-    def _generated_columns(self) -> dict[str, str]:
-        state = _replay(self.path, None)
+    @staticmethod
+    def _generated_columns(state: dict) -> dict[str, str]:
         md = state["metaData"] or {}
         if not md.get("schemaString"):
             return {}
@@ -1237,12 +1246,12 @@ class DeltaLogWriter:
                 out[f["name"]] = expr
         return out
 
-    def _apply_generated(self, df: DataFrame) -> DataFrame:
+    def _apply_generated(self, df: DataFrame, state: dict) -> DataFrame:
         """Writer-side generated-column handling: compute absent
         columns, verify supplied ones (whole-batch rejection — a
         wrong supplied value would silently fork the column's
         definition)."""
-        gen = self._generated_columns() if current_version(self.path) >= 0 else {}
+        gen = self._generated_columns(state)
         if not gen:
             return df
         from pyspark.sql import functions as F
@@ -1262,12 +1271,10 @@ class DeltaLogWriter:
                     )
         return out
 
-    def _constraint_exprs(self) -> dict[str, str]:
+    @staticmethod
+    def _constraint_exprs(state: dict) -> dict[str, str]:
         """Writer-floor guard + the table's CHECK constraints (name →
-        SQL expr). Driver-side log replay only — no Spark job."""
-        if current_version(self.path) < 0:
-            return {}
-        state = _replay(self.path, None)
+        SQL expr), from the replayed ``state`` — no Spark job."""
         # writer-floor guard (spec: a writer MUST refuse tables whose
         # minWriterVersion exceeds what it implements — this writer
         # covers versions 1-5: appends, invariants/constraints,
@@ -1311,29 +1318,7 @@ class DeltaLogWriter:
                 )
             )
 
-    def _check_constraints(self, df: DataFrame) -> None:
-        """Writer-side enforcement (the spec makes this MANDATORY for
-        writers that see delta.constraints.*): reject the whole batch
-        if any row evaluates a constraint to FALSE. One pass computes
-        every violation count together."""
-        constraints = self._constraint_exprs()
-        if not constraints:
-            return
-        from pyspark.sql import functions as F
-
-        counts = df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        ~F.coalesce(F.expr(expr), F.lit(True)), 1
-                    ).otherwise(0)
-                ).alias(name)
-                for name, expr in constraints.items()
-            ]
-        ).collect()[0]
-        self._raise_violations(constraints, counts)
-
-    def _stage_checked(self, df: DataFrame) -> list[dict]:
+    def _stage_checked(self, df: DataFrame, state: dict) -> list[dict]:
         """Constraint-checked staging in ONE Spark job: the violation
         counts ride the staging write as Observation metrics instead
         of a separate full agg pass over the batch (r10 optimization
@@ -1345,9 +1330,9 @@ class DeltaLogWriter:
         message. Expects generated columns already applied; metrics
         evaluate on the LOGICAL schema (before column mapping),
         exactly like the old pre-stage check."""
-        constraints = self._constraint_exprs()
+        constraints = self._constraint_exprs(state)
         if not constraints:
-            return self._stage(self._to_physical(df))
+            return self._stage(self._to_physical(df, state))
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
@@ -1363,7 +1348,7 @@ class DeltaLogWriter:
                 for name, expr in constraints.items()
             ],
         )
-        adds = self._stage(self._to_physical(df))
+        adds = self._stage(self._to_physical(df, state))
         try:
             self._raise_violations(constraints, obs.get)
         except DeltaLogError:
@@ -1379,7 +1364,6 @@ class DeltaLogWriter:
         into each add action's ``partitionValues`` and discarded (the
         log is the only copy, read_delta reconstitutes). Rows are
         clustered by value first so each partition value is one file."""
-        import shutil
         import urllib.parse
 
         from pyspark.sql import functions as F
@@ -1389,10 +1373,9 @@ class DeltaLogWriter:
             raise DeltaLogError(f"partition columns not in batch: {missing}")
         job = uuid.uuid4().hex[:12]
         staging = self.path.with_name(self.path.name + f"__dl_stage.{job}")
-        (
-            df.repartition(*[F.col(c) for c in spec])
-            .write.partitionBy(*spec)
-            .parquet(str(staging))
+        _write_staged(
+            df.repartition(*[F.col(c) for c in spec]).write.partitionBy(*spec),
+            staging,
         )
         self.path.mkdir(parents=True, exist_ok=True)
         adds: list[dict] = []
@@ -1425,9 +1408,8 @@ class DeltaLogWriter:
 
     def create_partitioned(self, df: DataFrame, spec: list[str]) -> int:
         """CREATE a partitioned table: ``metaData.partitionColumns``
-        pins the spec for the table's lifetime (the Delta contract —
-        unlike ManifestWarehouse's per-file specs, Delta's partition
-        columns are table-level and immutable)."""
+        pins the spec for the table's lifetime (the Delta contract:
+        partition columns are table-level and immutable)."""
         if current_version(self.path) >= 0:
             raise DeltaLogError(f"table already exists: {self.path}")
         meta = self._meta_actions(df)
@@ -1440,8 +1422,7 @@ class DeltaLogWriter:
     def append_partitioned(self, df: DataFrame, spec: list[str]) -> int:
         """Append to a partitioned table; the spec must MATCH the
         table's ``partitionColumns`` exactly (fail-fast — Delta does
-        not evolve partition specs; that capability lives on
-        ManifestWarehouse.append_partitioned)."""
+        not evolve partition specs)."""
         if current_version(self.path) < 0:
             return self.create_partitioned(df, spec)
         state = _replay(self.path, None)
@@ -1450,7 +1431,7 @@ class DeltaLogWriter:
             raise DeltaLogError(
                 f"partition spec mismatch: table declares {declared}, "
                 f"append used {list(spec)} — Delta partition columns are "
-                "immutable (spec evolution is a ManifestWarehouse feature)"
+                "immutable"
             )
         return self._commit(self._stage_partitioned(df, spec), "WRITE")
 
@@ -1489,11 +1470,15 @@ class DeltaLogWriter:
         (``DeltaLogError``). A final exhausted retry also aborts; the
         staged parquet files become untracked orphans either way,
         which VACUUM's not-in-snapshot sweep reclaims after the
-        retention window."""
+        retention window. A batch carrying a column the table lacks
+        is refused: an append never changes the schema (``overwrite``
+        does)."""
         if current_version(self.path) < 0:
             return self.create(df)
-        df = self._apply_generated(df)
-        adds = self._stage_checked(df)
+        state = _replay(self.path, None)
+        df = self._apply_generated(df, state)
+        self._refuse_new_columns(df, state)
+        adds = self._stage_checked(df, state)
         for attempt in range(max_retries + 1):
             v_try = current_version(self.path) + 1
             try:
@@ -1531,11 +1516,12 @@ class DeltaLogWriter:
                 self._meta_actions(df) + self._stage(df) + [marker],
                 "CREATE TABLE AS SELECT",
             )
-        seen = _replay(self.path, None)["txns"].get(app_id, -1)
-        if txn_version <= seen:
+        state = _replay(self.path, None)
+        if txn_version <= state["txns"].get(app_id, -1):
             return None  # already applied: exactly-once replay
-        df = self._apply_generated(df)
-        adds = self._stage_checked(df) + [marker]
+        df = self._apply_generated(df, state)
+        self._refuse_new_columns(df, state)
+        adds = self._stage_checked(df, state) + [marker]
         # same optimistic retry as append(), with one extra re-check:
         # a winner may BE this txn (another worker of the same app) —
         # re-consult the ledger before every retry so the replay stays
@@ -1557,24 +1543,92 @@ class DeltaLogWriter:
     def overwrite(self, df: DataFrame) -> int:
         """Remove every live file, add the new ones — one commit (the
         spec's atomic replace; old files stay on disk for time travel
-        until a vacuum)."""
+        until a vacuum). A batch carrying columns the table lacks
+        widens the schema in the same commit (Delta's overwriteSchema
+        shape, additive only): the committed fields keep their order
+        and the new ones follow. The commit claims the version after
+        the replayed snapshot, so a commit landing meanwhile aborts
+        the overwrite with its staged files reclaimed."""
         if current_version(self.path) < 0:
             return self.create(df)
-        df = self._apply_generated(df)
-        adds = self._stage_checked(df)
         state = _replay(self.path, None)
+        df = self._apply_generated(df, state)
+        evolve = self._evolved_metadata(df, state)
+        return self._commit_replace(
+            state, state["files"], self._stage_checked(df, state), evolve
+        )
+
+    @staticmethod
+    def _new_columns(df: DataFrame, state: dict) -> list[str]:
+        """The batch's columns the committed schema lacks, in batch
+        order (driver-side: the batch's analyzed schema, no job)."""
+        known = {f["name"] for f in json.loads(state["schema"])["fields"]}
+        return [c for c in df.columns if c not in known]
+
+    def _refuse_new_columns(self, df: DataFrame, state: dict) -> None:
+        """An append never changes the schema: a batch column the log
+        lacks would be staged into the files but never read."""
+        if new := self._new_columns(df, state):
+            raise DeltaLogError(
+                f"append carries columns the table lacks: {new} — an "
+                "append never changes the schema; overwrite the table "
+                "to add them"
+            )
+
+    def _evolved_metadata(self, df: DataFrame, state: dict) -> list[dict]:
+        """A ``metaData`` action appending the batch's new columns to
+        the committed schema — same id, configuration and partition
+        columns — or nothing when the batch adds none."""
+        new = self._new_columns(df, state)
+        if not new:
+            return []
+        if state["mapping_mode"] != "none":
+            raise DeltaLogError(
+                f"cannot add columns {new} on a column-mapped table: new "
+                "fields would need mapping ids and physical names"
+            )
+        md = dict(state["metaData"])
+        schema = json.loads(md["schemaString"])
+        schema["fields"] += [
+            f.jsonValue() for f in df.schema.fields if f.name in new
+        ]
+        md["schemaString"] = json.dumps(schema)
+        return [{"metaData": md}]
+
+    def _commit_replace(
+        self,
+        state: dict,
+        paths: list[str],
+        adds: list[dict],
+        extra: list[dict] = (),
+        op: str = "WRITE",
+        data_change: bool = True,
+    ) -> int:
+        """Commit ``remove`` actions for ``paths`` (live at ``state``)
+        plus the staged ``adds`` as ONE commit claimed at exactly the
+        version after ``state``: if any commit landed since, the claim
+        fails with :class:`DeltaLogError` and the staged files are
+        reclaimed, so no concurrent write is ever lost. Overwrite,
+        copy-on-write MERGE and OPTIMIZE all commit this way."""
         now = int(time.time() * 1000)
         removes = [
             {
                 "remove": {
                     "path": f,
                     "deletionTimestamp": now,
-                    "dataChange": True,
+                    "dataChange": data_change,
                 }
             }
-            for f in state["files"]
+            for f in paths
         ]
-        return self._commit(removes + adds, "WRITE")
+        try:
+            return self._commit(
+                list(extra) + removes + adds, op, version=state["version"] + 1
+            )
+        except DeltaLogError:
+            for a in adds:  # lost the race: reclaim staged files
+                (self.path / a["add"]["path"]).unlink(missing_ok=True)
+            raise
 
     def delete_where_dv(self, predicate) -> dict:
         """Merge-on-read DELETE via the spec's deletionVectors table
@@ -2031,9 +2085,9 @@ class DeltaLogWriter:
 
     # -- column mapping, name mode (spec: reader 2 / writer 5) ----------
 
-    def _mapping(self) -> dict[str, str] | None:
+    @staticmethod
+    def _mapping(state: dict) -> dict[str, str] | None:
         """logical → physical name map when name-mode mapping is on."""
-        state = _replay(self.path, None)
         if state.get("mapping_mode") != "name":
             return None
         fields = json.loads(state["schema"])["fields"]
@@ -2044,10 +2098,10 @@ class DeltaLogWriter:
             for f in fields
         }
 
-    def _to_physical(self, df: DataFrame) -> DataFrame:
+    def _to_physical(self, df: DataFrame, state: dict) -> DataFrame:
         from pyspark.sql import functions as F
 
-        m = self._mapping()
+        m = self._mapping(state)
         if not m:
             return df
         return df.select(

@@ -847,7 +847,12 @@ class IcebergTable:
             ice_schema = spark_to_iceberg_schema(df.schema)
         job = uuid.uuid4().hex[:12]
         staging = self.path.with_name(self.path.name + f"__ice_stage.{job}")
-        df.write.parquet(str(staging))
+        try:
+            df.write.parquet(str(staging))
+        except BaseException:
+            # a failed write strands no staging dir beside the table
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         data_dir = self.path / "data"
         data_dir.mkdir(parents=True, exist_ok=True)
         out = []
@@ -1119,6 +1124,19 @@ class IcebergTable:
         m = self._write_manifest(entries, sid, seq, md["schemas"][0])
         return self._snapshot_commit(md, "append", [m], [], sid, seq, base=0)
 
+    @staticmethod
+    def _refuse_new_columns(df: DataFrame, md: dict) -> None:
+        """Writes never change the schema: a batch column the current
+        schema lacks would be staged into the files but never read.
+        Evolution is explicit, through :meth:`update_schema`."""
+        known = {f["name"] for f in _current_schema(md)["fields"]}
+        new = [c for c in df.columns if c not in known]
+        if new:
+            raise IcebergMetaError(
+                f"batch carries columns the table schema lacks: {new} — "
+                "add them with update_schema first"
+            )
+
     def append(self, df: DataFrame) -> int:
         """FAST APPEND: one new manifest; prior manifests are carried
         in the new manifest list untouched (no rewrite — the property
@@ -1127,6 +1145,7 @@ class IcebergTable:
             return self.create(df)
         base = current_metadata_version(self.path)
         md = load_metadata(self.path, base)
+        self._refuse_new_columns(df, md)
         sid, seq = self._next_ids(md)
         entries = [
             {
@@ -1153,6 +1172,7 @@ class IcebergTable:
             return self.create(df)
         base = current_metadata_version(self.path)
         md = load_metadata(self.path, base)
+        self._refuse_new_columns(df, md)
         sid, seq = self._next_ids(md)
         schema = _current_schema(md)
         old = live_entries(self.path)

@@ -176,15 +176,210 @@ def test_deltalog_warehouse_path_mechanics_fail_fast(spark, tmp_path):
 
     wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     wh.overwrite(_df(spark, [(1, "a")]), "dim.t")
-    with pytest.raises(NotImplementedError, match="file-pruned"):
-        wh.upsert_file_pruned(_df(spark, [(1, "x")]), "dim.t", keys=["id"])
+    # the file-pruned upsert is a log commit, not a file move
+    wh.upsert_file_pruned(_df(spark, [(1, "x")]), "dim.t", keys=["id"])
+    assert wh.version("dim.t") == 1
+    assert [(r.id, r.v) for r in wh.read("dim.t").collect()] == [(1, "x")]
     with pytest.raises(NotImplementedError, match="v3"):
         wh.delete_where_dv("dim.t", F.col("id") == 1)
     with pytest.raises(NotImplementedError, match="unpartitioned"):
         wh.append(_df(spark, [(1, "a")]), "dim.t", partition_by=["id"])
     # the rewrite the refusals point to commits through the log
     wh.delete_where("dim.t", "id = 1")
-    assert wh.version("dim.t") == 1 and wh.read("dim.t").count() == 0
+    assert wh.version("dim.t") == 2 and wh.read("dim.t").count() == 0
+
+
+def _clustered(spark, wh, t, n=500, files=8):
+    wh.overwrite(
+        spark.range(n)
+        .selectExpr("id", "'base' AS v")
+        .repartitionByRange(files, "id"),
+        t,
+    )
+
+
+def test_deltalog_file_pruned_upsert_is_one_cow_commit(spark, tmp_path):
+    """Delta's copy-on-write MERGE: a batch whose keys sit in one file
+    rewrites that file only, and the remove + add actions land in ONE
+    commit. The superseded file stays readable through read_version
+    until vacuum retires it."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "dim.k"
+    _clustered(spark, wh, t)
+    n_files = len(wh._data_files(t))
+    batch = _df(spark, [(10, "new"), (11, "new"), (5000, "ins")])
+    stats = wh.upsert_file_pruned(batch, t, keys=["id"])
+    assert stats["files_total"] == n_files
+    assert 0 < stats["files_rewritten"] < n_files
+    assert wh.version(t) == 1  # one commit
+    ops = [h["op"] for h in wh.history(t)]
+    assert ops[-1] == "MERGE"
+    got = wh.read(t)
+    assert got.count() == got.select("id").distinct().count() == 501
+    assert {r.id: r.v for r in got.filter("v <> 'base'").collect()} == {
+        10: "new", 11: "new", 5000: "ins",
+    }
+    # the superseded file is still on disk: version 0 reads unchanged
+    on_disk = len(list(wh.path(t).glob("*.parquet")))
+    assert on_disk > len(wh._data_files(t))
+    v0 = wh.read_version(t, 0)
+    assert v0.count() == 500 and v0.filter("v <> 'base'").count() == 0
+    # until vacuum retires it; the live state is untouched
+    assert wh.vacuum(min_age=0) == stats["files_rewritten"]
+    assert len(list(wh.path(t).glob("*.parquet"))) == len(wh._data_files(t))
+    with pytest.raises(Exception):
+        wh.read_version(t, 0).collect()
+    assert wh.read(t).count() == 501
+
+
+def test_deltalog_file_pruned_concurrent_reader_never_sees_duplicates(
+    spark, tmp_path
+):
+    """While a writer loops file-pruned upserts over a fixed key set,
+    a concurrent reader must never observe duplicate keys or a wrong
+    row count: every read replays one committed version, and each
+    upsert's removes and adds are one commit."""
+    import threading
+
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "dim.race"
+    _clustered(spark, wh, t, n=1000, files=4)
+    stop = threading.Event()
+    errors: list[Exception] = []
+    anomalies: list[tuple[int, int]] = []
+    reads = [0]
+
+    def writer() -> None:
+        try:
+            for i in range(8):
+                lo = (i * 97) % 900
+                batch = _df(spark, [(lo + j, f"w{i}") for j in range(50)])
+                wh.upsert_file_pruned(batch, t, keys=["id"])
+        except Exception as exc:
+            errors.append(exc)
+        finally:
+            stop.set()
+
+    def reader() -> None:
+        try:
+            while not stop.is_set():
+                n, nd = wh.read(t).agg(
+                    F.count(F.lit(1)), F.countDistinct("id")
+                ).collect()[0]
+                reads[0] += 1
+                if n != 1000 or nd != 1000:
+                    anomalies.append((n, nd))
+        except Exception as exc:
+            errors.append(exc)
+
+    rt = threading.Thread(target=reader)
+    wt = threading.Thread(target=writer)
+    rt.start()
+    wt.start()
+    wt.join(timeout=600)
+    rt.join(timeout=120)
+    assert not wt.is_alive() and not rt.is_alive()
+    assert not errors, errors
+    assert reads[0] > 0
+    assert not anomalies, f"reader saw inconsistent snapshots: {anomalies}"
+    assert wh.version(t) == 8
+    assert wh.read(t).select("id").distinct().count() == 1000
+
+
+def test_deltalog_file_pruned_upsert_aborts_on_interleaved_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing between the touched-file listing and the swap
+    fails the upsert (it claims exactly the version after its
+    snapshot), reclaims its staged files and leaves the interloper's
+    commit standing — a lost update is impossible."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "dim.occ"
+    _clustered(spark, wh, t, n=100, files=4)
+    orig = DeltaLogWriter._stage_checked
+    raced: list[str] = []
+
+    def racing(self, df, state):
+        if not raced:  # the listing is done: an append lands now
+            raced.append("append")
+            wh.append(_df(spark, [(10, "racer")]), t)
+            raced.extend(f.name for f in wh.path(t).glob("*.parquet"))
+        return orig(self, df, state)
+
+    monkeypatch.setattr(DeltaLogWriter, "_stage_checked", racing)
+    with pytest.raises(DeltaLogError, match="concurrent commit at version 1"):
+        wh.upsert_file_pruned(_df(spark, [(10, "lost")]), t, keys=["id"])
+    assert raced and wh.version(t) == 1
+    # no staged file survives, no staging dir either
+    assert sorted(f.name for f in wh.path(t).glob("*.parquet")) == sorted(
+        raced[1:]
+    )
+    assert not list(wh.root.glob("**/*__dl_stage.*"))
+    got = wh.read(t)
+    assert got.count() == 101
+    assert [r.v for r in got.filter("id = 10").collect()] == ["base", "racer"]
+
+
+def test_deltalog_file_pruned_upsert_refuses_deletion_vectors(spark, tmp_path):
+    """The touched-file listing needs each row's file, which a
+    DV-masked scan does not carry: the upsert refuses until a compact
+    folds the vectors in, then runs as usual."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "dim.dv"
+    _clustered(spark, wh, t, n=100, files=4)
+    DeltaLogWriter(spark, wh.path(t)).delete_where_dv("id = 3")
+    batch = _df(spark, [(5, "new")])
+    with pytest.raises(NotImplementedError, match="deletion vectors"):
+        wh.upsert_file_pruned(batch, t, keys=["id"])
+    wh.compact(t, target_files=2)
+    assert wh.upsert_file_pruned(batch, t, keys=["id"])["files_rewritten"] == 1
+    got = {r.id: r.v for r in wh.read(t).collect()}
+    assert len(got) == 99 and 3 not in got and got[5] == "new"
+
+
+def test_overwrite_widens_schema_and_append_refuses_new_columns(
+    spark, tmp_path
+):
+    """Delta's overwrite-schema shape: an overwrite whose batch carries
+    new columns commits a metaData that keeps the committed fields (and
+    the table id) and appends the new ones; the old version still reads
+    its old schema. An append never changes the schema: it refuses."""
+    p = tmp_path / "t"
+    w = DeltaLogWriter(spark, p)
+    w.create(spark.createDataFrame([(1, "a")], "k long, a string"))
+    table_id = json.loads(
+        (p / "_delta_log" / f"{0:020d}.json").read_text().splitlines()[2]
+    )["metaData"]["id"]
+    with pytest.raises(DeltaLogError, match=r"\['z'\]"):
+        w.append(spark.createDataFrame([(2, "b", 9)], "k long, a string, z long"))
+    assert current_version(p) == 0
+    w.overwrite(
+        spark.createDataFrame([("x", 3, "c")], "b string, k long, a string")
+    )
+    got = read_delta(spark, p)
+    assert got.columns == ["k", "a", "b"]
+    assert [tuple(r) for r in got.collect()] == [(3, "c", "x")]
+    assert read_delta(spark, p, version=0).columns == ["k", "a"]
+    meta = [
+        json.loads(line)["metaData"]
+        for line in (p / "_delta_log" / f"{1:020d}.json").read_text().splitlines()
+        if line.startswith('{"metaData"')
+    ]
+    assert len(meta) == 1 and meta[0]["id"] == table_id
+    # a column-mapped table cannot take new fields this way
+    w.rename_column("a", "a2")
+    with pytest.raises(DeltaLogError, match="column-mapped"):
+        w.overwrite(
+            spark.createDataFrame([(4, "d", "y", 1)], "k long, a2 string, b string, q long")
+        )
 
 
 def test_deltalog_warehouse_compact_is_one_commit_same_data(spark, tmp_path):

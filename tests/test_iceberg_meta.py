@@ -484,3 +484,76 @@ def test_equality_delete_overwrite_reset_and_orphan_protection(
     assert {
         r.k for r in read_iceberg(spark, p, snapshot_id=sids[1]).collect()
     } == {1, 3}
+
+
+def test_writes_refuse_columns_the_schema_lacks(spark, tmp_path):
+    """An append or overwrite never changes the schema: a batch column
+    the current schema lacks would be staged into the files but never
+    read, so the write is refused and the table is unchanged. Evolution
+    goes through update_schema."""
+    from lakehouse_poc_spark.sinks.warehouse import IcebergMetaWarehouse
+
+    wh = IcebergMetaWarehouse(spark, str(tmp_path / "wh"))
+    t = "dim.w"
+    wh.overwrite(spark.createDataFrame([(1, "a")], "k long, a string"), t)
+    v = wh.version(t)
+    wide = spark.createDataFrame([(2, "b", "x")], "k long, a string, b string")
+    for write in (wh.append, wh.overwrite):
+        with pytest.raises(IcebergMetaError, match=r"\['b'\]"):
+            write(wide, t)
+    assert wh.version(t) == v
+    assert [tuple(r) for r in wh.read(t).collect()] == [(1, "a")]
+    IcebergTable(spark, wh.path(t)).update_schema(add=[("b", "string")])
+    wh.append(wide, t)
+    assert sorted(tuple(r) for r in wh.read(t).collect()) == [
+        (1, "a", None), (2, "b", "x"),
+    ]
+
+
+def test_partition_evolution_orders_plans_from_date_bounds(
+    spark, tmp_path, monkeypatch
+):
+    """The query's evolved layout (about a file per year before 1996,
+    a file per month after) lets Iceberg planning skip files by their
+    date bounds alone, and the month counts equal a full scan."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from lakehouse_poc_spark.plans import etlops
+
+    start = datetime.datetime(1992, 1, 1)
+    rows = [
+        (i, start + datetime.timedelta(days=i % 2400), float(i % 97) + 0.25)
+        for i in range(4000)
+    ]
+    sf = tmp_path / "sf"
+    spark.createDataFrame(
+        rows, "o_orderkey long, o_orderdate timestamp, o_totalprice double"
+    ).write.parquet(str(sf / "orders.parquet"))
+    monkeypatch.setattr(etlops, "SCRATCH", tmp_path / "scratch")
+    got = [tuple(r) for r in etlops.partition_evolution_orders(spark, str(sf)).collect()]
+
+    table = tmp_path / "scratch" / "pevo_sf" / "layer0100" / "orders_evolved"
+    plan = plan_files(
+        table,
+        predicates=[
+            ("o_orderdate", ">=", datetime.date(1995, 6, 1)),
+            ("o_orderdate", "<=", datetime.date(1996, 3, 31)),
+        ],
+    )
+    assert plan["skipped"] >= len(live_entries(table)) // 2
+    assert 0 < len(plan["files"]) < 10
+    full = (
+        spark.read.parquet(str(sf / "orders.parquet"))
+        .withColumn("ym", F.date_format("o_orderdate", "yyyy-MM"))
+        .filter(F.col("ym").isin("1995-06", "1996-03"))
+        .groupBy("ym")
+        .agg(
+            F.count(F.lit(1)).cast("bigint"),
+            F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
+        )
+        .orderBy("ym")
+    )
+    assert got == [tuple(r) for r in full.collect()]
+    assert [g[0] for g in got] == ["1995-06", "1996-03"]

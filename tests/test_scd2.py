@@ -409,22 +409,24 @@ def test_scd2_evolve_false_fails_fast(spark, wh):
     assert "b" not in dim.columns and dim.count() == 2
 
 
-def test_scd2_evolve_on_manifest_warehouse(spark, tmp_path):
+def test_scd2_evolve_on_deltalog_warehouse(spark, tmp_path):
     """The evolution path rides apply_scd2_changeset's full-rewrite leg,
-    which ManifestWarehouse overrides with an atomic manifest commit —
-    prove the widened schema lands there too (and time travel still
-    reads the PRE-evolution schema at v1)."""
-    from lakehouse_poc_spark.sinks.warehouse import ManifestWarehouse
+    which DeltaLogWarehouse commits as one log overwrite — the widened
+    schema must land in the log (a new metaData), and time travel still
+    reads the PRE-evolution schema at the pre-merge version."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
 
-    mwh = ManifestWarehouse(spark, str(tmp_path / "mwh"))
+    dwh = DeltaLogWarehouse(spark, str(tmp_path / "dwh"))
     b1, b2 = _evo_batches(spark)
-    scd2_merge(mwh, EVO_CFG1, b1, T1)
-    v1 = mwh.current_version(EVO_CFG1.dim_table)
-    scd2_merge(mwh, EVO_CFG2, b2, T2, evolve=True)
-    dim = mwh.read(EVO_CFG2.dim_table)
+    scd2_merge(dwh, EVO_CFG1, b1, T1)
+    v1 = dwh.version(EVO_CFG1.dim_table)
+    scd2_merge(dwh, EVO_CFG2, b2, T2, evolve=True)
+    assert dwh.version(EVO_CFG2.dim_table) == v1 + 1
+    dim = dwh.read(EVO_CFG2.dim_table)
     assert "b" in dim.columns
     assert dim.filter(F.col("is_current")).count() == 3
-    old = mwh.read_version(EVO_CFG1.dim_table, v1)
+    assert dim.filter(F.col("b").isNotNull()).count() > 0
+    old = dwh.read_version(EVO_CFG1.dim_table, v1)
     assert "b" not in old.columns
 
 
