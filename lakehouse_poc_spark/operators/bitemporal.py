@@ -38,8 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_OPEN_DATE = "9999-12-31"
-
 
 def bitemporal_correct(
     dim: DataFrame,
@@ -117,21 +115,3 @@ def bitemporal_correct(
     return out
 
 
-def as_of(
-    bidim: DataFrame,
-    valid_at,
-    known_at=None,
-) -> DataFrame:
-    """Bitemporal slice: the rows believed TRUE for business date
-    ``valid_at``, per the knowledge state at transaction time
-    ``known_at`` (default: current belief, tx_to IS NULL)."""
-    v = F.lit(valid_at).cast("date")
-    cond = (F.col("valid_from") <= v) & (v < F.col("valid_to"))
-    if known_at is None:
-        tx = F.col("tx_to").isNull()
-    else:
-        k = F.lit(known_at).cast("timestamp")
-        tx = (F.col("tx_from") <= k) & (
-            F.col("tx_to").isNull() | (k < F.col("tx_to"))
-        )
-    return bidim.filter(cond & tx)

@@ -115,42 +115,6 @@ def bpe_train(
         vocab.unpersist()
 
 
-def bpe_train_reference(
-    word_counts: dict[str, int], n_merges: int
-) -> list[tuple[int, str, str, int]]:
-    """Pure-Python reference (the classic textbook loop) — the
-    correctness twin the distributed trainer must match exactly."""
-    vocab = {w: list(w) for w in word_counts}
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
-        for w, syms in vocab.items():
-            n = word_counts[w]
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + n
-        if not counts:
-            break
-        (left, right), cnt = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if cnt < 2:
-            break
-        merges.append((rank, left, right, cnt))
-        for w, syms in vocab.items():
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                    out.append(left + right)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            vocab[w] = out
-    return merges
-
-
 def bpe_encode_words(words: DataFrame, merges: list[tuple[int, str, str, int]]) -> DataFrame:
     """(w, toks): encode each distinct word by applying the trained
     merge table in rank order — k JVM-side folds over the vocab
@@ -210,25 +174,3 @@ def bpe_encode(
     return per_doc.withColumn("n_tokens", F.size("toks"))
 
 
-def bpe_encode_reference(
-    word_counts_text: str, merges: list[tuple[int, str, str, int]]
-) -> list[str]:
-    """Pure-Python twin: encode one whitespace-tokenized text with the
-    merge table in rank order (left-to-right non-overlapping per
-    merge) — what bpe_encode must reproduce exactly."""
-    out: list[str] = []
-    for w in word_counts_text.split():
-        syms = list(w)
-        for _rank, left, right, _cnt in merges:
-            nxt: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                    nxt.append(left + right)
-                    i += 2
-                else:
-                    nxt.append(syms[i])
-                    i += 1
-            syms = nxt
-        out.extend(syms)
-    return out

@@ -13,9 +13,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 def quote(name: str) -> str:
     """``name`` as a backtick-quoted SQL identifier."""
@@ -34,8 +31,3 @@ def any_change_sql(
     )
 
 
-def any_change(
-    left_alias: str, right_alias: str, compare_columns: Sequence[str]
-) -> Column:
-    """:func:`any_change_sql` as a Column."""
-    return F.expr(any_change_sql(left_alias, right_alias, compare_columns))

@@ -92,25 +92,3 @@ def logreg_train(
         data.unpersist()
 
 
-def logreg_train_reference(
-    X: "list[list[float]]",
-    y: "list[float]",
-    lr: float = 1.0,
-    n_iter: int = 30,
-    l2: float = 0.0,
-) -> tuple[list[float], float]:
-    """Pure-Python/numpy twin of :func:`logreg_train` (float64 sums in
-    row order — matches the decimal-summed distributed path to ~1e-9)."""
-    import numpy as np
-
-    Xa = np.asarray(X, dtype=np.float64)
-    ya = np.asarray(y, dtype=np.float64)
-    n, k = Xa.shape
-    w = np.zeros(k)
-    b = 0.0
-    for _ in range(n_iter):
-        p = 1.0 / (1.0 + np.exp(-(Xa @ w + b)))
-        resid = p - ya
-        w = w - lr * (Xa.T @ resid / n + l2 * w)
-        b -= lr * float(resid.sum()) / n
-    return w.tolist(), b

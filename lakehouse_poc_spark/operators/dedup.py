@@ -20,7 +20,6 @@ Scale shapes (100 TB):
 from __future__ import annotations
 
 import random
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -148,44 +147,6 @@ def bands_from_signatures(
             )
         ).alias("bh"),
     ).select(id_col, "bh.band", "bh.bhash")
-
-
-def lsh_dedup_keep(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """One-shot LSH bucket dedup decision: (id, kept) where a doc is
-    DROPPED iff any lower-id doc (kept or dropped) shares at least
-    one LSH band bucket with it. Counting dropped docs as blockers
-    makes the rule prefix-closed: cleaning id-ordered batches against
-    a store of ALL previously seen band rows reproduces this one-shot
-    result exactly — the stream==batch contract the streaming twin
-    (plans/streamops.py::stream_minhash_dedup_docs) is tested against.
-    One banded self-join on (band, bhash); no shingle arrays move."""
-    banded = minhash_bands(
-        df, text_col, id_col, num_perm, bands, shingle_n, seed
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    dropped = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"b.{id_col}").alias("__dropped"))
-        .distinct()
-    )
-    ids = df.select(id_col).distinct()
-    return ids.join(
-        dropped, ids[id_col] == dropped["__dropped"], "left"
-    ).select(id_col, F.col("__dropped").isNull().alias("kept"))
 
 
 def minhash_lsh_pairs(
@@ -1542,37 +1503,6 @@ def _substring_covered(
             ).alias("pos"),
         )
         .distinct()
-    )
-
-
-def exact_substring_spans(
-    df: DataFrame, text_col: str, id_col: str, min_len: int = 20
-) -> DataFrame:
-    """MAXIMAL repeated-substring spans per document (Lee et al. 2021
-    "Deduplicating Training Data Makes Language Models Better",
-    ExactSubstr — public paper; arXiv:2107.06499): every maximal run
-    of token positions covered by a verbatim repeat of >= ``min_len``
-    tokens. Returns (id, span_start, span_len), span_start 0-based.
-
-    The suffix-array step of the paper is replaced by the sorted
-    k-gram-run equivalence (see ``_substring_covered``); the
-    LCP-extension step becomes covered-position RUN MERGING: adjacent
-    covered positions group by (pos - row_number) — a per-document
-    window, never a global sort (the block-offset discipline).
-
-    Scale shape: one gram-keyed shuffle (corpus grams), one bounded
-    fan-out of repeated occurrences (min_len x repeated subset), one
-    doc-keyed window. No driver-side state."""
-    covered = _substring_covered(df, text_col, id_col, min_len)
-    w = Window.partitionBy(id_col).orderBy("pos")
-    return (
-        covered.withColumn("_grp", F.col("pos") - F.row_number().over(w))
-        .groupBy(id_col, "_grp")
-        .agg(
-            F.min("pos").cast("bigint").alias("span_start"),
-            F.count(F.lit(1)).cast("bigint").alias("span_len"),
-        )
-        .drop("_grp")
     )
 
 

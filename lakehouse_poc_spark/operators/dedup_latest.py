@@ -6,10 +6,9 @@ over (partition by key order by IngestTimestamp desc)`` then
 ``rn == 1``) with composite keys and explicit tie-breakers.
 
 Scale notes: one shuffle on the key columns; at 100 TB this is the
-canonical argmax pattern — Spark pushes partial ``max_by`` only if we
-use the agg form, so for wide payloads we keep the window form (single
-shuffle, no join-back) and for narrow argmax the ``max_by`` agg form
-(map-side partials) — both provided.
+canonical argmax pattern. Spark pushes partial ``max_by`` only in the
+agg form, but the window form keeps the whole row (single shuffle, no
+join-back), which is what the pipeline needs.
 """
 
 from __future__ import annotations
@@ -41,12 +40,3 @@ def dedup_latest(
     )
 
 
-def latest_value_by(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    order_col: str,
-) -> DataFrame:
-    """Narrow argmax via ``max_by`` — map-side partial aggregation,
-    cheaper than a window when only one payload column is needed."""
-    return df.groupBy(*keys).agg(F.max_by(value_col, order_col).alias(value_col))

@@ -121,46 +121,6 @@ def pruned_read_multi(
     return spark.read.parquet(*files).filter(row_pred)
 
 
-def sample_files(
-    df: DataFrame, fraction: float, salt: str = "fs:"
-) -> DataFrame:
-    """Deterministic FILE-level sampling for fast profiling: keep a
-    file iff the first 8 hex nibbles of ``md5(salt || file_path)``
-    fall under ``fraction`` of the 32-bit space. At 100 TB a row-level
-    ``df.sample`` still READS every byte (sampling happens after the
-    scan); filtering on ``_metadata.file_path`` prunes whole files at
-    the scan, so a 1% profile costs ~1% of the I/O. Deterministic and
-    append-stable: a file's in/out decision never changes as the
-    table grows, so successive profiles are comparable; re-salt for an
-    independent sample. The estimate quality depends on rows being
-    unclustered w.r.t. the profiled columns — for a table range-
-    clustered on the profile target, use row sampling instead (the
-    docstring-level caveat every block-sampling engine carries).
-
-    ``df`` must come straight from a file-based reader (the hidden
-    ``_metadata`` column must resolve).
-    """
-    if not 0.0 < fraction <= 1.0:
-        raise ValueError(f"fraction must be in (0, 1], got {fraction}")
-    # 32-bit hash space, and floor the cut at 1: a 16-bit space turned
-    # any fraction below ~1/65536 into cut=0 — silently sampling ZERO
-    # files despite passing the (0,1] validation. With 32 bits the
-    # rounding floor is ~2.3e-10; below that, cut=1 keeps roughly one
-    # file in 4.3 billion rather than none (documented minimum).
-    cut = max(1, int(round(fraction * 4294967296)))
-    keep = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("_metadata.file_path"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        < cut
-    )
-    return df.filter(keep)
-
-
 # -- per-file Bloom filter index (point-lookup file skipping) -----------
 
 def build_file_bloom(

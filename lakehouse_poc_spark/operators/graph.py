@@ -348,42 +348,6 @@ def hits_int(
         nodes.unpersist()
 
 
-def bfs_hops(
-    edges: DataFrame,
-    source_nodes: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_hops: int = 6,
-) -> DataFrame:
-    """Minimum-hop distance from any source node, by frontier
-    expansion (≤ ``max_hops``). Returns (node, hops INT).
-
-    Each round joins the frontier to the (src-partitioned) edge list
-    and anti-joins already-visited nodes — state is the visited set,
-    frontier shuffles are frontier-sized, not graph-sized.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.repartition("src").persist()
-    visited = source_nodes.select(F.col(source_nodes.columns[0]).alias("node")).distinct().withColumn(
-        "hops", F.lit(0)
-    )
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(hop))
-        )
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited.select("node", F.col("hops").cast("int").alias("hops"))
-
-
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Exact triangle count via degree-ordered orientation (the
     standard sub-quadratic formulation: Schank & Wagner 2005 /

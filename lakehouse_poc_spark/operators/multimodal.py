@@ -1,14 +1,12 @@
 """Multimodal (image/audio/video-shaped) columns: opaque ``binary``
 payloads + typed metadata, processed with Arrow-batched ``mapInPandas``.
 
-The container has no image/audio libraries, so the *codec* step is
-split honestly in two (per the build brief):
-- ``decode_with_pillow`` — the real-library path, import-gated and
-  raising ``NotImplementedError`` here (clearly-marked STUB);
-- a deterministic synthetic codec (``synthesize_images`` /
-  ``decode_images``) whose Spark-side plumbing — binary columns, typed
-  metadata structs, Arrow batch shapes, mapInPandas signatures,
-  partition-preserving execution — is real and oracle-tested.
+No image/audio library is a dependency, so the *codec* is a
+deterministic synthetic one (``synthesize_images`` / ``decode_images``)
+whose Spark-side plumbing — binary columns, typed metadata structs,
+Arrow batch shapes, mapInPandas signatures, partition-preserving
+execution — is real and oracle-tested. A real codec swaps only the
+per-payload call.
 
 Scale notes (100 TB of media):
 - payloads stay in executors end-to-end (binary column in Arrow
@@ -151,23 +149,6 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
         resize,
         "doc_id long, payload binary, width int, height int, mean_pixel double",
     )
-
-
-def decode_with_pillow(images: DataFrame) -> DataFrame:
-    """Real-library decode path — STUB in this container.
-
-    The Spark plumbing is identical to :func:`decode_images`; only the
-    per-payload codec call differs. Raises ``NotImplementedError``
-    when Pillow is absent (it is, here, by design).
-    """
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "Pillow is not available in this environment; use the "
-            "deterministic decode_images() path (same plumbing)."
-        ) from e
-    raise NotImplementedError("real-codec path not exercised in this container")
 
 
 def grouped_demean(

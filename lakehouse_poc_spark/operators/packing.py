@@ -90,12 +90,3 @@ def pack_sequences(
     )
 
 
-def pack_stats(packed: DataFrame, budget: int) -> DataFrame:
-    """Per-group packing efficiency: pack count and mean fill ratio."""
-    per_pack = packed.groupBy("grp", "pack_id").agg(
-        F.sum("tokens").alias("pack_tokens")
-    )
-    return per_pack.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n_packs"),
-        (F.avg("pack_tokens") / F.lit(float(budget))).alias("mean_fill"),
-    )

@@ -151,33 +151,6 @@ def quarantine(checked: DataFrame) -> tuple[DataFrame, DataFrame]:
     return valid, invalid
 
 
-def observe_expectations(
-    df: DataFrame, name: str, expectations: list[Expectation]
-):
-    """Attach zero-cost pipeline metrics to a plan: per-expectation
-    violation counts + row count ride WHATEVER action executes the
-    DataFrame next (a sink write, a count), via ``df.observe``.
-
-    Unlike ``summarize`` (a separate aggregate pass over the checked
-    rows), observed metrics cost nothing extra — the accumulators are
-    collected during the one pass the pipeline already makes, which
-    is the right shape for ingest telemetry at 100 TB (a second
-    100 TB pass just to count violations is the anti-pattern).
-
-    Returns ``(df, observation)``; read ``observation.get`` AFTER an
-    action has run. Metrics: ``n_rows`` plus ``bad_<name>`` per
-    expectation.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.when(~e.predicate, 1).otherwise(0)).alias(f"bad_{e.name}")
-        for e in expectations
-    ]
-    return df.observe(obs, *metrics), obs
-
-
 def fk_audit(
     tables: dict[str, DataFrame],
     edges: list[tuple[str, str, str, str]],

@@ -7,15 +7,15 @@ both sides are big. Two strategies:
 - :func:`band_join` — broadcast nested-loop against a small interval
   table (the common "bucketize by bands" case). O(|df|·|bands|)
   comparisons but bands ≪ 100 and it never shuffles the big side.
-- :func:`bucketed_range_join` — both sides big: quantize the range key
-  into fixed-width buckets, equi-join on bucket id (one hash shuffle),
-  then post-filter the exact predicate. This turns O(n·m) into
-  O(n + m + matches) — the 100 TB-safe plan.
+- :func:`interval_overlap_join` — both sides big: explode each
+  interval into the fixed-width buckets it covers, equi-join on bucket
+  id (one hash shuffle), then post-filter the exact predicate. This
+  turns O(n·m) into O(n + m + matches) — the 100 TB-safe plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -37,42 +37,6 @@ def band_join(
     return df.join(F.broadcast(bands), cond, "inner")
 
 
-def bucketed_range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_point: str,
-    right_lo: str,
-    right_hi: str,
-    bucket_width: float,
-    extra_cond: Column | None = None,
-) -> DataFrame:
-    """Big-big range join: explode right intervals into the fixed-width
-    buckets they overlap, equi-join on bucket, post-filter exactly.
-
-    Interval width should be ≲ a few bucket widths or the explode
-    factor grows; pick ``bucket_width`` ≈ the median interval length.
-    """
-    lb = F.floor(F.col(left_point) / bucket_width).alias("__bucket")
-    l2 = left.withColumn("__bucket", F.floor(F.col(left_point) / bucket_width))
-    r2 = right.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(right_lo) / bucket_width),
-                F.floor(F.col(right_hi) / bucket_width),
-            )
-        ),
-    )
-    cond = (
-        (l2["__bucket"] == r2["__bucket"])
-        & (F.col(left_point) >= F.col(right_lo))
-        & (F.col(left_point) < F.col(right_hi))
-    )
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return l2.join(r2, cond).drop("__bucket")
-
-
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
@@ -85,8 +49,8 @@ def interval_overlap_join(
 ) -> DataFrame:
     """Big×big INTERVAL-INTERVAL overlap join, co-keyed: pairs whose
     [lo, hi] ranges intersect (closed ends) and whose ``keys`` match.
-    The third member of the range-join family (band_join: point×small
-    intervals; bucketed_range_join: point×big intervals).
+    The big×big member of the range-join family (band_join: point×small
+    intervals).
 
     Both sides explode into the fixed-width buckets their interval
     covers; the equi-join runs on (keys…, bucket); a pair meeting in

@@ -55,13 +55,6 @@ class MergeStats:
     new_keys: int
     updated_keys: int
 
-    def as_dict(self) -> dict[str, int]:
-        return {
-            "unchanged": self.unchanged,
-            "new_keys": self.new_keys,
-            "updated_keys": self.updated_keys,
-        }
-
 
 def _sql_string(value: str) -> str:
     """``value`` as a single-quoted SQL string literal."""

@@ -755,21 +755,6 @@ def pq_codebooks(
     ]
 
 
-def _sub_l2sq(vec_col: str, j: int, ds: int, code: list[float]):
-    """Σ_t (vec[j·ds+t] − code[t])² as a left fold over the subspace —
-    used for the (tiny) per-query LUT only; the corpus-side encode uses
-    the vectorized numpy kernel below (same arithmetic, same order)."""
-    sub = F.transform(
-        F.slice(F.col(vec_col), j * ds + 1, ds), lambda x: x.cast("double")
-    )
-    lit = F.array(*[F.lit(x) for x in code])
-    return F.aggregate(
-        F.zip_with(sub, lit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1228,133 +1213,6 @@ def sq8_topk(
     )
 
 
-def lsh_build_index(
-    corpus: DataFrame,
-    wh,
-    table: str,
-    vec_col: str,
-    id_col: str,
-    n_planes: int = 5,
-    n_tables: int = 4,
-    seed: int = 7,
-    dim: int | None = None,
-) -> None:
-    """Materialize the multi-table LSH index AT REST: the corpus
-    written once per hash table, partitioned by (t, bucket) — the
-    100 TB form of LSH, where a query's probed buckets become literal
-    partition filters and unprobed buckets are never read. Same plane
-    construction as lsh_topk (seed + t per table), so at-rest results
-    match the in-flight operator exactly."""
-    if dim is None:
-        probe = corpus.select(F.size(vec_col).alias("d")).first()
-        if probe is None:
-            raise ValueError("lsh_build_index: empty corpus, pass dim")
-        dim = probe["d"]
-    entries = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
-        entries.append(
-            F.struct(
-                F.lit(t).alias("t"),
-                lsh_bucket_expr(vec_col, planes).alias("bucket"),
-            )
-        )
-    indexed = corpus.select(
-        F.col(id_col), F.col(vec_col), F.explode(F.array(*entries)).alias("__tb")
-    ).select(
-        id_col, vec_col, F.col("__tb.t").alias("t"), F.col("__tb.bucket").alias("bucket")
-    )
-    wh.overwrite(indexed, table, partition_by=["t", "bucket"])
-
-
-def lsh_query_at_rest(
-    wh,
-    table: str,
-    queries: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_id_col: str,
-    k: int,
-    n_planes: int = 5,
-    n_tables: int = 4,
-    seed: int = 7,
-    dim: int | None = None,
-    multiprobe: int = 0,
-) -> DataFrame:
-    """Query the at-rest LSH index: compute each query's (table,
-    bucket) probe set, scan ONLY those partitions (file-listing
-    pruning), dedup candidate pairs across tables, rank exactly.
-    Mirrors lsh_topk's semantics over the materialized index."""
-    if dim is None:
-        probe = queries.select(F.size(vec_col).alias("d")).first()
-        if probe is None:
-            raise ValueError("lsh_query_at_rest: no queries, pass dim")
-        dim = probe["d"]
-    entries = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
-        bucket = lsh_bucket_expr(vec_col, planes)
-        entries.append(F.struct(F.lit(t).alias("t"), bucket.alias("b")))
-        if multiprobe > 0:
-            confid = F.array(
-                *[
-                    F.struct(
-                        F.abs(
-                            dot(F.col(vec_col), F.array(*[F.lit(x) for x in p]))
-                        ).alias("a"),
-                        F.lit(i).alias("i"),
-                    )
-                    for i, p in enumerate(planes)
-                ]
-            )
-            idx_sorted = F.transform(F.array_sort(confid), lambda s: s["i"])
-            masks = F.array(
-                *[F.lit(1 << bit).cast("long") for bit in range(n_planes)]
-            )
-            for r in range(multiprobe):
-                entries.append(
-                    F.struct(
-                        F.lit(t).alias("t"),
-                        bucket.bitwiseXOR(
-                            F.element_at(
-                                masks, F.element_at(idx_sorted, r + 1) + 1
-                            )
-                        ).alias("b"),
-                    )
-                )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.explode(F.array(*entries)).alias("__tb"),
-    ).select(
-        "query_id", "__qv", F.col("__tb.t").alias("t"), F.col("__tb.b").alias("bucket")
-    )
-    # probed (t, bucket) pairs: bounded driver-side list → literal
-    # partition filter → file-listing pruning on the index table
-    probed = [(r["t"], r["bucket"]) for r in q.select("t", "bucket").distinct().collect()]
-    pred = F.lit(False)
-    for t, b in probed:
-        pred = pred | ((F.col("t") == t) & (F.col("bucket") == b))
-    corpus = wh.read(table).filter(pred)
-    cand = (
-        corpus.join(F.broadcast(q.withColumn("__qn", norm(F.col("__qv")))), ["t", "bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), "__qv", "__qn", F.col(vec_col)
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _cos_pre(
-            F.col("__qv"), F.col(vec_col), F.col("__qn"), norm(F.col(vec_col))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def hard_negatives(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1399,104 +1257,6 @@ def hard_negatives(
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
     )
-
-
-def ivfpq_build_index(
-    corpus: DataFrame,
-    wh,
-    table: str,
-    vec_col: str,
-    id_col: str,
-    n_centroids: int = 16,
-    m: int = 8,
-    n_codes: int = 16,
-) -> None:
-    """Materialize the IVF-PQ index AT REST — the 100 TB form: the
-    corpus is reduced to its CODES relation (vec_id, j, code) written
-    partitioned by cell id (m small ints per vector instead of the
-    vector — the ~32x storage compression that makes a billion-vector
-    index fit), with the centroids and residual codebooks in side
-    tables. A query then reads only its probed cells' partition dirs
-    and never touches a raw vector (pure ADC). Same deterministic
-    construction as :func:`ivfpq_topk`, so at-rest results match the
-    in-flight operator exactly (asserted in tests)."""
-    cents_df = _ivfpq_cents(corpus, vec_col, id_col, n_centroids)
-    c = _ivfpq_assign(
-        cents_df,
-        corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-        ),
-        "vec_id",
-        1,
-    )
-    codebooks, ds = _ivfpq_codebooks(c, m, n_codes)
-    enc = pq_encode(
-        c.select("vec_id", "__res"), codebooks, "__res", "vec_id"
-    ).join(
-        c.select("vec_id", F.col("__cid").alias("cell")), "vec_id"
-    )
-    wh.overwrite(enc, table, partition_by=["cell"])
-    wh.overwrite(
-        cents_df.select(
-            F.col("__cid").alias("cent_id"), F.col("__cv").alias("cent_vec")
-        ),
-        f"{table}_centroids",
-    )
-    spark = corpus.sparkSession
-    cb_rows = [
-        (j, ci, codebooks[j][ci])
-        for j in range(m)
-        for ci in range(n_codes)
-    ]
-    wh.overwrite(
-        spark.createDataFrame(cb_rows, "j int, code int, sub array<double>"),
-        f"{table}_codebooks",
-    )
-
-
-def ivfpq_query_at_rest(
-    wh,
-    table: str,
-    queries: DataFrame,
-    vec_col: str,
-    query_id_col: str,
-    k: int,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Query the at-rest IVF-PQ index: assign each query to its
-    nprobe nearest cells from the centroid side table, build the ADC
-    LUT from the codebook side table (both tiny, collected once), and
-    scan ONLY the probed cells' code partitions — the isin filter on
-    the partition column prunes at the file listing, and what is read
-    is codes, never vectors."""
-    cents_df = wh.read(f"{table}_centroids").select(
-        F.col("cent_id").alias("__cid"), F.col("cent_vec").alias("__cv")
-    )
-    cb_rows = wh.read(f"{table}_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb_rows)
-    n_codes = 1 + max(r["code"] for r in cb_rows)
-    codebooks = [[None] * n_codes for _ in range(m)]
-    for r in cb_rows:
-        codebooks[r["j"]][r["code"]] = [float(x) for x in r["sub"]]
-    ds = len(codebooks[0][0])
-    q = _ivfpq_assign(
-        cents_df,
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__v"),
-        ),
-        "query_id",
-        nprobe,
-    )
-    lut = _ivfpq_lut(q, codebooks, m, n_codes, ds)
-    # probed cells: a bounded driver-side list -> partition pruning
-    cells = [r["__cid"] for r in q.select("__cid").distinct().collect()]
-    enc = (
-        wh.read(table)
-        .filter(F.col("cell").isin(cells))
-        .select("vec_id", F.col("cell").alias("__cid"), "j", "code")
-    )
-    return _ivfpq_adc_rank(enc, lut, k)
 
 
 # ---------------------------------------------------------------------------

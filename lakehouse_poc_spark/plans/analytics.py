@@ -1194,8 +1194,8 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Interval×interval overlap join (operators/range_join.py::
-# interval_overlap_join — the third range-join member: band_join is
-# point×small, bucketed_range_join is point×big, this is big×big):
+# interval_overlap_join — the big×big range-join member; band_join is
+# point×small):
 # per supplier, how many pairs of its shipments were in flight
 # concurrently ([ship, receipt] ranges intersect). Both sides burst
 # into ~2 month-buckets per row, the join runs keyed on

@@ -1117,8 +1117,7 @@ def duplicate_charge_audit_orders(
 
 
 # ---------------------------------------------------------------------------
-# Observed ingest telemetry (operators/quality.py::observe_expectations
-# — Spark's Observation API): the DQ counters accumulate DURING the
+# Observed ingest telemetry (Spark's Observation API): the DQ counters accumulate DURING the
 # single pass an ingest already makes (driven here through the noop
 # sink, the zero-cost "write" used for exactly this measurement
 # shape), so there is NO second scan — the 100 TB telemetry contract.

@@ -1735,7 +1735,7 @@ def raw_text_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def metadata_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     saved = {
         "spark.sql.parquet.aggregatePushdown": spark.conf.get(
-            "spark.sql.parquet.aggregatePushdown", "false"
+            "spark.sql.parquet.aggregatePushdown", None
         ),
         "spark.sql.sources.useV1SourceList": spark.conf.get(
             "spark.sql.sources.useV1SourceList", None
@@ -2278,8 +2278,8 @@ def dv_delete_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # non-overlapped validity remainders re-insert under the new
 # knowledge period, and the correction becomes current belief for its
 # window — so both "valid at 2005 per current knowledge" and "valid
-# at 2005 as known before T1" remain answerable (operators/
-# bitemporal.py::as_of, unit-tested). The oracle reproduces the same
+# at 2005 as known before T1" remain answerable (tests/test_scd2.py
+# slices both axes). The oracle reproduces the same
 # period algebra as plain unions.
 @query(
     "bitemporal_customers",

@@ -1159,7 +1159,6 @@ def fleiss_kappa_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # explicit left-nested sum in channel order.
 _MARKOV_CHANNELS = ["click", "error", "signup", "view"]
 _MARKOV_H = 12
-_MARKOV_STATES = ["CONV", "NULL", "START"] + _MARKOV_CHANNELS
 
 
 def _markov_transitions_sql() -> str:

@@ -1312,9 +1312,9 @@ def stream_scd1_file_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # band STORE — ids + band hashes only, never text or shingles) or a
 # lower-id doc in its own batch. The store records EVERY seen doc's
 # bands (dropped docs block too), which makes the rule prefix-closed:
-# the incremental result is ROW-IDENTICAL to the one-shot
-# lsh_dedup_keep over the whole corpus (tests/test_streaming.py
-# asserts the equality). Rows-only gate by declared design — DuckDB
+# the incremental result is ROW-IDENTICAL to a one-shot banded
+# self-join over the whole corpus (tests/test_streaming.py's
+# lsh_dedup_keep asserts the equality). Rows-only gate by declared design — DuckDB
 # cannot reproduce xxhash64 band hashes (same reason the
 # minhash_lsh_pairs_docs family is rows-only).
 @query("stream_minhash_dedup_docs")

@@ -1196,42 +1196,6 @@ class DeltaLogWriter:
             }
         ]
 
-    def set_generated_column(self, col: str, expr: str) -> int:
-        """Declare ``col`` GENERATED ALWAYS AS (expr) — stored the
-        spec's way: a ``delta.generationExpression`` key in the
-        column's schema-field metadata, visible to every Delta
-        writer. Existing rows must already satisfy the expression
-        (verified); subsequent writes COMPUTE the column when the
-        batch omits it and VERIFY it when the batch supplies it."""
-        state = _replay(self.path, None)
-        md = dict(state["metaData"] or {})
-        schema = json.loads(md["schemaString"])
-        fields = {f["name"]: f for f in schema["fields"]}
-        if col not in fields:
-            raise DeltaLogError(
-                f"generated column {col!r} not in table schema"
-            )
-        if state["files"]:
-            from pyspark.sql import functions as F
-
-            bad = read_delta(self.spark, self.path).filter(
-                ~F.col(col).eqNullSafe(F.expr(expr))
-            ).count()
-            if bad:
-                raise DeltaLogError(
-                    f"cannot declare {col!r} generated: {bad} existing "
-                    f"rows differ from ({expr})"
-                )
-        meta = dict(fields[col].get("metadata") or {})
-        meta["delta.generationExpression"] = expr
-        fields[col]["metadata"] = meta
-        md["schemaString"] = json.dumps(schema)
-        # spec: generated columns require minWriterVersion >= 4
-        return self._commit(
-            self._writer_bump(state, 4) + [{"metaData": md}],
-            f"SET GENERATED {col}",
-        )
-
     @staticmethod
     def _generated_columns(state: dict) -> dict[str, str]:
         md = state["metaData"] or {}

@@ -1462,79 +1462,6 @@ class IcebergTable:
         md["last-updated-ms"] = int(time.time() * 1000)
         return self._commit(md, base=base)
 
-    def remove_orphan_files(
-        self, min_age_sec: float = 3 * 24 * 3600, dry_run: bool = False
-    ) -> list[str]:
-        """Iceberg's removeOrphanFiles maintenance action: delete
-        files under ``data/`` that NO snapshot in the current
-        metadata references (failed-write leftovers, files stranded
-        by expire_snapshots) and that are older than ``min_age_sec``
-        — the age guard protects in-flight commits exactly as the
-        real action's ``olderThan`` does. Metadata files are never
-        touched. Returns the removed (or would-remove) names."""
-        if not self.exists():
-            return []
-        md = load_metadata(self.path)
-        referenced: set[str] = set()
-        for snap in md.get("snapshots") or []:
-            mlist = _resolve(snap["manifest-list"], self.path)
-            if not mlist.exists():
-                continue
-            for m in read_avro_dicts(mlist):
-                mpath = _resolve(m["manifest_path"], self.path)
-                if not mpath.exists():
-                    continue
-                for e in read_avro_dicts(mpath):
-                    # DELETED entries still protect their files until
-                    # the snapshot expires (time travel needs them)
-                    referenced.add(
-                        str(
-                            _resolve(
-                                e["data_file"]["file_path"], self.path
-                            ).resolve()
-                        )
-                    )
-        now = time.time()
-        removed: list[str] = []
-        for f in sorted((self.path / "data").glob("*.parquet")):
-            if str(f.resolve()) in referenced:
-                continue
-            if now - f.stat().st_mtime < min_age_sec:
-                continue
-            removed.append(f.name)
-            if not dry_run:
-                f.unlink()
-        return removed
-
-    def snapshot_as_of(self, ts_ms: int) -> int | None:
-        """FOR TIMESTAMP AS OF: the latest snapshot whose commit
-        timestamp is <= ``ts_ms`` (from the snapshot-log, the spec's
-        time-travel index). None when the table has no snapshot that
-        old."""
-        md = load_metadata(self.path)
-        best = None
-        for e in md.get("snapshot-log") or []:
-            if e["timestamp-ms"] <= ts_ms:
-                best = e["snapshot-id"]
-        return best
-
-    def expire_snapshots(self, keep_last: int = 1) -> int:
-        """Drop all but the last ``keep_last`` snapshots from metadata
-        (the snapshot-log keeps its full history; data/manifest file
-        GC is a separate concern, as in Iceberg's expireSnapshots).
-        Returns the number expired."""
-        base = current_metadata_version(self.path)
-        md = load_metadata(self.path, base)
-        snaps = md.get("snapshots") or []
-        if len(snaps) <= keep_last:
-            return 0
-        keep = snaps[-keep_last:]
-        md = dict(md)
-        md["snapshots"] = keep
-        n = len(snaps) - len(keep)
-        self._commit(md, base=base)
-        return n
-
 
 def _amend_container_meta(path: Path, extra: dict[str, str]) -> None:
     """Append key/value pairs to an existing Avro container file's

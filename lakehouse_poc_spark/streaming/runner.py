@@ -67,18 +67,27 @@ def run_to_memory(
     final watermark — append mode would withhold non-finalized windows,
     which is correct for an unbounded sink but surprising for a bounded
     correctness run.
+
+    The memory sink already holds its rows on the driver; they are
+    rebuilt into a local DataFrame with the sink's schema and the
+    sink's temp view is dropped, so the session keeps no view.
     """
+    spark = sdf.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    with _scoped_shuffle_partitions(sdf.sparkSession, shuffle_partitions):
-        q = (
-            sdf.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return sdf.sparkSession.table(name)
+    try:
+        with _scoped_shuffle_partitions(spark, shuffle_partitions):
+            q = (
+                sdf.writeStream.outputMode(mode)
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        sink = spark.table(name)
+        return spark.createDataFrame(sink.collect(), sink.schema)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def run_append_to_parquet(

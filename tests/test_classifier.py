@@ -8,14 +8,31 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from lakehouse_poc_spark.operators.classifier import (
-    logreg_train,
-    logreg_train_reference,
-    margin_expr,
-)
+from lakehouse_poc_spark.operators.classifier import logreg_train, margin_expr
 from lakehouse_poc_spark.plans.mlops import FEATURES, _feature_frame
 
 SF = "/root/testdata/sf0.001"
+
+
+def logreg_train_reference(
+    X: list[list[float]],
+    y: list[float],
+    lr: float = 1.0,
+    n_iter: int = 30,
+) -> tuple[list[float], float]:
+    """numpy twin of :func:`logreg_train` (float64 sums in row order —
+    matches the decimal-summed distributed path to ~1e-9)."""
+    Xa = np.asarray(X, dtype=np.float64)
+    ya = np.asarray(y, dtype=np.float64)
+    n, k = Xa.shape
+    w = np.zeros(k)
+    b = 0.0
+    for _ in range(n_iter):
+        p = 1.0 / (1.0 + np.exp(-(Xa @ w + b)))
+        resid = p - ya
+        w = w - lr * (Xa.T @ resid / n)
+        b -= lr * float(resid.sum()) / n
+    return w.tolist(), b
 
 
 def feat(spark):

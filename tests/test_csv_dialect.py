@@ -4,6 +4,8 @@ Databricks.py":6-14) read distributed, end-to-end through the pipeline."""
 
 from __future__ import annotations
 
+from dataclasses import asdict
+
 from pyspark.sql import functions as F
 
 from lakehouse_poc_spark.config import PipelineConfig
@@ -99,7 +101,7 @@ def test_multi_table_csv_fanout_mirrors_mini_etl(spark, wh, tmp_path):
         spark, wh, configs_for("KOSTEN_2025.csv", with_personal=False),
         "2030-02-01 00:00:00",
     )
-    assert out2["kosten"].as_dict()["updated_keys"] == 1
+    assert asdict(out2["kosten"])["updated_keys"] == 1
     dim = wh.read("l1.dim_kosten")
     k2 = {(r.Bereich, r.is_current) for r in dim.filter("Kostenstelle = 'K2'").collect()}
     assert k2 == {("Süd", False), ("West", True)}

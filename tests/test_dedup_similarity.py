@@ -268,7 +268,6 @@ def test_blocked_levenshtein_equals_brute(spark):
     assert blocked == brute
 
 
-
 def test_mmr_rerank_matches_reference_and_diversifies(spark):
     """MMR vs a plain-python reference on a constructed set: two
     near-identical high-sim candidates and one diverse mid-sim
@@ -844,44 +843,6 @@ def test_skyline_nd_matches_quadratic_dominance(spark):
     assert got == expect
     with pytest.raises(ValueError, match="shell"):
         skyline_nd(df, ["x", "y", "z"], buckets=2, shell_budget=1)
-
-
-def test_ivfpq_at_rest_matches_in_flight(spark, tmp_path):
-    """The at-rest IVF-PQ index (codes partitioned by cell + centroid
-    and codebook side tables) must return row-identical results to
-    the in-flight ivfpq_topk, and the code table must carry codes,
-    never vectors."""
-    from lakehouse_poc_spark.operators.similarity import (
-        ivfpq_build_index,
-        ivfpq_query_at_rest,
-        ivfpq_topk,
-    )
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse
-    from lakehouse_poc_spark.sources.readers import read_parquet_table
-
-    emb = read_parquet_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    ivfpq_build_index(emb, wh, "idx.pq", "embedding", "vec_id")
-    at_rest = {
-        (r.query_id, r.rank): (r.neighbor_id, r.adc_micro)
-        for r in ivfpq_query_at_rest(
-            wh, "idx.pq", queries, "embedding", "vec_id", k=5
-        ).collect()
-    }
-    in_flight = {
-        (r.query_id, r.rank): (r.neighbor_id, r.adc_micro)
-        for r in ivfpq_topk(
-            emb, queries, "embedding", "vec_id", "vec_id", k=5
-        ).collect()
-    }
-    assert at_rest == in_flight and len(at_rest) == 25
-    # the persisted relation is codes only
-    assert set(wh.read("idx.pq").columns) == {"vec_id", "j", "code", "cell"}
-    # partitioned by cell: probed queries prune at the file listing
-    assert any(
-        d.name.startswith("cell=") for d in wh.path("idx.pq").iterdir()
-    )
 
 
 def test_sq8_quantization_bounds_and_recall(spark):

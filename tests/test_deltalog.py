@@ -23,6 +23,39 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id long, v string")
 
 
+def _declare_generated(path, col, expr):
+    """Commit ``col GENERATED ALWAYS AS (expr)`` the way another Delta
+    writer would: the spec's ``delta.generationExpression`` key in the
+    column's schema-field metadata, with minWriterVersion raised to 4.
+    ``DeltaLogWriter`` enforces generated columns it finds in a table;
+    it does not declare them."""
+    from lakehouse_poc_spark.sources.deltalog import _replay
+
+    state = _replay(path, None)
+    md = dict(state["metaData"])
+    schema = json.loads(md["schemaString"])
+    for f in schema["fields"]:
+        if f["name"] == col:
+            f["metadata"] = {
+                **(f.get("metadata") or {}),
+                "delta.generationExpression": expr,
+            }
+    md["schemaString"] = json.dumps(schema)
+    protocol = {
+        "minReaderVersion": int(state.get("min_reader", 1) or 1),
+        "minWriterVersion": max(4, int(state.get("min_writer", 2) or 2)),
+    }
+    actions = [
+        {"commitInfo": {"timestamp": 0, "operation": "SET GENERATED"}},
+        {"protocol": protocol},
+        {"metaData": md},
+    ]
+    version = current_version(path) + 1
+    (path / "_delta_log" / f"{version:020d}.json").write_text(
+        "".join(json.dumps(a) + "\n" for a in actions)
+    )
+
+
 def test_commit_files_and_action_shapes_match_spec(spark, tmp_path):
     p = tmp_path / "t"
     w = DeltaLogWriter(spark, p)
@@ -733,18 +766,7 @@ def test_generated_columns_computed_and_verified(spark, tmp_path):
             [(1, "a", 2), (2, "bb", 4)], "id long, v string, twice long"
         )
     )
-    w.set_generated_column("twice", "id * 2")
-    # schema-field metadata carries the spec key
-    last = sorted((p / "_delta_log").glob("*.json"))[-1]
-    meta = next(
-        a["metaData"]
-        for a in map(json.loads, last.read_text().splitlines())
-        if "metaData" in a
-    )
-    fields = {f["name"]: f for f in json.loads(meta["schemaString"])["fields"]}
-    assert (
-        fields["twice"]["metadata"]["delta.generationExpression"] == "id * 2"
-    )
+    _declare_generated(p, "twice", "id * 2")
     # batch WITHOUT the column: computed
     w.append(spark.createDataFrame([(3, "c")], "id long, v string"))
     got = {
@@ -759,9 +781,6 @@ def test_generated_columns_computed_and_verified(spark, tmp_path):
             )
         )
     assert read_delta(spark, p).count() == 3
-    # declaring over non-conforming data fails fast
-    with pytest.raises(DeltaLogError, match="existing rows differ"):
-        w.set_generated_column("twice", "id * 3")
 
 
 def test_deltalog_clustered_optimize_enables_stats_skipping(spark, tmp_path):
@@ -1230,8 +1249,9 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_contract(
 
 def test_writer_version_bumps_and_clone_propagates_them(spark, tmp_path):
     """Spec protocol floors: ADD CONSTRAINT raises minWriterVersion
-    to 3, generated columns to 4 — and a shallow clone carries the
-    source's writer floor instead of downgrading it (ADVICE r8)."""
+    to 3; the floor of 4 a generated column brings is never lowered by
+    a later lower-tier feature, and a shallow clone carries the
+    source's writer floor instead of downgrading it."""
     from lakehouse_poc_spark.sources.deltalog import _replay
 
     src, dst = tmp_path / "src", tmp_path / "clone"
@@ -1240,7 +1260,7 @@ def test_writer_version_bumps_and_clone_propagates_them(spark, tmp_path):
     assert _replay(src, None)["min_writer"] == 2
     ws.set_check_constraint("id_pos", "id > 0")
     assert _replay(src, None)["min_writer"] == 3
-    ws.set_generated_column("v", "'a'")  # existing row satisfies it
+    _declare_generated(src, "v", "'a'")  # existing row satisfies it
     assert _replay(src, None)["min_writer"] == 4
     # re-adding a lower-tier feature never downgrades the floor
     ws.set_check_constraint("id_small", "id < 1000")
@@ -1390,7 +1410,7 @@ def test_read_schema_equals_footer_inference(spark, tmp_path):
             [(1, 10, 2), (2, 20, 4)], "id long not null, v long, twice long"
         )
     )
-    w.set_generated_column("twice", "id * 2")
+    _declare_generated(p, "twice", "id * 2")
     w.rename_column("v", "value")
     w.append(spark.createDataFrame([(3, 30)], "id long, value long"))
     files = [str(p / f) for f in _replay(p, None)["files"]]
@@ -1492,20 +1512,3 @@ def test_add_constraint_ignores_dv_deleted_rows(spark, tmp_path):
     assert cfg["delta.constraints.c"] == "amt >= 0"
 
 
-def test_set_generated_checks_logical_names_after_rename(spark, tmp_path):
-    w = _amt_table(spark, tmp_path / "t")
-    w.rename_column("amt", "amount")
-    w.set_generated_column("dbl", "amount * 2")
-    with pytest.raises(DeltaLogError, match="existing rows differ"):
-        w.set_generated_column("dbl", "amount * 3")
-
-
-def test_set_generated_ignores_dv_deleted_rows(spark, tmp_path):
-    p = tmp_path / "t"
-    # row 2 breaks dbl = amt * 2, but a DV delete removes it
-    w = _amt_table(spark, p, rows=((1, 10, 20), (2, -5, 0)))
-    w.delete_where_dv("amt < 0")
-    w.set_generated_column("dbl", "amt * 2")
-    assert sorted(
-        (r.id, r.dbl) for r in read_delta(spark, p).collect()
-    ) == [(1, 20)]

@@ -99,63 +99,6 @@ def test_zorder_prunes_on_both_dimensions(spark, tmp_path):
     assert out.count() == 16 * 16
 
 
-def test_sample_files_deterministic_file_level(spark, tmp_path):
-    """File-level sampling: decisions are per-file (whole files in or
-    out), deterministic across calls, roughly proportional, and
-    append-stable (old files keep their decision as the table grows)."""
-    from pyspark.sql import functions as F
-
-    from lakehouse_poc_spark.operators.filestats import sample_files
-
-    path = str(tmp_path / "t")
-    spark.range(10_000).withColumn("part", F.col("id") % 50).repartition(
-        50, "part"
-    ).write.partitionBy("part").parquet(path)
-
-    df = spark.read.parquet(path)
-    s1 = sample_files(df, 0.3)
-    s2 = sample_files(df, 0.3)
-    rows1 = sorted(r.id for r in s1.select("id").collect())
-    rows2 = sorted(r.id for r in s2.select("id").collect())
-    assert rows1 == rows2  # deterministic
-    assert 0 < len(rows1) < 10_000
-    # whole-file granularity: every sampled file contributes ALL its rows
-    picked = s1.select(F.col("_metadata.file_path").alias("f")).distinct()
-    per_file = (
-        df.select("id", F.col("_metadata.file_path").alias("f"))
-        .join(picked, "f")
-        .count()
-    )
-    assert per_file == len(rows1)
-    # append-stability: adding files never flips an old file's decision
-    spark.range(10_000, 12_000).withColumn("part", F.lit(99)).write.mode(
-        "append"
-    ).partitionBy("part").parquet(path)
-    s3 = sample_files(spark.read.parquet(path), 0.3)
-    rows3 = set(r.id for r in s3.select("id").collect())
-    assert set(rows1) <= rows3 or set(rows1) == {
-        i for i in rows3 if i < 10_000
-    }
-    # fraction sanity on 51 files: expect ~30%, allow wide tolerance
-    n_files = s3.select(F.col("_metadata.file_path")).distinct().count()
-    assert 3 <= n_files <= 30
-    # tiny fractions must not silently sample ZERO files: the keep
-    # threshold floors at 1 slot of the 32-bit space, so 1e-6 yields an
-    # executable (possibly empty at 51 files, but non-degenerate) plan
-    # — cut stays >= 1 rather than collapsing to "always false".
-    tiny = sample_files(spark.read.parquet(path), 1e-6)
-    assert tiny.count() >= 0  # plan executes; no validation trap
-    # the keep threshold for 1e-6 of the 32-bit space is 4295 (not the
-    # old 16-bit round(1e-6*65536)=0 degenerate always-false filter)
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        tiny.explain(True)
-    assert "4295" in buf.getvalue()
-
-
 def test_empty_index_fails_fast_with_clear_error(spark):
     """An EMPTY stats/bloom index cannot yield a schema probe file —
     the pruned readers must raise a clear ValueError instead of the

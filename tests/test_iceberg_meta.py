@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 
@@ -188,18 +189,6 @@ def test_bound_codec_roundtrip():
         assert bound_decode(bound_encode(v, t), t) == v
 
 
-def test_expire_snapshots(spark, tmp_path):
-    p = tmp_path / "t"
-    t = IcebergTable(spark, p)
-    t.create(_df(spark, 0, 10))
-    t.append(_df(spark, 10, 20))
-    t.append(_df(spark, 20, 30))
-    assert t.expire_snapshots(keep_last=1) == 2
-    md = load_metadata(p)
-    assert len(md["snapshots"]) == 1
-    assert read_iceberg(spark, p).count() == 30
-
-
 def test_warehouse_scd1_and_history(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -344,44 +333,6 @@ def test_schema_evolution_add_and_drop(spark, tmp_path):
         t.update_schema(drop=["zzz"])
 
 
-def test_orphan_cleanup_and_timestamp_travel(spark, tmp_path):
-    """removeOrphanFiles: unreferenced data files older than the age
-    guard go; referenced files (incl. DELETED entries of live
-    snapshots) stay. snapshot_as_of: latest snapshot-log entry <= ts."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    p = tmp_path / "t"
-    t = IcebergTable(spark, p)
-    t.create(_df(spark, 0, 10))
-    t.overwrite(_df(spark, 0, 5))  # old files now DELETED entries
-    # a stranded failed-write leftover
-    orphan = p / "data" / "stranded.parquet"
-    pq.write_table(pa.table({"k": pa.array([1], pa.int64())}), str(orphan))
-    # age guard: too fresh -> kept
-    assert t.remove_orphan_files(min_age_sec=3600) == []
-    removed = t.remove_orphan_files(min_age_sec=0)
-    assert removed == ["stranded.parquet"]
-    # files of the overwritten snapshot survive (still referenced by
-    # snapshot 1's manifests) and time travel still works
-    sids = snapshot_ids(p)
-    assert read_iceberg(spark, p, snapshot_id=sids[0]).count() == 10
-    # expiring snapshot 1 does NOT orphan its files here: the
-    # overwrite snapshot's DELETE-status manifest still references
-    # them, and removeOrphanFiles is deliberately conservative — only
-    # files referenced by NO metadata at all are orphans (the real
-    # action's contract; reachability-based cleanup belongs to
-    # expireSnapshots in full Iceberg)
-    t.expire_snapshots(keep_last=1)
-    assert t.remove_orphan_files(min_age_sec=0) == []
-    assert read_iceberg(spark, p).count() == 5
-    # timestamp travel
-    md = load_metadata(p)
-    log = md["snapshot-log"]
-    assert t.snapshot_as_of(log[-1]["timestamp-ms"]) == log[-1]["snapshot-id"]
-    assert t.snapshot_as_of(log[0]["timestamp-ms"] - 1) is None
-
-
 def test_equality_deletes_mor_semantics(spark, tmp_path):
     """r10: spec v2 EQUALITY deletes — delete-by-key with zero
     data-file rewrites, the STRICTLY-GREATER sequence rule (a key
@@ -455,9 +406,9 @@ def test_equality_delete_null_matching_and_guards(spark, tmp_path):
 def test_equality_delete_overwrite_reset_and_orphan_protection(
     spark, tmp_path
 ):
-    """Equality-delete files are LIVE data: removeOrphanFiles must
-    never vacuum one that a snapshot references; an overwrite drops
-    the obsolete delete manifests with everything else."""
+    """Equality-delete files are LIVE data: the delete snapshot's plan
+    references its file, so no orphan sweep may take it; an overwrite
+    drops the obsolete delete manifests with everything else."""
     p = tmp_path / "t"
     t = IcebergTable(spark, p)
     t.create(
@@ -470,8 +421,9 @@ def test_equality_delete_overwrite_reset_and_orphan_protection(
         f.name for f in (p / "data").glob("*.parquet") if "eq-deletes" in f.name
     ]
     assert len(eq_files) == 1
-    # referenced by the delete snapshot: protected at any age
-    assert t.remove_orphan_files(min_age_sec=0) == []
+    # referenced by the delete snapshot's plan
+    planned = [Path(f["resolved"]).name for f in plan_files(p)["eq_delete_files"]]
+    assert planned == eq_files
     assert {r.k for r in read_iceberg(spark, p).collect()} == {1, 3}
     # overwrite resets the manifest set: no delete files planned
     t.overwrite(spark.createDataFrame([(9, "z")], "k long, v string"))

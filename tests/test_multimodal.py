@@ -1,5 +1,5 @@
 """Multimodal operator tests: fake-codec round trip, Arrow batch
-plumbing across partitions, and the import-gated real-codec stub."""
+plumbing across partitions, frame sampling and resizing."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from lakehouse_poc_spark.operators.multimodal import (
     decode_images,
-    decode_with_pillow,
     fake_dims,
     payload_byte_stats,
     sample_frames,
@@ -68,11 +67,6 @@ def test_frame_sampling_counts(spark, docs):
             min(16, n - f * 16) for f in range(0, n_frames, 2)
         )
         assert rows[i].sampled_byte_sum == 120 * kept
-
-
-def test_real_codec_path_is_stubbed(spark, docs):
-    with pytest.raises(NotImplementedError):
-        decode_with_pillow(synthesize_images(docs))
 
 
 def test_resize_roundtrip_decodes_at_target_dims(spark, docs):

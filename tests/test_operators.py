@@ -7,9 +7,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from lakehouse_poc_spark.operators.asof import asof_join
-from lakehouse_poc_spark.operators.changes import any_change
-from lakehouse_poc_spark.operators.dedup_latest import dedup_latest, latest_value_by
-from lakehouse_poc_spark.operators.range_join import band_join, bucketed_range_join
+from lakehouse_poc_spark.operators.changes import any_change_sql
+from lakehouse_poc_spark.operators.dedup_latest import dedup_latest
+from lakehouse_poc_spark.operators.range_join import band_join
 from lakehouse_poc_spark.operators.sessionize import sessionize
 
 
@@ -28,8 +28,8 @@ def test_latest_value_by(spark):
     df = spark.createDataFrame(
         [("a", 1, 10.0), ("a", 3, 30.0), ("a", 2, 20.0)], "k string, ts long, v double"
     )
-    out = latest_value_by(df, ["k"], "v", "ts").collect()
-    assert out[0].v == 30.0
+    out = dedup_latest(df, ["k"], ["ts"]).collect()
+    assert [(r.k, r.v) for r in out] == [("a", 30.0)]
 
 
 def test_sessionize_gap_boundary(spark):
@@ -129,23 +129,11 @@ def test_band_join_boundaries(spark):
     assert [r.band for r in out] == ["lo", "lo", "hi", "hi"]  # [lo, hi) closed-left
 
 
-def test_bucketed_range_join_equals_naive(spark):
-    left = spark.range(0, 200).select((F.col("id") * 7 % 197).cast("double").alias("p"), "id")
-    right = spark.createDataFrame(
-        [(float(lo), float(lo + 13), f"iv{lo}") for lo in range(0, 190, 11)],
-        "lo double, hi double, name string",
-    )
-    fast = bucketed_range_join(left, right, "p", "lo", "hi", bucket_width=16.0)
-    naive = left.join(right, (F.col("p") >= F.col("lo")) & (F.col("p") < F.col("hi")))
-    assert fast.count() == naive.count()
-    assert fast.select("id", "name").exceptAll(naive.select("id", "name")).count() == 0
-
-
 def test_any_change_null_safety(spark):
     l = spark.createDataFrame([("k", None), ("k2", "v")], "id string, c string").alias("L")
     r = spark.createDataFrame([("k", "v"), ("k2", "v")], "id string, c string").alias("R")
     j = l.join(r, F.col("L.id") == F.col("R.id"))
-    changed = j.filter(any_change("L", "R", ["c"])).select(F.col("L.id")).collect()
+    changed = j.filter(any_change_sql("L", "R", ["c"])).select(F.col("L.id")).collect()
     assert [row.id for row in changed] == ["k"]  # NULL vs 'v' IS a change
 
 

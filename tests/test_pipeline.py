@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import threading
 import time
+from dataclasses import asdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -131,8 +132,8 @@ def test_run_pipeline_job_budget(spark, wh, tmp_path, jobs_in_group):
             spark, wh, _cfg(source_path=str(f2), dialect=dialect), T2
         ),
     )
-    assert boot.as_dict() == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
-    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
+    assert asdict(boot) == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
+    assert asdict(stats) == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
     assert boot_jobs <= PIPELINE_BOOTSTRAP_JOB_BUDGET, boot_jobs
     assert merge_jobs <= PIPELINE_MERGE_JOB_BUDGET, merge_jobs
     assert wh.read(_cfg().raw_table).count() == 6

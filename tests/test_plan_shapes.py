@@ -265,7 +265,7 @@ def test_metadata_agg_pushes_aggregate_to_footer(spark):
     parquet footer stats (v2 scan, PushedAggregation) — no data pages."""
     saved = {
         "spark.sql.parquet.aggregatePushdown": spark.conf.get(
-            "spark.sql.parquet.aggregatePushdown", "false"
+            "spark.sql.parquet.aggregatePushdown", None
         ),
         "spark.sql.sources.useV1SourceList": spark.conf.get(
             "spark.sql.sources.useV1SourceList", None
@@ -285,6 +285,16 @@ def test_metadata_agg_pushes_aggregate_to_footer(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_metadata_agg_leaves_unset_pushdown_conf_unset(spark):
+    """metadata_agg_orders restores its scoped confs: one that was
+    never set on the session is unset again afterwards, not pinned to
+    its default value."""
+    key = "spark.sql.parquet.aggregatePushdown"
+    spark.conf.unset(key)
+    QUERIES["metadata_agg_orders"](spark, SF).collect()
+    assert spark.conf.get(key, None) is None
 
 
 def test_dynamic_partition_pruning_fires(spark):

@@ -9,6 +9,8 @@ null values, single-row batches, identical reruns), not volume.
 
 from __future__ import annotations
 
+from dataclasses import asdict
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -85,7 +87,7 @@ def test_scd2_rerun_of_same_batch_is_all_unchanged(spark, tmp_path_factory, batc
     df = spark.createDataFrame(list(batch.items()), "k string, v int")
     scd2_merge(wh, CFG, df, run_ts="2020-01-01 00:00:00")
     stats = scd2_merge(wh, CFG, df, run_ts="2020-01-02 00:00:00")
-    assert stats.as_dict() == {
+    assert asdict(stats) == {
         "unchanged": len(batch),
         "new_keys": 0,
         "updated_keys": 0,

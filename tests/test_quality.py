@@ -124,30 +124,6 @@ def test_analyze_table_approx_mode(spark):
     assert abs(rows[0]["n_distinct"] - 97) <= 5  # HLL within tolerance
 
 
-def test_observe_expectations_rides_the_write(spark, tmp_path):
-    from lakehouse_poc_spark.operators.quality import (
-        in_range,
-        not_null,
-        observe_expectations,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, -5.0), (3, None), (4, 200.0)], ["id", "value"]
-    )
-    observed, obs = observe_expectations(
-        df,
-        "ingest_metrics",
-        [not_null("value_present", "value"), in_range("value_ok", "value", 0, 100)],
-    )
-    # the ONLY action is the sink write — metrics ride it
-    observed.write.parquet(str(tmp_path / "out"))
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["bad_value_present"] == 1
-    # in_range fails nulls by design, so -5, null and 200 all violate
-    assert got["bad_value_ok"] == 3
-
-
 def test_perplexity_buckets_terciles(spark):
     """CCNet bucketing invariants: tercile sizes differ by <=1, every
     doc is labeled, and the head tercile's mean logprob dominates the

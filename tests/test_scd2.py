@@ -40,7 +40,7 @@ BATCH1 = [("K1", "Verwaltung", "Zentral"), ("K2", "Fertigung", "Werk 1"), ("K3",
 
 def test_bootstrap(spark, wh):
     stats = run_pipeline(spark, wh, CFG, T1, batch=batch(spark, BATCH1))
-    assert stats.as_dict() == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
+    assert dataclasses.asdict(stats) == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
     dim = wh.read(CFG.dim_table)
     assert dim.count() == 3
     assert dim.filter(F.col("IsCurrent")).count() == 3
@@ -63,7 +63,7 @@ def test_two_effect_merge_and_invariants(spark, wh):
             ],
         ),
     )
-    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
+    assert dataclasses.asdict(stats) == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
     dim = wh.read(CFG.dim_table)
 
     # exactly one current row per key
@@ -91,7 +91,7 @@ def test_two_effect_merge_and_invariants(spark, wh):
 def test_idempotent_rerun(spark, wh):
     run_pipeline(spark, wh, CFG, T1, batch=batch(spark, BATCH1))
     stats = run_pipeline(spark, wh, CFG, T2, batch=batch(spark, BATCH1))
-    assert stats.as_dict() == {"unchanged": 3, "new_keys": 0, "updated_keys": 0}
+    assert dataclasses.asdict(stats) == {"unchanged": 3, "new_keys": 0, "updated_keys": 0}
     dim = wh.read(CFG.dim_table)
     assert dim.count() == 3
     assert dim.filter(~F.col("IsCurrent")).count() == 0
@@ -129,7 +129,7 @@ def test_composite_business_key(spark, wh):
         "Personalnummer string, Abteilung string, Name string",
     )
     stats = run_pipeline(spark, wh, cfg, T2, batch=b2)
-    assert stats.as_dict() == {"unchanged": 1, "new_keys": 0, "updated_keys": 1}
+    assert dataclasses.asdict(stats) == {"unchanged": 1, "new_keys": 0, "updated_keys": 1}
     dim = wh.read(cfg.dim_table)
     assert dim.count() == 3  # 2 original + 1 new version of (P1, IT)
 
@@ -141,13 +141,13 @@ def test_intra_batch_dedup_and_trim(spark, wh):
     collapse and differing dupes are resolved by its order stability."""
     b1 = batch(spark, [("K1", "  Verwaltung  ", " Zentral")] * 3)
     stats = run_pipeline(spark, wh, CFG, T1, batch=b1)
-    assert stats.as_dict() == {"unchanged": 0, "new_keys": 1, "updated_keys": 0}
+    assert dataclasses.asdict(stats) == {"unchanged": 0, "new_keys": 1, "updated_keys": 0}
     dim = wh.read(CFG.dim_table).collect()
     assert len(dim) == 1
     assert dim[0].Bezeichnung == "Verwaltung" and dim[0].Bereich == "Zentral"
     b2 = batch(spark, [("K1", "Verwaltung", "Neu")] * 2)
     stats = run_pipeline(spark, wh, CFG, T2, batch=b2)
-    assert stats.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    assert dataclasses.asdict(stats) == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
     assert wh.read(CFG.dim_table).count() == 2
 
 
@@ -157,7 +157,7 @@ def test_merge_without_pipeline(spark, wh):
     stats = scd2_merge(wh, CFG, b, T1)
     assert stats.new_keys == 3
     stats2 = scd2_merge(wh, CFG, batch(spark, [("K1", "Verwaltung", "Neu")]), T2)
-    assert stats2.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    assert dataclasses.asdict(stats2) == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
     # absent keys stay current; K1 has history
     dim = wh.read(CFG.dim_table)
     assert dim.count() == 4
@@ -241,10 +241,18 @@ def test_bitemporal_correct_and_as_of(spark):
     """Bitemporal algebra: a retroactive correction closes the old
     belief (audit-preserved), re-inserts validity remainders, and
     both time axes slice correctly afterwards."""
-    from lakehouse_poc_spark.operators.bitemporal import (
-        as_of,
-        bitemporal_correct,
-    )
+    from lakehouse_poc_spark.operators.bitemporal import bitemporal_correct
+
+    def as_of(bidim, valid_at, known_at=None):
+        """The rows believed true for business date ``valid_at`` as
+        known at ``known_at`` (default: current belief)."""
+        tx = "tx_to IS NULL"
+        if known_at is not None:
+            k = f"TIMESTAMP '{known_at}'"
+            tx = f"tx_from <= {k} AND (tx_to IS NULL OR {k} < tx_to)"
+        return bidim.filter(
+            f"valid_from <= DATE '{valid_at}' AND DATE '{valid_at}' < valid_to AND {tx}"
+        )
 
     dim = spark.createDataFrame(
         [(1, "GOLD", "1995-01-01", "9999-12-31", "2024-01-01 00:00:00", None),
@@ -377,7 +385,7 @@ def test_scd2_evolve_widens_and_null_backfills(spark, wh):
     scd2_merge(wh, EVO_CFG1, b1, T1)
     stats = scd2_merge(wh, EVO_CFG2, b2, T2, evolve=True)
     # K1: b NULL->'new' = changed; K2: b NULL vs NULL = unchanged; K3 new
-    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
+    assert dataclasses.asdict(stats) == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
     dim = wh.read(EVO_CFG2.dim_table)
     assert "b" in dim.columns
     rows = {(r["k"], r["is_current"]): r for r in dim.collect()}
@@ -394,7 +402,7 @@ def test_scd2_evolve_idempotent_reapply(spark, wh):
     scd2_merge(wh, EVO_CFG2, b2, T2, evolve=True)
     before = sorted(map(tuple, wh.read(EVO_CFG2.dim_table).collect()))
     stats = scd2_merge(wh, EVO_CFG2, b2, T3, evolve=True)
-    assert stats.as_dict() == {"unchanged": 3, "new_keys": 0, "updated_keys": 0}
+    assert dataclasses.asdict(stats) == {"unchanged": 3, "new_keys": 0, "updated_keys": 0}
     after = sorted(map(tuple, wh.read(EVO_CFG2.dim_table).collect()))
     assert before == after
 
@@ -548,7 +556,7 @@ def test_one_pass_merge_job_budget_and_no_cache(spark, wh, jobs_in_group):
     boot, boot_jobs = jobs_in_group(
         "scd2-bootstrap", lambda: scd2_merge(wh, CFG, b1, T1)
     )
-    assert boot.as_dict() == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
+    assert dataclasses.asdict(boot) == {"unchanged": 0, "new_keys": 3, "updated_keys": 0}
     b2 = batch(
         spark,
         [
@@ -560,7 +568,7 @@ def test_one_pass_merge_job_budget_and_no_cache(spark, wh, jobs_in_group):
     stats, merge_jobs = jobs_in_group(
         "scd2-merge", lambda: scd2_merge(wh, CFG, b2, T2)
     )
-    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
+    assert dataclasses.asdict(stats) == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted_before
     assert boot_jobs <= BOOTSTRAP_JOB_BUDGET, (
         f"bootstrap ran {boot_jobs} jobs (budget {BOOTSTRAP_JOB_BUDGET})"
@@ -597,7 +605,7 @@ def test_observed_stats_batch_from_another_session(spark, wh):
     th.join(timeout=180)
     assert not th.is_alive(), "scd2_merge hung waiting for its Observation"
     assert "error" not in result, result.get("error")
-    assert result["stats"].as_dict() == {
+    assert dataclasses.asdict(result["stats"]) == {
         "unchanged": 0, "new_keys": 1, "updated_keys": 1,
     }
     assert wh.read(CFG.dim_table).count() == 5
@@ -624,7 +632,7 @@ def test_null_business_key_inserts_and_keeps_target(spark, wh):
     stats = scd2_merge(
         wh, CFG, batch(spark, [(None, "Neu", "Y"), ("K1", "A", "B")]), T2
     )
-    assert stats.as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 0}
+    assert dataclasses.asdict(stats) == {"unchanged": 1, "new_keys": 1, "updated_keys": 0}
     dim = wh.read(CFG.dim_table)
     nulls = sorted(
         (r.Bezeichnung, str(r.GueltigVon), r.GueltigBis, r.IsCurrent)
@@ -643,7 +651,7 @@ def test_rerun_with_same_run_ts(spark, wh):
     scd2_merge(wh, CFG, b2, T2)
     before = _dim_rows(wh)
     replay = scd2_merge(wh, CFG, b2, T2)
-    assert replay.as_dict() == {"unchanged": 2, "new_keys": 0, "updated_keys": 0}
+    assert dataclasses.asdict(replay) == {"unchanged": 2, "new_keys": 0, "updated_keys": 0}
     assert _dim_rows(wh) == before
 
     cfg2 = dataclasses.replace(CFG, dim_table="layer0150.dim_kostenstelle2")
@@ -651,7 +659,7 @@ def test_rerun_with_same_run_ts(spark, wh):
     same_ts = scd2_merge(
         wh, cfg2, batch(spark, [("K1", "Verwaltung", "Neu")]), T1
     )
-    assert same_ts.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    assert dataclasses.asdict(same_ts) == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
     k1 = sorted(
         (str(r.GueltigVon), str(r.GueltigBis), r.IsCurrent, r.Bereich)
         for r in wh.read(cfg2.dim_table)
@@ -680,7 +688,7 @@ def test_scd2_on_delta_log_versions_and_change_feed(spark, wh, tmp_path):
         for name, w in (("delta", dl), ("parquet", wh))
     }
     assert stats["delta"] == stats["parquet"]
-    assert stats["delta"][1].as_dict() == {
+    assert dataclasses.asdict(stats["delta"][1]) == {
         "unchanged": 1, "new_keys": 1, "updated_keys": 1,
     }
 

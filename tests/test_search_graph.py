@@ -1,5 +1,5 @@
 """Unit tests: keyword-search operators (inverted index, BM25, phrase
-match) and graph operators (fixed-point PageRank, BFS hops)."""
+match) and graph operators (fixed-point PageRank)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from lakehouse_poc_spark.operators.graph import SCALE, bfs_hops, pagerank_int
+from lakehouse_poc_spark.operators.graph import SCALE, pagerank_int
 from lakehouse_poc_spark.operators.search import (
     bm25_topk,
     inverted_index,
@@ -120,24 +120,6 @@ def test_pagerank_weights_matter(spark):
     assert out["b"] > out["c"]
 
 
-def test_bfs_hops_levels_and_unreachable(spark):
-    e = _edges(spark, [("a", "b", 1), ("b", "c", 1), ("c", "d", 1), ("x", "y", 1)])
-    src = spark.createDataFrame([("a",)], ["node"])
-    out = {r["node"]: r["hops"] for r in bfs_hops(e, src, max_hops=2).collect()}
-    assert out == {"a": 0, "b": 1, "c": 2}  # d beyond max_hops; x,y unreachable
-
-
-def test_bfs_hops_takes_shortest_path(spark):
-    # two routes to d: a→d (1 hop) and a→b→c→d — must report 1.
-    e = _edges(
-        spark,
-        [("a", "d", 1), ("a", "b", 1), ("b", "c", 1), ("c", "d", 1)],
-    )
-    src = spark.createDataFrame([("a",)], ["node"])
-    out = {r["node"]: r["hops"] for r in bfs_hops(e, src).collect()}
-    assert out["d"] == 1
-
-
 def test_query_registration():
     from lakehouse_poc_spark import plans
 
@@ -247,49 +229,6 @@ def test_lsh_recall_levers_are_monotonic(spark):
     plain = recall(n_planes=5)
     multi = recall(n_planes=5, n_tables=4, multiprobe=2)
     assert multi >= plain
-
-
-def test_lsh_at_rest_matches_in_flight(spark, wh):
-    """The materialized (t, bucket)-partitioned index must return
-    exactly what the in-flight operator returns, and its scan must be
-    partition-pruned to the probed buckets."""
-    from lakehouse_poc_spark.operators.similarity import (
-        lsh_build_index,
-        lsh_query_at_rest,
-        lsh_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter("vec_id < 6")
-    kw = dict(n_planes=5, n_tables=4, multiprobe=1)
-    lsh_build_index(
-        emb, wh, "idx.lsh", "embedding", "vec_id",
-        n_planes=5, n_tables=4,
-    )
-    at_rest = lsh_query_at_rest(
-        wh, "idx.lsh", q, "embedding", "vec_id", "vec_id", 5, **kw
-    )
-    in_flight = lsh_topk(emb, q, "embedding", "vec_id", "vec_id", 5, **kw)
-    a = at_rest.select("query_id", "neighbor_id", "rank")
-    b = in_flight.select("query_id", "neighbor_id", "rank")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-    # pruning: the probed-bucket read carries PARTITION filters (file-
-    # listing pruning), not data filters — (t, bucket) are partition
-    # columns, so the predicate never reads unprobed buckets' files.
-    from pyspark.sql import functions as F
-
-    full = wh.read("idx.lsh")
-    some = full.select("t", "bucket").first()
-    pruned = full.filter(
-        (F.col("t") == some["t"]) & (F.col("bucket") == some["bucket"])
-    )
-    jvm = spark._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = pruned._jdf.queryExecution().explainString(mode)
-    scan = plan[plan.index("(1) Scan parquet"):].split("\n\n")[0]
-    pf_line = scan.split("PartitionFilters")[1].split("\n")[0]
-    assert "bucket" in pf_line  # pruning happens at the file listing
-    assert full.select("t", "bucket").distinct().count() > 4  # real fan-out
 
 
 def test_pagerank_empty_edges_raises(spark):

@@ -5,6 +5,7 @@ invariants — behaviors the batch-differential harness can't observe.
 
 from __future__ import annotations
 
+from dataclasses import asdict
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -140,6 +141,28 @@ def test_streaming_session_agg_matches_batch(spark, tmp_path):
     assert per_user == {1: (2, 3), 2: (1, 1)}
 
 
+def test_run_to_memory_drops_its_sink_view(spark, tmp_path):
+    """The memory sink's temp view is gone once the result is back,
+    and the result still reads after the drop."""
+    from perfbench.hygiene import temp_view_names
+
+    src = tmp_path / "in"
+    df = _events_df(
+        spark,
+        [(1, 1, "2020-01-01 00:00:00", 1.0), (2, 2, "2020-01-01 00:10:00", 2.5)],
+    )
+    df.write.parquet(str(src / "a"))
+    agg = (
+        stream_parquet(spark, str(src) + "/*", df.schema)
+        .groupBy("user_id")
+        .agg(F.sum("value").alias("v"))
+    )
+    before = temp_view_names(spark)
+    out = run_to_memory(agg, mode="complete")
+    assert temp_view_names(spark) == before
+    assert sorted(map(tuple, out.collect())) == [(1, 1.0), (2, 2.5)]
+
+
 def test_stateful_running_stats_across_batches(spark, tmp_path):
     """applyInPandasWithState must carry per-key state across
     micro-batches: a user appearing in both batches gets cumulative
@@ -204,8 +227,8 @@ def test_scd2_stream_two_batches(spark, tmp_path):
     snap_b.write.mode("append").parquet(str(src))
     s2 = scd2_stream(stream_parquet(spark, str(src), snap_a.schema), wh, cfg, ckpt, run_ts)
 
-    assert s1[0].as_dict() == {"unchanged": 0, "new_keys": 2, "updated_keys": 0}
-    assert s2[0].as_dict() == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
+    assert asdict(s1[0]) == {"unchanged": 0, "new_keys": 2, "updated_keys": 0}
+    assert asdict(s2[0]) == {"unchanged": 1, "new_keys": 1, "updated_keys": 1}
 
     dim = wh.read(cfg.dim_table)
     # SCD2 invariants: exactly one current row per key; the closed row's
@@ -523,12 +546,38 @@ def test_run_with_metrics_beyond_recent_progress_cap(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
 
+def lsh_dedup_keep(df, text_col: str, id_col: str):
+    """One-shot LSH bucket dedup decision: (id, kept) where a doc is
+    DROPPED iff any lower-id doc (kept or dropped) shares at least
+    one LSH band bucket with it — one banded self-join on
+    (band, bhash). Counting dropped docs as blockers makes the rule
+    prefix-closed, so the streaming twin must reproduce it exactly."""
+    from lakehouse_poc_spark.operators.dedup import minhash_bands
+
+    banded = minhash_bands(df, text_col, id_col)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    dropped = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bhash") == F.col("b.bhash"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"b.{id_col}").alias("__dropped"))
+        .distinct()
+    )
+    ids = df.select(id_col).distinct()
+    return ids.join(
+        dropped, ids[id_col] == dropped["__dropped"], "left"
+    ).select(id_col, F.col("__dropped").isNull().alias("kept"))
+
+
 def test_stream_minhash_dedup_equals_one_shot(spark):
     """The streaming LSH dedup's prefix-closure contract: because the
     band store records EVERY seen doc (dropped docs block too),
     cleaning id-ordered micro-batches reproduces the one-shot
     lsh_dedup_keep over the whole corpus row-for-row."""
-    from lakehouse_poc_spark.operators.dedup import lsh_dedup_keep
     from lakehouse_poc_spark.plans import QUERIES
     from lakehouse_poc_spark.sources.readers import read_parquet_table
 

@@ -3,6 +3,7 @@ tables and small-file compaction."""
 
 from __future__ import annotations
 
+from dataclasses import asdict
 from pathlib import Path
 
 import pytest
@@ -1160,7 +1161,7 @@ def test_staged_swap_crash_between_renames_rolls_back(spark, tmp_path, monkeypat
     p = reopened.path(CFG.dim_table)
     assert not p.with_name(p.name + "__staging").exists()
     stats = scd2_merge(reopened, CFG, batch(spark, [("K2", "x")]), T3)
-    assert stats.as_dict() == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
+    assert asdict(stats) == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
     assert reopened.read(CFG.dim_table).count() == 4
 
 
@@ -1184,67 +1185,3 @@ def test_iceberg_compact_counts_live_files_only(spark, tmp_path):
     assert wh.compact(t, target_files=1) == live
     assert sorted(r.id for r in wh.read(t).collect()) == rows
     assert len(live_entries(wh.path(t))) == 1
-
-
-# ---------------------------------------------------------------------------
-# No Warehouse method that only tests reach. A public method counts as
-# reached when its name is used (attribute access, or a string such as
-# perfbench's by-name instrumentation list) anywhere in the code below;
-# a name shared with another class (``restore`` on DeltaLogWriter)
-# therefore counts, so the check can miss but never flag falsely.
-
-_REPO = Path(__file__).resolve().parents[1]
-_CALLER_ROOTS = ("lakehouse_poc_spark", "tools", "perfbench", "bench.py", "__spark_entry__.py")
-_WAREHOUSES = ("Warehouse", "DeltaLogWarehouse", "IcebergMetaWarehouse")
-# Left on purpose, each with the ROADMAP direction that decides it:
-# 3 retires or re-points the table emulations, 6 surfaces operation
-# metrics through history().
-_TEST_ONLY_ALLOWED = {
-    "compact_purge_dv": 3,
-    "history": 6,
-}
-
-
-def _public_warehouse_methods() -> dict[str, list[str]]:
-    import ast
-
-    tree = ast.parse((_REPO / "lakehouse_poc_spark/sinks/warehouse.py").read_text())
-    out: dict[str, list[str]] = {}
-    for cls in tree.body:
-        if isinstance(cls, ast.ClassDef) and cls.name in _WAREHOUSES:
-            for node in cls.body:
-                if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                    out.setdefault(node.name, []).append(cls.name)
-    return out
-
-
-def _names_used_outside_tests() -> set[str]:
-    import ast
-
-    files = []
-    for root in _CALLER_ROOTS:
-        p = _REPO / root
-        files += [p] if p.is_file() else sorted(p.rglob("*.py"))
-    used: set[str] = set()
-    for f in files:
-        if "tests" in f.relative_to(_REPO).parts:
-            continue
-        for node in ast.walk(ast.parse(f.read_text())):
-            if isinstance(node, ast.Attribute):
-                used.add(node.attr)
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                used.add(node.value)
-    return used
-
-
-def test_every_warehouse_method_has_a_caller_outside_tests():
-    methods = _public_warehouse_methods()
-    assert set(_WAREHOUSES) == {c for cs in methods.values() for c in cs}
-    used = _names_used_outside_tests()
-    test_only = {m: cs for m, cs in methods.items() if m not in used}
-    unexpected = {m: cs for m, cs in test_only.items() if m not in _TEST_ONLY_ALLOWED}
-    assert not unexpected, (
-        f"only tests call {unexpected}: delete them or give them a caller"
-    )
-    stale = sorted(set(_TEST_ONLY_ALLOWED) - set(test_only))
-    assert not stale, f"allow-listed methods now reached or gone: {stale}"
