@@ -31,6 +31,7 @@ from ..config import PipelineConfig
 from ..pipeline import run_pipeline
 from ..session import overlap
 from ..sinks.warehouse import DeltaLogWarehouse, Warehouse
+from ..sources.deltalog import DeltaLogWriter
 from ..sources.readers import CsvDialect, read_csv, read_parquet_table
 from . import query
 from .tpch import sql_dsum
@@ -63,11 +64,11 @@ CUST_CFG = PipelineConfig(
 )
 
 
-def _fresh_wh(spark: SparkSession, tag: str) -> Warehouse:
+def _fresh_wh(spark: SparkSession, tag: str, cls=Warehouse) -> Warehouse:
     root = SCRATCH / tag
     if root.exists():
         shutil.rmtree(root)
-    return Warehouse(spark, str(root))
+    return cls(spark, str(root))
 
 
 def _run_scd2_scenario(spark: SparkSession, sf_dir: str) -> Warehouse:
@@ -176,10 +177,13 @@ def scd1_customer_current(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # The FILE-PRUNED SCD1 twin: identical scenario and oracle to
 # scd1_customer_current, executed via upsert_file_pruned on a
-# range-clustered layout — the Delta-MERGE-mechanic-on-parquet path
-# (rewrites only files holding matched keys). The oracle-hash identity
-# of the two queries IS the result-contract proof; the file-count
-# pruning itself is asserted in tests/test_warehouse.py.
+# DeltaLogWarehouse table that was appended and then OPTIMIZEd with
+# range clustering (compact(cluster_by=...)) — Delta's MERGE rewrites
+# only the files holding matched keys, in one commit. It differs from
+# scd1_manifest_customers by the layout: clustered by compaction here,
+# by the seeding write there. The oracle-hash identity of the twins IS
+# the result-contract proof; the file-count pruning itself is asserted
+# in tests/test_warehouse.py.
 @query(
     "scd1_file_pruned_customers",
     oracle="""
@@ -205,11 +209,12 @@ def scd1_file_pruned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment")
         ),
     )
-    wh = _fresh_wh(spark, f"scd1fp_{Path(sf_dir).name}")
+    wh = _fresh_wh(spark, f"scd1fp_{Path(sf_dir).name}", DeltaLogWarehouse)
     t = "layer0150.dim_customer_fp"
-    # seed with a key-clustered layout so the second upsert's pruning
-    # has ranges to prune against (the 100 TB layout discipline)
-    batch1.repartitionByRange(8, "c_custkey").write.parquet(str(wh.path(t)))
+    # cluster the seed on the key so the second upsert's pruning has
+    # ranges to prune against (the 100 TB layout discipline)
+    wh.append(batch1, t)
+    wh.compact(t, target_files=8, cluster_by=["c_custkey"])
     wh.upsert_file_pruned(batch2, t, keys=["c_custkey"])
     return (
         wh.read(t)
@@ -258,10 +263,7 @@ def scd1_manifest_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment")
         ),
     )
-    root = SCRATCH / f"scd1mf_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = DeltaLogWarehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"scd1mf_{Path(sf_dir).name}", DeltaLogWarehouse)
     t = "layer0150.dim_customer_mf"
     wh.overwrite(batch1.repartitionByRange(8, "c_custkey"), t)
     wh.upsert_file_pruned(batch2, t, keys=["c_custkey"])
@@ -320,10 +322,7 @@ def _run_versioned_scenario(
             F.col("c_mktsegment")
         ),
     )
-    root = SCRATCH / f"scd2v_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = DeltaLogWarehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"scd2v_{Path(sf_dir).name}", DeltaLogWarehouse)
     run_pipeline(spark, wh, CUST_CFG, T1, batch=batch1)
     run_pipeline(spark, wh, CUST_CFG, T2, batch=batch2)
     return wh
@@ -482,8 +481,9 @@ def bloom_file_index_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PERSISTED bloom index (r7, SCALE.md §6.3): the index lives as a
-# _bloom.<table> side table and is refreshed incrementally inside
+# PERSISTED bloom index (r7, SCALE.md §6.3) on a DeltaLogWarehouse
+# table: the index lives as a _bloom.<table> side table keyed on the
+# log's live files and is refreshed incrementally inside
 # upsert_file_pruned (only rewritten files rebuild). The query runs
 # the full lifecycle — build, key-changing DML, two point lookups
 # through the maintained index — and the oracle states the post-DML
@@ -509,13 +509,10 @@ def bloom_index_maintained_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     orders = read_parquet_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    root = SCRATCH / f"bloomidx_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = Warehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"bloomidx_{Path(sf_dir).name}", DeltaLogWarehouse)
     t = "raw.orders_b"
     # custkey-clustered layout: the batch's keys land in few files
-    orders.repartitionByRange(8, "o_custkey").write.parquet(str(wh.path(t)))
+    wh.overwrite(orders.repartitionByRange(8, "o_custkey"), t)
     wh.build_bloom_index(t, "o_custkey")
     batch = orders.filter(F.col("o_custkey") == 7).withColumn(
         "o_orderstatus", F.lit("X")
@@ -2233,13 +2230,14 @@ def rollup_cascade_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Merge-on-read DELETE via deletion vectors (Iceberg v2 positional
-# deletes / Delta deletion vectors, on plain parquet): two DELETEs
-# append (file, row-position) tombstones — zero data-file rewrites —
-# then read_mor anti-joins the broadcast vector. The oracle is plain
-# SQL DELETE semantics (rows where no predicate is TRUE survive;
-# NULL-predicate rows survive). compact_purge_dv is exercised by the
-# warehouse test suite; here the MOR read itself is the gate.
+# Merge-on-read DELETE via Delta deletion vectors on a
+# DeltaLogWarehouse table: two DELETEs (DeltaLogWriter.delete_where_dv)
+# each commit per-file row-position bitmaps — zero data-file rewrites —
+# and wh.read applies the masks in one scan plus one broadcast
+# anti-join. The oracle is plain SQL DELETE semantics (rows where no
+# predicate is TRUE survive; NULL-predicate rows survive). DV
+# semantics (merging bitmaps, OPTIMIZE folding them in) are tested in
+# tests/test_deltalog_dv.py; here the masked read itself is the gate.
 @query(
     "dv_delete_customers",
     oracle="""
@@ -2254,13 +2252,14 @@ def dv_delete_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
-    wh = _fresh_wh(spark, f"dv_{Path(sf_dir).name}")
+    wh = _fresh_wh(spark, f"dv_{Path(sf_dir).name}", DeltaLogWarehouse)
     t = "layer0150.customer_dv"
-    cust.repartitionByRange(8, "c_custkey").write.parquet(str(wh.path(t)))
-    wh.delete_where_dv(t, "c_custkey % 7 = 0")
-    wh.delete_where_dv(t, "c_acctbal < 0")
+    wh.overwrite(cust.repartitionByRange(8, "c_custkey"), t)
+    w = DeltaLogWriter(spark, wh.path(t))
+    w.delete_where_dv("c_custkey % 7 = 0")
+    w.delete_where_dv("c_acctbal < 0")
     return (
-        wh.read_mor(t)
+        wh.read(t)
         .select(
             F.col("c_custkey").alias("key"),
             F.col("c_name").alias("name"),
@@ -2543,13 +2542,14 @@ def scd3_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GDPR erasure audit (r7): right-to-be-forgotten across RELATED
 # tables — the subject keys (c_custkey % 97 == 0) are erased from
 # the customer dimension AND their orders in the same maintenance
-# pass via merge-on-read deletion vectors (no immediate rewrite;
-# compact_purge_dv is the physical-erasure step, exercised in
-# tests/test_warehouse.py). The audit emits per-table survivor
-# counts plus the orphan check (orders whose customer vanished) —
-# zero by construction here, and the column a compliance job alerts
-# on. Deletes are key-predicate DVs: each table's tombstones are
-# one anti-joinable position set, cost ∝ matching files.
+# pass via Delta deletion vectors on DeltaLogWarehouse tables (no
+# immediate rewrite; OPTIMIZE, which folds the vectors in, then
+# VACUUM is the physical-erasure step). The audit emits per-table
+# survivor counts plus the orphan check (orders whose customer
+# vanished) — zero by construction here, and the column a compliance
+# job alerts on. Deletes are key-predicate DVs: each table's
+# tombstones are one anti-joinable position set, cost ∝ matching
+# files.
 @query(
     "gdpr_erasure_audit",
     oracle="""
@@ -2576,7 +2576,7 @@ def scd3_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_parquet_table(spark, sf_dir, "customer")
     orders = read_parquet_table(spark, sf_dir, "orders")
-    wh = _fresh_wh(spark, f"gdpr_{Path(sf_dir).name}")
+    wh = _fresh_wh(spark, f"gdpr_{Path(sf_dir).name}", DeltaLogWarehouse)
     tc, to = "pii.customer", "pii.orders"
     # the two tables' lifecycles are independent end to end — land,
     # count, and DV-delete them concurrently (guide §2.6 overlap;
@@ -2590,14 +2590,17 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: wh.read(tc).count(), lambda: wh.read(to).count()
     )
     deleted_c, _ = overlap(
-        lambda: wh.delete_where_dv(tc, F.col("c_custkey") % 97 == 0),
-        lambda: wh.delete_where_dv(to, F.col("o_custkey") % 97 == 0),
+        lambda: DeltaLogWriter(spark, wh.path(tc)).delete_where_dv(
+            F.col("c_custkey") % 97 == 0
+        ),
+        lambda: DeltaLogWriter(spark, wh.path(to)).delete_where_dv(
+            F.col("o_custkey") % 97 == 0
+        ),
     )
     n_subjects_c = deleted_c["rows_deleted"]
-    # merge-on-read: the DV applies at read time (read_mor);
-    # compact_purge_dv is the later physical-erasure step
-    after_c = wh.read_mor(tc)
-    after_o = wh.read_mor(to)
+    # merge-on-read: the DV masks apply at read time
+    after_c = wh.read(tc)
+    after_o = wh.read(to)
     subjects_o, orphans, after_c_n, after_o_n = overlap(
         lambda: orders.filter(F.col("o_custkey") % 97 == 0)
         .select("o_custkey")
@@ -3314,8 +3317,6 @@ def scd1_iceberg_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scd1_deltalog_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sinks.warehouse import DeltaLogWarehouse
-
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -3328,10 +3329,7 @@ def scd1_deltalog_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment")
         ),
     )
-    root = SCRATCH / f"scd1dl_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = DeltaLogWarehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"scd1dl_{Path(sf_dir).name}", DeltaLogWarehouse)
     t = "layer0150.dim_customer_dl"
     wh.upsert(batch1, t, keys=["c_custkey"])
     wh.upsert(batch2, t, keys=["c_custkey"])

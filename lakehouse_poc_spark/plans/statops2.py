@@ -1262,8 +1262,9 @@ def isotonic_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-assignment trick makes it engine-reproducible): is the
 # click-vs-view mean value difference explainable by chance? 64
 # pseudo-random relabelings — permutation p assigns each event to a
-# side by ((a+p·step)·event_id + b) mod P mod 2, a fixed literal
-# universal-hash family — each yields a null mean difference from
+# side by ((a+2p·step)·event_id + b) mod P mod 2, a fixed literal
+# universal-hash family whose multiplier is odd for every p (an even
+# one sends every event to one side) — each yields a null mean difference from
 # EXACT decimal sums; the p-value is the add-one-smoothed fraction of
 # null |diffs| at or above the observed |diff|. Scale shape: one
 # 64-way hash fan-out over the filtered events, partial-combined
@@ -1292,15 +1293,15 @@ _PERM_N = 64
     perms AS (SELECT CAST(p AS BIGINT) AS p FROM generate_series(1, {_PERM_N}) g(p)),
     nulls AS (
         SELECT p.p,
-               CAST(SUM(CASE WHEN ((101 + p.p * 7919) * e.event_id + 17)
+               CAST(SUM(CASE WHEN ((101 + 2 * p.p * 7919) * e.event_id + 17)
                                   % {_PERM_P} % 2 = 0 THEN e.v END)
                     AS DOUBLE)
-               / SUM(CASE WHEN ((101 + p.p * 7919) * e.event_id + 17)
+               / SUM(CASE WHEN ((101 + 2 * p.p * 7919) * e.event_id + 17)
                                % {_PERM_P} % 2 = 0 THEN 1 ELSE 0 END)
-             - CAST(SUM(CASE WHEN ((101 + p.p * 7919) * e.event_id + 17)
+             - CAST(SUM(CASE WHEN ((101 + 2 * p.p * 7919) * e.event_id + 17)
                                   % {_PERM_P} % 2 = 1 THEN e.v END)
                     AS DOUBLE)
-               / SUM(CASE WHEN ((101 + p.p * 7919) * e.event_id + 17)
+               / SUM(CASE WHEN ((101 + 2 * p.p * 7919) * e.event_id + 17)
                                % {_PERM_P} % 2 = 1 THEN 1 ELSE 0 END)
                  AS d_null
         FROM ev e CROSS JOIN perms p
@@ -1336,7 +1337,8 @@ def permutation_test_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     perms = ev.sparkSession.range(1, _PERM_N + 1).select(
         F.col("id").alias("p")
     )
-    side = ((101 + F.col("p") * 7919) * F.col("event_id") + 17) % _PERM_P % 2
+    mult = 101 + 2 * F.col("p") * 7919
+    side = (mult * F.col("event_id") + 17) % _PERM_P % 2
     nulls = (
         ev.crossJoin(F.broadcast(perms))
         .groupBy("p")

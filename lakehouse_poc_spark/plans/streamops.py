@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..session import overlap
-from ..sinks.warehouse import Warehouse
+from ..sinks.warehouse import DeltaLogWarehouse, Warehouse
 from ..sources.readers import (
     ensure_session_confs,
     normalize_event_ts,
@@ -1229,12 +1229,12 @@ def stream_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming CDC apply → FILE-PRUNED upsert: each micro-batch of
-# last-write-wins changes lands via upsert_file_pruned, rewriting only
-# the files whose keys the batch touched — the streaming twin of
-# scd1_file_pruned_customers and the shape a 100 TB CDC consumer
-# needs (an hourly batch touches MB of a key-clustered dimension, not
-# the dimension). Two mtime-ordered micro-batches; final state is the
-# plain SCD1 oracle.
+# last-write-wins changes lands via DeltaLogWarehouse.upsert_file_pruned,
+# one MERGE commit rewriting only the files whose keys the batch
+# touched — the streaming twin of scd1_file_pruned_customers and the
+# shape a 100 TB CDC consumer needs (an hourly batch touches MB of a
+# key-clustered dimension, not the dimension). Two mtime-ordered
+# micro-batches; final state is the plain SCD1 oracle.
 @query(
     "stream_scd1_file_pruned",
     oracle="""
@@ -1276,13 +1276,16 @@ def stream_scd1_file_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         token=os.stat(f"{sf_dir}/customer.parquet").st_mtime,
     )
 
-    wh = Warehouse(spark, str(work / "wh"))
+    wh = DeltaLogWarehouse(spark, str(work / "wh"))
     t = "dim.customer_fp"
     # key-clustered base of the even keys — the layout the pruning
     # works against
-    cust.filter(F.col("c_custkey") % 2 == 0).repartitionByRange(
-        8, "c_custkey"
-    ).write.parquet(str(wh.path(t)))
+    wh.overwrite(
+        cust.filter(F.col("c_custkey") % 2 == 0).repartitionByRange(
+            8, "c_custkey"
+        ),
+        t,
+    )
 
     stream = stream_parquet(
         spark, str(src) + "/*/part-*", cust.schema, max_files_per_trigger=1
@@ -1495,11 +1498,12 @@ def stream_cusum_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming merge-on-read deletes: a CDC feed of delete-key batches
-# applies through delete_where_dv per micro-batch — each batch
-# appends position tombstones (zero data-file rewrites while the
-# stream runs; compaction is a separate maintenance op). Final
-# read_mor state is plain SQL DELETE semantics — the MOR streaming
-# twin of stream_scd1_file_pruned's CoW path.
+# applies through DeltaLogWriter.delete_keys_dv per micro-batch on a
+# DeltaLogWarehouse table — each batch commits deletion vectors (zero
+# data-file rewrites while the stream runs; OPTIMIZE is a separate
+# maintenance op). The final masked read is plain SQL DELETE
+# semantics — the MOR streaming twin of stream_scd1_file_pruned's CoW
+# path.
 @query(
     "stream_dv_delete_customers",
     oracle="""
@@ -1528,9 +1532,12 @@ def stream_dv_delete_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         token=os.stat(f"{sf_dir}/customer.parquet").st_mtime,
     )
 
-    wh = Warehouse(spark, str(work / "wh"))
+    from ..sources.deltalog import DeltaLogWriter
+
+    wh = DeltaLogWarehouse(spark, str(work / "wh"))
     t = "dim.customer_dv"
-    cust.repartitionByRange(8, "c_custkey").write.parquet(str(wh.path(t)))
+    wh.overwrite(cust.repartitionByRange(8, "c_custkey"), t)
+    w = DeltaLogWriter(spark, wh.path(t))
 
     key_schema = cust.select("c_custkey").schema
     stream = stream_parquet(
@@ -1542,11 +1549,11 @@ def stream_dv_delete_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         # distributed key semi-join — the CDC batch never visits the
         # driver (delete_keys_dv, not an IN-list predicate)
-        wh.delete_keys_dv(t, batch_df, keys=["c_custkey"])
+        w.delete_keys_dv(batch_df, keys=["c_custkey"])
 
     run_foreach_batch(stream, apply, str(work / "ckpt"))
     return (
-        wh.read_mor(t)
+        wh.read(t)
         .select(
             F.col("c_custkey").alias("key"),
             F.col("c_name").alias("name"),

@@ -25,9 +25,7 @@ bucketed by business key when they grow.
 
 from __future__ import annotations
 
-import contextlib
 import json
-import os
 import shutil
 import time
 from pathlib import Path
@@ -176,7 +174,15 @@ class Warehouse:
     staged directory in, so a table has one version, the live one. The
     subclasses below keep this interface and replace the storage layer:
     the Delta log or Iceberg metadata; those keep history, time travel
-    and (via :meth:`table_changes`) a change feed."""
+    and (via :meth:`table_changes`) a change feed.
+
+    A directory table takes plain writes only: read, append,
+    overwrite, the staged swap, dynamic partition overwrite, the
+    full-rewrite DML, compaction and vacuum. Transactional DML — the
+    file-pruned MERGE, deletion vectors and the maintained bloom index
+    — lives on the Delta log (``DeltaLogWarehouse``,
+    ``DeltaLogWriter``), whose create-exclusive commit is the conflict
+    check a directory would need a lock for."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -317,10 +323,6 @@ class Warehouse:
         w.parquet(str(self.path(table)))
 
     def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        if self._dv_active(table):
-            # a full replace discards the old contents; stale
-            # tombstones referencing vanished basenames must go too
-            self.drop(self._dv_table(table))
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -337,9 +339,7 @@ class Warehouse:
         rolled back by :meth:`_recover_swap` on the next open. The
         log-backed subclasses commit new files instead, so they need no
         staging. Every full-rewrite DML (delete_where, upsert,
-        merge_ops, the SCD2 commit, compact) ends here, so this is
-        where the persisted bloom index catches up with the new file
-        set.
+        merge_ops, the SCD2 commit, compact) ends here.
         """
         self._recover_swap(table)
         target = self.path(table)
@@ -358,7 +358,6 @@ class Warehouse:
         staged.rename(target)
         if old.exists():
             shutil.rmtree(old)
-        self.refresh_bloom_index(table)
 
     def overwrite_partitions(
         self, df: DataFrame, table: str, partition_by: list[str]
@@ -388,8 +387,8 @@ class Warehouse:
     def delete_where(self, table: str, predicate) -> None:
         """DML DELETE: remove rows matching ``predicate`` (a Column or
         SQL string) by rewriting the table to the complement (staged
-        swap). The deletion-vector form below rewrites no data file.
-        Completes the DML triad: append (INSERT), SCD2/merge (UPDATE),
+        swap). ``DeltaLogWriter.delete_where_dv`` is the merge-on-read
+        form, which rewrites no data file. Completes the DML triad: append (INSERT), SCD2/merge (UPDATE),
         delete_where (DELETE).
 
         SQL DELETE semantics: a row is deleted iff the predicate is
@@ -398,7 +397,6 @@ class Warehouse:
         ``NOT coalesce(pred, false)`` — a plain ``~pred`` would
         silently drop NULL-predicate rows."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        self._dv_cow_guard(table)
         self.overwrite_from_plan(
             self.read(table).filter(~F.coalesce(pred, F.lit(False))), table
         )
@@ -413,14 +411,13 @@ class Warehouse:
         An anti-join keeps the untouched current rows, then one
         staged-swap rewrite: the cost is a key-partitioned co-shuffle
         of (current, batch), batch side broadcast when small.
-        :meth:`upsert_file_pruned` rewrites only the files holding
-        matched keys. Mirrors the reference's MERGE INTO sink shape
+        ``DeltaLogWarehouse.upsert_file_pruned`` rewrites only the files
+        holding matched keys. Mirrors the reference's MERGE INTO sink shape
         (pipeline_core.py:219-227) minus history tracking.
         """
         if not self.table_exists(table):
             self.overwrite(batch, table)
             return
-        self._dv_cow_guard(table)
         current = self.read(table)
         kept = current.join(batch.select(*keys), keys, "left_anti")
         self.overwrite_from_plan(kept.unionByName(batch), table)
@@ -472,582 +469,11 @@ class Warehouse:
             "updated": int(c["upd"] or 0),
             "inserted": int(c["ins"] or 0),
         }
-        self._dv_cow_guard(table)
         current = self.read(table)
         kept = current.join(batch.select(*keys), keys, "left_anti")
         incoming = batch.filter(F.col(op_col) != "D").select(*data_cols)
         self.overwrite_from_plan(kept.unionByName(incoming), table)
         return stats
-
-    @contextlib.contextmanager
-    def _writer_lock(self, table: str, timeout: float = 120.0, ttl: float = 900.0):
-        """Advisory per-table writer lock for the parquet-dir DML
-        mechanics: an atomic ``mkdir`` next to the table dir (POSIX
-        mkdir is create-exclusive, so exactly one contender wins).
-        Closes the multi-writer window of ``upsert_file_pruned`` and
-        the deletion-vector DML: two concurrent upserts could both
-        list the same touched file, both rewrite it from their own
-        snapshot, and the second move would silently drop the first
-        writer's rows. With the lock, writers serialize; readers are
-        never blocked (they keep the documented move→unlink duplicate
-        window instead).
-
-        A crashed holder is recovered by age: a lock older than ``ttl``
-        seconds is presumed dead. Breakers serialize through a
-        break-mutex (its own create-exclusive mkdir) and re-verify
-        staleness while holding it, then rename the stale dir to a
-        unique tombstone and delete it — a fresh holder's lock can
-        never be renamed away, and everyone re-races through mkdir
-        afterwards. Release verifies
-        ownership: each acquire writes a unique token into the owner
-        file and only removes the lock if the token still matches, so
-        a slow-but-alive holder whose lock was ttl-broken cannot
-        delete the NEW holder's lock on its way out. This is the
-        filesystem analogue of what a Delta/Iceberg transactional
-        log provides natively. Not reentrant: no op takes it while
-        holding it. Driver-side only: lock acquisition is a metadata
-        op, never per-row."""
-        import uuid
-
-        lock = self.path(table).with_name(self.path(table).name + "__lock")
-        lock.parent.mkdir(parents=True, exist_ok=True)
-        token = f"{os.getpid()}:{uuid.uuid4().hex}"
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                lock.mkdir()
-                (lock / "owner").write_text(token)
-                break
-            except FileExistsError:
-                try:
-                    age = time.time() - lock.stat().st_mtime
-                except OSError:
-                    continue  # holder released between mkdir and stat
-                if age > ttl:
-                    # Presumed-dead holder. Breaking must never touch a
-                    # FRESH lock, so breakers serialize through a
-                    # dedicated break-mutex (mkdir, create-exclusive)
-                    # and RE-verify staleness while holding it: only
-                    # the break-mutex holder may remove the lock dir,
-                    # and a normal acquirer can only mkdir once it is
-                    # removed — so between the re-stat and the rename
-                    # no one can swap in a live lock (the pre-fix
-                    # verify-AFTER-rename let a breaker rename a fresh
-                    # holder's lock away while a third contender
-                    # mkdir'd: two inside). The break-mutex critical
-                    # section is a handful of syscalls, so its own
-                    # crash-recovery ttl is short; that recovery rmtree
-                    # is the residual (syscall-length) window of a
-                    # filesystem lock, documented.
-                    brk = lock.with_name(lock.name + ".break")
-                    try:
-                        brk.mkdir()
-                    except FileExistsError:
-                        try:
-                            b_age = time.time() - brk.stat().st_mtime
-                        except OSError:
-                            continue  # breaker just finished
-                        if b_age > 60.0:  # crashed breaker
-                            shutil.rmtree(brk, ignore_errors=True)
-                        time.sleep(0.05)
-                        continue
-                    try:
-                        try:
-                            cur_age = time.time() - lock.stat().st_mtime
-                        except OSError:
-                            continue  # released meanwhile: re-race
-                        if cur_age <= ttl:
-                            continue  # fresh holder now: wait normally
-                        tomb = lock.with_name(
-                            lock.name + f".tomb.{uuid.uuid4().hex[:12]}"
-                        )
-                        try:
-                            lock.rename(tomb)
-                        except OSError:
-                            continue
-                        shutil.rmtree(tomb, ignore_errors=True)
-                    finally:
-                        shutil.rmtree(brk, ignore_errors=True)
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"writer lock on {table!r} held for {age:.0f}s "
-                        f"(< ttl {ttl:.0f}s); gave up after {timeout:.0f}s"
-                    )
-                time.sleep(0.05)
-        try:
-            yield
-        finally:
-            # release only what we still own (owner token unchanged)
-            try:
-                if (lock / "owner").read_text() == token:
-                    shutil.rmtree(lock, ignore_errors=True)
-            except OSError:
-                pass  # lock was ttl-broken by a contender: not ours
-
-    def upsert_file_pruned(
-        self, batch: DataFrame, table: str, keys: list[str]
-    ) -> dict:
-        """SCD1 merge that rewrites ONLY the parquet files containing
-        matched keys — the Delta MERGE file-pruning mechanic expressed
-        on a plain parquet directory. Same result contract as
-        :meth:`upsert`; radically different write amplification: a
-        batch whose keys cluster into k of N files rewrites k files
-        plus one insert file, not the table. On a key-clustered layout
-        (``compact(cluster_by=keys)``) k ≈ batch key range / file key
-        range; on a random layout every file matches and this degrades
-        to the full rewrite — measure with the returned stats.
-
-        Protocol: (1) semi-join current×batch on keys over
-        ``_metadata.file_path`` to list touched files (metadata-sized
-        collect — file paths, not rows); (2) write replacement data
-        (touched-file survivors + the whole batch) to a staging dir;
-        (3) move replacement files in under job-unique names; (4)
-        unlink the touched files. The (3)→(4) window shows duplicate
-        key versions to concurrent readers; crash inside it leaves
-        them until the next upsert or ``vacuum`` (the leftover
-        ``__upsert__staging`` marks it — vacuum() sweeps it).
-        ``DeltaLogWarehouse`` has no such window: its swap is one log
-        commit (Delta's copy-on-write MERGE), so a reader sees the old
-        version or the new one. Concurrent *writers* serialize on the
-        per-table advisory lock (:meth:`_writer_lock`); the duplicate
-        window applies to concurrent readers only.
-
-        Returns {files_total, files_rewritten, rows_inserted_or_updated}.
-        """
-        self._dv_cow_guard(table)
-        with self._writer_lock(table):
-            return self._upsert_file_pruned(batch, table, keys)
-
-    def _upsert_file_pruned(
-        self, batch: DataFrame, table: str, keys: list[str]
-    ) -> dict:
-        if not self.table_exists(table):
-            self.overwrite(batch, table)
-            n = batch.count()
-            return {
-                "files_total": len(self._data_files(table)),
-                "files_rewritten": 0,
-                "rows_inserted_or_updated": n,
-            }
-        # the version the touched files are listed from (taken before
-        # the read, so a commit landing in between fails the swap)
-        snapshot = self.version(table)
-        target = self.path(table)
-        if any("=" in d.name for d in target.iterdir() if d.is_dir()):
-            raise ValueError(
-                "upsert_file_pruned does not support hive-partitioned "
-                "layouts (moved replacement files would lose their "
-                "partition-column values) — use overwrite_partitions "
-                "for partition-scoped rewrites"
-            )
-        files_total = len(self._data_files(table))
-        cur = self.read(table).withColumn("_f", F.col("_metadata.file_path"))
-        key_df = batch.select(*keys).dropDuplicates()
-        touched = [
-            r["_f"]
-            for r in cur.join(F.broadcast(key_df), keys, "left_semi")
-            .select("_f")
-            .distinct()
-            .collect()
-        ]
-        n_batch = batch.count()
-        if not touched:  # pure insert: nothing to rewrite
-            self.append(batch, table)
-            return {
-                "files_total": files_total,
-                "files_rewritten": 0,
-                "rows_inserted_or_updated": n_batch,
-            }
-        survivors = (
-            cur.filter(F.col("_f").isin(touched))
-            .drop("_f")
-            .join(batch.select(*keys), keys, "left_anti")
-        )
-        self._replace_files(
-            table, touched, survivors.unionByName(batch), snapshot
-        )
-        self.refresh_bloom_index(table)  # only changed files rebuild
-        return {
-            "files_total": files_total,
-            "files_rewritten": len(touched),
-            "rows_inserted_or_updated": n_batch,
-        }
-
-    def _replace_files(
-        self,
-        table: str,
-        touched: list[str],
-        replacement: DataFrame,
-        snapshot: int,
-    ) -> None:
-        """Swap a file subset: stage ``replacement``, move its parts in
-        under job-unique names, unlink the ``touched`` originals (as
-        listed from version ``snapshot`` — a directory table has only
-        one). The move→unlink window shows duplicates to concurrent
-        readers (documented in upsert_file_pruned); callers hold the
-        per-table writer lock, so writer/writer races cannot lose
-        rows."""
-        import uuid
-
-        target = self.path(table)
-        staging = target.with_name(target.name + "__upsert__staging")
-        if staging.exists():
-            shutil.rmtree(staging)
-        replacement.write.parquet(str(staging))
-        job = uuid.uuid4().hex[:12]
-        for i, part in enumerate(sorted(staging.glob("*.parquet"))):
-            part.rename(target / f"part-{i:05d}-{job}.parquet")
-        # local paths may carry a file:// scheme in _metadata
-        for f in touched:
-            p = Path(f.removeprefix("file://").removeprefix("file:"))
-            if p.exists():
-                p.unlink()
-        shutil.rmtree(staging, ignore_errors=True)
-
-    # -- merge-on-read deletion vectors ---------------------------------
-    # The Iceberg-v2 positional-delete / Delta deletion-vector mechanic
-    # on plain parquet: DELETE appends (file, row position) tombstones
-    # to a side table instead of rewriting data files; readers anti-join
-    # the vector (AQE broadcasts it while small — see _mor_base for why
-    # the hint is deliberately NOT forced); compaction purges. The write cost of
-    # a delete becomes O(matches), independent of file sizes — the
-    # merge-on-read half of the CoW/MOR tradeoff (delete_where, the
-    # full rewrite, is the copy-on-write half).
-
-    def _dv_table(self, table: str) -> str:
-        return f"_dv.{table}"
-
-    def delete_where_dv(self, table: str, predicate) -> dict:
-        """Merge-on-read DELETE: append the matching rows' (file,
-        row_index) positions to the deletion-vector side table; data
-        files are untouched. Matches are evaluated against the MOR
-        view (already-deleted rows can't match again), NULL-predicate
-        rows survive (SQL DELETE semantics), and only pred==TRUE rows
-        count in ``rows_deleted``. Returns {rows_deleted, dv_rows}."""
-        self._dv_layout_guard(table)
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        with self._writer_lock(table):
-            matches = self._mor_base(table).filter(
-                F.coalesce(pred, F.lit(False))
-            )
-            return self._dv_append(table, matches)
-
-    def delete_keys_dv(
-        self, table: str, keys_df: "DataFrame", keys: list[str]
-    ) -> dict:
-        """Merge-on-read DELETE by key set: tombstone every row whose
-        ``keys`` columns match a row of ``keys_df`` — the CDC-feed
-        form of :meth:`delete_where_dv`, expressed as a distributed
-        semi-join so the key batch never visits the driver (no IN
-        list). Same guards, same stats."""
-        self._dv_layout_guard(table)
-        with self._writer_lock(table):
-            matches = self._mor_base(table).join(
-                keys_df.select(*keys).distinct(), keys, "left_semi"
-            )
-            return self._dv_append(table, matches)
-
-    def _dv_append(self, table: str, matches: "DataFrame") -> dict:
-        """Materialize ``matches``' positions once and append them as
-        tombstones; shared tail of the two MOR delete forms. Caller
-        holds the writer lock."""
-        new_dv = matches.select(
-            F.col("__dv_file").alias("file"),
-            F.col("__dv_pos").alias("pos"),
-        ).localCheckpoint(eager=True)
-        n = new_dv.count()
-        if n:
-            self.append(new_dv, self._dv_table(table))
-        dv_rows = (
-            self.read(self._dv_table(table)).count()
-            if self.table_exists(self._dv_table(table))
-            else 0
-        )
-        return {"rows_deleted": n, "dv_rows": dv_rows}
-
-    def _dv_layout_guard(self, table: str) -> None:
-        """Deletion vectors key on file BASENAME + row position, which
-        is only unique in the flat single-dir layout — partitioned
-        layouts reuse basenames across partition dirs. Same guard as
-        the file-pruned CoW ops."""
-        target = self.path(table)
-        if target.exists() and any(
-            "=" in d.name for d in target.iterdir() if d.is_dir()
-        ):
-            raise ValueError(
-                "deletion vectors do not support hive-partitioned "
-                "layouts (file basenames repeat across partition "
-                "dirs) — use delete_where"
-            )
-
-    def _dv_active(self, table: str) -> bool:
-        return self.table_exists(self._dv_table(table))
-
-    def _dv_cow_guard(self, table: str) -> None:
-        """Copy-on-write DML rewrites/unlinks data files by name; an
-        active deletion vector would dangle (tombstoned basenames
-        disappear) and deleted rows would resurrect through the
-        rewrite. Force an explicit compact_purge_dv first."""
-        if self._dv_active(table):
-            raise ValueError(
-                f"{table} has an active deletion vector "
-                f"({self._dv_table(table)}); run compact_purge_dv() "
-                "before copy-on-write DML — mixing MOR tombstones "
-                "with file rewrites would resurrect deleted rows"
-            )
-
-    def _mor_base(self, table: str) -> DataFrame:
-        """The MOR view WITH its positional columns still attached:
-        live rows = all rows anti-joined against the deletion vector
-        on (file basename, row position)."""
-        cur = self.read(table).select(
-            "*",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-        if not self.table_exists(self._dv_table(table)):
-            return cur
-        dv = self.read(self._dv_table(table)).select(
-            F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-        ).distinct()
-        # no explicit broadcast hint: AQE broadcasts a small vector
-        # automatically, while a pathologically large one (mass
-        # delete nobody purged) falls back to a shuffled anti-join
-        # instead of OOMing the driver
-        return cur.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
-
-    def read_mor(self, table: str) -> DataFrame:
-        """Merge-on-read scan: the table minus its deletion vector —
-        row-identical to what the copy-on-write delete would have left.
-        The vector is positions only (16 bytes/tombstone); AQE
-        broadcasts it while small and shuffles the anti-join if a
-        mass delete grew it. At production scale the anti-join is
-        pushed into the scan per file (each task filters its own
-        file's positions), which this per-file-keyed join shape
-        already expresses."""
-        self._dv_layout_guard(table)
-        return self._mor_base(table).drop("__dv_file", "__dv_pos")
-
-    def compact_purge_dv(self, table: str) -> dict:
-        """MOR → CoW compaction: rewrite ONLY the files that carry
-        tombstones (dropping deleted rows), then clear the deletion
-        vector. Untouched files stay bit-identical. Returns
-        {files_rewritten, rows_purged}."""
-        if not self.table_exists(self._dv_table(table)):
-            return {"files_rewritten": 0, "rows_purged": 0}
-        self._dv_layout_guard(table)
-        with self._writer_lock(table):
-            dv = self.read(self._dv_table(table)).select(
-                F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
-            ).distinct()
-            n_purge = dv.count()
-            dv_files = [
-                r["__dv_file"]
-                for r in dv.select("__dv_file").distinct().collect()
-            ]
-            # same positional construction + anti-join as every MOR
-            # read (_mor_base), narrowed to the tombstoned files
-            survivors = (
-                self._mor_base(table)
-                .filter(F.col("__dv_file").isin(dv_files))
-                .drop("__dv_file", "__dv_pos")
-            )
-            touched = [
-                str(self.path(table) / f)
-                for f in dv_files
-                if (self.path(table) / f).exists()
-            ]
-            if len(touched) != len(dv_files):
-                missing = sorted(set(dv_files) - {Path(t).name for t in touched})
-                raise ValueError(
-                    f"{table}: deletion vector references data files "
-                    f"not in the table dir ({missing[:3]}…) — layout "
-                    "changed underneath the vector; cannot purge safely"
-                )
-            self._replace_files(
-                table, touched, survivors, self.version(table)
-            )
-            self.drop(self._dv_table(table))
-            self.refresh_bloom_index(table)
-            return {"files_rewritten": len(touched), "rows_purged": int(n_purge)}
-
-    # -- persisted per-file Bloom index (point-lookup file skipping) ----
-    # SCALE.md §6.3: the in-flight build_file_bloom index, promoted to
-    # a maintained side table — the Delta bloom-filter-index mechanic.
-    # Safety invariant: bloom_lookup treats live-but-unindexed files
-    # as "maybe contains" and always reads them, so a stale index can
-    # only cost extra file reads, NEVER a false negative. The
-    # file-pruned DML ops and every full rewrite (overwrite_from_plan)
-    # refresh the index incrementally (only changed files rebuild).
-
-    def _bloom_table(self, table: str) -> str:
-        return f"_bloom.{table}"
-
-    def _bloom_rows(
-        self, files: list[str], key_col: str, m_bits: int, k: int
-    ) -> DataFrame:
-        base = self.spark.read.parquet(*files).select(
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("file"),
-            # hash the canonical STRING rendering (type-stable probes)
-            F.col(key_col).cast("string").alias("__k"),
-        )
-        pos = F.array(
-            *[
-                F.pmod(F.xxhash64("__k", F.lit(i)), F.lit(m_bits)).cast("int")
-                for i in range(k)
-            ]
-        )
-        built = (
-            base.select("file", F.explode(pos).alias("p"))
-            .groupBy("file")
-            .agg(F.array_sort(F.collect_set("p")).alias("bits"))
-        )
-        # a ZERO-ROW data file contributes no agg group — give it an
-        # explicit empty-bits row so the index stays 1:1 with the live
-        # file set (empty bits admit nothing: correct, the file holds
-        # no keys); the name list is manifest-sized metadata
-        names_df = self.spark.createDataFrame(
-            [(Path(f).name,) for f in files], "file string"
-        )
-        return names_df.join(built, "file", "left").select(
-            "file",
-            F.coalesce("bits", F.array().cast("array<int>")).alias("bits"),
-            F.lit(key_col).alias("key_col"),
-            F.lit(int(m_bits)).alias("m_bits"),
-            F.lit(int(k)).alias("k"),
-        )
-
-    def build_bloom_index(
-        self, table: str, key_col: str, m_bits: int = 65536, k: int = 3
-    ) -> int:
-        """Build and persist the per-file Bloom index of ``table`` on
-        ``key_col`` as the ``_bloom.<table>`` side table (one row per
-        live data file: basename, sorted set-bit positions, and the
-        build parameters). Built distributedly — explode k probe
-        positions, one file-keyed agg; no driver-side footer loop.
-        Flat (unpartitioned) layouts only, matching the file-pruned
-        DML contract. Returns the number of files indexed."""
-        files = [str(p) for p in self._data_files(table)]
-        if not files:
-            raise ValueError(f"table {table!r} has no data files to index")
-        self.overwrite(
-            self._bloom_rows(files, key_col, m_bits, k),
-            self._bloom_table(table),
-        )
-        return len(files)
-
-    def refresh_bloom_index(self, table: str) -> dict | None:
-        """Incrementally reconcile the bloom index with the live file
-        set: drop rows of files no longer live, build rows for live
-        files not yet indexed (cost ∝ changed files, the Delta
-        index-maintenance shape). No-op (None) when the table has no
-        index. File lists are manifest-sized metadata — the same
-        driver-side scale as any table-format planner."""
-        bt = self._bloom_table(table)
-        if not self.table_exists(bt):
-            return None
-        idx = self.read(bt)
-        # ONE metadata collect (r11): cfg and the indexed-file set ride
-        # the same tiny scan — the index has one row per data file, so
-        # splitting this into a limit(1) collect plus a second full
-        # collect paid an extra Spark job for nothing.
-        meta = idx.select("file", "key_col", "m_bits", "k").collect()
-        if not meta:
-            return None
-        key_col = meta[0]["key_col"]
-        m_bits, k = int(meta[0]["m_bits"]), int(meta[0]["k"])
-        live = {p.name: p for p in self._data_files(table)}
-        indexed = {r["file"] for r in meta}
-        removed = sorted(indexed - set(live))
-        added = sorted(n for n in live if n not in indexed)
-        if not removed and not added:
-            return {
-                "files_added": 0,
-                "files_removed": 0,
-                "files_total": len(live),
-            }
-        keep_names = self.spark.createDataFrame(
-            [(n,) for n in sorted(set(live) & indexed)] or [("",)],
-            "file string",
-        )
-        kept = idx.join(keep_names, "file", "left_semi")
-        out = kept
-        if added:
-            out = kept.unionByName(
-                self._bloom_rows(
-                    [str(live[n]) for n in added], key_col, m_bits, k
-                )
-            )
-        self.overwrite_from_plan(out, bt)
-        return {
-            "files_added": len(added),
-            "files_removed": len(removed),
-            "files_total": len(live),
-        }
-
-    def bloom_lookup(self, table: str, key_col: str, value) -> DataFrame:
-        """Point lookup ``key_col = value`` through the persisted
-        bloom index: read indexed files only when their bloom admits
-        all probe positions, PLUS every live file the index has not
-        seen yet (a stale index costs reads, never results). Result
-        is identical to the full-scan filter."""
-        bt = self._bloom_table(table)
-        # ONE job: the executors test each file's bits against the k
-        # probe positions and only (file, admitted) reaches the driver,
-        # never the bit arrays. The probes are the build's expression
-        # (xxhash64 of the string rendering and the probe index, mod
-        # m_bits), so they match the build-time bits exactly. A row
-        # indexed on another column gets a NULL flag.
-        v = F.lit(value).cast("string")
-        probes = F.transform(
-            F.array_repeat(F.lit(0), F.col("k")),
-            lambda _, i: F.pmod(F.xxhash64(v, i), F.col("m_bits")).cast("int"),
-        )
-        rows = (
-            self.read(bt)
-            .select(
-                "file",
-                F.when(
-                    F.col("key_col") == key_col,
-                    F.size(F.array_except(probes, F.col("bits"))) == 0,
-                ).alias("admitted"),
-            )
-            .collect()
-        )
-        if not rows or any(r["admitted"] is None for r in rows):
-            indexed = sorted(
-                r["key_col"]
-                for r in self.read(bt).select("key_col").distinct().collect()
-            )
-            raise ValueError(
-                f"bloom index of {table!r} is not built on {key_col!r} "
-                f"(indexed: {indexed})"
-            )
-        admitted = {r["file"] for r in rows if r["admitted"]}
-        indexed = {r["file"] for r in rows}
-        live = {p.name: p for p in self._data_files(table)}
-        to_read = [
-            str(p)
-            for n, p in sorted(live.items())
-            if n in admitted or n not in indexed  # unindexed ⇒ maybe
-        ]
-        if not to_read:
-            any_live = sorted(live.values())
-            if not any_live:
-                raise ValueError(f"table {table!r} has no data files")
-            return (
-                self.spark.read.parquet(str(any_live[0]))
-                .filter(F.lit(False))
-                .filter(F.col(key_col) == value)
-            )
-        return self.spark.read.parquet(*to_read).filter(
-            F.col(key_col) == value
-        )
 
     # -- idempotent-writer transaction registry -------------------------
     # The parquet emulation of Delta's txnAppId/txnVersion: a writer
@@ -1085,38 +511,25 @@ class Warehouse:
     def vacuum(self) -> int:
         """Remove leftover ``__staging``/``__old`` dirs that a crash
         between the write and the swap in ``overwrite_from_plan`` can
-        strand, the staging dirs a crashed Delta-log or Iceberg writer
-        left, and stale writer locks (the parquet-emulation analogue of
-        ``VACUUM``; the log-backed subclasses add their unreferenced
-        data files). Safe at any time: live tables never have these
-        suffixes. Returns dirs removed."""
+        strand, and the staging dirs a crashed Delta-log or Iceberg
+        writer left (the parquet-emulation analogue of ``VACUUM``; the
+        log-backed subclasses add their unreferenced data files). Safe
+        at any time: live tables never have these suffixes. Returns
+        dirs removed."""
         removed = 0
         for d in self.root.glob("**/*__staging"):
             if d.is_dir():
                 shutil.rmtree(d)
                 removed += 1
         # job-unique Delta-log / Iceberg staging dirs a crashed writer
-        # left: only sweep ones past the writer-lock ttl — a young one
-        # may be an in-flight stage about to move its parts in
+        # left: only sweep ones older than 15 minutes — a young one may
+        # be an in-flight stage about to move its parts in
         for pat in ("**/*__dl_stage.*", "**/*__cdc_stage.*", "**/*__ice_stage.*"):
             for d in self.root.glob(pat):
                 if d.is_dir() and time.time() - d.stat().st_mtime > 900.0:
                     shutil.rmtree(d)
                     removed += 1
         for d in self.root.glob("**/*__old"):
-            if d.is_dir():
-                shutil.rmtree(d)
-                removed += 1
-        # stale writer locks (crashed holder): same ttl the lock's own
-        # stale-breaker uses; younger locks may be live — leave them
-        for d in self.root.glob("**/*__lock"):
-            if d.is_dir() and time.time() - d.stat().st_mtime > 900.0:
-                shutil.rmtree(d)
-                removed += 1
-        # lock-break tombstones stranded by a crash between the claim
-        # rename and the rmtree (_writer_lock's stale-break path):
-        # already-claimed, never live — safe to sweep at any age
-        for d in self.root.glob("**/*__lock.tomb.*"):
             if d.is_dir():
                 shutil.rmtree(d)
                 removed += 1
@@ -1166,7 +579,6 @@ class Warehouse:
 
         ``DeltaLogWarehouse`` overrides this with a protocol-native
         OPTIMIZE commit."""
-        self._dv_cow_guard(table)
         data_files = self._data_files(table)
         before = len(data_files)
         if (target_files is None) == (target_file_bytes is None):
@@ -1260,7 +672,11 @@ class DeltaLogWarehouse(Warehouse):
     semantics. ``upsert_file_pruned`` is Delta's copy-on-write MERGE:
     the touched files' ``remove`` actions and the rewrite's ``add``
     actions land in one commit, so a concurrent reader sees the old
-    version or the new one, never duplicate keys.
+    version or the new one, never duplicate keys. Merge-on-read DELETE
+    is ``DeltaLogWriter.delete_where_dv`` / ``delete_keys_dv`` (spec
+    deletion vectors), and :meth:`read` applies their masks. The
+    per-file bloom index (:meth:`build_bloom_index`) is keyed on the
+    log's live files and read through those masks too.
 
     Scope of the Warehouse-API surface: unpartitioned tables;
     rewrite-based DML through the inherited engines. An overwrite may
@@ -1355,9 +771,12 @@ class DeltaLogWarehouse(Warehouse):
     ) -> None:
         # committed data files never move and the plan pinned its
         # input files at build time, so a self-referencing overwrite
-        # needs no staged-swap dance
+        # needs no staged-swap dance. Every full-rewrite DML
+        # (delete_where, upsert, merge_ops, the SCD2 commit) ends here,
+        # so this is where the bloom index catches up with the new files
         self._no_partitions(partition_by)
         self._writer(table).overwrite(df)
+        self.refresh_bloom_index(table)
 
     # parquet path-mechanics that bypass the log would corrupt the
     # table state for real Delta readers — fail fast, route to the
@@ -1368,67 +787,275 @@ class DeltaLogWarehouse(Warehouse):
             "DeltaLogWarehouse tables are unpartitioned"
         )
 
-    def delete_where_dv(self, table: str, predicate) -> dict:
-        raise NotImplementedError(
-            "the parquet deletion-vector side table is invisible to the "
-            "Delta log — use DeltaLogWriter.delete_where_dv (spec v3 "
-            "deletion vectors) or delete_where (rewrite)"
-        )
+    def upsert_file_pruned(
+        self, batch: DataFrame, table: str, keys: list[str]
+    ) -> dict:
+        """SCD1 merge that rewrites ONLY the data files holding matched
+        keys — Delta's copy-on-write MERGE with file pruning. Same
+        result contract as :meth:`upsert`; a batch whose keys cluster
+        into k of N files rewrites k files plus the batch, not the
+        table. On a key-clustered layout (``compact(cluster_by=keys)``)
+        k ≈ batch key range / file key range; on a random layout every
+        file matches and this degrades to the full rewrite — measure
+        with the returned stats.
 
-    def delete_keys_dv(self, table: str, keys_df, keys) -> dict:
-        raise NotImplementedError(
-            "the parquet deletion-vector side table is invisible to the "
-            "Delta log — use DeltaLogWriter.delete_keys_dv (spec "
-            "deletion vectors)"
-        )
+        Protocol: (1) semi-join the snapshot's rows with the batch keys
+        over ``_metadata.file_path`` to list the touched files (a
+        metadata-sized collect — file paths, not rows); (2) stage the
+        touched files' surviving rows plus the whole batch, with
+        generated columns and CHECK constraints applied as on every
+        write; (3) commit the touched files' ``remove`` actions and the
+        staged ``add`` actions as ONE ``MERGE`` commit claimed at
+        exactly the snapshot's version + 1. A commit landing since the
+        listing fails the claim (``DeltaLogError``) and reclaims the
+        staged files, so writers never lose each other's rows and a
+        reader sees the old version or the new one. Superseded files
+        stay readable through ``read_version`` until ``vacuum``.
 
-    def upsert_file_pruned(self, batch, table, keys):
-        from ..sources.deltalog import _replay
+        Returns {files_total, files_rewritten, rows_inserted_or_updated}.
+        """
+        from ..sources.deltalog import _file_uri, _replay, read_delta
 
-        # the touched-file listing reads _metadata.file_path, which a
-        # deletion-vector masked scan (a union of file reads) lacks
-        if self.table_exists(table) and any(
-            a.get("deletionVector")
-            for a in _replay(self.path(table), None)["adds"]
-        ):
+        if not self.table_exists(table):
+            self.overwrite(batch, table)
+            return {
+                "files_total": len(self._data_files(table)),
+                "files_rewritten": 0,
+                "rows_inserted_or_updated": batch.count(),
+            }
+        tp = self.path(table)
+        state = _replay(tp, None)
+        # the touched-file listing reads _metadata.file_path, which does
+        # not resolve past the deletion-vector mask's anti-join
+        if any(a.get("deletionVector") for a in state["adds"]):
             raise NotImplementedError(
                 "upsert_file_pruned on a table with deletion vectors: "
                 "compact it first (OPTIMIZE folds the vectors in)"
             )
-        return super().upsert_file_pruned(batch, table, keys)
+        cur = read_delta(self.spark, tp, version=state["version"]).withColumn(
+            "_f", F.col("_metadata.file_path")
+        )
+        key_df = batch.select(*keys).dropDuplicates()
+        touched = [
+            r["_f"]
+            for r in cur.join(F.broadcast(key_df), keys, "left_semi")
+            .select("_f")
+            .distinct()
+            .collect()
+        ]
+        n_batch = batch.count()
+        stats = {
+            "files_total": len(state["files"]),
+            "files_rewritten": len(touched),
+            "rows_inserted_or_updated": n_batch,
+        }
+        if not touched:  # pure insert: nothing to rewrite
+            self.append(batch, table)
+            return stats
+        survivors = (
+            cur.filter(F.col("_f").isin(touched))
+            .drop("_f")
+            .join(batch.select(*keys), keys, "left_anti")
+        )
+        by_uri = {_file_uri(tp, a): a["path"] for a in state["adds"]}
+        w = self._writer(table)
+        adds = w._stage_checked(
+            w._apply_generated(survivors.unionByName(batch), state), state
+        )
+        w._commit_replace(
+            state, [by_uri[f] for f in touched], adds, op="MERGE"
+        )
+        self.refresh_bloom_index(table)  # only changed files rebuild
+        return stats
 
-    def _replace_files(self, table, touched, replacement, snapshot):
-        """The file-pruned swap as one log commit: ``remove`` the
-        touched files and ``add`` the replacement, claimed at exactly
-        ``snapshot + 1``. A commit landing since the touched files
-        were listed fails the claim (``DeltaLogError``) and reclaims
-        the staged files. Staging applies generated columns and CHECK
-        constraints like every other write; superseded files stay
-        readable through ``read_version`` until ``vacuum``."""
-        from urllib.parse import unquote, urlparse
+    # -- persisted per-file Bloom index (point-lookup file skipping) ----
+    # SCALE.md §6.3: the in-flight build_file_bloom index, promoted to
+    # a maintained side table — the Delta bloom-filter-index mechanic.
+    # ``_bloom.<table>`` is itself a log table with one row per live
+    # data file, keyed on the file's add-action path. Safety
+    # invariant: bloom_lookup treats live-but-unindexed files as
+    # "maybe contains" and always reads them, so a stale index can
+    # only cost extra file reads, NEVER a false negative; it reads the
+    # admitted files through their add actions' deletion-vector masks,
+    # so a DV-deleted row never comes back (the bits may still admit
+    # its key: a false positive costs a read, not a result).
+    # upsert_file_pruned, compact and every full rewrite
+    # (overwrite_from_plan) refresh the index incrementally (only
+    # changed files rebuild).
 
-        from ..sources.deltalog import DeltaLogError, _decode_path, _replay
+    def _bloom_table(self, table: str) -> str:
+        return f"_bloom.{table}"
+
+    def _bloom_state(self, table: str) -> dict:
+        """The table's log state, refused when the index cannot read
+        its data files by the logical key column."""
+        from ..sources.deltalog import _replay
+
+        state = _replay(self.path(table), None)
+        if state["mapping_mode"] != "none" or (
+            (state["metaData"] or {}).get("partitionColumns")
+        ):
+            raise NotImplementedError(
+                f"bloom index on {table!r}: column-mapped and partitioned "
+                "tables are out of scope (their data files do not carry "
+                "the logical columns)"
+            )
+        return state
+
+    def _bloom_rows(
+        self, table: str, state: dict, adds: list[dict], key_col: str,
+        m_bits: int, k: int,
+    ) -> DataFrame:
+        from ..sources.deltalog import _data_read_schema, _decode_path, _file_uri
 
         tp = self.path(table)
-        w = self._writer(table)
-        state = _replay(tp, snapshot)
-        live = {(tp / _decode_path(f)).resolve(): f for f in state["files"]}
-        # touched entries are the scan's _metadata.file_path URIs
-        paths = [Path(unquote(urlparse(f).path)).resolve() for f in touched]
-        gone = [str(p) for p in paths if p not in live]
-        if gone:
-            raise DeltaLogError(
-                f"{table}: a commit landed since version {snapshot}; "
-                f"touched files not live there: {gone[:3]}"
+        # the raw files, unmasked: a DV-deleted row's key may stay set
+        # (a false positive), and _metadata.file_path keys each row
+        base = (
+            self.spark.read.schema(_data_read_schema(state))
+            .parquet(*[str(tp / _decode_path(a["path"])) for a in adds])
+            .select(
+                F.col("_metadata.file_path").alias("__uri"),
+                # hash the canonical STRING rendering (type-stable probes)
+                F.col(key_col).cast("string").alias("__k"),
             )
-        adds = w._stage_checked(w._apply_generated(replacement, state), state)
-        w._commit_replace(state, [live[p] for p in paths], adds, op="MERGE")
-
-    def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
-        raise NotImplementedError(
-            "bloom_lookup reads data files directly, past the log's "
-            "deletion-vector masks and column mapping"
         )
+        pos = F.array(
+            *[
+                F.pmod(F.xxhash64("__k", F.lit(i)), F.lit(m_bits)).cast("int")
+                for i in range(k)
+            ]
+        )
+        built = (
+            base.select("__uri", F.explode(pos).alias("p"))
+            .groupBy("__uri")
+            .agg(F.array_sort(F.collect_set("p")).alias("bits"))
+        )
+        # a ZERO-ROW data file contributes no agg group — give it an
+        # explicit empty-bits row so the index stays 1:1 with the live
+        # file set (empty bits admit nothing: correct, the file holds
+        # no keys); the name list is manifest-sized metadata
+        names_df = self.spark.createDataFrame(
+            [(a["path"], _file_uri(tp, a)) for a in adds],
+            "file string, __uri string",
+        )
+        return names_df.join(built, "__uri", "left").select(
+            "file",
+            F.coalesce("bits", F.array().cast("array<int>")).alias("bits"),
+            F.lit(key_col).alias("key_col"),
+            F.lit(int(m_bits)).alias("m_bits"),
+            F.lit(int(k)).alias("k"),
+        )
+
+    def build_bloom_index(
+        self, table: str, key_col: str, m_bits: int = 65536, k: int = 3
+    ) -> int:
+        """Build and persist the per-file Bloom index of ``table`` on
+        ``key_col`` as the ``_bloom.<table>`` side table (one row per
+        live data file: add-action path, sorted set-bit positions, and
+        the build parameters). Built distributedly — explode k probe
+        positions, one file-keyed agg; no driver-side footer loop.
+        Returns the number of files indexed."""
+        state = self._bloom_state(table)
+        if not state["adds"]:
+            raise ValueError(f"table {table!r} has no data files to index")
+        self.overwrite(
+            self._bloom_rows(table, state, state["adds"], key_col, m_bits, k),
+            self._bloom_table(table),
+        )
+        return len(state["adds"])
+
+    def refresh_bloom_index(self, table: str) -> dict | None:
+        """Incrementally reconcile the bloom index with the log's live
+        file set: drop rows of files no longer live, build rows for
+        live files not yet indexed (cost ∝ changed files, the Delta
+        index-maintenance shape). No-op (None) when the table has no
+        index. File lists are manifest-sized metadata — the same
+        driver-side scale as any table-format planner."""
+        bt = self._bloom_table(table)
+        if not self.table_exists(bt):
+            return None
+        idx = self.read(bt)
+        # ONE metadata collect: cfg and the indexed-file set ride the
+        # same tiny scan (one row per data file)
+        meta = idx.select("file", "key_col", "m_bits", "k").collect()
+        if not meta:
+            return None
+        state = self._bloom_state(table)
+        live = {a["path"]: a for a in state["adds"]}
+        indexed = {r["file"] for r in meta}
+        added = sorted(set(live) - indexed)
+        removed = indexed - set(live)
+        stats = {
+            "files_added": len(added),
+            "files_removed": len(removed),
+            "files_total": len(live),
+        }
+        if not added and not removed:
+            return stats
+        out = idx.filter(F.col("file").isin(sorted(indexed & set(live))))
+        if added:
+            m = meta[0]
+            out = out.unionByName(
+                self._bloom_rows(
+                    table, state, [live[n] for n in added], m["key_col"],
+                    int(m["m_bits"]), int(m["k"]),
+                )
+            )
+        self.overwrite_from_plan(out, bt)
+        return stats
+
+    def bloom_lookup(self, table: str, key_col: str, value) -> DataFrame:
+        """Point lookup ``key_col = value`` through the persisted
+        bloom index: read indexed files only when their bloom admits
+        all probe positions, PLUS every live file the index has not
+        seen yet (a stale index costs reads, never results). The
+        files are read through their deletion-vector masks, so the
+        result is identical to the full-scan filter of :meth:`read`."""
+        from ..sources.deltalog import _data_read_schema, _read_adds_mor
+
+        # ONE job: the executors test each file's bits against the k
+        # probe positions and only (file, admitted) reaches the driver,
+        # never the bit arrays. The probes are the build's expression
+        # (xxhash64 of the string rendering and the probe index, mod
+        # m_bits), so they match the build-time bits exactly. A row
+        # indexed on another column gets a NULL flag.
+        v = F.lit(value).cast("string")
+        probes = F.transform(
+            F.array_repeat(F.lit(0), F.col("k")),
+            lambda _, i: F.pmod(F.xxhash64(v, i), F.col("m_bits")).cast("int"),
+        )
+        rows = (
+            self.read(self._bloom_table(table))
+            .select(
+                "file",
+                "key_col",
+                F.when(
+                    F.col("key_col") == key_col,
+                    F.size(F.array_except(probes, F.col("bits"))) == 0,
+                ).alias("admitted"),
+            )
+            .collect()
+        )
+        if not rows or any(r["admitted"] is None for r in rows):
+            raise ValueError(
+                f"bloom index of {table!r} is not built on {key_col!r} "
+                f"(indexed: {sorted({r['key_col'] for r in rows})})"
+            )
+        admitted = {r["file"] for r in rows if r["admitted"]}
+        indexed = {r["file"] for r in rows}
+        state = self._bloom_state(table)
+        schema = _data_read_schema(state)
+        to_read = [
+            a
+            for a in state["adds"]
+            if a["path"] in admitted or a["path"] not in indexed  # unindexed ⇒ maybe
+        ]
+        if not to_read:
+            return self.spark.createDataFrame([], schema)
+        return _read_adds_mor(
+            self.spark, self.path(table), to_read, schema
+        ).filter(F.col(key_col) == value)
 
     def restore(self, table: str, version: int) -> int:
         """RESTORE = re-commit an old version's live set as NEW adds
@@ -1502,36 +1129,30 @@ class DeltaLogWarehouse(Warehouse):
         w._commit_replace(
             state, files, w._stage(df), op="OPTIMIZE", data_change=False
         )
+        self.refresh_bloom_index(table)
         return n_before
 
     def vacuum(self, min_age: float = 900.0) -> int:
-        """Delta VACUUM semantics on the protocol store: unlink data
-        files that are (a) NOT referenced by the LATEST version and
-        (b) older than ``min_age`` seconds since last touch — the
-        retention window protecting in-flight readers and time travel
-        (Delta's default is 7 days; tests pass 0). The log itself is
-        never vacuumed (Delta keeps it; checkpointing, not deletion,
-        bounds replay cost). The base sweep runs first, so staging dirs
-        a crashed writer left go too. Returns files and dirs removed.
+        """Delta VACUUM on every log table under the root, after the
+        base sweep of staging dirs a crashed writer left:
+        ``DeltaLogWriter.vacuum`` with a ``min_age``-second retention
+        (Delta's default is 7 days; tests pass 0). A file the latest
+        version no longer lists goes once its ``remove`` action is
+        older than the retention, so in-flight readers and time travel
+        keep it that long; a superseded deletion-vector sidecar goes
+        too. The log itself is never vacuumed (checkpointing, not
+        deletion, bounds replay cost). Returns files and dirs removed.
         NOTE: vacuumed versions remain listed in history but fail fast
         at read (the referenced files are gone — same contract as real
         Delta)."""
-        from ..sources.deltalog import _commits, _replay
+        from ..sources.deltalog import DeltaLogWriter, _commits
 
         removed = super().vacuum()
-        now = time.time()
         for log_dir in self.root.glob("**/_delta_log"):
-            tdir = log_dir.parent
-            if not _commits(tdir):
-                continue
-            live = set(_replay(tdir, None)["files"])
-            for f in tdir.glob("*.parquet"):
-                if (
-                    f.name not in live
-                    and now - f.stat().st_mtime >= min_age
-                ):
-                    f.unlink()
-                    removed += 1
+            if _commits(log_dir.parent):
+                removed += DeltaLogWriter(self.spark, log_dir.parent).vacuum(
+                    retention_ms=int(min_age * 1000), force=True
+                )["files_removed"]
         return removed
 
 
@@ -1644,28 +1265,4 @@ class IcebergMetaWarehouse(Warehouse):
         raise NotImplementedError(
             "overwrite_partitions bypasses Iceberg metadata; "
             "IcebergMetaWarehouse tables are unpartitioned"
-        )
-
-    def upsert_file_pruned(self, batch, table, keys, **kw):
-        raise NotImplementedError(
-            "file-pruned DML moves files under the metadata's feet — "
-            "use upsert (rewrite via snapshots)"
-        )
-
-    def delete_where_dv(self, table: str, predicate) -> dict:
-        raise NotImplementedError(
-            "the parquet deletion-vector side table is invisible to "
-            "Iceberg readers — use delete_where (rewrite via snapshots)"
-        )
-
-    def delete_keys_dv(self, table: str, keys_df, keys) -> dict:
-        raise NotImplementedError(
-            "the parquet deletion-vector side table is invisible to "
-            "Iceberg readers — use IcebergTable.equality_delete"
-        )
-
-    def build_bloom_index(self, table: str, key_col: str, **kw) -> int:
-        raise NotImplementedError(
-            "bloom_lookup reads data files directly, past the "
-            "snapshot's position and equality deletes"
         )

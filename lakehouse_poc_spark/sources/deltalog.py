@@ -368,6 +368,7 @@ def _read_checkpoint(table_path: str | Path, version: int) -> dict | None:
     if not f.exists():
         return None
     live: dict[str, dict] = {}
+    tombstones: dict[str, int | None] = {}
     schema: str | None = None
     meta: dict | None = None
     txns: dict[str, int] = {}
@@ -376,6 +377,9 @@ def _read_checkpoint(table_path: str | Path, version: int) -> dict | None:
     reader_features: list = []
     writer_features: list = []
     for row in pq.read_table(str(f)).to_pylist():
+        if row.get("remove") is not None:
+            r = row["remove"]
+            tombstones[r["path"]] = r.get("deletionTimestamp")
         if row.get("protocol") is not None:
             min_reader = row["protocol"]["minReaderVersion"]
             min_writer = row["protocol"].get("minWriterVersion") or 2
@@ -407,6 +411,7 @@ def _read_checkpoint(table_path: str | Path, version: int) -> dict | None:
             live[a["path"]] = a
     return {
         "live": live,
+        "tombstones": tombstones,
         "schema": schema,
         "metaData": meta,
         "txns": txns,
@@ -513,6 +518,12 @@ def write_checkpoint(table_path: str | Path, version: int | None = None) -> Path
             }
         },
     ] + [{"add": a} for a in state["adds"]] + [
+        # a tombstone is kept while its file is still on disk: VACUUM
+        # ages the file by it (one vacuumed needs no tombstone)
+        {"remove": {"path": f, "deletionTimestamp": ts, "dataChange": False}}
+        for f, ts in sorted(state["tombstones"].items())
+        if (Path(table_path) / _decode_path(f)).exists()
+    ] + [
         {"txn": {"appId": app, "version": ver}}
         for app, ver in sorted((state.get("txns") or {}).items())
     ]
@@ -542,7 +553,8 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
     replay only the JSON commits after it. Full JSON replay when no
     checkpoint applies; fail fast if the log was cleaned past the
     requested version (commit 0 gone and no covering checkpoint).
-    Returns {'version', 'files', 'schema', 'adds', 'metaData', …}."""
+    Returns {'version', 'files', 'schema', 'adds', 'tombstones',
+    'metaData', …}."""
     cs = _commits(table_path)
     ck_meta = _last_checkpoint_meta(table_path)
     if not cs and ck_meta is None:
@@ -557,6 +569,7 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
             f"version {v} not in [0, {latest}] for {table_path}"
         )
     live: dict[str, dict] = {}
+    tombstones: dict[str, int | None] = {}
     meta_action: dict | None = None
     schema: str | None = None
     txns: dict[str, int] = {}
@@ -569,6 +582,7 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
         ck = _read_checkpoint(table_path, ck_meta["version"])
         if ck is not None:
             live = dict(ck["live"])
+            tombstones = dict(ck["tombstones"])
             schema = ck["schema"]
             meta_action = ck["metaData"]
             txns = dict(ck.get("txns") or {})
@@ -607,8 +621,11 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
                 schema = action["metaData"].get("schemaString")
             elif "add" in action:
                 live[action["add"]["path"]] = action["add"]
+                tombstones.pop(action["add"]["path"], None)
             elif "remove" in action:
-                live.pop(action["remove"]["path"], None)
+                r = action["remove"]
+                live.pop(r["path"], None)
+                tombstones[r["path"]] = r.get("deletionTimestamp")
             elif "txn" in action:
                 t = action["txn"]
                 txns[t["appId"]] = max(
@@ -645,6 +662,8 @@ def _replay(table_path: str | Path, version: int | None) -> dict:
         "files": sorted(live),
         "schema": schema,
         "adds": [live[k] for k in sorted(live)],
+        # path -> deletionTimestamp of each file a remove dropped
+        "tombstones": tombstones,
         "metaData": meta_action,
         "txns": txns,
         "min_reader": min_reader,
@@ -786,52 +805,85 @@ def read_delta(
     return out
 
 
+# ASCII characters Hadoop's ``Path`` leaves unescaped in a URI path
+# (java.net.URI's unreserved, punct and "@"/"/"); non-ASCII stays raw
+_URI_PATH_SAFE = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    "-_.!~*'(),;:$&+=@/"
+)
+
+
+def _file_uri(base: Path, add: dict) -> str:
+    """An add action's data file in the form Spark reports it as
+    ``_metadata.file_path`` — the key that ties a scanned row back to
+    its add action (deletion-vector masks, the DV writer's bitmaps,
+    the file-pruned MERGE's touched-file listing). Spark qualifies the
+    path it was given without resolving symlinks and percent-escapes
+    it the way Hadoop's ``Path`` does, so this does the same."""
+    import os
+    from urllib.parse import quote
+
+    p = os.path.abspath(base / _decode_path(add["path"]))
+    return "file:" + "".join(
+        c if c in _URI_PATH_SAFE or ord(c) > 127 else quote(c) for c in p
+    )
+
+
+def _dv_mask(spark: SparkSession, base: Path, adds: list[dict]):
+    """The deleted ``(__dv_fp, __dv_ri)`` positions of ``adds``' live
+    deletion vectors as ONE broadcast relation, or None when none of
+    them carries a deleted row. The positions ship through one pandas
+    ``createDataFrame`` (one Arrow batch; a plain-list frame pickles
+    row by row)."""
+    from pyspark.sql import functions as F
+
+    pairs = [
+        (_file_uri(base, a), int(p))
+        for a in adds
+        if a.get("deletionVector")
+        for p in _dv_positions(a["deletionVector"], base)
+    ]
+    if not pairs:
+        return None
+    import pandas as pd
+
+    return F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame(pairs, columns=["__dv_fp", "__dv_ri"])
+        )
+    )
+
+
 def _read_adds_mor(
     spark: SparkSession, base: Path, adds: list[dict], read_schema
 ) -> DataFrame:
     """Read a list of add actions with ``read_schema`` (the log-planned
     :func:`_data_read_schema`), applying MERGE-ON-READ deletion-
-    vector masks: clean files bulk-read in one scan; each DV'd file
-    reads with its parquet row index and the deleted positions
-    anti-joined away. The one read path over table data files —
-    ``read_delta`` and every writer-side rewrite (OPTIMIZE, the
-    warehouse compaction) go through it, so no path resurrects
-    deleted rows. A reader materializes each DV bitmap in memory
-    by design (that's what a DV IS); position relations are
-    broadcast, never shuffled."""
+    vector masks. Without a deletion vector this is one plain scan.
+    With them it is still one scan — of every file, keeping each row's
+    ``_metadata`` file and row index — and one anti-join against the
+    broadcast position relation of :func:`_dv_mask`. The one read path
+    over table data files — ``read_delta`` and every writer-side
+    rewrite (OPTIMIZE, the warehouse compaction) go through it, so no
+    path resurrects deleted rows. A reader materializes each DV bitmap
+    in memory by design (that's what a DV IS)."""
     from pyspark.sql import functions as F
 
-    rdr = spark.read.schema(read_schema)
-    clean = [a for a in adds if not a.get("deletionVector")]
-    parts = []
-    if clean:
-        parts.append(
-            rdr.parquet(
-                *[str(base / _decode_path(a["path"])) for a in clean]
-            )
+    scan = spark.read.schema(read_schema).parquet(
+        *[str(base / _decode_path(a["path"])) for a in adds]
+    )
+    mask = _dv_mask(spark, base, adds)
+    if mask is None:
+        return scan
+    return (
+        scan.select(
+            "*",
+            F.col("_metadata.file_path").alias("__dv_fp"),
+            F.col("_metadata.row_index").alias("__dv_ri"),
         )
-    for a in adds:
-        if not a.get("deletionVector"):
-            continue
-        positions = _dv_positions(a["deletionVector"], base)
-        d = rdr.parquet(
-            str(base / _decode_path(a["path"]))
-        ).withColumn("__dv_ri", F.col("_metadata.row_index"))
-        if positions:
-            import pandas as pd
-
-            # Arrow path: a plain-list createDataFrame pickles
-            # row-by-row (~1 s per thousand rows); the pandas
-            # bridge ships the position vector in one Arrow batch
-            pos_df = spark.createDataFrame(
-                pd.DataFrame({"__dv_ri": positions})
-            )
-            d = d.join(F.broadcast(pos_df), "__dv_ri", "left_anti")
-        parts.append(d.drop("__dv_ri"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        .join(mask, ["__dv_fp", "__dv_ri"], "left_anti")
+        .drop("__dv_fp", "__dv_ri")
+    )
 
 
 _CDF_PROP = "delta.enableChangeDataFeed"
@@ -1657,10 +1709,7 @@ class DeltaLogWriter:
         from pyspark.sql.types import StructType
 
         base = self.path
-        by_uri: dict[str, dict] = {}
-        for a in state["adds"]:
-            uri = "file:" + str((base / _decode_path(a["path"])).resolve())
-            by_uri[uri] = a
+        by_uri = {_file_uri(base, a): a for a in state["adds"]}
         pcols = list(
             (state["metaData"] or {}).get("partitionColumns") or []
         )
@@ -1685,23 +1734,9 @@ class DeltaLogWriter:
                     c, F.lit(val).cast(schema[c].dataType)
                 )
             df = part if df is None else df.unionByName(part)
-        existing: dict[str, list[int]] = {}
-        old_pairs: list[tuple[str, int]] = []
-        for uri, a in by_uri.items():
-            d = a.get("deletionVector")
-            if d:
-                pos = _dv_positions(d, base)
-                existing[uri] = pos
-                old_pairs += [(uri, int(p)) for p in pos]
-        if old_pairs:
-            import pandas as pd
-
-            mask = self.spark.createDataFrame(
-                pd.DataFrame(old_pairs, columns=["__dv_fp", "__dv_ri"])
-            )
-            df = df.join(
-                F.broadcast(mask), ["__dv_fp", "__dv_ri"], "left_anti"
-            )
+        mask = _dv_mask(self.spark, base, state["adds"])
+        if mask is not None:
+            df = df.join(mask, ["__dv_fp", "__dv_ri"], "left_anti")
         matches_df = select_matches(df)
         matched = (
             matches_df.groupBy("__dv_fp")
@@ -1730,7 +1765,12 @@ class DeltaLogWriter:
             uri, new_pos = r["__dv_fp"], [int(p) for p in r["pos"]]
             rows_deleted += len(new_pos)
             a = by_uri[uri]
-            merged = sorted(set(existing.get(uri, [])) | set(new_pos))
+            old_pos = (
+                _dv_positions(a["deletionVector"], base)
+                if a.get("deletionVector")
+                else []
+            )
+            merged = sorted(set(old_pos) | set(new_pos))
             payload = _dv_encode(merged)
             sidecar = base / f"deletionvector_{uuid.uuid4().hex}.bin"
             sidecar.write_bytes(payload)
@@ -1995,11 +2035,16 @@ class DeltaLogWriter:
         dry_run: bool = False,
     ) -> dict:
         """VACUUM — physically delete data files that are NOT in the
-        current snapshot and whose modification time is older than
-        ``retention_ms`` (Delta VACUUM semantics: the log keeps the
-        remove actions, only the bytes go away; time travel below the
-        vacuum horizon fails from then on — restore() already
-        fail-fasts on vacuumed files). A retention under the 7-day
+        current snapshot and were dropped more than ``retention_ms``
+        ago (Delta VACUUM semantics: the log keeps the remove actions,
+        only the bytes go away; time travel below the vacuum horizon
+        fails from then on — restore() already fail-fasts on vacuumed
+        files). A file a ``remove`` action names ages from that
+        action's ``deletionTimestamp``, so a long-lived file a commit
+        just dropped stays readable for the versions that still list
+        it; an orphan no remove names (a crashed writer's staged file)
+        and a superseded DV sidecar age from their modification time.
+        A retention under the 7-day
         default requires ``force=True``, mirroring Delta's
         ``retentionDurationCheck`` guard: short retentions can race
         in-flight writers whose staged files were just renamed in.
@@ -2025,12 +2070,18 @@ class DeltaLogWriter:
             for a in state["adds"]
             if a.get("deletionVector")
         }
+        dropped = {
+            _decode_path(f): ts
+            for f, ts in state["tombstones"].items()
+            if ts is not None
+        }
         now = time.time() * 1000
         removed: list[str] = []
         for f in sorted(self.path.glob("*.parquet")):
             if f.name in live or f.name.startswith("."):
                 continue
-            if now - f.stat().st_mtime * 1000 >= retention_ms:
+            since = dropped.get(f.name, f.stat().st_mtime * 1000)
+            if now - since >= retention_ms:
                 removed.append(f.name)
                 if not dry_run:
                     f.unlink()

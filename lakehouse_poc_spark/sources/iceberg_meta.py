@@ -701,7 +701,7 @@ def read_iceberg(
     if not plan["files"]:
         return spark.createDataFrame([], ddl)
     if plan["delete_files"] or plan["eq_delete_files"]:
-        df = _read_mor(spark, ddl, plan)
+        df = _read_with_deletes(spark, ddl, plan)
     else:
         df = spark.read.schema(ddl).parquet(*plan["files"])
     if predicates:
@@ -720,7 +720,7 @@ def read_iceberg(
 POS_DELETE_DDL = "file_path string, pos long"
 
 
-def _read_mor(spark: SparkSession, ddl: str, plan: dict) -> DataFrame:
+def _read_with_deletes(spark: SparkSession, ddl: str, plan: dict) -> DataFrame:
     """Merge-on-read scan with spec v2 row-level deletes. POSITION
     deletes (content=1): data files read with their parquet row
     index; the delete relation — (data file path, row position) rows

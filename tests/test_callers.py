@@ -32,7 +32,6 @@ _TEST_ONLY_ALLOWED = {
     "reader": "Spark's DataSource read hook (Avro, TSV corpus)",
     "writer": "Spark's DataSource write hook (Avro, TSV corpus)",
     "eval": "Spark's Python UDTF row hook (RegexSpans)",
-    "compact_purge_dv": "direction 2: the Warehouse is the Delta log",
     "history": "direction 7: operation metrics surface through history()",
     "run_with_metrics": "direction 7: every stream runner records progress",
     "stream_tws_user_stats": "needs google.protobuf, not a dependency; its test skips",

@@ -213,8 +213,6 @@ def test_deltalog_warehouse_path_mechanics_fail_fast(spark, tmp_path):
     wh.upsert_file_pruned(_df(spark, [(1, "x")]), "dim.t", keys=["id"])
     assert wh.version("dim.t") == 1
     assert [(r.id, r.v) for r in wh.read("dim.t").collect()] == [(1, "x")]
-    with pytest.raises(NotImplementedError, match="v3"):
-        wh.delete_where_dv("dim.t", F.col("id") == 1)
     with pytest.raises(NotImplementedError, match="unpartitioned"):
         wh.append(_df(spark, [(1, "a")]), "dim.t", partition_by=["id"])
     # the rewrite the refusals point to commits through the log
@@ -376,6 +374,38 @@ def test_deltalog_file_pruned_upsert_refuses_deletion_vectors(spark, tmp_path):
     assert wh.upsert_file_pruned(batch, t, keys=["id"])["files_rewritten"] == 1
     got = {r.id: r.v for r in wh.read(t).collect()}
     assert len(got) == 99 and 3 not in got and got[5] == "new"
+
+
+def test_vacuum_ages_a_dropped_file_by_its_remove_action(spark, tmp_path):
+    """A file that lived long and was dropped by a fresh commit is
+    still listed by the version before it, so a reader that planned
+    that version may be reading it: VACUUM keeps it for the retention
+    counted from the remove action, not from the file's mtime. The
+    tombstone survives a checkpoint."""
+    import os
+    import time
+
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+    from lakehouse_poc_spark.sources.deltalog import write_checkpoint
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "dim.old"
+    wh.overwrite(_df(spark, [(1, "a"), (2, "b")]), t)
+    old = wh._data_files(t)
+    for f in old:  # written a day ago
+        os.utime(f, (time.time() - 86400, time.time() - 86400))
+    wh.overwrite(_df(spark, [(3, "c")]), t)  # drops them now
+    write_checkpoint(wh.path(t))
+    assert wh.vacuum(min_age=900) == 0
+    assert all(f.exists() for f in old)
+    assert wh.read_version(t, 0).count() == 2
+    # an orphan no remove names still ages by its mtime
+    orphan = wh.path(t) / "part-orphan.parquet"
+    orphan.write_bytes(b"x")
+    os.utime(orphan, (time.time() - 86400, time.time() - 86400))
+    assert wh.vacuum(min_age=900) == 1 and not orphan.exists()
+    assert wh.vacuum(min_age=0) == len(old)
+    assert [r.id for r in wh.read(t).collect()] == [3]
 
 
 def test_overwrite_widens_schema_and_append_refuses_new_columns(

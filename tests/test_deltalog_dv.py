@@ -123,6 +123,65 @@ def test_dv_vacuum_keeps_live_sidecars_sweeps_superseded(spark, tmp_path):
     assert sorted(r.id for r in read_delta(spark, p).collect()) == [2, 3, 4, 5]
 
 
+def test_warehouse_vacuum_sweeps_superseded_sidecar(spark, tmp_path):
+    """The warehouse VACUUM is the writer's, table by table, so a DV
+    sidecar a later delete superseded goes with the dropped files."""
+    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh.overwrite(_df(spark, [(i, f"v{i}") for i in range(6)]).coalesce(1), "t")
+    w = DeltaLogWriter(spark, wh.path("t"))
+    w.delete_where_dv("id = 0")
+    first = set(wh.path("t").glob("deletionvector_*.bin"))
+    w.delete_where_dv("id = 1")  # re-adds the file with a new sidecar
+    live = set(wh.path("t").glob("deletionvector_*.bin")) - first
+    assert wh.vacuum(min_age=0) == len(first)
+    assert all(not f.exists() for f in first)
+    assert all(f.exists() for f in live)
+    assert sorted(r.id for r in wh.read("t").collect()) == [2, 3, 4, 5]
+
+
+def test_masked_read_is_one_scan(spark, tmp_path):
+    """Deletion vectors on three files still plan ONE file scan: every
+    row keeps its file and row index, and one broadcast anti-join
+    drops the deleted positions."""
+    p = tmp_path / "t"
+    w = DeltaLogWriter(spark, p)
+    w.create(
+        spark.range(40)
+        .selectExpr("id", "CAST(id AS STRING) AS v")
+        .repartitionByRange(4, "id")
+    )
+    w.delete_where_dv("id % 10 = 3 AND id < 30")  # one row in 3 files
+    st = _replay(p, None)
+    assert sum(1 for a in st["adds"] if a.get("deletionVector")) == 3
+    df = read_delta(spark, p)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert sorted(r.id for r in df.collect()) == [
+        i for i in range(40) if i not in (3, 13, 23)
+    ]
+
+
+@pytest.mark.parametrize("name", ["link", "a b+c%d"])
+def test_dv_keys_rows_by_the_path_spark_reports(spark, tmp_path, name):
+    """Deletes and masks key each row by its data file as Spark reports
+    it: a table reached through a symlink, or under a name Spark
+    percent-escapes, still deletes and masks exactly."""
+    real = tmp_path / "real"
+    real.mkdir()
+    if name == "link":
+        (tmp_path / "link").symlink_to(real)
+        p = tmp_path / "link" / "t"
+    else:
+        p = real / name
+    w = _mk(spark, p)
+    assert w.delete_where_dv("id < 3")["rows_deleted"] == 3
+    assert sorted(r.id for r in read_delta(spark, p).collect()) == list(
+        range(3, 10)
+    )
+
+
 def test_dv_restore_guards_vacuumed_sidecar(spark, tmp_path):
     p = tmp_path / "t"
     w = _mk(spark, p, n=6)

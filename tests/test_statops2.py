@@ -497,8 +497,10 @@ def test_permutation_test_matches_pandas(spark):
     P = 2147483647
     hits = 0
     for p in range(1, 65):
-        side = ((101 + p * 7919) * ids + 17) % P % 2
+        side = ((101 + 2 * p * 7919) * ids + 17) % P % 2
         a, b = side == 0, side == 1
+        # every permutation splits the events: no side is empty
+        assert a.any() and b.any(), p
         d = cents[a].sum() / 100 / a.sum() - cents[b].sum() / 100 / b.sum()
         if abs(d) >= abs(d_obs):
             hits += 1

@@ -1,5 +1,6 @@
 """Warehouse maintenance ops: schema evolution on append-only raw
-tables and small-file compaction."""
+tables and small-file compaction, plus the Delta-log file-pruned MERGE
+and the bloom index it maintains."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from lakehouse_poc_spark.sinks.warehouse import Warehouse
+from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse, Warehouse
 
 
 def test_schema_evolution_on_append(spark, tmp_path):
@@ -108,45 +109,6 @@ def test_apply_scd2_changeset_rewrites_from_full_plan(spark, tmp_path):
     assert [r.val for r in wh.read("dim.t").collect()] == ["b"]
 
 
-_LOG_REFUSALS = {
-    "delete_keys_dv": lambda wh, t, df: wh.delete_keys_dv(t, df, ["id"]),
-    "build_bloom_index": lambda wh, t, df: wh.build_bloom_index(t, "id"),
-    "delete_where_dv": lambda wh, t, df: wh.delete_where_dv(t, "amt < 0"),
-}
-
-
-@pytest.mark.parametrize(
-    "backend, method",
-    [
-        (b, m)
-        for b in ("DeltaLogWarehouse", "IcebergMetaWarehouse")
-        for m in _LOG_REFUSALS
-        # the Delta-log backend has always refused delete_where_dv
-        if (b, m) != ("DeltaLogWarehouse", "delete_where_dv")
-    ],
-)
-def test_log_backed_warehouses_refuse_directory_mechanics(
-    spark, tmp_path, backend, method
-):
-    """Parquet-directory mechanics (the deletion-vector side table, a
-    bloom index over a directory glob) bypass the Delta log / Iceberg
-    metadata: they would report deletes readers never see, or find
-    removed rows. The log-backed warehouses refuse them and the table
-    is unchanged."""
-    from lakehouse_poc_spark.sinks import warehouse
-
-    wh = getattr(warehouse, backend)(spark, str(tmp_path / "wh"))
-    t = "fact.t"
-    wh.overwrite(spark.createDataFrame([(1, 10), (2, -5)], "id long, amt long"), t)
-    wh.append(spark.createDataFrame([(3, 7)], "id long, amt long"), t)
-    arg = spark.createDataFrame([(2, 0)], "id long, amt long")
-    with pytest.raises(NotImplementedError):
-        _LOG_REFUSALS[method](wh, t, arg)
-    assert wh.table_exists(t)
-    got = sorted((r.id, r.amt) for r in wh.read(t).collect())
-    assert got == [(1, 10), (2, -5), (3, 7)]
-
-
 @pytest.mark.parametrize(
     "backend, suffix",
     [("DeltaLogWarehouse", "__dl_stage."), ("IcebergMetaWarehouse", "__ice_stage.")],
@@ -156,7 +118,7 @@ def test_log_backed_failed_write_strands_no_staging_dir(
 ):
     """A write whose plan raises leaves nothing beside the table: the
     staging dir goes with the failure. A dir a crashed writer left is
-    swept by vacuum once it is older than the writer-lock ttl."""
+    swept by vacuum once it is older than 15 minutes."""
     import os
 
     from lakehouse_poc_spark.sinks import warehouse
@@ -409,20 +371,16 @@ def test_surrogate_keys_stable_and_inferred_members(spark):
 
 
 def test_upsert_file_pruned_rewrites_only_matched_files(spark, tmp_path):
-    """The parquet twin of Delta's file-pruned MERGE: on a
-    key-clustered layout a narrow batch rewrites only the files
-    holding its keys; content equals the plain-upsert contract;
-    untouched files stay physically identical (same path, same
-    bytes)."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    """Delta's file-pruned MERGE: on a key-clustered layout a narrow
+    batch rewrites only the files holding its keys; content equals
+    the plain-upsert contract; untouched files stay live and
+    physically identical (same path, same bytes)."""
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     t = "dim.c"
     # key-clustered layout: 10 files of 100 keys each (repartitionByRange)
     base = spark.range(1000).selectExpr("id AS k", "CAST(id AS STRING) AS v")
-    base.repartitionByRange(10, "k").write.parquet(str(wh.path(t)))
-    files_before = {
-        p.name: p.stat().st_mtime_ns
-        for p in wh.path(t).glob("*.parquet")
-    }
+    wh.overwrite(base.repartitionByRange(10, "k"), t)
+    files_before = {p.name: p.stat().st_mtime_ns for p in wh._data_files(t)}
     assert len(files_before) == 10
 
     # batch touches keys 0-49 (one range file) + inserts 2000-2004
@@ -439,14 +397,12 @@ def test_upsert_file_pruned_rewrites_only_matched_files(spark, tmp_path):
     assert len(got) == 1005
     assert got[0] == "new0" and got[49] == "new49" and got[50] == "50"
     assert got[2004] == "ins"
-    # untouched files are bit-identical in place (same mtime):
-    files_after = {
-        p.name: p.stat().st_mtime_ns for p in wh.path(t).glob("*.parquet")
-    }
+    # untouched files stay live, bit-identical in place (same mtime):
+    files_after = {p.name: p.stat().st_mtime_ns for p in wh._data_files(t)}
     untouched = set(files_before) & set(files_after)
     assert len(untouched) == 9
     assert all(files_before[n] == files_after[n] for n in untouched)
-    assert not list(wh.root.glob("**/*__staging"))  # staging cleaned
+    assert not list(wh.root.glob("**/*__dl_stage.*"))  # staging cleaned
 
     # pure-insert batch rewrites nothing
     stats2 = wh.upsert_file_pruned(
@@ -454,17 +410,6 @@ def test_upsert_file_pruned_rewrites_only_matched_files(spark, tmp_path):
     )
     assert stats2["files_rewritten"] == 0
     assert wh.read(t).count() == 1006
-
-    # partitioned layouts are rejected with guidance
-    wh.append(
-        spark.range(4).selectExpr("id", "CAST(id % 2 AS STRING) AS day"),
-        "fact.p",
-        partition_by=["day"],
-    )
-    with pytest.raises(ValueError, match="overwrite_partitions"):
-        wh.upsert_file_pruned(
-            spark.range(1).selectExpr("id", "'0' AS day"), "fact.p", ["id"]
-        )
 
 
 def test_compaction_by_target_bytes(spark, tmp_path):
@@ -488,104 +433,6 @@ def test_compaction_by_target_bytes(spark, tmp_path):
         wh.compact("raw.b", target_files=2, target_file_bytes=1)
     with pytest.raises(ValueError, match="exactly one"):
         wh.compact("raw.b")
-
-
-def test_vacuum_sweeps_upsert_staging_leftovers(spark, tmp_path):
-    """A crash between staging and publish in upsert_file_pruned leaves
-    <table>__upsert__staging behind; vacuum() must sweep it like the
-    other staging suffixes."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(10).selectExpr("id"), "dim.v")
-    leftover = wh.path("dim.v").with_name("v__upsert__staging")
-    leftover.mkdir(parents=True)
-    (leftover / "part-junk.parquet").write_bytes(b"x")
-    removed = wh.vacuum()
-    assert removed >= 1
-    assert not leftover.exists()
-    assert wh.read("dim.v").count() == 10  # live table untouched
-
-
-def test_writer_lock_serializes_concurrent_file_pruned_upserts(spark, tmp_path):
-    """Multi-writer file-pruned DML: two unsynchronized upserts racing
-    on the same table could both rewrite a shared file from their own
-    snapshot and the later move would drop the earlier writer's rows.
-    The per-table advisory lock serializes them — after N concurrent
-    upserts from T threads, every batch's rows must be present."""
-    import threading
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "dim.race"
-    spark.range(1000).selectExpr("id AS k", "'base' AS v").repartitionByRange(
-        4, "k"
-    ).write.parquet(str(wh.path(t)))
-
-    errors: list[Exception] = []
-
-    def writer(tid: int) -> None:
-        try:
-            for round_ in range(3):
-                # each (thread, round) updates a distinct 20-key slice
-                lo = tid * 300 + round_ * 100
-                batch = spark.createDataFrame(
-                    [(lo + i, f"w{tid}r{round_}") for i in range(20)],
-                    "k long, v string",
-                )
-                wh.upsert_file_pruned(batch, t, keys=["k"])
-        except Exception as exc:  # surfaced below — don't swallow
-            errors.append(exc)
-
-    threads = [threading.Thread(target=writer, args=(tid,)) for tid in range(3)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors, errors
-
-    got = {r.k: r.v for r in wh.read(t).collect()}
-    assert len(got) == 1000  # no duplicates, no lost rows
-    for tid in range(3):
-        for round_ in range(3):
-            lo = tid * 300 + round_ * 100
-            for i in range(20):
-                assert got[lo + i] == f"w{tid}r{round_}", (tid, round_, i)
-    # lock released: dir gone
-    assert not wh.path(t).with_name("race__lock").exists()
-
-
-def test_writer_lock_timeout_and_stale_breaker(spark, tmp_path):
-    import os as _os
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "dim.locked"
-    wh.overwrite(spark.range(10).selectExpr("id AS k", "'a' AS v"), t)
-    lock = wh.path(t).with_name("locked__lock")
-
-    # live lock (fresh mtime) → contender times out
-    lock.mkdir()
-    with pytest.raises(TimeoutError, match="writer lock"):
-        with wh._writer_lock(t, timeout=0.3):
-            pass
-    # stale lock (older than ttl) → broken and acquired
-    old = 1_000_000.0
-    _os.utime(lock, (old, old))
-    with wh._writer_lock(t, timeout=0.3):
-        assert lock.exists()  # re-created by the winner
-    assert not lock.exists()
-
-
-def test_vacuum_sweeps_stale_writer_locks_only(spark, tmp_path):
-    import os as _os
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(5).selectExpr("id"), "dim.w")
-    stale = wh.path("dim.w").with_name("w__lock")
-    stale.mkdir()
-    _os.utime(stale, (1_000_000.0, 1_000_000.0))
-    fresh = wh.path("dim.w").parent / "other__lock"
-    fresh.mkdir()
-    wh.vacuum()
-    assert not stale.exists()
-    assert fresh.exists()  # young lock may be live — must survive
 
 
 def test_file_bloom_prunes_without_false_negatives(spark, tmp_path):
@@ -645,87 +492,20 @@ def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
     assert sorted(r["id"] for r in wh.read(t).collect()) == [2, 3, 4]
 
 
-def test_writer_lock_release_verifies_ownership(spark, tmp_path):
-    """A past-ttl-but-alive holder whose lock was broken by a
-    contender must NOT delete the new holder's lock on its way out
-    (ADVICE r6: release checks the owner token)."""
-    import os as _os
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "dim.own"
-    wh.overwrite(spark.range(3).selectExpr("id"), t)
-    lock = wh.path(t).with_name("own__lock")
-
-    slow = wh._writer_lock(t)
-    slow.__enter__()
-    _os.utime(lock, (1_000_000.0, 1_000_000.0))  # holder overran the ttl
-    # the contender is a second instance, as a second process would be
-    wh2 = Warehouse(spark, str(tmp_path / "wh"))
-    fast = wh2._writer_lock(t, timeout=1.0)
-    fast.__enter__()  # breaks the stale lock, acquires its own
-    assert lock.exists()
-    slow.__exit__(None, None, None)  # slow holder exits late
-    assert lock.exists()  # fast holder's lock untouched
-    fast.__exit__(None, None, None)
-    assert not lock.exists()
-
-
-def test_stale_lock_break_has_single_winner(spark, tmp_path):
-    """N threads racing to break ONE stale lock: the tombstone-rename
-    claim admits exactly one contender into the critical section at a
-    time (the pre-fix rmtree→mkdir interleave let two break-and-hold)."""
-    import os as _os
-    import threading
-    import time as _time
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "dim.stale"
-    wh.overwrite(spark.range(3).selectExpr("id"), t)
-    lock = wh.path(t).with_name("stale__lock")
-    lock.mkdir()
-    _os.utime(lock, (1_000_000.0, 1_000_000.0))
-
-    inside: list[int] = []
-    overlap: list[int] = []
-    gate = threading.Lock()
-    errors: list[Exception] = []
-
-    def contender(i: int) -> None:
-        try:
-            with wh._writer_lock(t, timeout=15.0):
-                with gate:
-                    if inside:
-                        overlap.append(i)
-                    inside.append(i)
-                _time.sleep(0.02)
-                with gate:
-                    inside.remove(i)
-        except Exception as exc:
-            errors.append(exc)
-
-    threads = [
-        threading.Thread(target=contender, args=(i,)) for i in range(6)
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors, errors
-    assert not overlap, f"double-held by {overlap}"
-    assert not lock.exists()
-
-
 def test_persisted_bloom_index_maintained_through_dml(spark, tmp_path):
     """SCALE.md 6.3: the bloom index lives as a _bloom.<table> side
-    table, refreshes INCREMENTALLY inside file-pruned DML (only
-    rewritten files rebuild) and at the end of every full rewrite, and
-    bloom_lookup through it equals the full-scan filter before and
-    after every mutation."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    table keyed on the log's live files, refreshes INCREMENTALLY inside
+    file-pruned DML (only rewritten files rebuild) and at the end of
+    every full rewrite, and bloom_lookup through it equals the
+    full-scan filter before and after every mutation."""
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     t = "raw.k"
-    spark.range(2000).selectExpr(
-        "id AS k", "CAST(id % 7 AS STRING) AS v"
-    ).repartitionByRange(8, "k").write.parquet(str(wh.path(t)))
+    wh.overwrite(
+        spark.range(2000)
+        .selectExpr("id AS k", "CAST(id % 7 AS STRING) AS v")
+        .repartitionByRange(8, "k"),
+        t,
+    )
     n_files = wh.build_bloom_index(t, "k")
     assert n_files == 8
     assert wh.table_exists("_bloom.raw.k")
@@ -777,7 +557,7 @@ def test_full_rewrite_dml_keeps_bloom_index_current(spark, tmp_path, dml):
     """A full-rewrite DML replaces every data file; the rewrite's
     commit re-indexes them, so no later bloom_lookup reads the whole
     table for want of an index row."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     t = "raw.b"
     wh.overwrite(
         spark.range(200).selectExpr("id AS k", "'old' AS v").repartition(4), t
@@ -795,11 +575,11 @@ def test_bloom_lookup_survives_stale_index_without_false_negatives(
     """An append the index has not seen yet: its files count as
     'maybe contains' and are always read, so staleness can never drop
     a result row."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
     t = "raw.s"
-    spark.range(100).selectExpr("id AS k", "'old' AS v").coalesce(
-        2
-    ).write.parquet(str(wh.path(t)))
+    wh.overwrite(
+        spark.range(100).selectExpr("id AS k", "'old' AS v").coalesce(2), t
+    )
     wh.build_bloom_index(t, "k")
     # append OUTSIDE the hooked DML paths: index is now stale
     wh.append(
@@ -812,119 +592,36 @@ def test_bloom_lookup_survives_stale_index_without_false_negatives(
     assert [r.v for r in wh.bloom_lookup(t, "k", 999).collect()] == ["fresh"]
 
 
-def test_vacuum_sweeps_stranded_lock_tombstones(spark, tmp_path):
-    """A crash between the stale-break claim rename and its rmtree
-    strands a <table>__lock.tomb.* dir; vacuum removes it at any age
-    (claimed tombstones are never live locks)."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(3).selectExpr("id"), "dim.t")
-    tomb = wh.path("dim.t").with_name("t__lock.tomb.deadbeef")
-    tomb.mkdir()
-    assert wh.vacuum() >= 1
-    assert not tomb.exists()
+def test_bloom_lookup_never_returns_a_dv_deleted_row(spark, tmp_path):
+    """A deletion vector leaves the file and its bloom bits in place,
+    so the index still admits the file; the lookup reads it through
+    the add action's mask and the deleted row stays deleted."""
+    from lakehouse_poc_spark.sources.deltalog import DeltaLogWriter
 
-
-def test_deletion_vector_delete_matches_cow(spark, tmp_path):
-    """MOR delete via deletion vectors: read_mor equals the
-    copy-on-write delete result; data files stay untouched until
-    compaction purges them."""
-    import hashlib
-
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "fact.dv"
-    df = spark.range(100).selectExpr(
-        "id", "CASE WHEN id % 10 = 0 THEN NULL ELSE id * 2 END AS v"
-    ).repartition(4)
-    wh.overwrite(df, t)
-    before_files = {
-        p.name: hashlib.md5(p.read_bytes()).hexdigest()
-        for p in wh.path(t).glob("*.parquet")
-    }
-
-    # NULL-predicate rows (v IS NULL) must SURVIVE and not be counted
-    stats = wh.delete_where_dv(t, "v < 40")
-    assert stats["rows_deleted"] == 18  # ids 1..19 minus the 1 null (id 10)
-    live = wh.read_mor(t)
-    assert live.count() == 82
-    assert live.filter("v IS NULL").count() == 10  # all nulls survive
-    # data files untouched (pure MOR)
-    after_files = {
-        p.name: hashlib.md5(p.read_bytes()).hexdigest()
-        for p in wh.path(t).glob("*.parquet")
-    }
-    assert after_files == before_files
-
-    # double delete with the same predicate is a no-op
-    stats2 = wh.delete_where_dv(t, "v < 40")
-    assert stats2["rows_deleted"] == 0
-    assert wh.read_mor(t).count() == 82
-
-    # a second, overlapping delete composes
-    stats3 = wh.delete_where_dv(t, "id < 30")
-    assert stats3["rows_deleted"] == 30 - 18  # 18 of them already dead
-    assert wh.read_mor(t).count() == 70
-
-    expect = sorted(
-        (r.id, r.v)
-        for r in df.filter(
-            "NOT coalesce(v < 40, false) AND NOT coalesce(id < 30, false)"
-        ).collect()
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "raw.d"
+    wh.overwrite(
+        spark.range(400)
+        .selectExpr("id % 100 AS k", "CAST(id AS STRING) AS v")
+        .repartitionByRange(4, "k"),
+        t,
     )
-    assert sorted((r.id, r.v) for r in wh.read_mor(t).collect()) == expect
-
-    # purge: only tombstoned files rewrite; result identical; DV gone
-    purged = wh.compact_purge_dv(t)
-    assert purged["rows_purged"] == 30
-    assert not wh.table_exists(wh._dv_table(t))
-    assert sorted((r.id, r.v) for r in wh.read(t).collect()) == expect
-    assert sorted((r.id, r.v) for r in wh.read_mor(t).collect()) == expect
+    wh.build_bloom_index(t, "k")
+    DeltaLogWriter(spark, wh.path(t)).delete_where_dv("v = '42'")
+    got = sorted(r.v for r in wh.bloom_lookup(t, "k", 42).collect())
+    assert got == ["142", "242", "342"]
+    assert wh.refresh_bloom_index(t)["files_added"] == 0  # same files
 
 
-def test_dv_guards_partitioned_layout_and_cow_mixing(spark, tmp_path):
-    """Deletion vectors refuse hive-partitioned layouts (basenames
-    repeat across partition dirs) and CoW DML refuses to run over an
-    active vector (rewrites would resurrect deleted rows)."""
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse
+def test_bloom_index_refuses_column_mapped_tables(spark, tmp_path):
+    from lakehouse_poc_spark.sources.deltalog import DeltaLogWriter
 
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    part = "fact.pdv"
-    spark.range(20).selectExpr("id", "id % 2 AS p").write.partitionBy(
-        "p"
-    ).parquet(str(wh.path(part)))
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        wh.delete_where_dv(part, "id = 3")
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        wh.read_mor(part)
-
-    flat = "fact.fdv"
-    wh.overwrite(spark.range(20).selectExpr("id", "id AS v"), flat)
-    wh.delete_where_dv(flat, "id < 5")
-    for op in (
-        lambda: wh.upsert_file_pruned(
-            spark.range(3).selectExpr("id", "id AS v"), flat, keys=["id"]
-        ),
-        lambda: wh.delete_where(flat, "id = 9"),
-        lambda: wh.upsert(
-            spark.range(3).selectExpr("id", "id AS v"), flat, keys=["id"]
-        ),
-        lambda: wh.compact(flat, target_files=1),
-    ):
-        with pytest.raises(ValueError, match="active deletion vector"):
-            op()
-    # purge clears the way for CoW again
-    wh.compact_purge_dv(flat)
-    wh.delete_where(flat, "id = 9")
-    got = sorted(r.id for r in wh.read(flat).collect())
-    assert got == [i for i in range(5, 20) if i != 9]
-
-    # overwrite on a DV'd table drops the stale vector
-    wh.delete_where_dv(flat, "id = 10")
-    assert wh.table_exists(wh._dv_table(flat))
-    wh.overwrite(spark.range(3).selectExpr("id", "id AS v"), flat)
-    assert not wh.table_exists(wh._dv_table(flat))
-    assert wh.read_mor(flat).count() == 3
+    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    t = "raw.m"
+    wh.overwrite(spark.range(10).selectExpr("id AS k", "'x' AS v"), t)
+    DeltaLogWriter(spark, wh.path(t)).rename_column("v", "w")
+    with pytest.raises(NotImplementedError, match="column-mapped"):
+        wh.build_bloom_index(t, "k")
 
 
 def test_mv_incremental_scans_only_new_files(spark, tmp_path):
