@@ -10,6 +10,10 @@ defaults-merge shape, config.py::merge_defaults). YAML honors the
 reference's declared config-from-YAML intent
 (notebooks/pipeline_core.py:8-9 — "# Konfiguration (aus YAML…)").
 
+Each table is written as a Delta table (parquet files plus a
+``_delta_log/`` of JSON commits) under the warehouse root, readable by
+any Delta runtime; the tables' pipelines run concurrently.
+
 Example:
     python -m lakehouse_poc_spark \\
         --config pipelines.yaml --warehouse /data/wh \\
@@ -57,7 +61,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--config", required=True, help="pipeline config JSON or YAML"
     )
-    p.add_argument("--warehouse", required=True, help="warehouse root dir")
+    p.add_argument(
+        "--warehouse", required=True, help="warehouse root dir (Delta tables)"
+    )
     p.add_argument(
         "--run-ts",
         default=None,

@@ -27,17 +27,23 @@ overlap pruning from "reads everything anyway" into "reads 1 file".
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.deltalog import literal_path
+
 
 def collect_file_stats(
-    spark: SparkSession, path: str, columns: list[str]
+    spark: SparkSession, files: list[str | Path], columns: list[str]
 ) -> DataFrame:
-    """Per-file row counts and column min/max for ``columns``, computed
-    distributedly (no driver-side footer loop). One row per data file:
+    """Per-file row counts and column min/max for ``columns`` over
+    ``files`` (a table's live data files — a log table's directory
+    also holds superseded ones), computed distributedly (no
+    driver-side footer loop). One row per data file:
     (file, n_rows, <col>_min, <col>_max, ...)."""
-    df = spark.read.parquet(path).select(
+    df = spark.read.parquet(*map(literal_path, files)).select(
         F.col("_metadata.file_path").alias("file"), *columns
     )
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
@@ -124,10 +130,14 @@ def pruned_read_multi(
 # -- per-file Bloom filter index (point-lookup file skipping) -----------
 
 def build_file_bloom(
-    spark: SparkSession, path: str, key_col: str, m_bits: int = 65536, k: int = 3
+    spark: SparkSession,
+    files: list[str | Path],
+    key_col: str,
+    m_bits: int = 65536,
+    k: int = 3,
 ) -> DataFrame:
-    """Per-file Bloom filter over ``key_col`` — the Delta bloom-filter
-    index mechanic on a plain parquet directory. Min/max skipping
+    """Per-file Bloom filter over ``key_col`` for each of ``files`` —
+    the Delta bloom-filter index mechanic, in flight. Min/max skipping
     (:func:`collect_file_stats`) answers RANGE predicates but is
     useless for point lookups on a column the files are not clustered
     by; a per-file bloom answers ``key = v`` with no false negatives
@@ -140,7 +150,7 @@ def build_file_bloom(
     never drops a key). Built distributedly: explode k positions,
     one (file)-keyed agg; no driver-side footer loop.
     """
-    base = spark.read.parquet(path).select(
+    base = spark.read.parquet(*map(literal_path, files)).select(
         F.col("_metadata.file_path").alias("file"),
         # hash the canonical STRING rendering: xxhash64 is type-
         # sensitive, and the lookup literal (e.g. a Python int for a
@@ -208,3 +218,112 @@ def bloom_pruned_read(
             .filter(F.col(key_col) == value)
         )
     return spark.read.parquet(*surviving).filter(F.col(key_col) == value)
+
+
+# -- space-filling curves (the layout columns file skipping prunes on) --
+
+def zorder_value(x: "F.Column", y: "F.Column", bits: int = 16) -> "F.Column":
+    """Morton (Z-order) interleave of two normalized integer rank
+    columns (each already scaled into [0, 2**bits)): bit i of x lands
+    at position 2i, bit i of y at 2i+1. Locality in BOTH dimensions
+    maps to locality in the single z value, so range-clustering files
+    on z gives two-dimensional file skipping — Delta OPTIMIZE ZORDER's
+    core, as a pure expression."""
+    z = F.lit(0).cast("long")
+    for i in range(bits):
+        z = z.bitwiseOR(
+            F.shiftleft(F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i)
+        ).bitwiseOR(
+            F.shiftleft(F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i + 1)
+        )
+    return z
+
+
+def with_hilbert(
+    df: "DataFrame",
+    x: "F.Column",
+    y: "F.Column",
+    bits: int = 8,
+    out: str = "__h",
+) -> "DataFrame":
+    """HILBERT curve index of two integer rank columns (each in
+    [0, 2**bits)) — the locality-preserving alternative to Morton
+    interleave: the Hilbert walk never jumps across the square, so
+    axis-aligned box queries touch fewer, more contiguous index
+    ranges than z-order's discontinuous seams. Standard top-down
+    xy→d transform (the public Wikipedia/Hamilton formulation), ONE
+    PROJECTION LAYER PER LEVEL via withColumn — a single nested
+    expression would grow 4^bits nodes (each level references the
+    previous x/y several times), while the layered form stays linear
+    and Catalyst's CollapseProject leaves multi-referenced non-cheap
+    columns uncollapsed. Pure JVM integer ops, no UDF."""
+    d = df.withColumn("__hx", x.cast("long")).withColumn(
+        "__hy", y.cast("long")
+    ).withColumn(out, F.lit(0).cast("long"))
+    for i in range(bits - 1, -1, -1):
+        s = 1 << i
+        d = (
+            d.withColumn(
+                "__rx", F.shiftright("__hx", i).bitwiseAND(F.lit(1))
+            )
+            .withColumn(
+                "__ry", F.shiftright("__hy", i).bitwiseAND(F.lit(1))
+            )
+            .withColumn(
+                out,
+                F.col(out)
+                + F.lit(s * s)
+                * (3 * F.col("__rx")).bitwiseXOR(F.col("__ry")),
+            )
+            # rotate the quadrant: ry==0 → (flip when rx==1), swap
+            .withColumn(
+                "__nx",
+                F.when(
+                    F.col("__ry") == 0,
+                    F.when(
+                        F.col("__rx") == 1, F.lit(s - 1) - F.col("__hy")
+                    ).otherwise(F.col("__hy")),
+                ).otherwise(F.col("__hx")),
+            )
+            .withColumn(
+                "__ny",
+                F.when(
+                    F.col("__ry") == 0,
+                    F.when(
+                        F.col("__rx") == 1, F.lit(s - 1) - F.col("__hx")
+                    ).otherwise(F.col("__hx")),
+                ).otherwise(F.col("__hy")),
+            )
+            .withColumn("__hx", F.col("__nx"))
+            .withColumn("__hy", F.col("__ny"))
+        )
+    return d.drop("__hx", "__hy", "__rx", "__ry", "__nx", "__ny")
+
+
+def hilbert_sql(
+    base_select: str, keep_cols: str, x: str, y: str, bits: int = 8
+) -> str:
+    """The SAME transform as :func:`with_hilbert`, rendered as chained
+    ANSI-SQL subqueries (one per level — linear size, same reason as
+    the layered DataFrame form) so a DuckDB oracle computes
+    bit-identical indexes. ``keep_cols`` are carried through; the
+    result exposes them plus ``hd`` (the Hilbert index)."""
+    q = (
+        f"SELECT {keep_cols}, CAST({x} AS BIGINT) AS hx, "
+        f"CAST({y} AS BIGINT) AS hy, CAST(0 AS BIGINT) AS hd "
+        f"FROM ({base_select})"
+    )
+    for i in range(bits - 1, -1, -1):
+        s = 1 << i
+        rx = f"((hx >> {i}) & 1)"
+        ry = f"((hy >> {i}) & 1)"
+        q = (
+            f"SELECT {keep_cols}, "
+            f"CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
+            f"THEN {s - 1} - hy ELSE hy END) ELSE hx END AS hx, "
+            f"CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
+            f"THEN {s - 1} - hx ELSE hx END) ELSE hy END AS hy, "
+            f"hd + {s * s} * xor(3 * {rx}, {ry}) AS hd "
+            f"FROM ({q})"
+        )
+    return q

@@ -9,7 +9,9 @@ Each batch upsert:
 2. re-combines with the existing rollup rows of the AFFECTED day
    partitions only (mergeable aggregates: counts and decimal sums add;
    derived metrics like averages are computed at read time);
-3. rewrites only those day partitions (dynamic partition overwrite).
+3. rewrites only those day partitions (dynamic partition overwrite:
+   one Delta commit that removes those days' files and adds the new
+   ones).
 
 At 100 TB: cost per upsert is O(batch + touched partitions), never
 O(table). Sums are stored as DECIMAL so re-aggregation is exact and
@@ -49,6 +51,23 @@ def upsert_hourly_rollup(
     value_col: str = "value",
 ) -> None:
     """Merge one batch of events into the hourly rollup ``table``."""
+    _upsert_hourly_rollup(wh, table, batch, ts_col, dims, value_col, None)
+
+
+def _upsert_hourly_rollup(
+    wh: Warehouse,
+    table: str,
+    batch: DataFrame,
+    ts_col: str,
+    dims: list[str] | None,
+    value_col: str,
+    txn: tuple[str, int] | None,
+) -> None:
+    """The merge. With ``txn`` = (app id, batch id) the day-partition
+    overwrite commits the id with the data, and a batch id the table's
+    ledger already holds is a no-op (``DeltaLogWriter.overwrite_partitions``):
+    a rollup is not content-idempotent, so a re-delivered batch must
+    not apply twice."""
     dims = list(dims or [])
     part = _partial(batch, ts_col, dims, value_col)
     cached = None
@@ -59,7 +78,8 @@ def upsert_hourly_rollup(
         # relation is rollup-sized: |hours × dims|, never batch-sized)
         cached = part = part.persist()
         # affected day partitions only: a bounded driver-side list (days
-        # present in the batch), used for partition-pruned reads
+        # present in the batch); the day filter folds against each
+        # partition's literal, so the read scans only those days' files
         days = [r["day"] for r in part.select("day").distinct().collect()]
         existing = wh.read(table).filter(F.col("day").isin(days))
         part = (
@@ -70,10 +90,9 @@ def upsert_hourly_rollup(
                 F.sum("sum_value").cast("decimal(38,6)").alias("sum_value"),
             )
         )
+    out = part.select("hour", *dims, "n_events", "sum_value", "day")
     try:
-        wh.overwrite_partitions(
-            part.select("hour", *dims, "n_events", "sum_value", "day"), table, ["day"]
-        )
+        wh._writer(table).overwrite_partitions(out, ["day"], txn)
     finally:
         if cached is not None:
             cached.unpersist()

@@ -28,10 +28,10 @@ open rows each shuffle once on the business key, and the dimension is
 scanned once for the open rows and once for the history. Building the
 plan costs the driver a few JVM calls, whatever the width: the
 versions, the flags and the change predicate are SQL-expression
-strings, and reading the parquet dimension runs no schema job. The new
-dimension is one plan, committed through the warehouse's
-``overwrite_from_plan``: a staged-swap rewrite on the parquet layout, a
-new log version on the Delta-log and Iceberg backends.
+strings, and reading the dimension from its log runs no schema job.
+The new dimension is one plan, committed through the warehouse's
+``overwrite_from_plan``: a new Delta log version (or Iceberg
+snapshot).
 """
 
 from __future__ import annotations

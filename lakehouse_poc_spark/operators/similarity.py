@@ -350,12 +350,13 @@ def ivf_build_index(
     """Materialize the IVF index AT REST: centroids in a side table,
     corpus written partitioned by cell id. This is the 100 TB form of
     IVF — the cell assignment is paid once at build time, and a query
-    then reads only its probed cells' partition dirs (partition
-    pruning does the candidate selection; see ivf_query_at_rest).
-    Same deterministic quantizer as ivf_topk (min-id corpus vectors),
-    so at-rest results match the in-flight operator exactly. The
-    write repartitions by cell so each cell's partition dir gets
-    size-proportional files instead of one sliver per upstream task."""
+    then reads only its probed cells' files (partition pruning on
+    the log's per-file ``partitionValues`` does the candidate
+    selection; see ivf_query_at_rest). Same deterministic quantizer as
+    ivf_topk (min-id corpus vectors), so at-rest results match the
+    in-flight operator exactly. The write clusters rows by cell so each
+    cell gets size-proportional files instead of one sliver per
+    upstream task."""
     cents = (
         corpus.orderBy(id_col)
         .limit(n_centroids)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..pipeline import run_pipeline
 from ..session import overlap
-from ..sinks.warehouse import DeltaLogWarehouse, Warehouse
+from ..sinks.warehouse import Warehouse
 from ..sources.deltalog import DeltaLogWriter
 from ..sources.readers import CsvDialect, read_csv, read_parquet_table
 from . import query
@@ -64,11 +64,11 @@ CUST_CFG = PipelineConfig(
 )
 
 
-def _fresh_wh(spark: SparkSession, tag: str, cls=Warehouse) -> Warehouse:
+def _fresh_wh(spark: SparkSession, tag: str) -> Warehouse:
     root = SCRATCH / tag
     if root.exists():
         shutil.rmtree(root)
-    return cls(spark, str(root))
+    return Warehouse(spark, str(root))
 
 
 def _run_scd2_scenario(spark: SparkSession, sf_dir: str) -> Warehouse:
@@ -177,7 +177,7 @@ def scd1_customer_current(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # The FILE-PRUNED SCD1 twin: identical scenario and oracle to
 # scd1_customer_current, executed via upsert_file_pruned on a
-# DeltaLogWarehouse table that was appended and then OPTIMIZEd with
+# Warehouse table that was appended and then OPTIMIZEd with
 # range clustering (compact(cluster_by=...)) — Delta's MERGE rewrites
 # only the files holding matched keys, in one commit. It differs from
 # scd1_manifest_customers by the layout: clustered by compaction here,
@@ -209,7 +209,7 @@ def scd1_file_pruned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment")
         ),
     )
-    wh = _fresh_wh(spark, f"scd1fp_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"scd1fp_{Path(sf_dir).name}")
     t = "layer0150.dim_customer_fp"
     # cluster the seed on the key so the second upsert's pruning has
     # ranges to prune against (the 100 TB layout discipline)
@@ -229,12 +229,11 @@ def scd1_file_pruned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # The COPY-ON-WRITE MERGE SCD1 twin: identical scenario and oracle,
-# executed as upsert_file_pruned on a DeltaLogWarehouse — Delta's
+# executed as upsert_file_pruned on the log-backed Warehouse — Delta's
 # MERGE with file pruning: only the files holding matched keys are
 # rewritten, and their `remove` actions land in the same log commit
 # as the rewrite's `add`s, so a concurrent reader sees the old or the
-# new version and never duplicate keys (the move→unlink window of the
-# directory backend does not exist; tests/test_deltalog.py races a
+# new version and never duplicate keys (tests/test_deltalog.py races a
 # reader against it). Oracle-hash identity across the SCD1 twins is
 # the result-contract proof that the storage mechanics never leak
 # into query semantics.
@@ -263,7 +262,7 @@ def scd1_manifest_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment")
         ),
     )
-    wh = _fresh_wh(spark, f"scd1mf_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"scd1mf_{Path(sf_dir).name}")
     t = "layer0150.dim_customer_mf"
     wh.overwrite(batch1.repartitionByRange(8, "c_custkey"), t)
     wh.upsert_file_pruned(batch2, t, keys=["c_custkey"])
@@ -307,11 +306,11 @@ def scd2_merge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Time travel + CDC read from the Delta log: the same two-merge SCD2
-# scenario on a DeltaLogWarehouse. Merge 1 bootstraps the dimension
+# scenario on the log-backed Warehouse. Merge 1 bootstraps the dimension
 # (commit 0); merge 2 commits the rewritten dimension as version 1.
 def _run_versioned_scenario(
     spark: SparkSession, sf_dir: str
-) -> DeltaLogWarehouse:
+) -> Warehouse:
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -322,7 +321,7 @@ def _run_versioned_scenario(
             F.col("c_mktsegment")
         ),
     )
-    wh = _fresh_wh(spark, f"scd2v_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"scd2v_{Path(sf_dir).name}")
     run_pipeline(spark, wh, CUST_CFG, T1, batch=batch1)
     run_pipeline(spark, wh, CUST_CFG, T2, batch=batch2)
     return wh
@@ -418,14 +417,13 @@ def file_skipping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.filestats import collect_file_stats, pruned_read
 
     orders = read_parquet_table(spark, sf_dir, "orders")
-    root = SCRATCH / f"fskip_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = Warehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"fskip_{Path(sf_dir).name}")
     wh.append(orders.repartition(8), "raw.orders")
     wh.compact("raw.orders", target_files=8, cluster_by=["o_totalprice"])
-    path = str(wh.path("raw.orders"))
-    stats = collect_file_stats(spark, path, ["o_totalprice"])
+    # the log's live files: the table dir also keeps the files the
+    # compaction superseded, until vacuum
+    files = wh._data_files("raw.orders")
+    stats = collect_file_stats(spark, files, ["o_totalprice"])
     pruned = pruned_read(spark, stats, "o_totalprice", 100000, 150000)
     return (
         pruned.groupBy("o_orderstatus")
@@ -459,14 +457,10 @@ def bloom_file_index_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.filestats import bloom_pruned_read, build_file_bloom
 
     orders = read_parquet_table(spark, sf_dir, "orders")
-    root = SCRATCH / f"fbloom_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = Warehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"fbloom_{Path(sf_dir).name}")
     wh.append(orders.repartition(8), "raw.orders")
     wh.compact("raw.orders", target_files=8, cluster_by=["o_orderdate"])
-    path = str(wh.path("raw.orders"))
-    blooms = build_file_bloom(spark, path, "o_custkey")
+    blooms = build_file_bloom(spark, wh._data_files("raw.orders"), "o_custkey")
     hit = bloom_pruned_read(spark, blooms, "o_custkey", 7)
     return (
         hit.groupBy("o_orderstatus")
@@ -481,7 +475,7 @@ def bloom_file_index_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PERSISTED bloom index (r7, SCALE.md §6.3) on a DeltaLogWarehouse
+# PERSISTED bloom index (r7, SCALE.md §6.3) on a Warehouse (Delta log)
 # table: the index lives as a _bloom.<table> side table keyed on the
 # log's live files and is refreshed incrementally inside
 # upsert_file_pruned (only rewritten files rebuild). The query runs
@@ -509,7 +503,7 @@ def bloom_index_maintained_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     orders = read_parquet_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    wh = _fresh_wh(spark, f"bloomidx_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"bloomidx_{Path(sf_dir).name}")
     t = "raw.orders_b"
     # custkey-clustered layout: the batch's keys land in few files
     wh.overwrite(orders.repartitionByRange(8, "o_custkey"), t)
@@ -1101,10 +1095,7 @@ def tpch_rf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_parquet_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    root = SCRATCH / f"rf_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = Warehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"rf_{Path(sf_dir).name}")
     wh.append(orders, "fact.orders")
     # RF1: new sales batch (re-keyed clone of the %10==7 tranche)
     rf1 = orders.filter(F.col("o_orderkey") % 10 == 7).withColumn(
@@ -1261,7 +1252,7 @@ def table_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # o_totalprice) keeps every file a small rectangle in the 2-D key
 # space, so a box predicate on BOTH columns prunes files on both
 # dimensions — the Delta/Iceberg OPTIMIZE ZORDER mechanic from public
-# primitives (zorder_value: sinks/warehouse.py). Linear clustering by
+# primitives (zorder_value: operators/filestats.py). Linear clustering by
 # o_totalprice (file_skipping_orders above) can only prune the
 # leading column. The oracle is the plain 2-D filter — pruning must
 # be a pure optimization.
@@ -1280,13 +1271,10 @@ def table_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def file_skipping_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.filestats import collect_file_stats, pruned_read_multi
-    from ..sinks.warehouse import zorder_value
+    from ..operators.filestats import zorder_value
 
     orders = read_parquet_table(spark, sf_dir, "orders")
-    root = SCRATCH / f"fskipz_{Path(sf_dir).name}"
-    if root.exists():
-        shutil.rmtree(root)
-    wh = Warehouse(spark, str(root))
+    wh = _fresh_wh(spark, f"fskipz_{Path(sf_dir).name}")
     # Materialize the z-value as a layout column (what OPTIMIZE ZORDER
     # does internally), cluster files by it, then prune on the two
     # NATURAL columns' per-file min/max.
@@ -1300,8 +1288,9 @@ def file_skipping_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wh.append(z.repartition(8), "raw.orders_z")
     wh.compact("raw.orders_z", target_files=16, cluster_by=["__z"])
-    path = str(wh.path("raw.orders_z"))
-    stats = collect_file_stats(spark, path, ["o_custkey", "o_totalprice"])
+    stats = collect_file_stats(
+        spark, wh._data_files("raw.orders_z"), ["o_custkey", "o_totalprice"]
+    )
     pruned = pruned_read_multi(
         spark,
         stats,
@@ -1329,7 +1318,7 @@ def file_skipping_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fewer runs than Morton's seams (measured here: 15 vs 28 on the
 # same box — every run is a separate range request on object
 # storage). The Hilbert transform is the layered integer xy→d form
-# (sinks/warehouse.py::with_hilbert, one projection per bit level —
+# (operators/filestats.py::with_hilbert, one projection per bit level —
 # a nested expression would grow 4^bits nodes), mirrored in the
 # oracle by hilbert_sql's chained subqueries and validated against
 # the reference algorithm + bijectivity in tests. Exact integer
@@ -1343,7 +1332,7 @@ def file_skipping_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hilbert_vs_zorder_layout_orders(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..sinks.warehouse import with_hilbert, zorder_value
+    from ..operators.filestats import with_hilbert, zorder_value
 
     orders = read_parquet_table(spark, sf_dir, "orders").select(
         F.pmod(F.col("o_custkey"), F.lit(256)).alias("x"),
@@ -1394,7 +1383,7 @@ def hilbert_vs_zorder_layout_orders(
 
 
 def _hilbert_layout_oracle() -> str:
-    from ..sinks.warehouse import hilbert_sql
+    from ..operators.filestats import hilbert_sql
 
     base = (
         "SELECT o_custkey % 256 AS x, "
@@ -2231,7 +2220,7 @@ def rollup_cascade_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Merge-on-read DELETE via Delta deletion vectors on a
-# DeltaLogWarehouse table: two DELETEs (DeltaLogWriter.delete_where_dv)
+# Warehouse table: two DELETEs (DeltaLogWriter.delete_where_dv)
 # each commit per-file row-position bitmaps — zero data-file rewrites —
 # and wh.read applies the masks in one scan plus one broadcast
 # anti-join. The oracle is plain SQL DELETE semantics (rows where no
@@ -2252,7 +2241,7 @@ def dv_delete_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
     )
-    wh = _fresh_wh(spark, f"dv_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"dv_{Path(sf_dir).name}")
     t = "layer0150.customer_dv"
     wh.overwrite(cust.repartitionByRange(8, "c_custkey"), t)
     w = DeltaLogWriter(spark, wh.path(t))
@@ -2542,7 +2531,7 @@ def scd3_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GDPR erasure audit (r7): right-to-be-forgotten across RELATED
 # tables — the subject keys (c_custkey % 97 == 0) are erased from
 # the customer dimension AND their orders in the same maintenance
-# pass via Delta deletion vectors on DeltaLogWarehouse tables (no
+# pass via Delta deletion vectors on Warehouse tables (no
 # immediate rewrite; OPTIMIZE, which folds the vectors in, then
 # VACUUM is the physical-erasure step). The audit emits per-table
 # survivor counts plus the orphan check (orders whose customer
@@ -2576,7 +2565,7 @@ def scd3_customer_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_parquet_table(spark, sf_dir, "customer")
     orders = read_parquet_table(spark, sf_dir, "orders")
-    wh = _fresh_wh(spark, f"gdpr_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"gdpr_{Path(sf_dir).name}")
     tc, to = "pii.customer", "pii.orders"
     # the two tables' lifecycles are independent end to end — land,
     # count, and DV-delete them concurrently (guide §2.6 overlap;
@@ -3300,7 +3289,7 @@ def scd1_iceberg_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # The Delta-log SCD1 twin (r8): identical scenario and oracle to
 # scd1_customer_current / _file_pruned / _manifest, executed as two
-# rewrite upserts on DeltaLogWarehouse — storage = REAL
+# rewrite upserts on the Warehouse — storage = REAL
 # Delta-protocol commits (sources/deltalog.py). The shared oracle
 # hash across the backends is the storage-never-leaks-into-semantics
 # proof, extended to the interoperable Delta on-disk format.
@@ -3329,7 +3318,7 @@ def scd1_deltalog_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment")
         ),
     )
-    wh = _fresh_wh(spark, f"scd1dl_{Path(sf_dir).name}", DeltaLogWarehouse)
+    wh = _fresh_wh(spark, f"scd1dl_{Path(sf_dir).name}")
     t = "layer0150.dim_customer_dl"
     wh.upsert(batch1, t, keys=["c_custkey"])
     wh.upsert(batch2, t, keys=["c_custkey"])
@@ -3553,9 +3542,9 @@ def scd6_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # executed end-to-end — `create_partitioned` writes the spec layout
 # (data files EXCLUDE the partition column; per-file partitionValues
 # in the add actions; metaData.partitionColumns pins the spec),
-# `read_delta(partition_filters=...)` prunes file groups by log
-# metadata before any byte is read and reconstitutes the column from
-# the log. The oracle is the plain orders aggregation — storage
+# `read_delta(partition_filters=...)` prunes files by log metadata
+# before any byte is read and reads the table in one scan, the column
+# coming back from the files' hive directories. The oracle is the plain orders aggregation — storage
 # layout must never leak into query results.
 @query(
     "delta_partitioned_orders",

@@ -2451,7 +2451,7 @@ def golden_record_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min-id centroids drawn from the BUILD subset, every corpus vector
 # assigned, nprobe=2 query — so an incremental-maintenance bug
 # (stale centroids, dropped cells, double-added rows) breaks the
-# hash. Query reads ONLY probed cells' partition dirs (partition
+# hash. Query reads ONLY probed cells' files (partition
 # pruning does candidate selection; adds touch only new rows' cells).
 _ANN_MAINT_ORACLE = f"""
     WITH cents AS (

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..session import overlap
-from ..sinks.warehouse import DeltaLogWarehouse, Warehouse
+from ..sinks.warehouse import Warehouse
 from ..sources.readers import (
     ensure_session_confs,
     normalize_event_ts,
@@ -1229,7 +1229,7 @@ def stream_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming CDC apply → FILE-PRUNED upsert: each micro-batch of
-# last-write-wins changes lands via DeltaLogWarehouse.upsert_file_pruned,
+# last-write-wins changes lands via Warehouse.upsert_file_pruned,
 # one MERGE commit rewriting only the files whose keys the batch
 # touched — the streaming twin of scd1_file_pruned_customers and the
 # shape a 100 TB CDC consumer needs (an hourly batch touches MB of a
@@ -1276,7 +1276,7 @@ def stream_scd1_file_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         token=os.stat(f"{sf_dir}/customer.parquet").st_mtime,
     )
 
-    wh = DeltaLogWarehouse(spark, str(work / "wh"))
+    wh = Warehouse(spark, str(work / "wh"))
     t = "dim.customer_fp"
     # key-clustered base of the even keys — the layout the pruning
     # works against
@@ -1499,7 +1499,7 @@ def stream_cusum_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming merge-on-read deletes: a CDC feed of delete-key batches
 # applies through DeltaLogWriter.delete_keys_dv per micro-batch on a
-# DeltaLogWarehouse table — each batch commits deletion vectors (zero
+# Warehouse table — each batch commits deletion vectors (zero
 # data-file rewrites while the stream runs; OPTIMIZE is a separate
 # maintenance op). The final masked read is plain SQL DELETE
 # semantics — the MOR streaming twin of stream_scd1_file_pruned's CoW
@@ -1534,7 +1534,7 @@ def stream_dv_delete_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.deltalog import DeltaLogWriter
 
-    wh = DeltaLogWarehouse(spark, str(work / "wh"))
+    wh = Warehouse(spark, str(work / "wh"))
     t = "dim.customer_dv"
     wh.overwrite(cust.repartitionByRange(8, "c_custkey"), t)
     w = DeltaLogWriter(spark, wh.path(t))
@@ -1856,8 +1856,8 @@ def stream_frequent_pairs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit("n_baskets").alias("k"), "n")
         # three INDEPENDENT table merges per micro-batch → submit them
         # concurrently so the items/meta slivers back-fill executors
-        # idled by the pair merge's tail (guide §2.6; the tables are
-        # disjoint paths, so the staged-swap writes cannot collide)
+        # idled by the pair merge's tail (guide §2.6; each table
+        # commits to its own log, so the writes cannot collide)
         overlap(
             lambda: _merge(pairs_t, pair_part, ["item_a", "item_b"]),
             lambda: _merge(items_t, item_part, ["item"]),

@@ -10,8 +10,8 @@ the view remembers which live data files it has folded in
 live set it has not seen, aggregates those partials, and merges them
 into the state additively. Cost ∝ new data, never ∝ table size —
 Delta's incremental-MV shape (reference target: the
-Databricks/Delta Live Tables MV contract) on the plain-parquet and
-manifest backends.
+Databricks/Delta Live Tables MV contract) over the warehouse's live
+data files.
 
 Crash-safety (code-review r7): refresh is a two-phase commit with
 the STATE table as the commit point. The scanned file names are
@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.deltalog import literal_path
 
 
 class MaterializedAgg:
@@ -103,7 +105,7 @@ class MaterializedAgg:
         }
 
     def _partial(self, paths: list[str], version: int) -> DataFrame:
-        src = self.wh.spark.read.parquet(*paths)
+        src = self.wh.spark.read.parquet(*map(literal_path, paths))
         return src.groupBy(*self.group_cols).agg(
             F.count(F.lit(1)).cast("bigint").alias("mv_n"),
             F.sum(F.col(self.sum_col).cast(self.sum_type)).alias("mv_sum"),

@@ -1,4 +1,4 @@
-"""Warehouse: managed-table emulation over parquet directories.
+"""Warehouse: managed tables on a transaction log.
 
 The reference's sink surface is ``saveAsTable`` on Delta managed tables
 (K1 append raw — reference notebooks/pipeline_core.py:62-68, K2
@@ -6,16 +6,18 @@ overwrite init — :147-153, K3 append versions — :245-252) plus the
 catalog existence check (M3, :138 — done there via the JVM-internal
 ``spark._jsparkSession``; we use only the filesystem/public API).
 
-``Warehouse`` emulates managed tables as parquet directories under a
-warehouse root, behind the Delta-shaped interface (append / overwrite /
-merge-by-rewrite). The spec'd table formats are subclasses over the
-same interface: ``DeltaLogWarehouse`` writes real Delta tables (JSON
-commit log, ``sources/deltalog.py``) and ``IcebergMetaWarehouse`` real
-Iceberg tables (``sources/iceberg_meta.py``), both readable by any
-Delta or Iceberg runtime. A plain directory table has exactly one
-version: time travel and change feeds are read from a log. The
-SCD2 engine (operators/scd2.py) builds the complete new dimension as
-one plan, and each backend commits it through ``overwrite_from_plan``.
+``Warehouse`` keeps every table as a real Delta table under a
+warehouse root: parquet data files plus the JSON commit log of
+``sources/deltalog.py``, readable by any Delta runtime. Atomic
+replace, time travel, idempotent writers, partition overwrite and
+OPTIMIZE are all log commits, as in the Delta Lake paper (Armbrust et
+al., VLDB 2020). ``IcebergMetaWarehouse`` is the one other format: the
+same interface over Iceberg v2 metadata (``sources/iceberg_meta.py``).
+The format-neutral engines — the change feed, DELETE, the SCD1 upsert,
+the three-clause MERGE and the SCD2 apply — live once, in
+``_TableFormat``, and commit through each format's own
+``overwrite_from_plan``. The SCD2 engine (operators/scd2.py) builds the
+complete new dimension as one plan.
 
 Scale notes: raw tables should be partitioned by ingest date
 (``partition_by=["ingest_date"]``) so time-bounded reprocessing prunes;
@@ -25,196 +27,31 @@ bucketed by business key when they grow.
 
 from __future__ import annotations
 
-import json
 import shutil
 import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-# The footer key under which Spark's parquet writer stores the written
-# schema as JSON; Spark's own schema inference prefers it over the
-# parquet schema.
-SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def footer_schema(path: Path) -> StructType | None:
-    """The Spark schema stored in the footer of a parquet directory's
-    first data file (sorted order; ``_``/``.``-prefixed paths skipped,
-    as Spark's listing skips them), read with pyarrow on the driver —
-    no Spark job. ``None`` when there is no data file or the first one
-    was not written by Spark."""
-    import pyarrow.parquet as pq
-
-    for f in sorted(path.glob("**/*.parquet")):
-        parts = f.relative_to(path).parts
-        if any(
-            n.startswith(".") or (n.startswith("_") and "=" not in n)
-            for n in parts
-        ):
-            continue
-        key = (pq.read_metadata(f).metadata or {}).get(SPARK_ROW_METADATA)
-        return StructType.fromJson(json.loads(key)) if key else None
-    return None
-
-
-def zorder_value(x: "F.Column", y: "F.Column", bits: int = 16) -> "F.Column":
-    """Morton (Z-order) interleave of two normalized integer rank
-    columns (each already scaled into [0, 2**bits)): bit i of x lands
-    at position 2i, bit i of y at 2i+1. Locality in BOTH dimensions
-    maps to locality in the single z value, so range-clustering files
-    on z gives two-dimensional file skipping — Delta OPTIMIZE ZORDER's
-    core, as a pure expression."""
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    return z
-
-
-def with_hilbert(
-    df: "DataFrame",
-    x: "F.Column",
-    y: "F.Column",
-    bits: int = 8,
-    out: str = "__h",
-) -> "DataFrame":
-    """HILBERT curve index of two integer rank columns (each in
-    [0, 2**bits)) — the locality-preserving alternative to Morton
-    interleave: the Hilbert walk never jumps across the square, so
-    axis-aligned box queries touch fewer, more contiguous index
-    ranges than z-order's discontinuous seams. Standard top-down
-    xy→d transform (the public Wikipedia/Hamilton formulation), ONE
-    PROJECTION LAYER PER LEVEL via withColumn — a single nested
-    expression would grow 4^bits nodes (each level references the
-    previous x/y several times), while the layered form stays linear
-    and Catalyst's CollapseProject leaves multi-referenced non-cheap
-    columns uncollapsed. Pure JVM integer ops, no UDF."""
-    d = df.withColumn("__hx", x.cast("long")).withColumn(
-        "__hy", y.cast("long")
-    ).withColumn(out, F.lit(0).cast("long"))
-    for i in range(bits - 1, -1, -1):
-        s = 1 << i
-        d = (
-            d.withColumn(
-                "__rx", F.shiftright("__hx", i).bitwiseAND(F.lit(1))
-            )
-            .withColumn(
-                "__ry", F.shiftright("__hy", i).bitwiseAND(F.lit(1))
-            )
-            .withColumn(
-                out,
-                F.col(out)
-                + F.lit(s * s)
-                * (3 * F.col("__rx")).bitwiseXOR(F.col("__ry")),
-            )
-            # rotate the quadrant: ry==0 → (flip when rx==1), swap
-            .withColumn(
-                "__nx",
-                F.when(
-                    F.col("__ry") == 0,
-                    F.when(
-                        F.col("__rx") == 1, F.lit(s - 1) - F.col("__hy")
-                    ).otherwise(F.col("__hy")),
-                ).otherwise(F.col("__hx")),
-            )
-            .withColumn(
-                "__ny",
-                F.when(
-                    F.col("__ry") == 0,
-                    F.when(
-                        F.col("__rx") == 1, F.lit(s - 1) - F.col("__hx")
-                    ).otherwise(F.col("__hx")),
-                ).otherwise(F.col("__hy")),
-            )
-            .withColumn("__hx", F.col("__nx"))
-            .withColumn("__hy", F.col("__ny"))
-        )
-    return d.drop("__hx", "__hy", "__rx", "__ry", "__nx", "__ny")
-
-
-def hilbert_sql(
-    base_select: str, keep_cols: str, x: str, y: str, bits: int = 8
-) -> str:
-    """The SAME transform as :func:`with_hilbert`, rendered as chained
-    ANSI-SQL subqueries (one per level — linear size, same reason as
-    the layered DataFrame form) so a DuckDB oracle computes
-    bit-identical indexes. ``keep_cols`` are carried through; the
-    result exposes them plus ``hd`` (the Hilbert index)."""
-    q = (
-        f"SELECT {keep_cols}, CAST({x} AS BIGINT) AS hx, "
-        f"CAST({y} AS BIGINT) AS hy, CAST(0 AS BIGINT) AS hd "
-        f"FROM ({base_select})"
-    )
-    for i in range(bits - 1, -1, -1):
-        s = 1 << i
-        rx = f"((hx >> {i}) & 1)"
-        ry = f"((hy >> {i}) & 1)"
-        q = (
-            f"SELECT {keep_cols}, "
-            f"CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
-            f"THEN {s - 1} - hy ELSE hy END) ELSE hx END AS hx, "
-            f"CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
-            f"THEN {s - 1} - hx ELSE hx END) ELSE hy END AS hy, "
-            f"hd + {s * s} * xor(3 * {rx}, {ry}) AS hd "
-            f"FROM ({q})"
-        )
-    return q
-
-
-class Warehouse:
-    """Managed tables as parquet directories with staged-swap
-    rewrites (the reference's Delta ``saveAsTable`` + ``MERGE`` sink,
-    pipeline_core.py:62-68,219-227, on plain parquet). Rewrites swap a
-    staged directory in, so a table has one version, the live one. The
-    subclasses below keep this interface and replace the storage layer:
-    the Delta log or Iceberg metadata; those keep history, time travel
-    and (via :meth:`table_changes`) a change feed.
-
-    A directory table takes plain writes only: read, append,
-    overwrite, the staged swap, dynamic partition overwrite, the
-    full-rewrite DML, compaction and vacuum. Transactional DML — the
-    file-pruned MERGE, deletion vectors and the maintained bloom index
-    — lives on the Delta log (``DeltaLogWarehouse``,
-    ``DeltaLogWriter``), whose create-exclusive commit is the conflict
-    check a directory would need a lock for."""
+class _TableFormat:
+    """What every table format shares: the warehouse root, table
+    paths, and the engines that only read a table and commit a
+    rewrite through the format's own ``overwrite_from_plan`` (the
+    change feed, DELETE, the SCD1 upsert, the three-clause MERGE and
+    the SCD2 apply). A format supplies ``table_exists``, ``read``,
+    ``read_version``, ``append``, ``overwrite`` and
+    ``overwrite_from_plan``."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
 
-    def _data_files(self, table: str) -> list[Path]:
-        """The table's LIVE data files. A directory table globs; the
-        log-backed subclasses resolve their log instead (superseded
-        files stay on disk until vacuum)."""
-        return list(self.path(table).glob("**/*.parquet"))
-
     def path(self, table: str) -> Path:
         # "layer0100.kosten_raw" → <root>/layer0100/kosten_raw
         return self.root.joinpath(*table.split("."))
-
-    def version(self, table: str) -> int:
-        """Current version number. A directory table keeps no history,
-        so it is always 0; the log-backed subclasses count commits."""
-        return 0
-
-    def read_version(self, table: str, version: int) -> DataFrame:
-        """Time travel: read the table as of ``version`` (Delta:
-        ``option("versionAsOf", n)``). A directory table has only
-        version 0, the live state."""
-        if version != 0:
-            raise ValueError(
-                f"version {version} of {table!r} not found: a directory "
-                "table has only version 0 (time travel needs a log-backed "
-                "warehouse)"
-            )
-        return self.read(table)
 
     def table_changes(
         self, table: str, v_from: int, v_to: int, keys: list[str]
@@ -230,9 +67,7 @@ class Warehouse:
         three times. Nothing is driver-side; at 100 TB the cost is one
         co-partitioning of the two snapshots. (Delta reads the change
         feed from the log instead — ``readChangeFeed`` — with the same
-        emitted schema, so callers are portable.) It diffs two versions,
-        so it needs a backend that keeps them: ``DeltaLogWarehouse`` and
-        ``IcebergMetaWarehouse`` inherit it."""
+        emitted schema, so callers are portable.)"""
         old = self.read_version(table, v_from)
         new = self.read_version(table, v_to)
         data_cols = [c for c in new.columns if c not in keys]
@@ -259,135 +94,18 @@ class Warehouse:
         ).withColumn("_change_type", F.lit("update_postimage"))
         return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
 
-    def _recover_swap(self, table: str) -> None:
-        """Roll back a staged swap that died between its two renames
-        (``target → __old`` done, ``__staging → target`` not): the
-        table is missing, so ``__old`` goes back in place and the stale
-        staging dir is dropped. Without this the next SCD2 run would
-        find no dimension and bootstrap a fresh one, losing history. A
-        writer still inside that window loses the race and fails its
-        second rename; the table is then the old state, never none."""
-        target = self.path(table)
-        old = target.with_name(target.name + "__old")
-        if target.exists() or not old.exists():
-            return
-        try:
-            old.rename(target)
-        except OSError:
-            if not target.exists():
-                raise
-            return  # the swap completed meanwhile
-        staged = target.with_name(target.name + "__staging")
-        if staged.exists():
-            shutil.rmtree(staged)
-
-    def table_exists(self, table: str) -> bool:
-        self._recover_swap(table)
-        p = self.path(table)
-        if not p.exists():
-            return False
-        # recursive: partitioned tables nest their files under
-        # <part>=<value>/ dirs with no root-level marker
-        return (p / "_SUCCESS").exists() or any(p.glob("**/*.parquet"))
-
-    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
-        """Plan a scan of the table. Without ``merge_schema`` the schema
-        comes from Spark's own footer key in the first data file (see
-        :func:`footer_schema`), read on the driver, so planning runs no
-        Spark job. Where the files share one schema it is the schema
-        Spark's inference picks, with nullability forced the same way
-        (where they differ, Spark too reads one file's footer only, the
-        first in its listing). A table whose files lack the
-        key (empty, or written by another engine) is inferred by Spark
-        as before. ``merge_schema=True`` unions column sets across
-        files — schema evolution on an append-only raw table (a batch
-        landed with new columns reads back as the superset, old rows
-        null) — and always runs Spark's footer job. The log-backed
-        subclasses resolve the schema from their log, so the option is
-        a no-op there."""
-        self._recover_swap(table)
-        path = self.path(table)
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        else:
-            schema = footer_schema(path)
-            if schema is not None:
-                reader = reader.schema(schema)
-        return reader.parquet(str(path))
-
-    def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(self.path(table)))
-
-    def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(self.path(table)))
-
-    def overwrite_from_plan(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        """Overwrite a table with a plan that READS the same table.
-
-        A plain overwrite would clobber its own input mid-read; stage to
-        a sibling dir then swap it in with two renames (``target →
-        __old``, ``__staging → target``). A crash between them is
-        rolled back by :meth:`_recover_swap` on the next open. The
-        log-backed subclasses commit new files instead, so they need no
-        staging. Every full-rewrite DML (delete_where, upsert,
-        merge_ops, the SCD2 commit, compact) ends here.
-        """
-        self._recover_swap(table)
-        target = self.path(table)
-        staged = target.with_name(target.name + "__staging")
-        if staged.exists():
-            shutil.rmtree(staged)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(staged))
-        old = target.with_name(target.name + "__old")
-        if old.exists():
-            shutil.rmtree(old)
-        if target.exists():
-            target.rename(old)
-        staged.rename(target)
-        if old.exists():
-            shutil.rmtree(old)
-
-    def overwrite_partitions(
-        self, df: DataFrame, table: str, partition_by: list[str]
-    ) -> None:
-        """Dynamic partition overwrite: replace ONLY the partition dirs
-        present in ``df``, leaving all others untouched. The physical
-        primitive behind incremental rollup maintenance — at 100 TB an
-        hourly upsert rewrites a handful of day partitions, not the
-        table. (Delta's ``replaceWhere``; here the datasource
-        ``partitionOverwriteMode=dynamic`` form.)"""
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(str(self.path(table)))
-        )
-
     def apply_scd2_changeset(self, table: str, new_dim: DataFrame) -> None:
         """Final step of an SCD2 merge: commit ``new_dim``, the complete
         new dimension plan computed in operators/scd2.py, which reads
-        the table it replaces. Every backend commits it through its own
-        ``overwrite_from_plan`` (staged swap here, a new log version on
-        the log-backed subclasses). The write is the action that fills
-        the merge's Observation."""
+        the table it replaces. Every format commits it through its own
+        ``overwrite_from_plan`` (a new log version or snapshot). The
+        write is the action that fills the merge's Observation."""
         self.overwrite_from_plan(new_dim, table)
 
     def delete_where(self, table: str, predicate) -> None:
         """DML DELETE: remove rows matching ``predicate`` (a Column or
-        SQL string) by rewriting the table to the complement (staged
-        swap). ``DeltaLogWriter.delete_where_dv`` is the merge-on-read
+        SQL string) by rewriting the table to the complement.
+        ``DeltaLogWriter.delete_where_dv`` is the merge-on-read
         form, which rewrites no data file. Completes the DML triad: append (INSERT), SCD2/merge (UPDATE),
         delete_where (DELETE).
 
@@ -409,9 +127,9 @@ class Warehouse:
         multiple source matches).
 
         An anti-join keeps the untouched current rows, then one
-        staged-swap rewrite: the cost is a key-partitioned co-shuffle
+        full rewrite: the cost is a key-partitioned co-shuffle
         of (current, batch), batch side broadcast when small.
-        ``DeltaLogWarehouse.upsert_file_pruned`` rewrites only the files
+        ``Warehouse.upsert_file_pruned`` rewrites only the files
         holding matched keys. Mirrors the reference's MERGE INTO sink shape
         (pipeline_core.py:219-227) minus history tracking.
         """
@@ -445,7 +163,7 @@ class Warehouse:
         further: its counts are an Observation on the write itself).
 
         Matched rows (both clauses) leave via one anti-join, then
-        updates+inserts append in the same staged-swap rewrite — the
+        updates+inserts append in the same full rewrite — the
         cost is one key co-shuffle."""
         data_cols = [c for c in batch.columns if c != op_col]
         if not self.table_exists(table):
@@ -475,64 +193,17 @@ class Warehouse:
         self.overwrite_from_plan(kept.unionByName(incoming), table)
         return stats
 
-    # -- idempotent-writer transaction registry -------------------------
-    # The parquet emulation of Delta's txnAppId/txnVersion: a writer
-    # identifies itself with an app id and records each applied batch
-    # id; re-delivered batches (lost/rebuilt streaming checkpoint, job
-    # retry) are detected and skipped. On Delta the registry rides the
-    # same commit as the data (transactional); here it is written
-    # AFTER the data apply, so the one non-atomic window is crash
-    # *between* apply and record — a re-delivery then re-applies that
-    # single batch (at-least-once), which the SCD2 merge absorbs
-    # (content-idempotent) and a rollup would double-count; Delta
-    # closes exactly that window. Standard caveat applies to both:
-    # batch ids must be deterministic (same source → same batches).
-
-    def _txn_table(self, app_id: str) -> str:
-        return f"_txn.{app_id}"
-
-    def txn_applied(self, app_id: str, batch_id: int) -> bool:
-        """Has (app_id, batch_id) already been committed?"""
-        t = self._txn_table(app_id)
-        if not self.table_exists(t):
-            return False
-        return (
-            self.read(t).filter(F.col("batch_id") == int(batch_id)).limit(1).count()
-            > 0
-        )
-
-    def txn_commit(self, app_id: str, batch_id: int) -> None:
-        """Record (app_id, batch_id) as applied."""
-        row = self.spark.createDataFrame(
-            [(int(batch_id),)], "batch_id long"
-        )
-        self.append(row, self._txn_table(app_id))
-
     def vacuum(self) -> int:
-        """Remove leftover ``__staging``/``__old`` dirs that a crash
-        between the write and the swap in ``overwrite_from_plan`` can
-        strand, and the staging dirs a crashed Delta-log or Iceberg
-        writer left (the parquet-emulation analogue of ``VACUUM``; the
-        log-backed subclasses add their unreferenced data files). Safe
-        at any time: live tables never have these suffixes. Returns
-        dirs removed."""
+        """Remove the job-unique staging dirs a crashed Delta-log or
+        Iceberg writer left beside its table, once they are older than
+        15 minutes (a young one may be an in-flight stage about to move
+        its parts in). Returns dirs removed."""
         removed = 0
-        for d in self.root.glob("**/*__staging"):
-            if d.is_dir():
-                shutil.rmtree(d)
-                removed += 1
-        # job-unique Delta-log / Iceberg staging dirs a crashed writer
-        # left: only sweep ones older than 15 minutes — a young one may
-        # be an in-flight stage about to move its parts in
         for pat in ("**/*__dl_stage.*", "**/*__cdc_stage.*", "**/*__ice_stage.*"):
             for d in self.root.glob(pat):
                 if d.is_dir() and time.time() - d.stat().st_mtime > 900.0:
                     shutil.rmtree(d)
                     removed += 1
-        for d in self.root.glob("**/*__old"):
-            if d.is_dir():
-                shutil.rmtree(d)
-                removed += 1
         return removed
 
     def drop(self, table: str) -> None:
@@ -542,156 +213,28 @@ class Warehouse:
         if p.exists():
             shutil.rmtree(p)
 
-    def compact(
-        self,
-        table: str,
-        target_files: int | None = None,
-        partition_by: list[str] | None = None,
-        cluster_by: list[str] | None = None,
-        zorder_by: tuple[str, str] | None = None,
-        target_file_bytes: int | None = None,
-    ) -> int:
-        """Small-file compaction: rewrite the table into
-        ``target_files`` files per partition (atomic staged swap). The
-        lakehouse maintenance op every append-only raw table needs — at
-        100 TB streaming/micro-batch ingest produces thousands of small
-        files per day and scan cost is dominated by file-open overhead
-        until compaction (Delta's OPTIMIZE; this is the parquet-dir
-        form). Counts files recursively and carries ``partition_by``
-        through the rewrite so a partitioned table keeps its layout
-        (and its pruning) instead of being silently flattened (ADVICE
-        r1). Returns the number of data files before compaction.
 
-        ``cluster_by`` additionally range-partitions and sorts the
-        rewrite on the given columns (Delta OPTIMIZE ZORDER's
-        single-dimension cousin): each output file then covers a
-        narrow value range, so parquet row-group min/max statistics
-        skip whole files for selective filters on those columns — at
-        100 TB, clustering the fact table on its hottest filter column
-        turns full scans into a handful of file reads.
-
-        Pass ``target_file_bytes`` instead of ``target_files`` to size
-        by bytes (OPTIMIZE's actual knob — e.g. 128 MB targets):
-        target_files = ceil(current on-disk bytes / target), from a
-        metadata-only directory stat. Bytes are COMPRESSED parquet
-        bytes, so the rewrite lands near the target regardless of row
-        width; exactly one of the two knobs must be given.
-
-        ``DeltaLogWarehouse`` overrides this with a protocol-native
-        OPTIMIZE commit."""
-        data_files = self._data_files(table)
-        before = len(data_files)
-        if (target_files is None) == (target_file_bytes is None):
-            raise ValueError(
-                "exactly one of target_files/target_file_bytes is required"
-            )
-        if target_file_bytes is not None:
-            total = sum(f.stat().st_size for f in data_files)
-            target_files = max(1, -(-total // int(target_file_bytes)))
-        df = self.read(table, merge_schema=True)
-        if zorder_by:
-            if partition_by or cluster_by:
-                raise ValueError("zorder_by excludes partition_by/cluster_by")
-            cx, cy = zorder_by
-            # min/max → 16-bit rank space (one tiny agg, driver-side
-            # literals), then Morton interleave; cluster files on z
-            lo_hi = df.agg(
-                F.min(cx).cast("double"), F.max(cx).cast("double"),
-                F.min(cy).cast("double"), F.max(cy).cast("double"),
-            ).collect()[0]
-            x0, x1, y0, y1 = (float(v) for v in lo_hi)
-            sx = 65535.0 / ((x1 - x0) or 1.0)
-            sy = 65535.0 / ((y1 - y0) or 1.0)
-            z = zorder_value(
-                ((F.col(cx).cast("double") - F.lit(x0)) * F.lit(sx)).cast("long"),
-                ((F.col(cy).cast("double") - F.lit(y0)) * F.lit(sy)).cast("long"),
-            )
-            df = (
-                df.withColumn("__z", z)
-                .repartitionByRange(target_files, F.col("__z"))
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-            self.overwrite_from_plan(df, table, partition_by=None)
-            return before
-        if cluster_by:
-            if partition_by:
-                raise ValueError(
-                    "cluster_by and partition_by are mutually exclusive; "
-                    "cluster within partitions is not implemented"
-                )
-            df = df.repartitionByRange(
-                target_files, *[F.col(c) for c in cluster_by]
-            ).sortWithinPartitions(*cluster_by)
-            self.overwrite_from_plan(df, table, partition_by=None)
-            return before
-        if partition_by:
-            if target_files <= 1:
-                # one task per partition value -> exactly one file per dir
-                df = df.repartition(*partition_by)
-            else:
-                # Repartitioning on the partition columns ALONE sends every
-                # row of a partition value to one task (1 giant file + one
-                # skewed writer per value, ADVICE r2). Add a deterministic
-                # row salt in [0, target_files) so each value spreads over
-                # ~target_files writer tasks, each emitting one file into
-                # the value's dir. The partition number must be explicit:
-                # AQE would otherwise coalesce the small salted shuffle
-                # back into one task, silently restoring the skew. Range
-                # partitioning keeps (value, salt) combos in distinct
-                # tasks instead of hash-colliding them.
-                n_values = df.select(*partition_by).distinct().count()
-                salt = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in df.columns]),
-                    F.lit(target_files),
-                )
-                df = df.repartitionByRange(
-                    max(1, n_values) * target_files,
-                    *[F.col(c) for c in partition_by],
-                    salt,
-                )
-        else:
-            df = df.coalesce(target_files)
-        self.overwrite_from_plan(df, table, partition_by=partition_by)
-        return before
-
-
-class DeltaLogWarehouse(Warehouse):
-    """Warehouse whose storage layer IS the Delta transaction-log
-    protocol (r8 — ``sources/deltalog.py``, public delta-io
-    PROTOCOL.md, v1 JSON commits): every table is a real Delta table
-    directory — parquet data files plus ``_delta_log/%020d.json``
-    commits — readable by any Delta runtime, written and replayed here
-    with no delta-spark dependency.
-
-    The same Warehouse API (append / overwrite / upsert / SCD1-2 via
-    the inherited engines) materializes state changes as spec-shaped
-    Delta commits. The SCD1 twins share one oracle
-    (`scd1_customer_current`, the file-pruned, Delta-log and Iceberg
-    variants), which pins that storage format never leaks into query
-    semantics. ``upsert_file_pruned`` is Delta's copy-on-write MERGE:
-    the touched files' ``remove`` actions and the rewrite's ``add``
-    actions land in one commit, so a concurrent reader sees the old
-    version or the new one, never duplicate keys. Merge-on-read DELETE
+class Warehouse(_TableFormat):
+    """Managed tables as Delta tables: the reference's Delta
+    ``saveAsTable`` + ``MERGE`` sink (pipeline_core.py:62-68,219-227)
+    on the transaction-log protocol of ``sources/deltalog.py``. Every
+    write is one commit, so every state is a version (superseded files
+    stay on disk for ``read_version`` until :meth:`vacuum`), and a
+    rewrite that reads the table it replaces needs no staging, because
+    committed files never move. ``partition_by`` creates a partitioned
+    table; ``DeltaLogWriter.overwrite_partitions`` is Delta's dynamic
+    partition overwrite. ``upsert_file_pruned`` is Delta's copy-on-write
+    MERGE: the touched files' ``remove`` actions and the rewrite's
+    ``add`` actions land in one commit, so a concurrent reader sees the
+    old version or the new one, never duplicate keys. Merge-on-read DELETE
     is ``DeltaLogWriter.delete_where_dv`` / ``delete_keys_dv`` (spec
     deletion vectors), and :meth:`read` applies their masks. The
     per-file bloom index (:meth:`build_bloom_index`) is keyed on the
-    log's live files and read through those masks too.
-
-    Scope of the Warehouse-API surface: unpartitioned tables;
-    rewrite-based DML through the inherited engines. An overwrite may
-    add columns (the commit widens the schema); an append may not. The
-    protocol layer itself goes further (r8):
-    ``DeltaLogWriter.create_partitioned`` / ``append_partitioned``
-    store per-file ``partitionValues`` in add actions with the spec's
-    data-files-exclude-partition-columns layout (read_delta
-    reconstitutes and prunes), and parquet CHECKPOINTS +
-    ``_last_checkpoint`` make long-history opens O(live files).
-
-    Every commit is a version: ``read_version`` replays the log to
-    it, and the inherited :meth:`Warehouse.table_changes` diffs two of
-    them into the keyed change feed (the versioned SCD2 scenario in
-    ``plans/etlops.py`` reads both)."""
+    log's live files and read through those masks too. An overwrite
+    may add columns (the commit widens the schema); an append may not.
+    ``read_version`` replays the log to any version, and the inherited
+    :meth:`table_changes` diffs two of them into the keyed change
+    feed."""
 
     def _writer(self, table: str):
         from ..sources.deltalog import DeltaLogWriter
@@ -715,11 +258,11 @@ class DeltaLogWarehouse(Warehouse):
         tp = self.path(table)
         return [tp / _decode_path(f) for f in _replay(tp, None)["files"]]
 
-    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
+    def read(self, table: str) -> DataFrame:
+        """Plan a scan of the table from its log: the committed schema,
+        deletion-vector masks applied, no Spark job."""
         from ..sources.deltalog import read_delta
 
-        # merge_schema is a no-op: the log's metaData schemaString is
-        # authoritative (same contract as real Delta)
         return read_delta(self.spark, self.path(table))
 
     def read_version(self, table: str, version: int) -> DataFrame:
@@ -728,64 +271,58 @@ class DeltaLogWarehouse(Warehouse):
         return read_delta(self.spark, self.path(table), version=version)
 
     def history(self, table: str) -> list[dict]:
-        import json as _json
+        import json
 
         from ..sources.deltalog import _commits
 
+        def op(commit: Path) -> str:
+            for line in commit.read_text().splitlines():
+                if line.startswith('{"commitInfo"'):
+                    return json.loads(line)["commitInfo"]["operation"]
+            return "?"
+
         current = self.version(table)
-        out = []
-        for c in _commits(self.path(table)):
-            ops = [
-                _json.loads(line)["commitInfo"]["operation"]
-                for line in c.read_text().splitlines()
-                if line.startswith('{"commitInfo"')
-            ]
-            v = int(c.stem)
-            out.append(
-                {
-                    "version": v,
-                    "op": (ops or ["?"])[0],
-                    "current": v == current,
-                }
-            )
-        return out
+        return [
+            {"version": int(c.stem), "op": op(c), "current": int(c.stem) == current}
+            for c in _commits(self.path(table))
+        ]
 
-    def _no_partitions(self, partition_by) -> None:
-        if partition_by:
-            raise NotImplementedError(
-                "DeltaLogWarehouse is unpartitioned by contract — Delta "
-                "puts partition values in add actions; use the real "
-                "runtime for partitioned tables"
-            )
-
-    def append(self, df: DataFrame, table: str, partition_by=None) -> None:
-        self._no_partitions(partition_by)
-        self._writer(table).append(df)
-
-    def overwrite(self, df: DataFrame, table: str, partition_by=None) -> None:
-        self._no_partitions(partition_by)
-        self._writer(table).overwrite(df)
-
-    def overwrite_from_plan(
-        self, df: DataFrame, table: str, partition_by=None
+    def append(
+        self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
-        # committed data files never move and the plan pinned its
-        # input files at build time, so a self-referencing overwrite
-        # needs no staged-swap dance. Every full-rewrite DML
-        # (delete_where, upsert, merge_ops, the SCD2 commit) ends here,
-        # so this is where the bloom index catches up with the new files
-        self._no_partitions(partition_by)
+        """Blind append (one ``WRITE`` commit). ``partition_by`` must
+        name the table's partition columns, and creates a partitioned
+        table when there is none yet."""
+        w = self._writer(table)
+        if partition_by:
+            w.append_partitioned(df, partition_by)
+        else:
+            w.append(df)
+
+    def overwrite(
+        self, df: DataFrame, table: str, partition_by: list[str] | None = None
+    ) -> None:
+        """Replace the table's rows in one commit. ``partition_by``
+        creates a partitioned table when there is none yet, and must
+        name an existing table's partition columns (they are
+        immutable)."""
+        from ..sources.deltalog import _replay
+
+        w = self._writer(table)
+        if partition_by and not self.table_exists(table):
+            w.create_partitioned(df, partition_by)
+            return
+        if partition_by:
+            w._check_spec(_replay(w.path, None), partition_by)
+        w.overwrite(df)
+
+    def overwrite_from_plan(self, df: DataFrame, table: str) -> None:
+        """Overwrite a table with a plan that READS the same table (the
+        plan pinned its input files, which never move). Every
+        full-rewrite DML ends here, so this is where the bloom index
+        catches up with the new files."""
         self._writer(table).overwrite(df)
         self.refresh_bloom_index(table)
-
-    # parquet path-mechanics that bypass the log would corrupt the
-    # table state for real Delta readers — fail fast, route to the
-    # rewrite engines instead
-    def overwrite_partitions(self, df, table, partition_by):
-        raise NotImplementedError(
-            "overwrite_partitions bypasses the Delta log; "
-            "DeltaLogWarehouse tables are unpartitioned"
-        )
 
     def upsert_file_pruned(
         self, batch: DataFrame, table: str, keys: list[str]
@@ -889,12 +426,10 @@ class DeltaLogWarehouse(Warehouse):
     def _bloom_state(self, table: str) -> dict:
         """The table's log state, refused when the index cannot read
         its data files by the logical key column."""
-        from ..sources.deltalog import _replay
+        from ..sources.deltalog import _partition_columns, _replay
 
         state = _replay(self.path(table), None)
-        if state["mapping_mode"] != "none" or (
-            (state["metaData"] or {}).get("partitionColumns")
-        ):
+        if state["mapping_mode"] != "none" or _partition_columns(state):
             raise NotImplementedError(
                 f"bloom index on {table!r}: column-mapped and partitioned "
                 "tables are out of scope (their data files do not carry "
@@ -906,14 +441,21 @@ class DeltaLogWarehouse(Warehouse):
         self, table: str, state: dict, adds: list[dict], key_col: str,
         m_bits: int, k: int,
     ) -> DataFrame:
-        from ..sources.deltalog import _data_read_schema, _decode_path, _file_uri
+        from ..sources.deltalog import (
+            _data_read_schema,
+            _decode_path,
+            _file_uri,
+            literal_path,
+        )
 
         tp = self.path(table)
         # the raw files, unmasked: a DV-deleted row's key may stay set
         # (a false positive), and _metadata.file_path keys each row
         base = (
             self.spark.read.schema(_data_read_schema(state))
-            .parquet(*[str(tp / _decode_path(a["path"])) for a in adds])
+            .parquet(
+                *[literal_path(tp / _decode_path(a["path"])) for a in adds]
+            )
             .select(
                 F.col("_metadata.file_path").alias("__uri"),
                 # hash the canonical STRING rendering (type-stable probes)
@@ -1064,73 +606,54 @@ class DeltaLogWarehouse(Warehouse):
         self.overwrite_from_plan(old, table)
         return self.version(table)
 
-    def clone_shallow(self, src_table: str, dst_table: str) -> int:
-        """Zero-copy SHALLOW CLONE of ``src_table``'s current snapshot
-        into ``dst_table`` (Delta CLONE: absolute-path add actions —
-        see DeltaLogWriter.clone_shallow for the vacuum contract)."""
-        return self._writer(dst_table).clone_shallow(self.path(src_table))
-
     def compact(
         self,
         table: str,
-        target_files: int | None = None,
-        partition_by: list[str] | None = None,
+        target_files: int,
         cluster_by: list[str] | None = None,
-        zorder_by: tuple[str, str] | None = None,
-        target_file_bytes: int | None = None,
     ) -> int:
-        """Protocol-native OPTIMIZE (r8): remove+add actions in ONE
-        commit claimed at exactly ``base+1`` via the create-exclusive
-        commit link — if ANY writer (even an append) landed after the
-        rewrite's snapshot, the link fails and the OPTIMIZE aborts
-        with staged files reclaimed, so a concurrent append can never
-        be erased by the wholesale remove set (the lost-update race
-        the inherited overwrite-based compact had). This is Delta's
-        actual optimistic-concurrency story: the version number IS
-        the conflict check.
-
-        The rewrite reads through the same log-planned path as
-        ``read_delta`` (committed schema, no footer job): deletion-
-        vector masks apply, so rows a DV delete removed stay removed,
-        and a column-mapped table keeps its physical names."""
-        self._no_partitions(partition_by)
-        if zorder_by is not None:
-            raise NotImplementedError(
-                "delta-log OPTIMIZE supports cluster_by (range "
-                "clustering, Delta's single-dimension ZORDER cousin); "
-                "multi-dimension z-order rides the real runtime"
-            )
-        if (target_files is None) == (target_file_bytes is None):
-            raise ValueError(
-                "pass exactly one of target_files / target_file_bytes"
-            )
-        from ..sources.deltalog import _data_read_schema, _read_adds_mor, _replay
+        """Small-file compaction as a protocol-native OPTIMIZE: the live
+        rows (read through ``read_delta``, so deletion-vector masks
+        apply) rewritten into ``target_files`` files, committed as ONE
+        remove+add commit (``dataChange: false``) claimed at exactly
+        the snapshot's version + 1 — a writer landing meanwhile aborts
+        it with its staged files reclaimed, so a concurrent append is
+        never erased. Returns the number of live files before.
+        ``cluster_by`` range-partitions and sorts the rewrite (Delta
+        OPTIMIZE ZORDER's one-dimension cousin), so each file's min/max
+        stats skip it for selective filters on those columns. A
+        partitioned table keeps its layout of one file per partition
+        value: ``target_files`` does not apply there, and ``cluster_by``
+        is refused. Byte-targeted bin-packing is
+        ``DeltaLogWriter.optimize``."""
+        from ..sources.deltalog import (
+            DeltaLogError,
+            _partition_columns,
+            _replay,
+            read_delta,
+        )
 
         tp = self.path(table)
         w = self._writer(table)
         state = _replay(tp, None)
-        files = state["files"]
-        n_before = len(files)
-        if target_file_bytes is not None:
-            total = sum((tp / f).stat().st_size for f in files)
-            target_files = max(1, -(-total // int(target_file_bytes)))
-        df = _read_adds_mor(
-            self.spark, tp, state["adds"], _data_read_schema(state)
-        )
+        if cluster_by and _partition_columns(state):
+            raise DeltaLogError(
+                "compact(cluster_by=...) on a partitioned table: the "
+                "rewrite keeps one file per partition value"
+            )
+        df = read_delta(self.spark, tp, version=state["version"])
         if cluster_by:
-            # range-clustered rewrite: each output file covers a narrow
-            # value range, so the add actions' footer stats make
-            # files_skipped_by_stats selective on the cluster column
             df = df.repartitionByRange(
                 target_files, *cluster_by
             ).sortWithinPartitions(*cluster_by)
         else:
             df = df.coalesce(target_files)
         w._commit_replace(
-            state, files, w._stage(df), op="OPTIMIZE", data_change=False
+            state, state["files"], w._stage_as(df, state),
+            op="OPTIMIZE", data_change=False,
         )
         self.refresh_bloom_index(table)
-        return n_before
+        return len(state["files"])
 
     def vacuum(self, min_age: float = 900.0) -> int:
         """Delta VACUUM on every log table under the root, after the
@@ -1139,12 +662,13 @@ class DeltaLogWarehouse(Warehouse):
         (Delta's default is 7 days; tests pass 0). A file the latest
         version no longer lists goes once its ``remove`` action is
         older than the retention, so in-flight readers and time travel
-        keep it that long; a superseded deletion-vector sidecar goes
-        too. The log itself is never vacuumed (checkpointing, not
-        deletion, bounds replay cost). Returns files and dirs removed.
-        NOTE: vacuumed versions remain listed in history but fail fast
-        at read (the referenced files are gone — same contract as real
-        Delta)."""
+        keep it that long; an orphan no commit references (a crashed
+        writer's staged file) ages from its mtime; a superseded
+        deletion-vector sidecar goes too. The log itself is never
+        vacuumed (checkpointing, not deletion, bounds replay cost).
+        Returns files and dirs removed. NOTE: vacuumed versions remain
+        listed in history but fail fast at read (the referenced files
+        are gone — same contract as real Delta)."""
         from ..sources.deltalog import DeltaLogWriter, _commits
 
         removed = super().vacuum()
@@ -1156,7 +680,11 @@ class DeltaLogWarehouse(Warehouse):
         return removed
 
 
-class IcebergMetaWarehouse(Warehouse):
+# the name the benchmark harness (perfbench/) imports
+DeltaLogWarehouse = Warehouse
+
+
+class IcebergMetaWarehouse(_TableFormat):
     """Warehouse whose storage layer IS the Apache Iceberg v2 table
     format (r10 — ``sources/iceberg_meta.py``, public Iceberg table
     spec): every table is a real Iceberg table directory —
@@ -1168,8 +696,8 @@ class IcebergMetaWarehouse(Warehouse):
 
     An SCD1 twin: the same Warehouse API materializes state changes
     as spec-shaped Iceberg snapshots, and the oracle hash it shares
-    with the parquet, file-pruned and Delta-log variants pins that the
-    storage format never leaks into query semantics.
+    with the Delta-log variants pins that the storage format never
+    leaks into query semantics.
 
     Scope: unpartitioned tables, rewrite-based DML through the
     inherited engines; appends are Iceberg FAST APPENDS (new manifest
@@ -1183,14 +711,6 @@ class IcebergMetaWarehouse(Warehouse):
 
         return IcebergTable(self.spark, self.path(table))
 
-    def _data_files(self, table: str) -> list[Path]:
-        # the current snapshot's live files: the directory also holds
-        # files of replaced snapshots
-        from ..sources.iceberg_meta import _resolve, live_entries
-
-        p = self.path(table)
-        return [_resolve(e["data_file"]["file_path"], p) for e in live_entries(p)]
-
     def table_exists(self, table: str) -> bool:
         from ..sources.iceberg_meta import current_metadata_version
 
@@ -1201,16 +721,14 @@ class IcebergMetaWarehouse(Warehouse):
 
         return current_metadata_version(self.path(table))
 
-    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
+    def read(self, table: str) -> DataFrame:
         from ..sources.iceberg_meta import read_iceberg
 
-        # merge_schema is a no-op: the metadata.json schema is
-        # authoritative (same contract as real Iceberg)
         return read_iceberg(self.spark, self.path(table))
 
     def read_version(self, table: str, version: int) -> DataFrame:
         """Time travel by snapshot ORDINAL (0 = first commit), the
-        ergonomic twin of DeltaLogWarehouse.read_version."""
+        ergonomic twin of Warehouse.read_version."""
         from ..sources.iceberg_meta import read_iceberg, snapshot_ids
 
         sids = snapshot_ids(self.path(table))
@@ -1233,7 +751,7 @@ class IcebergMetaWarehouse(Warehouse):
             for i, s in enumerate(md.get("snapshots") or [])
         ]
 
-    def _no_partitions(self, partition_by) -> None:
+    def _refuse_partition_by(self, partition_by) -> None:
         if partition_by:
             raise NotImplementedError(
                 "IcebergMetaWarehouse is unpartitioned by contract "
@@ -1242,27 +760,15 @@ class IcebergMetaWarehouse(Warehouse):
             )
 
     def append(self, df: DataFrame, table: str, partition_by=None) -> None:
-        self._no_partitions(partition_by)
+        self._refuse_partition_by(partition_by)
         self._tbl(table).append(df)
 
     def overwrite(self, df: DataFrame, table: str, partition_by=None) -> None:
-        self._no_partitions(partition_by)
+        self._refuse_partition_by(partition_by)
         self._tbl(table).overwrite(df)
 
-    def overwrite_from_plan(
-        self, df: DataFrame, table: str, partition_by=None
-    ) -> None:
+    def overwrite_from_plan(self, df: DataFrame, table: str) -> None:
         # committed data files never move (new files land under fresh
-        # uuid names), so a self-referencing overwrite needs no staged
-        # swap — the same property as the Delta-log backend
-        self._no_partitions(partition_by)
+        # uuid names), so a self-referencing overwrite is a plain
+        # overwrite — the same property as the Delta log
         self._tbl(table).overwrite(df)
-
-    # path-mechanics that bypass the metadata would corrupt the table
-    # for real Iceberg readers — fail fast (same guard set as the
-    # Delta-log backend)
-    def overwrite_partitions(self, df, table, partition_by):
-        raise NotImplementedError(
-            "overwrite_partitions bypasses Iceberg metadata; "
-            "IcebergMetaWarehouse tables are unpartitioned"
-        )

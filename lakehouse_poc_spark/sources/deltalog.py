@@ -21,16 +21,17 @@ RENAME COLUMN upgrade to reader 2 / writer 5 with NAME-MODE COLUMN
 MAPPING, the spec's rename-without-rewrite mechanic, which this
 reader also implements; anything newer still fails fast).
 
-Scope (documented, fail-fast elsewhere): unpartitioned tables,
-JSON commits plus PARQUET CHECKPOINTS (r8): every
+Scope (documented, fail-fast elsewhere): plain and partitioned
+tables, JSON commits plus PARQUET CHECKPOINTS (r8): every
 ``CHECKPOINT_INTERVAL`` commits the writer drops a
 ``%020d.checkpoint.parquet`` + ``_last_checkpoint`` pointer, and the
 reader opens long histories from the newest covering checkpoint in
 O(live files) instead of O(commits) — the spec's log-compaction
-optimization, in its on-disk shape. Row-level DML (merge, delete,
-upsert) rides the inherited Warehouse engines on ``DeltaLogWarehouse``,
-each committing through this writer; an overwrite may widen the schema
-with the batch's new columns. This is the interop layer.
+optimization, in its on-disk shape. This is the storage of every
+``sinks.warehouse.Warehouse`` table: row-level DML (merge, delete,
+upsert) rides the Warehouse engines, each committing through this
+writer; an overwrite may widen the schema with the batch's new
+columns.
 
 Reads are planned from the log alone: the committed ``schemaString``
 gives the data files' read schema (``_data_read_schema``), so opening
@@ -141,7 +142,10 @@ def _file_stats_json(path: Path) -> str | None:
             s = col.statistics
             if s is None or not s.has_min_max:
                 continue
-            lo, hi = plain(s.min), plain(s.max)
+            try:
+                lo, hi = plain(s.min), plain(s.max)
+            except NotImplementedError:  # e.g. INT96 timestamps
+                continue
             if lo is None or hi is None:
                 continue
             if name not in mins or (lo < mins[name]):  # type: ignore[operator]
@@ -202,6 +206,17 @@ def _decode_path(p: str) -> str:
     from urllib.parse import unquote
 
     return unquote(p)
+
+
+# Hadoop expands each path handed to ``spark.read.parquet`` as a glob
+_GLOB_CHARS = frozenset("\\*?[]{}")
+
+
+def literal_path(p: str | Path) -> str:
+    """``p`` with its glob metacharacters backslash-escaped, so Spark
+    reads the file or directory of that exact name (a table under
+    ``a[b]`` would otherwise match nothing)."""
+    return "".join("\\" + c if c in _GLOB_CHARS else c for c in str(p))
 
 
 # -- deletion vectors (spec: table feature, reader 3 / writer 7) --------
@@ -685,7 +700,7 @@ def _data_read_schema(state: dict):
     for the files this writer stages."""
     from pyspark.sql.types import StructField, StructType
 
-    pcols = set((state["metaData"] or {}).get("partitionColumns") or [])
+    pcols = set(_partition_columns(state))
     mapped = state.get("mapping_mode") == "name"
     return StructType(
         [
@@ -702,6 +717,10 @@ def _data_read_schema(state: dict):
     )
 
 
+def _partition_columns(state: dict) -> list[str]:
+    return list((state["metaData"] or {}).get("partitionColumns") or [])
+
+
 def _partition_groups(adds: list[dict], pcols: list[str]) -> list:
     """Add actions grouped by partition value tuple, in nulls-first
     order: a NULL partition value is legal per spec (absent/None in
@@ -715,6 +734,37 @@ def _partition_groups(adds: list[dict], pcols: list[str]) -> list:
     return sorted(
         groups.items(),
         key=lambda kv: tuple((c, v is not None, v or "") for c, v in kv[0]),
+    )
+
+
+def _hive_values(dirs) -> dict[str, str | None]:
+    """The partition values a hive-style directory chain
+    (``c=v/...``) spells: Spark's escaping undone, its default
+    partition read as NULL."""
+    import urllib.parse
+
+    values: dict[str, str | None] = {}
+    for comp in dirs:
+        k, _, v = comp.partition("=")
+        values[k] = (
+            None
+            if v == "__HIVE_DEFAULT_PARTITION__"
+            else urllib.parse.unquote(v)
+        )
+    return values
+
+
+def _in_hive_dir(add: dict, pcols: list[str]) -> bool:
+    """Whether ``add``'s file lies under the table in the hive
+    directory its partition values name — the layout Spark's partition
+    discovery reads the columns back from (this writer always stages
+    it; the spec lets a foreign writer put files anywhere)."""
+    parts = Path(_decode_path(add["path"])).parts
+    pv = add.get("partitionValues") or {}
+    return (
+        len(parts) == len(pcols) + 1
+        and [c.partition("=")[0] for c in parts[:-1]] == pcols
+        and _hive_values(parts[:-1]) == {c: pv.get(c) for c in pcols}
     )
 
 
@@ -734,22 +784,24 @@ def read_delta(
     DataFrame with the committed schema (the spec's metaData
     schemaString is authoritative, not the vanished files).
 
-    Partitioned tables read the way the spec prescribes: data files do
-    NOT contain the partition columns — each add action's
-    ``partitionValues`` map is the only copy, and the reader
-    reconstitutes the columns as literals per file group (cast through
-    the metaData schema, so types survive the hive string encoding).
-    ``partition_filters`` (col → allowed string values) prunes file
-    groups by METADATA before any byte is read — Delta's partition
-    pruning; it is an optimization, not a filter, so callers still
-    apply the row predicate."""
+    Partitioned tables: data files do NOT contain the partition columns
+    (spec). When every live file lies in the hive directory its
+    ``partitionValues`` name (``c=v/``, the layout this writer stages),
+    the table is ONE scan with the table as Spark's ``basePath``: the
+    partition columns come back from the directories, typed by the
+    metaData schema, and a filter on them prunes files at plan time.
+    Otherwise (a foreign writer's layout) the reader reconstitutes the
+    columns as literals per file group and unions the groups.
+    ``partition_filters`` (col → allowed string values) prunes files by
+    METADATA before any byte is read — Delta's partition pruning; it is
+    an optimization, not a filter, so callers still apply the row
+    predicate."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import StructField, StructType
 
     state = _replay(table_path, version)
     base = Path(table_path)
-    meta = state["metaData"] or {}
-    pcols = list(meta.get("partitionColumns") or [])
+    pcols = _partition_columns(state)
     mapped = state.get("mapping_mode") == "name"
     if mapped and pcols:
         raise DeltaLogError(
@@ -776,27 +828,37 @@ def read_delta(
                 for phys, f in zip(data_schema.names, schema.fields)
             ]
         )
-    groups = _partition_groups(state["adds"], pcols)
-    if partition_filters:
-        groups = [
-            (k, v)
-            for k, v in groups
-            if all(
-                val in allowed
-                for c, val in k
-                for fc, allowed in partition_filters.items()
-                if c == fc
-            )
-        ]
+    adds = [
+        a
+        for a in state["adds"]
+        if all(
+            (a.get("partitionValues") or {}).get(c) in allowed
+            for c, allowed in (partition_filters or {}).items()
+            if c in pcols
+        )
+    ]
+    if adds and all(_in_hive_dir(a, pcols) for a in adds):
+        read_schema = StructType(
+            data_schema.fields
+            + [StructField(c, schema[c].dataType, True) for c in pcols]
+        )
+        return _read_adds_mor(
+            spark, base, adds, read_schema, hive=True
+        ).select(schema.names)
     out = None
-    for key, adds in groups:
+    for key, adds in _partition_groups(adds, pcols):
         # r10: DV masks apply inside each partition group (data files
         # exclude partition columns, so the mask must run BEFORE the
-        # literals are attached)
+        # literals are attached). The literal is typed nullable, as
+        # Spark's own partition discovery types it; a filter on it
+        # still folds, so a group it rules out is never scanned.
         part = _read_adds_mor(spark, base, adds, data_schema)
         for c, val in key:
             part = part.withColumn(
-                c, F.lit(val).cast(schema[c].dataType)
+                c,
+                F.when(F.lit(False), None)
+                .otherwise(F.lit(val))
+                .cast(schema[c].dataType),
             )
         part = part.select([f.name for f in schema.fields])
         out = part if out is None else out.unionByName(part)
@@ -855,7 +917,11 @@ def _dv_mask(spark: SparkSession, base: Path, adds: list[dict]):
 
 
 def _read_adds_mor(
-    spark: SparkSession, base: Path, adds: list[dict], read_schema
+    spark: SparkSession,
+    base: Path,
+    adds: list[dict],
+    read_schema,
+    hive: bool = False,
 ) -> DataFrame:
     """Read a list of add actions with ``read_schema`` (the log-planned
     :func:`_data_read_schema`), applying MERGE-ON-READ deletion-
@@ -866,11 +932,16 @@ def _read_adds_mor(
     over table data files — ``read_delta`` and every writer-side
     rewrite (OPTIMIZE, the warehouse compaction) go through it, so no
     path resurrects deleted rows. A reader materializes each DV bitmap
-    in memory by design (that's what a DV IS)."""
+    in memory by design (that's what a DV IS). ``hive`` reads the
+    partition columns in ``read_schema`` from the files' ``c=v/``
+    directories under ``base`` (see :func:`_in_hive_dir`)."""
     from pyspark.sql import functions as F
 
-    scan = spark.read.schema(read_schema).parquet(
-        *[str(base / _decode_path(a["path"])) for a in adds]
+    reader = spark.read.schema(read_schema)
+    if hive:
+        reader = reader.option("basePath", str(base))
+    scan = reader.parquet(
+        *[literal_path(base / _decode_path(a["path"])) for a in adds]
     )
     mask = _dv_mask(spark, base, adds)
     if mask is None:
@@ -960,7 +1031,7 @@ def _table_changes_cdc(
     schema = StructType.fromJson(
         _json.loads(state["metaData"]["schemaString"])
     )
-    if (state["metaData"] or {}).get("partitionColumns"):
+    if _partition_columns(state):
         return None  # partition reconstitution rides the diff path
     d = _log_dir(base)
     insert_files: list[str] = []
@@ -995,14 +1066,16 @@ def _table_changes_cdc(
     if insert_files:
         out = (
             spark.read.schema(schema)
-            .parquet(*insert_files)
+            .parquet(*map(literal_path, insert_files))
             .withColumn("_change_type", F.lit("insert"))
         )
     if cdc_files:
         cdc_schema = StructType(schema.fields).add(
             "_change_type", StringType()
         )
-        part = spark.read.schema(cdc_schema).parquet(*cdc_files)
+        part = spark.read.schema(cdc_schema).parquet(
+            *map(literal_path, cdc_files)
+        )
         out = part if out is None else out.unionByName(part)
     return out if out is not None else _empty_cdf(spark, base, v_to)
 
@@ -1052,29 +1125,7 @@ class DeltaLogWriter:
         """Write df's parquet under job-unique names in the table dir;
         return spec-shaped add actions (path, size, modificationTime,
         dataChange, stats)."""
-        job = uuid.uuid4().hex[:12]
-        staging = self.path.with_name(self.path.name + f"__dl_stage.{job}")
-        _write_staged(df.write, staging)
-        self.path.mkdir(parents=True, exist_ok=True)
-        adds: list[dict] = []
-        for i, part in enumerate(sorted(staging.glob("*.parquet"))):
-            name = f"part-{i:05d}-{job}-c000.snappy.parquet"
-            part.rename(self.path / name)
-            st = (self.path / name).stat()
-            adds.append(
-                {
-                    "add": {
-                        "path": name,
-                        "partitionValues": {},
-                        "size": st.st_size,
-                        "modificationTime": int(st.st_mtime * 1000),
-                        "dataChange": True,
-                        "stats": _file_stats_json(self.path / name),
-                    }
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        return adds
+        return self._stage_partitioned(df, [])
 
     def _commit(
         self, actions: list[dict], op: str, version: int | None = None
@@ -1132,10 +1183,20 @@ class DeltaLogWriter:
         ]
 
     def create(self, df: DataFrame) -> int:
+        return self._create(df, [])
+
+    def _create(
+        self, df: DataFrame, spec: list[str], extra: list[dict] = ()
+    ) -> int:
+        """CREATE TABLE AS SELECT as version 0, with ``extra`` actions
+        (a ``txn`` marker) in the same commit."""
         if current_version(self.path) >= 0:
             raise DeltaLogError(f"table already exists: {self.path}")
+        meta = self._meta_actions(df)
+        meta[1]["metaData"]["partitionColumns"] = list(spec)
+        adds = self._stage_partitioned(df, spec) if spec else self._stage(df)
         return self._commit(
-            self._meta_actions(df) + self._stage(df), "CREATE TABLE AS SELECT"
+            meta + adds + list(extra), "CREATE TABLE AS SELECT", version=0
         )
 
     # -- CHANGE DATA FEED (spec: delta.enableChangeDataFeed) -------------
@@ -1348,7 +1409,7 @@ class DeltaLogWriter:
         exactly like the old pre-stage check."""
         constraints = self._constraint_exprs(state)
         if not constraints:
-            return self._stage(self._to_physical(df, state))
+            return self._stage_as(df, state)
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
@@ -1364,23 +1425,35 @@ class DeltaLogWriter:
                 for name, expr in constraints.items()
             ],
         )
-        adds = self._stage(self._to_physical(df, state))
+        adds = self._stage_as(df, state)
         try:
             self._raise_violations(constraints, obs.get)
         except DeltaLogError:
             for a in adds:  # rejected whole: un-stage the batch
-                (self.path / a["add"]["path"]).unlink(missing_ok=True)
+                (self.path / _decode_path(a["add"]["path"])).unlink(
+                    missing_ok=True
+                )
             raise
         return adds
 
+    def _stage_as(self, df: DataFrame, state: dict) -> list[dict]:
+        """Stage ``df`` in the table's layout: under its partition
+        columns when it declares any, else under physical names."""
+        spec = _partition_columns(state)
+        if spec:
+            return self._stage_partitioned(df, spec)
+        return self._stage(self._to_physical(df, state))
+
     def _stage_partitioned(self, df: DataFrame, spec: list[str]) -> list[dict]:
-        """Stage a partitioned write the way the spec stores it: data
-        files DO NOT contain the partition columns — Spark's native
+        """Stage a write the way the spec stores it: data files DO NOT
+        contain the partition columns in ``spec`` — Spark's native
         ``partitionBy`` drops them into hive dirs, which are parsed
-        into each add action's ``partitionValues`` and discarded (the
-        log is the only copy, read_delta reconstitutes). Rows are
-        clustered by value first so each partition value is one file."""
-        import urllib.parse
+        into each add action's ``partitionValues``. The files keep
+        those ``c=v/`` directories, as Delta's own writers lay them
+        out, so ``read_delta`` reads the table in one scan. Rows are
+        clustered by value first so each partition value is one file.
+        An empty ``spec`` stages df's partitions as they are."""
+        from urllib.parse import quote
 
         from pyspark.sql import functions as F
 
@@ -1390,32 +1463,34 @@ class DeltaLogWriter:
         job = uuid.uuid4().hex[:12]
         staging = self.path.with_name(self.path.name + f"__dl_stage.{job}")
         _write_staged(
-            df.repartition(*[F.col(c) for c in spec]).write.partitionBy(*spec),
+            df.repartition(*[F.col(c) for c in spec]).write.partitionBy(*spec)
+            if spec
+            else df.write,
             staging,
         )
         self.path.mkdir(parents=True, exist_ok=True)
         adds: list[dict] = []
         for i, part in enumerate(sorted(staging.rglob("*.parquet"))):
-            values: dict[str, str | None] = {}
-            for comp in part.relative_to(staging).parts[:-1]:
-                k, _, v = comp.partition("=")
-                values[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v)
-                )
-            name = f"part-{i:05d}-{job}-c000.snappy.parquet"
-            part.rename(self.path / name)
-            st = (self.path / name).stat()
+            dirs = part.relative_to(staging).parts[:-1]
+            dest = self.path.joinpath(
+                *dirs, f"part-{i:05d}-{job}-c000.snappy.parquet"
+            )
+            dest.parent.mkdir(parents=True, exist_ok=True)
+            part.rename(dest)
+            st = dest.stat()
             adds.append(
                 {
                     "add": {
-                        "path": name,
-                        "partitionValues": values,
+                        # the spec's path is a URI: Spark's own %XX
+                        # escapes in the directory names are encoded
+                        "path": quote(
+                            dest.relative_to(self.path).as_posix(), safe="/="
+                        ),
+                        "partitionValues": _hive_values(dirs),
                         "size": st.st_size,
                         "modificationTime": int(st.st_mtime * 1000),
                         "dataChange": True,
-                        "stats": _file_stats_json(self.path / name),
+                        "stats": _file_stats_json(dest),
                     }
                 }
             )
@@ -1426,30 +1501,58 @@ class DeltaLogWriter:
         """CREATE a partitioned table: ``metaData.partitionColumns``
         pins the spec for the table's lifetime (the Delta contract:
         partition columns are table-level and immutable)."""
-        if current_version(self.path) >= 0:
-            raise DeltaLogError(f"table already exists: {self.path}")
-        meta = self._meta_actions(df)
-        meta[1]["metaData"]["partitionColumns"] = list(spec)
-        return self._commit(
-            meta + self._stage_partitioned(df, spec),
-            "CREATE TABLE AS SELECT",
-        )
+        return self._create(df, spec)
+
+    def _check_spec(self, state: dict, spec: list[str]) -> None:
+        declared = _partition_columns(state)
+        if declared != list(spec):
+            raise DeltaLogError(
+                f"partition spec mismatch: table declares {declared}, "
+                f"the write used {list(spec)} — Delta partition columns "
+                "are immutable"
+            )
 
     def append_partitioned(self, df: DataFrame, spec: list[str]) -> int:
         """Append to a partitioned table; the spec must MATCH the
         table's ``partitionColumns`` exactly (fail-fast — Delta does
-        not evolve partition specs)."""
+        not evolve partition specs). Otherwise a plain :meth:`append`,
+        which stages in the table's layout."""
         if current_version(self.path) < 0:
             return self.create_partitioned(df, spec)
+        self._check_spec(_replay(self.path, None), spec)
+        return self.append(df)
+
+    def overwrite_partitions(
+        self,
+        df: DataFrame,
+        spec: list[str],
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """Dynamic partition overwrite as ONE commit, claimed at the
+        replayed snapshot + 1: remove the live files of every partition
+        the batch covers, add the batch's files; other partitions'
+        files stay live. ``txn`` = (app id, batch id) makes it
+        idempotent like :meth:`append_txn`: a batch id the ledger holds
+        is a no-op (None), else the marker rides the data commit — the
+        snapshot the ledger was read from is the one the commit claims,
+        so check and write are atomic."""
+        marker = self._txn_actions(txn)
+        if current_version(self.path) < 0:
+            return self._create(df, spec, marker)
         state = _replay(self.path, None)
-        declared = list((state["metaData"] or {}).get("partitionColumns") or [])
-        if declared != list(spec):
-            raise DeltaLogError(
-                f"partition spec mismatch: table declares {declared}, "
-                f"append used {list(spec)} — Delta partition columns are "
-                "immutable"
-            )
-        return self._commit(self._stage_partitioned(df, spec), "WRITE")
+        self._check_spec(state, spec)
+        if self._in_ledger(state, txn):
+            return None  # already applied: exactly-once replay
+        df = self._apply_generated(df, state)
+        self._refuse_new_columns(df, state)
+        adds = self._stage_checked(df, state)
+
+        def part(a: dict) -> tuple:
+            return tuple((a.get("partitionValues") or {}).get(c) for c in spec)
+
+        covered = {part(a["add"]) for a in adds}
+        replaced = [a["path"] for a in state["adds"] if part(a) in covered]
+        return self._commit_replace(state, replaced, adds, marker)
 
     def _conflicting_kind(self, from_v: int) -> str | None:
         """Scan the commits that won versions ≥ ``from_v`` and return
@@ -1489,28 +1592,7 @@ class DeltaLogWriter:
         retention window. A batch carrying a column the table lacks
         is refused: an append never changes the schema (``overwrite``
         does)."""
-        if current_version(self.path) < 0:
-            return self.create(df)
-        state = _replay(self.path, None)
-        df = self._apply_generated(df, state)
-        self._refuse_new_columns(df, state)
-        adds = self._stage_checked(df, state)
-        for attempt in range(max_retries + 1):
-            v_try = current_version(self.path) + 1
-            try:
-                return self._commit(adds, "WRITE", version=v_try)
-            except DeltaLogError:
-                kind = self._conflicting_kind(v_try)
-                if kind is not None:
-                    raise DeltaLogError(
-                        f"concurrent {kind} at version {v_try} "
-                        "conflicts with this append"
-                    ) from None
-                if attempt == max_retries:
-                    raise DeltaLogError(
-                        f"append lost {max_retries + 1} commit races "
-                        f"starting at version {v_try}"
-                    ) from None
+        return self._append(df, None, max_retries)
 
     def append_txn(
         self, df: DataFrame, app_id: str, txn_version: int
@@ -1522,46 +1604,56 @@ class DeltaLogWriter:
         committed, so the duplicate is a NO-OP (returns None).
         Otherwise the commit carries the data AND the txn marker
         atomically — the marker can never run ahead of or behind its
-        rows. Markers survive checkpoints (the spec requires the
-        newest txn per appId in every checkpoint)."""
-        marker = {"txn": {"appId": app_id, "version": txn_version}}
+        rows (on a new table too: the marker rides the CREATE).
+        Markers survive checkpoints (the spec requires the newest txn
+        per appId in every checkpoint)."""
+        return self._append(df, (app_id, txn_version), 3)
+
+    @staticmethod
+    def _txn_actions(txn: tuple[str, int] | None) -> list[dict]:
+        if txn is None:
+            return []
+        return [{"txn": {"appId": txn[0], "version": int(txn[1])}}]
+
+    @staticmethod
+    def _in_ledger(state: dict, txn: tuple[str, int] | None) -> bool:
+        return txn is not None and txn[1] <= state["txns"].get(txn[0], -1)
+
+    def _append(
+        self, df: DataFrame, txn: tuple[str, int] | None, max_retries: int
+    ) -> int | None:
+        marker = self._txn_actions(txn)
         if current_version(self.path) < 0:
-            # table bootstrap: marker rides the SAME commit — a crash
-            # can never separate batch 0's rows from its marker
-            return self._commit(
-                self._meta_actions(df) + self._stage(df) + [marker],
-                "CREATE TABLE AS SELECT",
-            )
+            return self._create(df, [], marker)
         state = _replay(self.path, None)
-        if txn_version <= state["txns"].get(app_id, -1):
+        if self._in_ledger(state, txn):
             return None  # already applied: exactly-once replay
         df = self._apply_generated(df, state)
         self._refuse_new_columns(df, state)
-        adds = self._stage_checked(df, state) + [marker]
-        # same optimistic retry as append(), with one extra re-check:
-        # a winner may BE this txn (another worker of the same app) —
-        # re-consult the ledger before every retry so the replay stays
-        # exactly-once under races too
-        for attempt in range(4):
-            v_try = current_version(self.path) + 1
+        adds = self._stage_checked(df, state) + marker
+        v_try = state["version"] + 1
+        for attempt in range(max_retries + 1):
             try:
                 return self._commit(adds, "WRITE", version=v_try)
             except DeltaLogError:
-                if _replay(self.path, None)["txns"].get(app_id, -1) >= txn_version:
-                    return None  # the race winner was this very txn
+                # a winner may BE this txn (another worker of the same
+                # app): the ledger keeps the replay exactly-once
+                if self._in_ledger(_replay(self.path, None), txn):
+                    return None
                 kind = self._conflicting_kind(v_try)
-                if kind is not None or attempt == 3:
+                if kind is not None or attempt == max_retries:
                     raise DeltaLogError(
                         f"concurrent {kind or 'commit'} at version "
-                        f"{v_try} conflicts with this txn append"
+                        f"{v_try} conflicts with this append"
                     ) from None
+                v_try = current_version(self.path) + 1
 
     def overwrite(self, df: DataFrame) -> int:
         """Remove every live file, add the new ones — one commit (the
         spec's atomic replace; old files stay on disk for time travel
-        until a vacuum). A batch carrying columns the table lacks
-        widens the schema in the same commit (Delta's overwriteSchema
-        shape, additive only): the committed fields keep their order
+        until a vacuum). A batch carrying columns the table lacks, or
+        retyping one, changes the schema in the same commit (Delta's
+        overwriteSchema shape): the committed fields keep their order
         and the new ones follow. The commit claims the version after
         the replayed snapshot, so a commit landing meanwhile aborts
         the overwrite with its staged files reclaimed."""
@@ -1592,22 +1684,36 @@ class DeltaLogWriter:
             )
 
     def _evolved_metadata(self, df: DataFrame, state: dict) -> list[dict]:
-        """A ``metaData`` action appending the batch's new columns to
-        the committed schema — same id, configuration and partition
-        columns — or nothing when the batch adds none."""
+        """A ``metaData`` action for an overwrite whose batch changes
+        the schema — same id, configuration and partition columns:
+        the batch's new columns follow the committed ones, and a column
+        the batch retypes takes the batch's type (the overwrite
+        replaces every file, so no file of the old type stays live).
+        Nothing when the batch changes neither."""
+        from pyspark.sql.types import StructType
+
         new = self._new_columns(df, state)
-        if not new:
+        batch = {f.name: f for f in df.schema.fields}
+        retyped = {
+            f.name
+            for f in StructType.fromJson(json.loads(state["schema"])).fields
+            if f.name in batch
+            and f.dataType.simpleString() != batch[f.name].dataType.simpleString()
+        }
+        if not new and not retyped:
             return []
         if state["mapping_mode"] != "none":
             raise DeltaLogError(
-                f"cannot add columns {new} on a column-mapped table: new "
-                "fields would need mapping ids and physical names"
+                f"cannot add or retype columns {new + sorted(retyped)} on a "
+                "column-mapped table: fields would need new mapping ids "
+                "and physical names"
             )
         md = dict(state["metaData"])
         schema = json.loads(md["schemaString"])
-        schema["fields"] += [
-            f.jsonValue() for f in df.schema.fields if f.name in new
-        ]
+        for f in schema["fields"]:
+            if f["name"] in retyped:
+                f["type"] = batch[f["name"]].dataType.jsonValue()
+        schema["fields"] += [batch[c].jsonValue() for c in new]
         md["schemaString"] = json.dumps(schema)
         return [{"metaData": md}]
 
@@ -1643,7 +1749,9 @@ class DeltaLogWriter:
             )
         except DeltaLogError:
             for a in adds:  # lost the race: reclaim staged files
-                (self.path / a["add"]["path"]).unlink(missing_ok=True)
+                (self.path / _decode_path(a["add"]["path"])).unlink(
+                    missing_ok=True
+                )
             raise
 
     def delete_where_dv(self, predicate) -> dict:
@@ -1710,9 +1818,7 @@ class DeltaLogWriter:
 
         base = self.path
         by_uri = {_file_uri(base, a): a for a in state["adds"]}
-        pcols = list(
-            (state["metaData"] or {}).get("partitionColumns") or []
-        )
+        pcols = _partition_columns(state)
         # the unmasked scan keeps each row's physical file/row
         # coordinates for the bitmaps; partitioned tables (r10)
         # reconstitute their partition columns per add-group BEFORE
@@ -1723,7 +1829,7 @@ class DeltaLogWriter:
         df = None
         for key, adds in _partition_groups(state["adds"], pcols):
             part = self.spark.read.schema(data_schema).parquet(
-                *[str(base / _decode_path(a["path"])) for a in adds]
+                *[literal_path(base / _decode_path(a["path"])) for a in adds]
             ).select(
                 "*",
                 F.col("_metadata.file_path").alias("__dv_fp"),
@@ -1939,7 +2045,9 @@ class DeltaLogWriter:
         re-process the rewrite — so readers see identical rows before
         and after while the file count drops. History is preserved:
         compaction is a normal commit, the pre-OPTIMIZE version stays
-        time-travelable until VACUUM retires its files. Each bin is
+        time-travelable until VACUUM retires its files. The commit
+        claims the snapshot's version + 1, so a write landing meanwhile
+        aborts it with the staged files reclaimed. Each bin is
         read through the log-planned ``_read_adds_mor`` (committed
         schema, physical names under column mapping), so deletion-
         vector masks apply and the rewritten file drops the deleted
@@ -1954,10 +2062,11 @@ class DeltaLogWriter:
         maintenance story; this is the spec-shaped stand-in on the
         plain-parquet log (same class as restore/rename above).
         """
+        from pyspark.sql import functions as F
+
         state = _replay(self.path, None)
-        if state["mapping_mode"] != "none" and (
-            (state["metaData"] or {}).get("partitionColumns")
-        ):
+        spec = _partition_columns(state)
+        if state["mapping_mode"] != "none" and spec:
             raise DeltaLogError(
                 "OPTIMIZE on a partitioned column-mapping table is not "
                 "implemented (partitionValues would need physical-name "
@@ -1967,15 +2076,16 @@ class DeltaLogWriter:
         groups: dict[tuple, list[dict]] = {}
         for a in state["adds"]:
             if int(a.get("size", 0)) < target_file_bytes:
-                key = tuple(sorted((a.get("partitionValues") or {}).items()))
+                pv = a.get("partitionValues") or {}
+                key = tuple((c, pv.get(c)) for c in spec)
                 groups.setdefault(key, []).append(a)
-        actions: list[dict] = []
-        now = int(time.time() * 1000)
+        adds: list[dict] = []
+        removed: list[str] = []
         n_before = len(state["adds"])
         bins_rewritten = 0
-        removed = 0
-        added = 0
-        for key in sorted(groups):
+        for key in sorted(
+            groups, key=lambda k: [(v is not None, v or "") for _, v in k]
+        ):
             cand = sorted(groups[key], key=lambda a: a["path"])
             bins: list[list[dict]] = []
             cur: list[dict] = []
@@ -1994,37 +2104,29 @@ class DeltaLogWriter:
                     continue
                 df = _read_adds_mor(
                     self.spark, self.path, b, _data_read_schema(state)
+                ).select(
+                    "*",
+                    *[F.lit(v).cast("string").alias(c) for c, v in key],
                 )
-                staged = self._stage(df.coalesce(1))
-                for add in staged:
+                for add in self._stage_partitioned(df.coalesce(1), spec):
                     add["add"]["dataChange"] = False
-                    add["add"]["partitionValues"] = dict(key)
-                    actions.append(add)
-                    added += 1
-                for a in b:
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": a["path"],
-                                "deletionTimestamp": now,
-                                "dataChange": False,
-                            }
-                        }
-                    )
-                    removed += 1
+                    adds.append(add)
+                removed += [a["path"] for a in b]
                 bins_rewritten += 1
-        if not actions:
+        if not removed:
             return {
                 "version": -1,
                 "files_before": n_before,
                 "files_after": n_before,
                 "bins_rewritten": 0,
             }
-        v = self._commit(actions, "OPTIMIZE")
+        v = self._commit_replace(
+            state, removed, adds, op="OPTIMIZE", data_change=False
+        )
         return {
             "version": v,
             "files_before": n_before,
-            "files_after": n_before - removed + added,
+            "files_after": n_before - len(removed) + len(adds),
             "bins_rewritten": bins_rewritten,
         }
 
@@ -2077,12 +2179,14 @@ class DeltaLogWriter:
         }
         now = time.time() * 1000
         removed: list[str] = []
-        for f in sorted(self.path.glob("*.parquet")):
-            if f.name in live or f.name.startswith("."):
+        for f in sorted(self.path.rglob("*.parquet")):
+            rel = f.relative_to(self.path).as_posix()
+            # the log, the change feed and hidden files are not data
+            if rel in live or any(c[0] in "_." for c in rel.split("/")):
                 continue
-            since = dropped.get(f.name, f.stat().st_mtime * 1000)
+            since = dropped.get(rel, f.stat().st_mtime * 1000)
             if now - since >= retention_ms:
-                removed.append(f.name)
+                removed.append(rel)
                 if not dry_run:
                     f.unlink()
         for f in sorted(self.path.glob("deletionvector_*.bin")):

@@ -175,7 +175,6 @@ def rollup_stream(
     dims: list[str] | None = None,
     ts_col: str = "ts",
     value_col: str = "value",
-    txn_app_id: str | None = None,
 ) -> None:
     """foreachBatch → incremental hourly rollup: each micro-batch is
     merged into the rollup with operators/rollup.py (partial aggregate
@@ -184,24 +183,26 @@ def rollup_stream(
     no streaming state store is needed and restarts resume from the
     checkpoint.
 
-    ``txn_app_id`` arms the warehouse transaction registry
-    (Delta txnAppId/txnVersion emulation): a rollup upsert is NOT
-    content-idempotent (re-applying a batch double-counts), so
-    re-delivered batch ids — a lost or rebuilt checkpoint, a job
-    retry — are detected and skipped instead of re-applied. See
-    ``Warehouse.txn_applied`` for the atomicity fine print."""
-    from ..operators.rollup import upsert_hourly_rollup
+    Exactly once: a rollup upsert is NOT content-idempotent
+    (re-applying a batch double-counts), so each batch's commit carries
+    a Delta ``txn`` action (app id = the rollup table and the checkpoint
+    location, version = the batch id). A re-delivered batch id — a lost
+    or rebuilt checkpoint at the same location, a job retry — finds
+    itself in the table's ledger and is skipped; the marker commits
+    atomically with the rows it vouches for. Another stream writing to
+    the same table from another checkpoint numbers its batches from 0
+    again, so it keeps its own ledger entry. Batch ids must be
+    deterministic (same source → same batches)."""
+    from ..operators.rollup import _upsert_hourly_rollup
+
+    app_id = f"{table}@{checkpoint_dir}"
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if txn_app_id is not None and wh.txn_applied(txn_app_id, batch_id):
-            return
-        upsert_hourly_rollup(
-            wh, table, batch_df, ts_col=ts_col, dims=dims, value_col=value_col
+        _upsert_hourly_rollup(
+            wh, table, batch_df, ts_col, dims, value_col, (app_id, batch_id)
         )
-        if txn_app_id is not None:
-            wh.txn_commit(txn_app_id, batch_id)
 
     run_foreach_batch(events, apply, checkpoint_dir)
 

@@ -90,7 +90,7 @@ def _uses_outside_tests() -> tuple[set[str], set[str]]:
 
 def test_every_package_name_has_a_caller_outside_tests():
     top, methods = _definitions()
-    assert {"Warehouse", "DeltaLogWarehouse", "IcebergMetaWarehouse"} <= set(top)
+    assert {"Warehouse", "IcebergMetaWarehouse"} <= set(top)
     attrs, names = _uses_outside_tests()
     test_only = {n: w for n, w in top.items() if n not in attrs | names}
     for n, w in methods.items():

@@ -11,6 +11,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from lakehouse_poc_spark.sinks.warehouse import Warehouse
 from lakehouse_poc_spark.sources.deltalog import (
     DeltaLogError,
     DeltaLogWriter,
@@ -150,13 +151,11 @@ def test_version_out_of_range_fails_fast(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# DeltaLogWarehouse: the Warehouse API on protocol storage.
+# Warehouse: the warehouse API on protocol storage.
 
 
 def test_deltalog_warehouse_roundtrip_and_history(spark, tmp_path):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.t"
     assert not wh.table_exists(t)
     wh.overwrite(_df(spark, [(1, "a"), (2, "b")]), t)
@@ -176,9 +175,7 @@ def test_deltalog_warehouse_upsert_and_scd2_ride_rewrite_engines(
     """The inherited SCD engines must route through the log (no
     path mechanics): upsert twice, then verify state AND that every
     state change was a commit."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.u"
     wh.upsert(_df(spark, [(1, "a"), (2, "b")]), t, keys=["id"])
     wh.upsert(_df(spark, [(2, "B"), (3, "c")]), t, keys=["id"])
@@ -192,9 +189,7 @@ def test_deltalog_warehouse_upsert_and_scd2_ride_rewrite_engines(
 
 
 def test_deltalog_warehouse_restore_preserves_history(spark, tmp_path):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.r"
     wh.overwrite(_df(spark, [(1, "a")]), t)
     wh.overwrite(_df(spark, [(2, "b")]), t)
@@ -205,15 +200,14 @@ def test_deltalog_warehouse_restore_preserves_history(spark, tmp_path):
 
 
 def test_deltalog_warehouse_path_mechanics_fail_fast(spark, tmp_path):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.overwrite(_df(spark, [(1, "a")]), "dim.t")
     # the file-pruned upsert is a log commit, not a file move
     wh.upsert_file_pruned(_df(spark, [(1, "x")]), "dim.t", keys=["id"])
     assert wh.version("dim.t") == 1
     assert [(r.id, r.v) for r in wh.read("dim.t").collect()] == [(1, "x")]
-    with pytest.raises(NotImplementedError, match="unpartitioned"):
+    # an unpartitioned table stays unpartitioned: the spec is immutable
+    with pytest.raises(DeltaLogError, match="partition spec mismatch"):
         wh.append(_df(spark, [(1, "a")]), "dim.t", partition_by=["id"])
     # the rewrite the refusals point to commits through the log
     wh.delete_where("dim.t", "id = 1")
@@ -234,9 +228,7 @@ def test_deltalog_file_pruned_upsert_is_one_cow_commit(spark, tmp_path):
     rewrites that file only, and the remove + add actions land in ONE
     commit. The superseded file stays readable through read_version
     until vacuum retires it."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.k"
     _clustered(spark, wh, t)
     n_files = len(wh._data_files(t))
@@ -274,9 +266,7 @@ def test_deltalog_file_pruned_concurrent_reader_never_sees_duplicates(
     upsert's removes and adds are one commit."""
     import threading
 
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.race"
     _clustered(spark, wh, t, n=1000, files=4)
     stop = threading.Event()
@@ -328,9 +318,7 @@ def test_deltalog_file_pruned_upsert_aborts_on_interleaved_commit(
     fails the upsert (it claims exactly the version after its
     snapshot), reclaims its staged files and leaves the interloper's
     commit standing — a lost update is impossible."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.occ"
     _clustered(spark, wh, t, n=100, files=4)
     orig = DeltaLogWriter._stage_checked
@@ -361,9 +349,7 @@ def test_deltalog_file_pruned_upsert_refuses_deletion_vectors(spark, tmp_path):
     """The touched-file listing needs each row's file, which a
     DV-masked scan does not carry: the upsert refuses until a compact
     folds the vectors in, then runs as usual."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.dv"
     _clustered(spark, wh, t, n=100, files=4)
     DeltaLogWriter(spark, wh.path(t)).delete_where_dv("id = 3")
@@ -385,10 +371,9 @@ def test_vacuum_ages_a_dropped_file_by_its_remove_action(spark, tmp_path):
     import os
     import time
 
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
     from lakehouse_poc_spark.sources.deltalog import write_checkpoint
 
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.old"
     wh.overwrite(_df(spark, [(1, "a"), (2, "b")]), t)
     old = wh._data_files(t)
@@ -437,6 +422,11 @@ def test_overwrite_widens_schema_and_append_refuses_new_columns(
         if line.startswith('{"metaData"')
     ]
     assert len(meta) == 1 and meta[0]["id"] == table_id
+    # a retyped column takes the batch's type: no live file keeps the old
+    w.overwrite(spark.createDataFrame([(5, 7, "z")], "k long, a long, b string"))
+    assert dict(read_delta(spark, p).dtypes)["a"] == "bigint"
+    assert [tuple(r) for r in read_delta(spark, p).collect()] == [(5, 7, "z")]
+    assert read_delta(spark, p, version=1).collect()[0]["a"] == "c"
     # a column-mapped table cannot take new fields this way
     w.rename_column("a", "a2")
     with pytest.raises(DeltaLogError, match="column-mapped"):
@@ -449,9 +439,7 @@ def test_deltalog_warehouse_compact_is_one_commit_same_data(spark, tmp_path):
     """OPTIMIZE on the protocol store: many small files → one commit
     whose adds replace them; data identical, pre-compaction version
     still readable (time travel intact)."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.c"
     for i in range(4):
         wh.append(spark.range(i * 10, (i + 1) * 10).selectExpr("id"), t)
@@ -468,9 +456,7 @@ def test_deltalog_warehouse_compact_is_one_commit_same_data(spark, tmp_path):
 
 
 def test_deltalog_warehouse_vacuum_respects_latest_and_age(spark, tmp_path):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.v"
     wh.overwrite(_df(spark, [(1, "a")]), t)
     wh.overwrite(_df(spark, [(2, "b")]), t)
@@ -681,10 +667,9 @@ def test_add_actions_carry_stats_and_skipping_prunes(spark, tmp_path):
 def test_deltalog_optimize_conflict_preserves_raced_append(
     spark, tmp_path, monkeypatch
 ):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
     from lakehouse_poc_spark.sources.deltalog import DeltaLogWriter as DLW
 
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.optrace"
     wh.append(spark.range(10).selectExpr("id"), t)
     orig = DLW._stage
@@ -694,7 +679,7 @@ def test_deltalog_optimize_conflict_preserves_raced_append(
         adds = orig(self, df)
         if not raced:
             raced.append(True)
-            wh2 = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+            wh2 = Warehouse(spark, str(tmp_path / "wh"))
             wh2.append(spark.range(100, 105).selectExpr("id"), t)
         return adds
 
@@ -814,10 +799,9 @@ def test_generated_columns_computed_and_verified(spark, tmp_path):
 
 
 def test_deltalog_clustered_optimize_enables_stats_skipping(spark, tmp_path):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
     from lakehouse_poc_spark.sources.deltalog import files_skipped_by_stats
 
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "fact.clust"
     # interleaved appends: every file spans the whole id range, so
     # stats skipping is useless before OPTIMIZE

@@ -126,9 +126,9 @@ def test_dv_vacuum_keeps_live_sidecars_sweeps_superseded(spark, tmp_path):
 def test_warehouse_vacuum_sweeps_superseded_sidecar(spark, tmp_path):
     """The warehouse VACUUM is the writer's, table by table, so a DV
     sidecar a later delete superseded goes with the dropped files."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.overwrite(_df(spark, [(i, f"v{i}") for i in range(6)]).coalesce(1), "t")
     w = DeltaLogWriter(spark, wh.path("t"))
     w.delete_where_dv("id = 0")
@@ -415,10 +415,10 @@ def test_restore_resolves_relative_dv_sidecars(spark, tmp_path):
 def test_compaction_keeps_dv_deleted_rows_deleted(spark, tmp_path, entry):
     """Both compaction entry points read through the DV-masking path:
     a rewrite must not bring back rows a DV delete removed."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
     schema = "id long, amt long"
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.overwrite(spark.createDataFrame([(1, 10), (2, -5)], schema), "t")
     wh.append(spark.createDataFrame([(3, 7)], schema), "t")
     wh._writer("t").delete_where_dv("amt < 0")

@@ -21,22 +21,22 @@ def _clustered_table(spark, tmp_path, n_files=10):
     )
     wh.append(df.repartition(8), "raw.t")
     wh.compact("raw.t", target_files=n_files, cluster_by=["v"])
-    return str(wh.path("raw.t"))
+    return wh._data_files("raw.t")
 
 
 def test_stats_cover_every_file_and_row(spark, tmp_path):
-    path = _clustered_table(spark, tmp_path)
-    stats = collect_file_stats(spark, path, ["v"])
+    files = _clustered_table(spark, tmp_path)
+    stats = collect_file_stats(spark, files, ["v"])
     rows = stats.collect()
-    n_files = len(list((tmp_path / "wh/raw/t").glob("*.parquet")))
+    n_files = len(files)
     assert len(rows) == n_files
     assert sum(r["n_rows"] for r in rows) == 10_000
     assert all(r["v_min"] <= r["v_max"] for r in rows)
 
 
 def test_selective_range_prunes_most_files(spark, tmp_path):
-    path = _clustered_table(spark, tmp_path)
-    stats = collect_file_stats(spark, path, ["v"])
+    files = _clustered_table(spark, tmp_path)
+    stats = collect_file_stats(spark, files, ["v"])
     total = stats.count()
     surviving = prune_files(stats, "v", 1000, 1500)
     # a ~5% range over a 10-file clustered table touches 1-2 files
@@ -44,11 +44,11 @@ def test_selective_range_prunes_most_files(spark, tmp_path):
 
 
 def test_pruned_read_equals_plain_predicate(spark, tmp_path):
-    path = _clustered_table(spark, tmp_path)
-    stats = collect_file_stats(spark, path, ["v"])
+    files = _clustered_table(spark, tmp_path)
+    stats = collect_file_stats(spark, files, ["v"])
     pruned = pruned_read(spark, stats, "v", 1000, 1500)
     plain = (
-        spark.read.parquet(path)
+        spark.read.parquet(*map(str, files))
         .filter((F.col("v") >= 1000) & (F.col("v") <= 1500))
     )
     assert sorted(r["id"] for r in pruned.collect()) == sorted(
@@ -57,8 +57,8 @@ def test_pruned_read_equals_plain_predicate(spark, tmp_path):
 
 
 def test_empty_overlap_returns_typed_empty_frame(spark, tmp_path):
-    path = _clustered_table(spark, tmp_path)
-    stats = collect_file_stats(spark, path, ["v"])
+    files = _clustered_table(spark, tmp_path)
+    stats = collect_file_stats(spark, files, ["v"])
     out = pruned_read(spark, stats, "v", 50_000, 60_000)
     assert out.count() == 0
     assert set(out.columns) == {"id", "v"}
@@ -74,7 +74,8 @@ def test_zorder_prunes_on_both_dimensions(spark, tmp_path):
         collect_file_stats,
         pruned_read_multi,
     )
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse, zorder_value
+    from lakehouse_poc_spark.operators.filestats import zorder_value
+    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
     n = 4096
     df = spark.range(n).select(
@@ -86,7 +87,7 @@ def test_zorder_prunes_on_both_dimensions(spark, tmp_path):
     z = df.withColumn("__z", zorder_value(F.col("x"), F.col("y"), bits=8))
     wh.append(z.repartition(4), "t.z")
     wh.compact("t.z", target_files=16, cluster_by=["__z"])
-    stats = collect_file_stats(spark, str(wh.path("t.z")), ["x", "y"])
+    stats = collect_file_stats(spark, wh._data_files("t.z"), ["x", "y"])
     n_files = stats.count()
     assert n_files >= 8
     # box covering ~1/16 of the space

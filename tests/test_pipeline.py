@@ -177,3 +177,90 @@ def test_failed_branch_rerun_converges(spark, tmp_path, monkeypatch, failing):
         .distinct()
     )
     assert _rows(landed) == sorted(tuple(r) for r in BATCH2)
+
+
+# ---------------------------------------------------------------------------
+# A crash at the commit point
+
+
+def _crash_at_commit(wh, method, monkeypatch):
+    """The first commit-point ``os.link`` that ``wh.<method>`` reaches
+    (in its own thread) raises, as if the process died there: the data
+    files are staged, the commit never lands."""
+    import os
+
+    armed, fired, real_link = threading.local(), [], os.link
+
+    def link(src, dst, *a, **kw):
+        if getattr(armed, "on", False) and not fired:
+            fired.append(str(dst))
+            raise OSError("simulated crash at the commit point")
+        return real_link(src, dst, *a, **kw)
+
+    orig = getattr(wh, method)
+
+    def armed_call(*a, **kw):
+        armed.on = True
+        try:
+            return orig(*a, **kw)
+        finally:
+            armed.on = False
+
+    monkeypatch.setattr(os, "link", link)
+    monkeypatch.setattr(wh, method, armed_call)
+    return fired
+
+
+@pytest.mark.parametrize(
+    "method, table", [("apply_scd2_changeset", "dim"), ("append", "raw")]
+)
+def test_crash_at_commit_point_keeps_version_and_rerun_converges(
+    spark, tmp_path, monkeypatch, method, table
+):
+    """The paper's pipeline dies at the commit point of the SCD2 apply,
+    or of the raw append. A fresh reader still sees the last committed
+    version v; vacuum removes the orphaned staged files and no file of
+    version v; rerunning the same run_ts yields the dimension of an
+    uninterrupted run."""
+    from lakehouse_poc_spark.sources.deltalog import _replay
+
+    cfg = _cfg()
+    ref = Warehouse(spark, str(tmp_path / "ref"))
+    pipeline.run_pipeline(spark, ref, cfg, T1, batch=_batch(spark, BATCH1))
+    pipeline.run_pipeline(spark, ref, cfg, T2, batch=_batch(spark, BATCH2))
+
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
+    pipeline.run_pipeline(spark, wh, cfg, T1, batch=_batch(spark, BATCH1))
+    t = cfg.dim_table if table == "dim" else cfg.raw_table
+    p = wh.path(t)
+    v = wh.version(t)
+    rows_v = _rows(wh.read(t))
+    fired = _crash_at_commit(wh, method, monkeypatch)
+    with pytest.raises(OSError, match="commit point"):
+        pipeline.run_pipeline(spark, wh, cfg, T2, batch=_batch(spark, BATCH2))
+    monkeypatch.undo()
+    assert fired and fired[0].endswith(f"{v + 1:020d}.json")
+
+    fresh = Warehouse(spark, root)
+    assert fresh.version(t) == v
+    assert _rows(fresh.read(t)) == rows_v
+    referenced = {f for u in range(v + 1) for f in _replay(p, u)["files"]}
+    orphans = {f.name for f in p.glob("*.parquet")} - referenced
+    assert orphans  # the staged files the commit never referenced
+    live_v = set(_replay(p, v)["files"])
+    fresh.vacuum(min_age=0)
+    left = {f.name for f in p.glob("*.parquet")}
+    assert not orphans & left
+    assert live_v <= left
+    assert _rows(fresh.read_version(t, v)) == rows_v
+
+    pipeline.run_pipeline(spark, fresh, cfg, T2, batch=_batch(spark, BATCH2))
+    assert _rows(fresh.read(cfg.dim_table)) == _rows(ref.read(cfg.dim_table))
+    landed = (
+        fresh.read(cfg.raw_table)
+        .filter(F.col(INGEST_TS) == F.lit(T2).cast("timestamp"))
+        .select(*cfg.wanted_columns)
+        .distinct()
+    )
+    assert _rows(landed) == sorted(tuple(r) for r in BATCH2)

@@ -419,12 +419,12 @@ def test_scd2_evolve_false_fails_fast(spark, wh):
 
 def test_scd2_evolve_on_deltalog_warehouse(spark, tmp_path):
     """The evolution path rides apply_scd2_changeset's full-rewrite leg,
-    which DeltaLogWarehouse commits as one log overwrite — the widened
+    which the Warehouse commits as one log overwrite — the widened
     schema must land in the log (a new metaData), and time travel still
     reads the PRE-evolution schema at the pre-merge version."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
+    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
-    dwh = DeltaLogWarehouse(spark, str(tmp_path / "dwh"))
+    dwh = Warehouse(spark, str(tmp_path / "dwh"))
     b1, b2 = _evo_batches(spark)
     scd2_merge(dwh, EVO_CFG1, b1, T1)
     v1 = dwh.version(EVO_CFG1.dim_table)
@@ -669,26 +669,18 @@ def test_rerun_with_same_run_ts(spark, wh):
     assert k1 == [(T1, T1, False, "Zentral"), (T1, "None", True, "Neu")]
 
 
-def test_scd2_on_delta_log_versions_and_change_feed(spark, wh, tmp_path):
-    """The paper's sink is Delta. Two pipeline merges on a
-    DeltaLogWarehouse commit the dimension as log versions 0 and 1:
-    version 0 reads back the bootstrap, the change feed between them
-    holds the merge's inserts and update pre/post images, and the
-    stats and final dimension equal those of the parquet Warehouse."""
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    dl = DeltaLogWarehouse(spark, str(tmp_path / "dl"))
+def test_scd2_on_delta_log_versions_and_change_feed(spark, wh):
+    """The paper's sink is Delta. Two pipeline merges commit the
+    dimension as log versions 0 and 1: version 0 reads back the
+    bootstrap, and the change feed between them holds the merge's
+    inserts and update pre/post images."""
     b2 = [("K1", "Verwaltung", "Zentral"), ("K2", "Fertigung", "Werk 2"),
           ("K4", "Einkauf", "Sued")]
-    stats = {
-        name: [
-            run_pipeline(spark, w, CFG, ts, batch=batch(spark, rows))
-            for ts, rows in ((T1, BATCH1), (T2, b2))
-        ]
-        for name, w in (("delta", dl), ("parquet", wh))
-    }
-    assert stats["delta"] == stats["parquet"]
-    assert dataclasses.asdict(stats["delta"][1]) == {
+    stats = [
+        run_pipeline(spark, wh, CFG, ts, batch=batch(spark, rows))
+        for ts, rows in ((T1, BATCH1), (T2, b2))
+    ]
+    assert dataclasses.asdict(stats[1]) == {
         "unchanged": 1, "new_keys": 1, "updated_keys": 1,
     }
 
@@ -698,13 +690,12 @@ def test_scd2_on_delta_log_versions_and_change_feed(spark, wh, tmp_path):
     def rows(df):
         return sorted(tuple(map(str, r)) for r in df.select(*cols).collect())
 
-    assert dl.version(t) == 1
-    assert rows(dl.read_version(t, 0)) == [
+    assert wh.version(t) == 1
+    assert rows(wh.read_version(t, 0)) == [
         (k, bereich, T1, "None", "True") for k, _, bereich in BATCH1
     ]
-    assert rows(dl.read(t)) == rows(wh.read(t))
 
-    changes = dl.table_changes(t, 0, 1, keys=["Kostenstelle", "GueltigVon"])
+    changes = wh.table_changes(t, 0, 1, keys=["Kostenstelle", "GueltigVon"])
     got = sorted(
         tuple(map(str, r))
         for r in changes.select(*cols, "_change_type").collect()

@@ -273,14 +273,17 @@ def test_scd2_stream_checkpoint_prevents_reprocessing(spark, tmp_path):
 
 
 def test_rollup_stream_txn_registry_survives_checkpoint_loss(spark, tmp_path):
-    """Lost/rebuilt checkpoint re-delivers every batch; the txn
-    registry must detect the replayed batch ids and skip them instead
-    of double-counting the rollup."""
+    """Lost/rebuilt checkpoint re-delivers every batch; each batch's
+    commit carries its id as a Delta ``txn`` action, so the replayed
+    batch id is found in the table's ledger and skipped instead of
+    double-counting the rollup."""
     import shutil as _sh
 
     from pyspark.sql import functions as F
 
+    from lakehouse_poc_spark.operators.rollup import upsert_hourly_rollup
     from lakehouse_poc_spark.sinks.warehouse import Warehouse
+    from lakehouse_poc_spark.sources.deltalog import _replay
     from lakehouse_poc_spark.streaming.runner import rollup_stream
     from lakehouse_poc_spark.streaming.windows import stream_parquet
 
@@ -298,7 +301,7 @@ def test_rollup_stream_txn_registry_survives_checkpoint_loss(spark, tmp_path):
         rollup_stream(
             stream_parquet(spark, str(src), ev.schema),
             wh, "agg.hourly", str(ckpt),
-            dims=["event_type"], txn_app_id="rollup-test",
+            dims=["event_type"],
         )
 
     run()
@@ -307,6 +310,7 @@ def test_rollup_stream_txn_registry_survives_checkpoint_loss(spark, tmp_path):
         for r in wh.read("agg.hourly").collect()
     }
     assert sum(n for n, _ in once.values()) == 30
+    v = wh.version("agg.hourly")
 
     # checkpoint lost → the stream replays batch 0 from scratch
     _sh.rmtree(ckpt)
@@ -316,22 +320,57 @@ def test_rollup_stream_txn_registry_survives_checkpoint_loss(spark, tmp_path):
         for r in wh.read("agg.hourly").collect()
     }
     assert twice == once  # no double counting
-    assert wh.txn_applied("rollup-test", 0)
+    assert wh.version("agg.hourly") == v  # the replay committed nothing
+    assert _replay(wh.path("agg.hourly"), None)["txns"] == {
+        f"agg.hourly@{ckpt}": 0
+    }
 
-    # without the registry the same replay DOES double-count —
+    # without the ledger the same re-delivery DOES double-count —
     # proving the scenario is real, not vacuously passing
     wh2 = Warehouse(spark, str(tmp_path / "wh2"))
-    ckpt2 = tmp_path / "ckpt2"
-    for i in range(2):
-        rollup_stream(
-            stream_parquet(spark, str(src), ev.schema),
-            wh2, "agg.hourly", str(ckpt2),
-            dims=["event_type"],
-        )
-        if i == 0:
-            _sh.rmtree(ckpt2)
+    for _ in range(2):
+        upsert_hourly_rollup(wh2, "agg.hourly", ev, dims=["event_type"])
     doubled = sum(r["n_events"] for r in wh2.read("agg.hourly").collect())
     assert doubled == 60
+
+
+def test_rollup_streams_from_two_checkpoints_both_land(spark, tmp_path):
+    """A second stream writing into the same rollup from its own
+    checkpoint (a backfill from another source) numbers its batches
+    from 0 again. Its ledger entry is its own, so its batch 0 is not
+    taken for the first stream's and its rows land."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_poc_spark.sinks.warehouse import Warehouse
+    from lakehouse_poc_spark.sources.deltalog import _replay
+    from lakehouse_poc_spark.streaming.runner import rollup_stream
+    from lakehouse_poc_spark.streaming.windows import stream_parquet
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    ckpts = []
+    for name, n, hour in [("live", 30, "01"), ("backfill", 20, "05")]:
+        src = tmp_path / name
+        ev = spark.createDataFrame(
+            [(i, f"2026-01-01 {hour}:15:00", "click", 1.0) for i in range(n)],
+            "event_id long, ts_s string, event_type string, value double",
+        ).select(
+            "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
+            "event_type", "value",
+        )
+        ev.write.parquet(str(src))
+        ckpts.append(tmp_path / f"ckpt_{name}")
+        rollup_stream(
+            stream_parquet(spark, str(src), ev.schema),
+            wh, "agg.hourly", str(ckpts[-1]),
+            dims=["event_type"],
+        )
+    per_hour = {
+        r["hour"].hour: r["n_events"] for r in wh.read("agg.hourly").collect()
+    }
+    assert per_hour == {1: 30, 5: 20}
+    assert _replay(wh.path("agg.hourly"), None)["txns"] == {
+        f"agg.hourly@{c}": 0 for c in ckpts
+    }
 
 
 def test_stateful_stream_under_rocksdb_state_store(spark, tmp_path):

@@ -1,6 +1,7 @@
-"""Warehouse maintenance ops: schema evolution on append-only raw
-tables and small-file compaction, plus the Delta-log file-pruned MERGE
-and the bloom index it maintains."""
+"""Warehouse (Delta log) maintenance ops: small-file compaction,
+partitioned writes and dynamic partition overwrite, the file-pruned
+MERGE and the bloom index it maintains, and reads planned from the
+log."""
 
 from __future__ import annotations
 
@@ -11,21 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse, Warehouse
-
-
-def test_schema_evolution_on_append(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    batch1 = spark.createDataFrame([(1, "a")], "id long, name string")
-    batch2 = spark.createDataFrame(
-        [(2, "b", "extra")], "id long, name string, note string"
-    )
-    wh.append(batch1, "raw.t")
-    wh.append(batch2, "raw.t")
-    merged = wh.read("raw.t", merge_schema=True)
-    assert set(merged.columns) == {"id", "name", "note"}
-    rows = {r.id: r for r in merged.collect()}
-    assert rows[1].note is None and rows[2].note == "extra"
+from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
 
 def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
@@ -35,54 +22,14 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
             spark.range(i * 10, (i + 1) * 10).withColumn("v", F.col("id") * 2),
             "raw.many",
         )
-    files_before = len(list(wh.path("raw.many").glob("*.parquet")))
+    files_before = len(wh._data_files("raw.many"))
     assert files_before >= 6
     reported = wh.compact("raw.many", target_files=2)
     assert reported == files_before
-    files_after = len(list(wh.path("raw.many").glob("*.parquet")))
-    assert files_after <= 2
+    assert len(wh._data_files("raw.many")) <= 2
     compacted = wh.read("raw.many")
     assert compacted.count() == 60
     assert compacted.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(60))
-
-
-def test_partitioned_compaction_preserves_layout(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    for i in range(4):
-        df = spark.range(i * 10, (i + 1) * 10).withColumn(
-            "day", (F.col("id") % 2).cast("string")
-        )
-        wh.append(df, "raw.part", partition_by=["day"])
-    before = wh.compact("raw.part", target_files=1, partition_by=["day"])
-    assert before >= 8  # 4 appends × 2 partition dirs, counted recursively
-    root = wh.path("raw.part")
-    # partition dirs survive the rewrite
-    assert (root / "day=0").exists() and (root / "day=1").exists()
-    assert len(list(root.glob("day=*/*.parquet"))) <= 2
-    back = wh.read("raw.part")
-    assert back.count() == 40
-    # pruning still works: reading one partition touches one dir
-    one = spark.read.parquet(str(root)).filter(F.col("day") == "0")
-    assert one.count() == 20
-
-
-def test_partitioned_compaction_spreads_target_files(spark, tmp_path):
-    """target_files>1 must yield MULTIPLE files per partition dir (salted
-    writers), not one giant file per partition value (ADVICE r2)."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    for i in range(6):
-        df = spark.range(i * 100, (i + 1) * 100).withColumn(
-            "day", (F.col("id") % 2).cast("string")
-        )
-        wh.append(df, "raw.part_multi", partition_by=["day"])
-    wh.compact("raw.part_multi", target_files=4, partition_by=["day"])
-    root = wh.path("raw.part_multi")
-    for d in ("day=0", "day=1"):
-        n = len(list((root / d).glob("*.parquet")))
-        assert 2 <= n <= 4, f"{d}: {n} files (want ~target_files=4, got 1-file skew?)"
-    back = wh.read("raw.part_multi")
-    assert back.count() == 600
-    assert back.agg(F.countDistinct("id")).collect()[0][0] == 600
 
 
 def test_upsert_parquet_last_write_wins(spark, tmp_path):
@@ -97,7 +44,7 @@ def test_upsert_parquet_last_write_wins(spark, tmp_path):
 
 def test_apply_scd2_changeset_rewrites_from_full_plan(spark, tmp_path):
     """The SCD2 apply commits the complete new-dimension plan, which
-    reads the very table it replaces (staged swap, not a clobber)."""
+    reads the very table it replaces (a new version, not a clobber)."""
     wh = Warehouse(spark, str(tmp_path))
     dim = spark.createDataFrame(
         [(1, "a", True)], "id long, val string, is_current boolean"
@@ -111,7 +58,10 @@ def test_apply_scd2_changeset_rewrites_from_full_plan(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "backend, suffix",
-    [("DeltaLogWarehouse", "__dl_stage."), ("IcebergMetaWarehouse", "__ice_stage.")],
+    [
+        pytest.param("Warehouse", "__dl_stage.", id="DeltaLogWarehouse-__dl_stage."),
+        ("IcebergMetaWarehouse", "__ice_stage."),
+    ],
 )
 def test_log_backed_failed_write_strands_no_staging_dir(
     spark, tmp_path, backend, suffix
@@ -154,10 +104,8 @@ def test_compaction_cluster_by_gives_disjoint_file_ranges(spark, tmp_path):
         F.col("id"), F.pmod(F.col("id") * 37 + 11, 400).alias("v")
     )
     wh.append(df.repartition(8), "raw.clustered")
-    with pytest.raises(ValueError):
-        wh.compact("raw.clustered", 2, partition_by=["v"], cluster_by=["v"])
     wh.compact("raw.clustered", target_files=4, cluster_by=["v"])
-    files = sorted(wh.path("raw.clustered").glob("*.parquet"))
+    files = sorted(wh._data_files("raw.clustered"))
     assert 2 <= len(files) <= 4
     ranges = []
     for f in files:
@@ -175,65 +123,8 @@ def test_compaction_cluster_by_gives_disjoint_file_ranges(spark, tmp_path):
     assert wh.read("raw.clustered").count() == 400
 
 
-def test_compaction_zorder_shrinks_both_dimension_ranges(spark, tmp_path):
-    """Z-order clustering: each output file covers a sub-range of BOTH
-    columns (vs 1D clustering, which only bounds its own column), so
-    min/max stats skip files for filters on either dimension."""
-    import pyarrow.parquet as pq
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    n = 1024
-    df = spark.range(n).select(
-        F.pmod(F.col("id") * 73, n).alias("x"),
-        F.pmod(F.col("id") * 151, n).alias("y"),
-    )
-    wh.append(df.repartition(8), "raw.z")
-    wh.compact("raw.z", target_files=16, zorder_by=("x", "y"))
-    files = sorted(wh.path("raw.z").glob("*.parquet"))
-    assert len(files) >= 8
-    spans = []
-    for f in files:
-        t = pq.read_table(f)
-        xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
-        spans.append(((max(xs) - min(xs)) / n, (max(ys) - min(ys)) / n))
-    # average per-file span in EACH dimension well below the full range
-    import statistics
-
-    assert statistics.mean(s[0] for s in spans) < 0.55
-    assert statistics.mean(s[1] for s in spans) < 0.55
-    assert wh.read("raw.z").count() == n
-
-
-def test_vacuum_removes_stranded_swap_dirs(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    wh.append(df, "raw.t")
-    # simulate a crash between write and swap
-    (wh.path("raw.t").parent / "t__staging").mkdir()
-    (wh.path("raw.t").parent / "t__old").mkdir()
-    assert wh.vacuum() == 2
-    assert wh.vacuum() == 0
-    assert wh.read("raw.t").count() == 10
-
-
-def test_directory_table_has_one_version(spark, tmp_path):
-    """A plain directory table keeps no history: a rewrite leaves it at
-    version 0, version 0 reads the live state, and any other version
-    is an error (time travel reads a log)."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    t = "dim.v"
-    wh.overwrite(spark.range(3).selectExpr("id", "id AS v"), t)
-    wh.overwrite_from_plan(wh.read(t).withColumn("v", F.col("v") + 10), t)
-    assert wh.version(t) == 0
-    assert sorted(r.v for r in wh.read_version(t, 0).collect()) == [10, 11, 12]
-    with pytest.raises(ValueError, match="only version 0"):
-        wh.read_version(t, 1)
-
-
 def test_table_changes_emits_all_four_change_types(spark, tmp_path):
-    from lakehouse_poc_spark.sinks.warehouse import DeltaLogWarehouse
-
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.cdc"
     wh.overwrite(
         spark.createDataFrame(
@@ -279,9 +170,9 @@ def test_delete_where_rewrites_complement_and_versions(spark, tmp_path):
     wh.delete_where(t, F.col("g") == 1)
     kept = sorted(r["id"] for r in wh.read(t).collect())
     assert kept == [0, 2, 3, 5, 6, 8, 9, 10]
-    # the rewrite replaces the one version a directory table has
-    assert wh.version(t) == 0
-    assert wh.read_version(t, 0).count() == 8
+    # the rewrite is a new version; the old one stays readable
+    assert wh.version(t) == 1
+    assert wh.read_version(t, 0).count() == 11
     # string predicates work too
     wh.delete_where(t, "id >= 8")
     assert sorted(r["id"] for r in wh.read(t).collect()) == [0, 2, 3, 5, 6]
@@ -375,7 +266,7 @@ def test_upsert_file_pruned_rewrites_only_matched_files(spark, tmp_path):
     batch rewrites only the files holding its keys; content equals
     the plain-upsert contract; untouched files stay live and
     physically identical (same path, same bytes)."""
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "dim.c"
     # key-clustered layout: 10 files of 100 keys each (repartitionByRange)
     base = spark.range(1000).selectExpr("id AS k", "CAST(id AS STRING) AS v")
@@ -412,29 +303,6 @@ def test_upsert_file_pruned_rewrites_only_matched_files(spark, tmp_path):
     assert wh.read(t).count() == 1006
 
 
-def test_compaction_by_target_bytes(spark, tmp_path):
-    """target_file_bytes sizes the rewrite from on-disk bytes: a table
-    of N compressed bytes compacted at ~N/3 per file lands near 3
-    files; the two sizing knobs are mutually exclusive."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    for i in range(8):
-        wh.append(
-            spark.range(i * 500, (i + 1) * 500).selectExpr(
-                "id", "CAST(id AS STRING) AS s"
-            ),
-            "raw.b",
-        )
-    total = sum(f.stat().st_size for f in wh.path("raw.b").glob("**/*.parquet"))
-    wh.compact("raw.b", target_file_bytes=total // 3)
-    n = len(list(wh.path("raw.b").glob("*.parquet")))
-    assert 2 <= n <= 4, n
-    assert wh.read("raw.b").count() == 4000
-    with pytest.raises(ValueError, match="exactly one"):
-        wh.compact("raw.b", target_files=2, target_file_bytes=1)
-    with pytest.raises(ValueError, match="exactly one"):
-        wh.compact("raw.b")
-
-
 def test_file_bloom_prunes_without_false_negatives(spark, tmp_path):
     """On a date-clustered layout (min/max on the key is useless) the
     per-file bloom must skip most files for a point lookup while the
@@ -453,9 +321,9 @@ def test_file_bloom_prunes_without_false_negatives(spark, tmp_path):
         F.col("id").alias("ts"),
         (F.pmod(F.col("id") * 37, 997)).alias("key"),
     )
-    path = str(tmp_path / "t")
-    df.repartitionByRange(8, "ts").write.parquet(path)
-    blooms = build_file_bloom(spark, path, "key")
+    path = tmp_path / "t"
+    df.repartitionByRange(8, "ts").write.parquet(str(path))
+    blooms = build_file_bloom(spark, sorted(path.glob("*.parquet")), "key")
     assert blooms.count() == 8
 
     expect = {r.ts for r in df.filter("key = 5").collect()}
@@ -498,7 +366,7 @@ def test_persisted_bloom_index_maintained_through_dml(spark, tmp_path):
     file-pruned DML (only rewritten files rebuild) and at the end of
     every full rewrite, and bloom_lookup through it equals the
     full-scan filter before and after every mutation."""
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "raw.k"
     wh.overwrite(
         spark.range(2000)
@@ -557,7 +425,7 @@ def test_full_rewrite_dml_keeps_bloom_index_current(spark, tmp_path, dml):
     """A full-rewrite DML replaces every data file; the rewrite's
     commit re-indexes them, so no later bloom_lookup reads the whole
     table for want of an index row."""
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "raw.b"
     wh.overwrite(
         spark.range(200).selectExpr("id AS k", "'old' AS v").repartition(4), t
@@ -575,7 +443,7 @@ def test_bloom_lookup_survives_stale_index_without_false_negatives(
     """An append the index has not seen yet: its files count as
     'maybe contains' and are always read, so staleness can never drop
     a result row."""
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "raw.s"
     wh.overwrite(
         spark.range(100).selectExpr("id AS k", "'old' AS v").coalesce(2), t
@@ -598,7 +466,7 @@ def test_bloom_lookup_never_returns_a_dv_deleted_row(spark, tmp_path):
     the add action's mask and the deleted row stays deleted."""
     from lakehouse_poc_spark.sources.deltalog import DeltaLogWriter
 
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "raw.d"
     wh.overwrite(
         spark.range(400)
@@ -616,7 +484,7 @@ def test_bloom_lookup_never_returns_a_dv_deleted_row(spark, tmp_path):
 def test_bloom_index_refuses_column_mapped_tables(spark, tmp_path):
     from lakehouse_poc_spark.sources.deltalog import DeltaLogWriter
 
-    wh = DeltaLogWarehouse(spark, str(tmp_path / "wh"))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
     t = "raw.m"
     wh.overwrite(spark.range(10).selectExpr("id AS k", "'x' AS v"), t)
     DeltaLogWriter(spark, wh.path(t)).rename_column("v", "w")
@@ -631,7 +499,6 @@ def test_mv_incremental_scans_only_new_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lakehouse_poc_spark.sinks.matview import MaterializedAgg
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     ev = spark.range(1000).select(
@@ -674,7 +541,6 @@ def test_mv_stale_base_guard(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lakehouse_poc_spark.sinks.matview import MaterializedAgg
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     ev = spark.range(100).select(
@@ -704,7 +570,6 @@ def test_mv_crash_between_files_and_state_never_double_counts(
     from pyspark.sql import functions as F
 
     from lakehouse_poc_spark.sinks.matview import MaterializedAgg
-    from lakehouse_poc_spark.sinks.warehouse import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "wh"))
     ev = spark.range(200).select(
@@ -774,7 +639,7 @@ def test_merge_ops_bootstraps_missing_table_without_deletes(spark, wh):
 
 
 # ---------------------------------------------------------------------------
-# Reads planned from Spark's footer key, without a Spark job.
+# Reads planned from the log, without a Spark job.
 
 
 def _varied(spark):
@@ -793,92 +658,121 @@ def _varied(spark):
 def test_read_runs_no_job_and_matches_inferred_schema(
     spark, tmp_path, jobs_in_group, partition_by
 ):
+    """The log read plans from the committed schema alone and gives
+    the schema Spark infers for the same rows written as plain
+    (hive-partitioned) parquet."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.append(_varied(spark), "l.t", partition_by=partition_by)
     wh.append(_varied(spark), "l.t", partition_by=partition_by)
     df, jobs = jobs_in_group("wh-read", lambda: wh.read("l.t"))
     assert jobs == 0
-    assert df.schema == spark.read.parquet(str(wh.path("l.t"))).schema
+    plain = _varied(spark).write
+    if partition_by:
+        plain = plain.partitionBy(*partition_by)
+    plain.parquet(str(tmp_path / "plain"))
+    assert df.schema == spark.read.parquet(str(tmp_path / "plain")).schema
     assert df.count() == 2
 
 
-def test_read_without_spark_footer_key_infers(spark, tmp_path):
-    """A table whose files another engine wrote carries no Spark footer
-    key; its schema is inferred by Spark as before."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+# ---------------------------------------------------------------------------
+# Partitioned tables on the log.
 
+
+def _adds_by_part(wh, t, col):
+    from lakehouse_poc_spark.sources.deltalog import _replay
+
+    out: dict[str, set] = {}
+    for a in _replay(wh.path(t), None)["adds"]:
+        out.setdefault(a["partitionValues"][col], set()).add(a["path"])
+    return out
+
+
+def test_overwrite_partitions_is_one_commit_and_keeps_other_partitions(
+    spark, tmp_path
+):
+    """Dynamic partition overwrite is ONE commit at v+1: the covered
+    partitions' files leave, the batch's files arrive, every other
+    partition's files stay live untouched; a read of one partition
+    scans only its files."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    p = wh.path("l.foreign")
-    p.mkdir(parents=True)
-    pq.write_table(pa.table({"id": [1, 2], "v": ["a", "b"]}), p / "part-0.parquet")
-    df = wh.read("l.foreign")
-    assert df.schema == spark.read.parquet(str(p)).schema
-    assert sorted(r.id for r in df.collect()) == [1, 2]
-
-
-def test_staged_swap_crash_between_renames_rolls_back(spark, tmp_path, monkeypatch):
-    """A process dying after ``target → __old`` and before
-    ``__staging → target`` leaves no table. A fresh Warehouse on the
-    same root must put the old state back, so the next SCD2 merge
-    merges into it instead of bootstrapping a new dimension."""
-    from lakehouse_poc_spark.config import PipelineConfig
-    from lakehouse_poc_spark.operators.scd2 import scd2_merge
-
-    CFG = PipelineConfig(
-        name="k", raw_table="l0.raw", dim_table="l1.dim",
-        business_key=("k",), compare_columns=("v",),
+    t = "agg.p"
+    schema = "id long, v string, day string"
+    wh.overwrite(
+        spark.createDataFrame(
+            [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2"), (4, "d", "d3")],
+            schema,
+        ),
+        t,
+        partition_by=["day"],
     )
-    T1, T2, T3 = (f"2030-01-0{d} 00:00:00" for d in (1, 2, 3))
+    v = wh.version(t)
+    before = _adds_by_part(wh, t, "day")
+    wh._writer(t).overwrite_partitions(
+        spark.createDataFrame([(5, "e", "d2"), (6, "f", "d4")], schema),
+        ["day"],
+    )
+    assert wh.version(t) == v + 1
+    after = _adds_by_part(wh, t, "day")
+    assert after["d1"] == before["d1"] and after["d3"] == before["d3"]
+    assert not after["d2"] & before["d2"] and "d4" in after
+    assert sorted(tuple(r) for r in wh.read(t).collect()) == [
+        (1, "a", "d1"), (2, "b", "d1"), (4, "d", "d3"),
+        (5, "e", "d2"), (6, "f", "d4"),
+    ]
+    # the files sit in hive directories, so the whole table is one
+    # scan, and a filter on the partition column prunes at plan time
+    assert all(
+        p.startswith(f"day={d}/") for d, ps in after.items() for p in ps
+    )
+    plan = wh.read(t)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    one = wh.read(t).filter(F.col("day").isin("d1"))
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert "PartitionFilters: [isnotnull(day" in plan, plan
+    assert sorted(r.id for r in one.collect()) == [1, 2]
+    # the partition spec is immutable, and compaction keeps it
+    for write in (wh.append, wh.overwrite):
+        with pytest.raises(Exception, match="partition spec mismatch"):
+            write(spark.createDataFrame([(7, "g", "d1")], schema), t, ["id"])
+    with pytest.raises(Exception, match="partitioned table"):
+        wh.compact(t, target_files=1, cluster_by=["id"])
+    rows = sorted(tuple(r) for r in wh.read(t).collect())
+    wh.compact(t, target_files=1)
+    assert {k: len(v) for k, v in _adds_by_part(wh, t, "day").items()} == {
+        "d1": 1, "d2": 1, "d3": 1, "d4": 1,
+    }
+    assert sorted(tuple(r) for r in wh.read(t).collect()) == rows
+    # vacuum walks the partition directories: only live files remain
+    wh.vacuum(min_age=0)
+    on_disk = {
+        f.relative_to(wh.path(t)).as_posix()
+        for f in wh.path(t).rglob("*.parquet")
+        if "_delta_log" not in f.parts
+    }
+    assert on_disk == set().union(*_adds_by_part(wh, t, "day").values())
+    assert sorted(tuple(r) for r in wh.read(t).collect()) == rows
 
-    def batch(spark, rows):
-        return spark.createDataFrame(rows, "k string, v string")
 
-    root = str(tmp_path / "wh")
-    wh = Warehouse(spark, root)
-    scd2_merge(wh, CFG, batch(spark, [("K1", "a"), ("K2", "b"), ("K3", "c")]), T1)
-    before = sorted(map(tuple, wh.read(CFG.dim_table).collect()))
+def test_table_under_glob_metacharacters(spark, tmp_path):
+    """spark.read.parquet expands every path as a Hadoop glob; a table
+    under a directory named with glob metacharacters still appends,
+    reads, DV-deletes, compacts and bloom-looks-up by exact path."""
+    from lakehouse_poc_spark.sources.deltalog import DeltaLogWriter
 
-    real_rename = Path.rename
-
-    def crash_on_install(self, target):
-        if self.name.endswith("__staging"):
-            raise OSError("simulated crash between the two renames")
-        return real_rename(self, target)
-
-    monkeypatch.setattr(Path, "rename", crash_on_install)
-    with pytest.raises(OSError, match="simulated crash"):
-        scd2_merge(wh, CFG, batch(spark, [("K2", "x")]), T2)
-    monkeypatch.setattr(Path, "rename", real_rename)
-    assert not wh.path(CFG.dim_table).exists()
-
-    reopened = Warehouse(spark, root)
-    assert reopened.table_exists(CFG.dim_table)
-    assert sorted(map(tuple, reopened.read(CFG.dim_table).collect())) == before
-    p = reopened.path(CFG.dim_table)
-    assert not p.with_name(p.name + "__staging").exists()
-    stats = scd2_merge(reopened, CFG, batch(spark, [("K2", "x")]), T3)
-    assert asdict(stats) == {"unchanged": 0, "new_keys": 0, "updated_keys": 1}
-    assert reopened.read(CFG.dim_table).count() == 4
-
-
-def test_iceberg_compact_counts_live_files_only(spark, tmp_path):
-    """Files of replaced snapshots stay on disk; compaction counts (and
-    sizes by) the current snapshot's live files only."""
-    from lakehouse_poc_spark.sinks.warehouse import IcebergMetaWarehouse
-    from lakehouse_poc_spark.sources.iceberg_meta import live_entries
-
-    wh = IcebergMetaWarehouse(spark, str(tmp_path / "wh"))
-    t = "ice.t"
-    for i in range(3):
-        wh.overwrite(
-            spark.range(i * 10, i * 10 + 10).repartition(2).toDF("id"), t
-        )
-    wh.append(spark.range(100, 105).coalesce(1).toDF("id"), t)
-    live = len(live_entries(wh.path(t)))
-    on_disk = len(list(wh.path(t).glob("**/*.parquet")))
-    assert live < on_disk
-    rows = sorted(r.id for r in wh.read(t).collect())
-    assert wh.compact(t, target_files=1) == live
-    assert sorted(r.id for r in wh.read(t).collect()) == rows
-    assert len(live_entries(wh.path(t))) == 1
+    wh = Warehouse(spark, str(tmp_path / "a[b]{c}"))
+    t = "raw.g"
+    rows = spark.range(100).selectExpr("id AS k", "CAST(id % 10 AS STRING) AS v")
+    wh.append(rows.filter("k < 80").repartition(4), t)
+    wh.append(rows.filter("k >= 80"), t)
+    assert wh.read(t).count() == 100
+    wh.build_bloom_index(t, "k")
+    DeltaLogWriter(spark, wh.path(t)).delete_where_dv("k = 7")
+    assert wh.read(t).count() == 99
+    wh.compact(t, target_files=2)
+    assert len(wh._data_files(t)) <= 2
+    assert sorted(r.k for r in wh.read(t).filter("k < 10").collect()) == [
+        0, 1, 2, 3, 4, 5, 6, 8, 9,
+    ]
+    assert [r.k for r in wh.bloom_lookup(t, "k", 8).collect()] == [8]
+    assert wh.bloom_lookup(t, "k", 7).count() == 0
